@@ -42,7 +42,7 @@ def main() -> None:
     from cms_topn_spark.spark_session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     names = args.queries.split(",") if args.queries else list(HEADLINE)
 
     spark = get_spark("bench-extra", cpus=cpus)

@@ -15,6 +15,7 @@ from .base import (
     KIND_TDIGEST,
     MergeableSketch,
     SketchError,
+    fold_states,
     merge_serialized,
     sketch_from_bytes,
     sketch_from_hex,
@@ -24,9 +25,8 @@ from .bloom import BloomFilter
 from .cms_topn import CmsTopn, sizing
 
 # importing the module REGISTERS serialization kind 7: without this, a
-# worker that only imported core/operators (e.g. a tree-merge task
-# unpickling _merge_group) could not deserialize a composite state and the
-# flagship/profile job would die exactly at >direct_collect_limit partitions
+# worker that only imported core/operators (e.g. a task running the
+# operators.build fold kernel) could not deserialize a composite state
 from .composite import CompositeSketch  # noqa: E402  (registration side effect)
 from .hll import HyperLogLog
 from .kll import KllSketch
@@ -37,6 +37,7 @@ from .tdigest import TDigest
 __all__ = [
     "MergeableSketch",
     "SketchError",
+    "fold_states",
     "merge_serialized",
     "sketch_from_bytes",
     "sketch_from_hex",

@@ -1,8 +1,8 @@
 """One mergeable-state protocol shared by every sketch in the library.
 
 Every sketch (CMS+top-n, HLL, Bloom, KLL, t-digest, min-mask) implements the
-same surface so the Spark layer (partition build → salted shuffle → tree merge
-→ checkpoint) is written once and works for all of them:
+same surface so the Spark layer (partition build → salted shuffle → merge →
+checkpoint) is written once and works for all of them:
 
     empty(**params)      -> sketch            (class constructor)
     add_batch(values)    -> None              (vectorized, no per-row Python)
@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import struct
 from abc import ABC, abstractmethod
+from typing import Iterable
 
 MAGIC = b"SKS1"
 HEADER = struct.Struct("<4sBBBB")
@@ -144,3 +145,19 @@ def merge_serialized(a: bytes | None, b: bytes | None) -> bytes | None:
     if b is None:
         return a
     return sketch_from_bytes(a).merge(sketch_from_bytes(b)).to_bytes()
+
+
+def fold_states(states: Iterable[bytes | None]) -> MergeableSketch | None:
+    """Merge serialized states left to right on live sketches: each state is
+    deserialized once and the accumulator is never re-serialized. NULLs are
+    skipped; no non-NULL state → None (expected/union_agg.out:8-18). Gives
+    the same bytes as a ``merge_serialized`` chain in the same order:
+    serialization is an exact round-trip, and the one non-canonical live
+    layout (KLL's unsorted levels) is re-sorted by compaction and by
+    ``to_bytes`` before it can change a result."""
+    acc = None
+    for b in states:
+        if b is not None:
+            sk = sketch_from_bytes(bytes(b))
+            acc = sk if acc is None else acc.merge(sk)
+    return acc

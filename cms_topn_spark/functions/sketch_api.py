@@ -43,17 +43,19 @@ from ..core import (
     KllSketch,
     MinMaskSketch,
     TDigest,
-    merge_serialized,
     sketch_from_bytes,
 )
 from ..core import encoding as enc
 from ..operators.build import (
+    STATE_SCHEMA,
+    _collect_states,
+    _fold_task,
     build_partials,
     default_ingest,
     numeric_ingest,
     pack_arrow_array,
+    plan_num_partitions,
     sketch_agg,
-    tree_merge_df,
 )
 
 # ---------------------------------------------------------------- cms_topn
@@ -78,11 +80,10 @@ def cms_topn_add_agg(
     p: float = 0.99,
     update: str = "linear",
     salt_partitions: int | None = None,
-    fanin: int = 16,
     count_col: str | None = None,
 ) -> CmsTopn | None:
     """Distributed cms_topn_add_agg: validates parameters eagerly (verbatim
-    errors), builds per-partition partials, tree-merges. With ``count_col``
+    errors), builds per-partition partials, merges them. With ``count_col``
     the input is treated as pre-aggregated (item, count) pairs."""
     from ..operators.build import weighted_ingest
 
@@ -93,7 +94,6 @@ def cms_topn_add_agg(
         lambda: CmsTopn(n, e, p, update=update),
         default_ingest if count_col is None else weighted_ingest,
         salt_partitions=salt_partitions,
-        fanin=fanin,
     )
 
 
@@ -105,28 +105,16 @@ def cms_topn_union(a: CmsTopn | None, b: CmsTopn | None) -> CmsTopn | None:
     return a.merge(b)
 
 
-def cms_topn_union_agg(df: DataFrame, state_col: str = "state", fanin: int = 16) -> CmsTopn | None:
+def cms_topn_union_agg(df: DataFrame, state_col: str = "state") -> CmsTopn | None:
     """Merge a DataFrame column of serialized sketch states (NULLs skipped;
     all-NULL → None, expected/union_agg.out:8-18).
 
-    The bounded-fan-in tree's own persist+count doubles as the emptiness
-    check (0 rows → no merge levels → empty collect → None), so there is no
-    separate ``limit(1).count()`` pre-action — the whole agg is the tree's
-    count plus one ≤fanin-row collect."""
+    Each input partition folds its own states in place (no shuffle), and the
+    per-partition results merge like the partials of :func:`sketch_agg`."""
     states = df.select(
-        F.pmod(F.monotonically_increasing_id(), F.lit(2**31 - 1)).cast("int").alias("partition_id"),
-        F.col(state_col).alias("state"),
-        F.lit(0).cast("long").alias("input_rows"),
-        F.lit(0).cast("long").alias("build_wall_ms"),
-    ).where(F.col(state_col).isNotNull())
-    merged = tree_merge_df(states, fanin)
-    rows = merged.collect()
-    merged.unpersist()
-    acc = None
-    for r in rows:
-        if r["state"] is not None:
-            acc = merge_serialized(acc, bytes(r["state"]))
-    return sketch_from_bytes(acc) if acc is not None else None
+        F.col(state_col).alias("state"), F.lit(0).cast("long").alias("input_rows")
+    ).mapInArrow(_fold_task, STATE_SCHEMA)
+    return _collect_states(states, plan_num_partitions(df))
 
 
 # item decode type per encoding tag for the topn() SRF family; unbound /

@@ -1,4 +1,4 @@
-"""Distributed sketch build: per-partition partials → tree merge.
+"""Distributed sketch build: per-partition partials → merge.
 
 This is the rebuild of the reference's aggregate pair (`cms_topn_add_agg`,
 `cms_topn_union_agg`, §2.2 of SURVEY.md) in Spark's execution model, shaped
@@ -12,10 +12,12 @@ exactly as the north star prescribes (BASELINE.json:6):
 - **salted repartition**: ``repartition(P)`` round-robins rows, so hot keys
   cannot skew task runtimes (building is key-shuffle-free; only partition
   *size* imbalance matters, and round-robin flattens it).
-- **tree merge**: iterative ``groupBy(bucket).applyInPandas(merge)`` with
-  bounded fan-in — O(log_F P) levels instead of a driver fan-in of P — then a
-  final driver-side merge of ≤ F states. States are ~106 kB at default CMS
-  parameters (BASELINE.md row 3), so each level shuffles only P·106 kB.
+- **merge**: up to ``DIRECT_COLLECT_LIMIT`` partials are collected and folded
+  on the driver with :func:`fold_states`. Above it, one shuffle of the
+  sketch-sized rows to ``defaultParallelism`` tasks and one ``mapInArrow``
+  fold per task cut the driver's fan-in to the core count. States are
+  ~106 kB at default CMS parameters (BASELINE.md row 3), so that shuffle
+  moves only P·106 kB.
 
 Scale notes (100 TB / 1000 executors): the input scan is the only big data
 motion; everything after the partial build moves `P` sketch-sized rows. The
@@ -31,13 +33,18 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..core import encoding as enc
-from ..core.base import merge_serialized, sketch_from_bytes
+from ..core.base import fold_states
 
 STATE_SCHEMA = "partition_id int, state binary, input_rows long, build_wall_ms long"
+
+# above this many partials the driver collects one folded state per core
+# instead of one state per partial
+DIRECT_COLLECT_LIMIT = 64
 
 _PA_STATE_SCHEMA = pa.schema(
     [
@@ -245,52 +252,37 @@ def build_partials_parquet(
     )
 
 
-def _merge_group(pdf):
-    import pandas as pd
-
-    acc = None
-    rows = 0
-    ms = 0
+def _fold_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Fold every state one task sees into one row (NULL states skipped,
+    ``input_rows`` summed); a task that sees no rows emits none."""
     t0 = time.monotonic()
-    for st, r in zip(pdf["state"], pdf["input_rows"]):
-        acc = merge_serialized(acc, bytes(st) if st is not None else None)
-        rows += int(r)
-    ms = int((time.monotonic() - t0) * 1000)
-    pid = int(pdf["bucket"].iloc[0])
-    return pd.DataFrame(
-        {
-            "partition_id": [pid],
-            "state": [acc],
-            "input_rows": [rows],
-            "build_wall_ms": [ms],
-        }
-    )
+    n = rows = 0
+
+    def states():
+        nonlocal n, rows
+        for rb in batches:
+            n += rb.num_rows
+            rows += pc.sum(rb.column("input_rows")).as_py() or 0
+            yield from rb.column("state").to_pylist()
+
+    acc = fold_states(states())
+    if n:
+        ctx = TaskContext.get()
+        yield pa.RecordBatch.from_pydict(
+            {
+                "partition_id": [ctx.partitionId() if ctx is not None else 0],
+                "state": [acc.to_bytes() if acc is not None else None],
+                "input_rows": [rows],
+                "build_wall_ms": [int((time.monotonic() - t0) * 1000)],
+            },
+            schema=_PA_STATE_SCHEMA,
+        )
 
 
-def tree_merge_df(states: DataFrame, fanin: int = 16) -> DataFrame:
-    """Merge a states DataFrame down to ≤ ``fanin`` rows with a bounded-fan-in
-    tree: each level buckets by partition_id // fanin and merges per bucket via
-    applyInPandas. O(log_fanin P) levels; each level is a small shuffle of
-    sketch-sized rows.
-
-    Each level is persisted before its count so the expensive upstream build
-    is computed exactly once (counting an unpersisted frame would re-run the
-    whole lineage per level)."""
-    from pyspark.sql import functions as F
-
-    states = states.persist()
-    n = states.count()
-    prev = states
-    while n > fanin:
-        states = (
-            states.withColumn("bucket", (F.col("partition_id") / fanin).cast("int"))
-            .groupBy("bucket")
-            .applyInPandas(_merge_group, STATE_SCHEMA)
-        ).persist()
-        n = states.count()
-        prev.unpersist()
-        prev = states
-    return states
+def tree_merge_df(states: DataFrame, fanin: int) -> DataFrame:
+    """Merge a states DataFrame down to ≤ ``fanin`` rows: one round-robin
+    shuffle of the sketch-sized rows, then one fold per task."""
+    return states.repartition(fanin).mapInArrow(_fold_task, STATE_SCHEMA)
 
 
 def sketch_agg(
@@ -298,23 +290,22 @@ def sketch_agg(
     factory: Callable[[], object],
     ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
     salt_partitions: int | None = None,
-    fanin: int = 16,
-    direct_collect_limit: int = 64,
 ):
-    """Full add_agg analogue: build partials, tree-merge, return the sketch.
+    """Full add_agg analogue: build partials, merge, return the sketch.
 
     NULL-only / empty inputs → None, matching cms_topn_union_agg over all-NULL
     rows (expected/union_agg.out:8-18).
 
     For moderate partition counts the partials are collected in ONE action and
     merged on the driver (P sketch-sized rows; merging is O(P·d·w) numpy adds,
-    microseconds per state). The shuffle tree only pays off when P is large —
-    at 1000-executor scale — so it kicks in above ``direct_collect_limit``."""
+    microseconds per state). The shuffled per-task fold only pays off when P
+    is large — at 1000-executor scale — so it kicks in above
+    ``DIRECT_COLLECT_LIMIT``."""
     states = build_partials(df, factory, ingest, salt_partitions)
     n_parts = (
         plan_num_partitions(df) if salt_partitions is None else salt_partitions
     )
-    return _collect_states(states, n_parts, fanin, direct_collect_limit)
+    return _collect_states(states, n_parts)
 
 
 def sketch_agg_parquet(
@@ -323,8 +314,6 @@ def sketch_agg_parquet(
     columns: list[str],
     factory: Callable[[], object],
     ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
-    fanin: int = 16,
-    direct_collect_limit: int = 64,
     split_row_groups: bool = False,
     filters: list[tuple] | None = None,
 ):
@@ -340,25 +329,12 @@ def sketch_agg_parquet(
     states = build_partials_parquet(
         spark, path, columns, factory, ingest, splits=splits, filters=filters
     )
-    return _collect_states(states, len(splits), fanin, direct_collect_limit)
+    return _collect_states(states, len(splits))
 
 
-def _collect_states(states: DataFrame, n_parts: int, fanin: int, direct_collect_limit: int):
-    merged_df = None
-    if n_parts > direct_collect_limit:
-        states = merged_df = tree_merge_df(states, fanin)
-    rows = states.collect()
-    if merged_df is not None:
-        merged_df.unpersist()  # tree_merge_df leaves its last level cached
-    # fold on DESERIALIZED sketches: the merge_serialized chain re-serialized
-    # the accumulator per step, and for big-level KLL states each to_bytes
-    # canonical-sorts every level — O(P·n log n) of pure plumbing on the
-    # driver. merge() on live objects yields the same values (serialization
-    # is a faithful round-trip; KLL's canonical level order never changes a
-    # merge, whose compaction re-sorts the buffer anyway).
-    acc = None
-    for r in rows:
-        if r["state"] is not None:
-            sk = sketch_from_bytes(bytes(r["state"]))
-            acc = sk if acc is None else acc.merge(sk)
-    return acc
+def _collect_states(states: DataFrame, n_parts: int):
+    """Fold a states frame of ``n_parts`` partitions into one live sketch
+    (None when every state is NULL)."""
+    if n_parts > DIRECT_COLLECT_LIMIT:
+        states = tree_merge_df(states, states.sparkSession.sparkContext.defaultParallelism)
+    return fold_states(r["state"] for r in states.collect())

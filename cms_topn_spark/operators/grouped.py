@@ -7,10 +7,11 @@ operator is the scale form, the same shape as the global build:
   stage 1 (map-side, shuffle-free): each task partitions its Arrow batches by
       key with one C++ sort, folds every key-slice into that key's sketch,
       and emits (group, state) — one row per (task, group-in-task);
-  stage 2: groupBy(group) over *sketch-sized* rows, applyInPandas merge —
-      fused with the statistic readout for the quantile/top-n/distinct
-      forms, so the merged state never crosses back to the JVM (the states
-      API keeps the unfused merge for probe-style consumers).
+  stage 2: hash-repartition the *sketch-sized* rows by group and fold each
+      partition's states into one live sketch per group — fused with the
+      statistic readout for the quantile/top-n/distinct forms, so the merged
+      state never crosses back to the JVM (the states API keeps the unfused
+      merge for probe-style consumers).
 
 The shuffle therefore moves |groups-per-partition| · |state| bytes instead of
 the raw rows — the count-min analogue of a map-side combine. Skewed groups
@@ -28,7 +29,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.base import merge_serialized
+from ..core.base import sketch_from_bytes
 from .build import pack_arrow_array
 
 
@@ -163,12 +164,12 @@ def _fold_partition_states(
     """Shared stage-2 shape: hash-repartition the (group, state) partials by
     group and return (repartitioned frame, per-partition folder) — the
     folder walks a partition's pandas chunks once and merges every group's
-    states into a dict. One Python-side fold per PARTITION instead of one
-    ``applyInPandas`` slice per GROUP: at high group cardinality the
-    per-group overhead (a pandas frame sliced in and another built out per
-    group, ~0.5 ms each) dominated the whole operator — 15k groups cost
-    ~7.5 s through applyInPandas and ~0.5 s through this fold over the
-    same exchange. Merge order within a group is arrival order, exactly as
+    states into a dict of live sketches. One Python-side fold per
+    PARTITION instead of one ``applyInPandas`` slice per GROUP: at high
+    group cardinality the per-group overhead (a pandas frame sliced in and
+    another built out per group, ~0.5 ms each) dominated the whole
+    operator — 15k groups cost ~7.5 s through applyInPandas and ~0.5 s
+    through this fold over the same exchange. Merge order within a group is arrival order, exactly as
     unordered as the applyInPandas row order was; all gated readouts run in
     merge-order-independent regimes."""
     P = states.sparkSession.sparkContext.defaultParallelism
@@ -177,7 +178,9 @@ def _fold_partition_states(
         groups: dict = {}
         for pdf in pdfs:
             for g, st in zip(pdf[group_col], pdf["state"]):
-                groups[g] = merge_serialized(groups.get(g), bytes(st))
+                sk = sketch_from_bytes(bytes(st))
+                acc = groups.get(g)
+                groups[g] = sk if acc is None else acc.merge(sk)
         return groups
 
     return states.repartition(P, group_col), fold
@@ -190,7 +193,10 @@ def _merge_states(states: DataFrame, group_col: str, gtype: str) -> DataFrame:
         groups = fold(pdfs)
         if groups:
             yield pd.DataFrame(
-                {group_col: list(groups.keys()), "state": list(groups.values())}
+                {
+                    group_col: list(groups.keys()),
+                    "state": [sk.to_bytes() for sk in groups.values()],
+                }
             )
 
     return parts.mapInPandas(merge_partition, f"{group_col} {gtype}, state binary")
@@ -212,7 +218,7 @@ def _merge_readout(
     re-grouped for the explode). Here partials go in once, scalars come
     out, and the merged state dies inside the worker.
 
-    ``readout`` maps a deserialized sketch to column → list-of-values (one
+    ``readout`` maps a group's merged live sketch to column → list-of-values (one
     list entry per output row for that group; statistics readouts return
     length-1 lists, explodes return one entry per retained item).
 
@@ -220,8 +226,6 @@ def _merge_readout(
     (:func:`_fold_partition_states`), not one applyInPandas slice per
     group — the per-group pandas overhead dominated at high group
     cardinality."""
-    from ..core.base import sketch_from_bytes
-
     parts, fold = _fold_partition_states(partials, group_col)
 
     def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -231,7 +235,7 @@ def _merge_readout(
         out_g: list = []
         out_cols: dict[str, list] = {}
         for g, acc in groups.items():
-            cols = readout(sketch_from_bytes(acc))
+            cols = readout(acc)
             n = len(next(iter(cols.values())))
             out_g.extend([g] * n)
             for c, vals in cols.items():

@@ -34,7 +34,7 @@ def get_spark(
     if pkg_root not in existing.split(os.pathsep):
         os.environ["PYTHONPATH"] = pkg_root + (os.pathsep + existing if existing else "")
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     b = (

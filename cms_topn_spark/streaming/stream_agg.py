@@ -29,7 +29,7 @@ from typing import Callable, Iterator
 import pandas as pd
 import pyarrow as pa
 
-from ..core.base import SketchError, merge_serialized, sketch_from_bytes
+from ..core.base import SketchError, fold_states, merge_serialized, sketch_from_bytes
 from ..operators.build import build_partials, default_ingest
 
 COMMIT_FILE = "committed_batch_id"
@@ -113,14 +113,13 @@ def sketch_stream_agg(
         committed, prev = _read_frame(p)
         if batch_id <= committed:
             return  # replayed batch after restart — already folded
-        states = build_partials(batch_df, factory, ingest)
-        acc = None
-        for r in states.collect():
-            if r["state"] is not None:
-                acc = merge_serialized(acc, bytes(r["state"]))
-        merged = merge_serialized(prev, acc)  # NULL-identity handles empty batches
+        states = build_partials(batch_df, factory, ingest).collect()
+        delta = fold_states(r["state"] for r in states)
+        if delta is not None:  # an empty batch leaves the state as it is
+            # committed ⊕ delta: the merge order every commit has used
+            prev = (delta if prev is None else sketch_from_bytes(prev).merge(delta)).to_bytes()
         # state + batch id land in ONE rename — fold and commit are atomic
-        _write_frame(p, batch_id, merged)
+        _write_frame(p, batch_id, prev)
 
     writer = stream_df.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

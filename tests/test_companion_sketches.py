@@ -15,6 +15,7 @@ from cms_topn_spark.core import (
     MinMaskSketch,
     SketchError,
     TDigest,
+    fold_states,
     merge_serialized,
     sketch_from_bytes,
 )
@@ -54,6 +55,7 @@ class TestHll:
         o1 = m(m(m(parts[0], parts[1]), parts[2]), parts[3])
         o2 = m(m(parts[0], parts[1]), m(parts[2], parts[3]))
         assert o1 == o2  # byte-for-byte associativity
+        assert fold_states(parts).to_bytes() == o1
         merged = sketch_from_bytes(o1)
         assert merged.estimate() == len(np.unique(np.concatenate(allvals)))
 

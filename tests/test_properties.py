@@ -2,6 +2,8 @@
 (SURVEY.md §5.2(2)): one-sided error, the ε·N bound, byte-for-byte merge
 algebra, round-trips, and partition-invariance — over randomized streams."""
 
+import functools
+
 import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -12,6 +14,7 @@ from cms_topn_spark.core import (
     HyperLogLog,
     KllSketch,
     TDigest,
+    fold_states,
     merge_serialized,
     sketch_from_bytes,
 )
@@ -128,6 +131,7 @@ def test_merge_associativity_bytes_stable(vals, k):
     for x in reversed(parts[:-1]):
         right = merge_serialized(x, right)
     assert left == right
+    assert fold_states(parts).to_bytes() == left
 
 
 @given(vals=items)
@@ -150,6 +154,10 @@ def test_roundtrip_every_kind(vals):
     for sk in sketches:
         b = sk.to_bytes()
         assert sketch_from_bytes(b).to_bytes() == b
+        # live fold == serialized chain, NULLs skipped
+        states = [None, b, None, b]
+        assert fold_states(states).to_bytes() == functools.reduce(merge_serialized, states)
+        assert fold_states([None, None]) is None
 
 
 @given(vals=st.lists(st.integers(0, 300), min_size=1, max_size=500))

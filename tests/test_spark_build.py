@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cms_topn_spark.core import CmsTopn, sketch_from_bytes
+from cms_topn_spark.core import CmsTopn, fold_states, sketch_from_bytes
 from cms_topn_spark.core import encoding as enc
 from cms_topn_spark.functions.sketch_api import (
     bloom_add_agg,
@@ -24,7 +24,11 @@ from cms_topn_spark.functions.sketch_api import (
     tdigest_add_agg,
     topn,
 )
-from cms_topn_spark.operators.build import build_partials, tree_merge_df
+from cms_topn_spark.operators.build import (
+    DIRECT_COLLECT_LIMIT,
+    build_partials,
+    tree_merge_df,
+)
 
 
 @pytest.fixture(scope="module")
@@ -274,11 +278,26 @@ class TestTreeMerge:
         states = build_partials(
             events.select("event_type"), lambda: CmsTopn(5, update="linear"), salt_partitions=32
         )
+        persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
         merged = tree_merge_df(states, fanin=4)
         rows = merged.collect()
         assert len(rows) <= 4
         total_rows = sum(r["input_rows"] for r in rows)
         assert total_rows == events.count()
+        # 5 event types under n=5: a stable candidate set, so any merge
+        # order gives the same bytes
+        raw = fold_states(r["state"] for r in states.collect())
+        assert fold_states(r["state"] for r in rows).to_bytes() == raw.to_bytes()
+        assert tree_merge_df(states.where(F.lit(False)), fanin=4).collect() == []
+        assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
+
+    def test_above_direct_collect_limit(self, spark, events):
+        few = cms_topn_add_agg(events, "event_type", n=5, salt_partitions=8)
+        many = cms_topn_add_agg(
+            events, "event_type", n=5, salt_partitions=DIRECT_COLLECT_LIMIT + 36
+        )
+        assert np.array_equal(many.counters, few.counters)
+        assert many.topn_list() == few.topn_list()
 
 
 class TestWeightedAdds:

@@ -5,12 +5,13 @@ from pyspark.sql import functions as F
 
 from cms_topn_spark.core import CmsTopn, sketch_from_bytes
 from cms_topn_spark.functions.sketch_api import cms_topn_add_agg
-from cms_topn_spark.operators.build import build_partials
+from cms_topn_spark.operators.build import DIRECT_COLLECT_LIMIT, build_partials, sketch_agg
 from cms_topn_spark.plans.checkpoint import (
     has_checkpoint,
     lineage_summary,
     run_stage,
 )
+from cms_topn_spark.plans.flagship import flagship_factory, flagship_ingest
 from cms_topn_spark.sources.webpages import extract_host, extract_text, generate_webpages
 
 
@@ -63,6 +64,19 @@ class TestWebpages:
         )
         for host, freq in sk.topn_list():
             assert exact[host] == freq
+
+
+    def test_flagship_above_direct_collect_limit(self, spark):
+        # the shuffled per-task fold deserializes composite states on workers
+        pages = generate_webpages(spark, 2000, partitions=4).select("url", "text")
+        factory = flagship_factory(n_urls=5, n_hosts=5, n_tokens=5)
+        few = sketch_agg(pages, factory, flagship_ingest, salt_partitions=8)
+        many = sketch_agg(
+            pages, factory, flagship_ingest, salt_partitions=DIRECT_COLLECT_LIMIT + 16
+        )
+        for name in ("url_topn", "host_topn", "token_topn"):
+            assert np.array_equal(many[name].counters, few[name].counters)
+        assert many["url_hll"].to_bytes() == few["url_hll"].to_bytes()
 
 
 class TestCheckpoint:

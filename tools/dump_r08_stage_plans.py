@@ -62,15 +62,16 @@ def main() -> None:
     try:
         idx_dir = os.path.join(tmp, "minhash_idx")
         idx = dedup.minhash_index_build(docs.where(F.col("doc_id") % 3 != 0), idx_dir)
-        batch = docs.where(F.col("doc_id") % 50 == 0)
+        batch = docs.where((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 50 == 0))
         kwargs = {}
         if "index_dir" in inspect.signature(dedup.incremental_near_dup).parameters:
             kwargs["index_dir"] = idx_dir
         dump(
             "incremental_near_dup_stage",
             dedup.incremental_near_dup(batch, idx, 0.8, materialize=False, **kwargs),
-            "materialize=False form, small batch (doc_id % 50 == 0) vs a "
-            "persisted index of doc_id % 3 != 0 — the growing-corpus regime "
+            "materialize=False form, small batch (doc_id % 150 == 0, disjoint "
+            "from the index) vs a persisted index of doc_id % 3 != 0 — the "
+            "growing-corpus regime "
             "where the batch's bucket set is a strict subset, so the "
             "bucketed bands.parquet read engages when the tree supports it.",
         )
