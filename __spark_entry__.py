@@ -180,7 +180,7 @@ def q_tdigest_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ every centroid a singleton) the merged digest holds the identical
     sorted value multiset whatever the merge order, so quantile(0.5) is
     bitwise quantile_cont and partitioning-invariant."""
-    from cms_topn_spark.operators.grouped import grouped_estimate, numeric_slice_ingest
+    from cms_topn_spark.operators.grouped import grouped_estimate
 
     return grouped_estimate(
         _t(spark, sf_dir, "events"),
@@ -190,7 +190,6 @@ def q_tdigest_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda sk: sk.quantile(0.5),
         "median_value",
         "double",
-        ingest=numeric_slice_ingest,
     )
 
 

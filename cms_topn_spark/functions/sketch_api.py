@@ -52,7 +52,6 @@ from ..operators.build import (
     _fold_task,
     build_partials,
     default_ingest,
-    numeric_ingest,
     pack_arrow_array,
     plan_num_partitions,
     sketch_agg,
@@ -422,11 +421,11 @@ def bloom_add_agg(df: DataFrame, column: str, capacity: int, fpp: float = 1e-6, 
 
 
 def kll_add_agg(df: DataFrame, column: str, k: int = 200, **kw) -> KllSketch | None:
-    return sketch_agg(df.select(column), lambda: KllSketch(k), numeric_ingest, **kw)
+    return sketch_agg(df.select(column), lambda: KllSketch(k), default_ingest, **kw)
 
 
 def tdigest_add_agg(df: DataFrame, column: str, delta: float = 100.0, **kw) -> TDigest | None:
-    return sketch_agg(df.select(column), lambda: TDigest(delta), numeric_ingest, **kw)
+    return sketch_agg(df.select(column), lambda: TDigest(delta), default_ingest, **kw)
 
 
 def mms_add_agg(

@@ -93,16 +93,26 @@ def pack_arrow_array(arr: pa.Array) -> tuple[bytes | np.ndarray, np.ndarray, np.
     return data, offsets, lengths, tag
 
 
+def ingest_array(sketch, arr: pa.Array) -> None:
+    """Feed one Arrow array into a sketch, NULLs dropped, dispatching on the
+    sketch's protocol: packed item bytes for ``add_packed`` sketches
+    (CMS/MMS/HLL/Bloom), float64 values for the numeric ones (KLL/t-digest,
+    which take any numeric column, decimals included)."""
+    if hasattr(sketch, "add_packed"):
+        data, offsets, lengths, tag = pack_arrow_array(arr)
+        sketch.add_packed(data, offsets, lengths, type_tag=tag)
+    else:
+        if arr.null_count:
+            arr = arr.drop_null()
+        sketch.add_batch(arr.to_numpy(zero_copy_only=False).astype(np.float64))
+
+
 def default_ingest(sketch, batch: pa.RecordBatch) -> None:
-    """Feed column 0 of an Arrow batch into any packed-add sketch."""
+    """Feed column 0 of an Arrow batch into any sketch (see :func:`ingest_array`)."""
     arr = batch.column(0)
     if len(arr) == 0 or arr.null_count == len(arr):
         return
-    data, offsets, lengths, tag = pack_arrow_array(arr)
-    if hasattr(sketch, "add_packed"):
-        sketch.add_packed(data, offsets, lengths, type_tag=tag)
-    else:  # KLL / t-digest: numeric values, no item typing
-        sketch.add_batch(arr.drop_null().to_numpy(zero_copy_only=False))
+    ingest_array(sketch, arr)
 
 
 def weighted_ingest(sketch, batch: pa.RecordBatch) -> None:
@@ -114,16 +124,6 @@ def weighted_ingest(sketch, batch: pa.RecordBatch) -> None:
     data, offsets, lengths, tag = pack_arrow_array(tbl.column(0).combine_chunks())
     counts = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
     sketch.add_packed(data, offsets, lengths, counts=counts, type_tag=tag)
-
-
-def numeric_ingest(sketch, batch: pa.RecordBatch) -> None:
-    """Feed column 0 as float64 values (quantile sketches)."""
-    arr = batch.column(0)
-    if arr.null_count:
-        arr = arr.drop_null()
-    if len(arr) == 0:
-        return
-    sketch.add_batch(arr.to_numpy(zero_copy_only=False).astype(np.float64))
 
 
 _NPARTS_CACHE: dict = {}
@@ -224,34 +224,6 @@ def build_partials(
     return df.mapInArrow(_partials_fold(factory, ingest), STATE_SCHEMA)
 
 
-def build_partials_parquet(
-    spark,
-    path: str,
-    columns: list[str],
-    factory: Callable[[], object],
-    ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
-    files: list[str] | None = None,
-    split_row_groups: bool = False,
-    splits: list[tuple[str, int]] | None = None,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`build_partials` over a parquet path via the COLUMNAR-DIRECT
-    ingest (sources/parquet_direct.py): one task per file, pyarrow reads the
-    pruned columns in the worker, and the batches never cross Spark's
-    columnar→row→Arrow pivot — the transfer whose JVM CPU anti-scales with
-    task threads (measured in BENCH/BASELINE.md §2b). Same states frame,
-    same merge machinery. ``filters`` push (column, op, literal) conjuncts
-    into the scan: statistics-pruned splits plus a columnar residual mask
-    (see parquet_direct.map_parquet_batches)."""
-    from ..sources.parquet_direct import map_parquet_batches
-
-    return map_parquet_batches(
-        spark, path, columns, _partials_fold(factory, ingest), STATE_SCHEMA,
-        files=files, split_row_groups=split_row_groups, splits=splits,
-        filters=filters,
-    )
-
-
 def _fold_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Fold every state one task sees into one row (NULL states skipped,
     ``input_rows`` summed); a task that sees no rows emits none."""
@@ -317,17 +289,23 @@ def sketch_agg_parquet(
     split_row_groups: bool = False,
     filters: list[tuple] | None = None,
 ):
-    """:func:`sketch_agg` over a parquet path via the columnar-direct ingest
-    (one partial per FILE, or per row-group with ``split_row_groups`` — the
-    giant-file remedy; see :func:`build_partials_parquet`). The split list
-    is computed ONCE (one listing, one footer pass) and both sizes the merge
-    strategy and feeds the task mapping; ``filters`` prune that list by
-    row-group statistics before it sizes anything."""
-    from ..sources.parquet_direct import parquet_splits
+    """:func:`sketch_agg` over a parquet path via the COLUMNAR-DIRECT ingest
+    (sources/parquet_direct.py): one partial per FILE, or per row-group with
+    ``split_row_groups`` (the giant-file remedy); pyarrow reads the pruned
+    columns in the worker, so the batches never cross Spark's
+    columnar→row→Arrow pivot — the transfer whose JVM CPU anti-scales with
+    task threads (measured in BENCH/BASELINE.md §2b). Same states frame,
+    same merge. The split list is computed ONCE (one listing, one footer
+    pass) and both sizes the merge strategy and feeds the task mapping;
+    ``filters`` push (column, op, literal) conjuncts into the scan —
+    statistics-pruned splits plus a columnar residual mask (see
+    parquet_direct.map_parquet_batches)."""
+    from ..sources.parquet_direct import map_parquet_batches, parquet_splits
 
     splits = parquet_splits(path, split_row_groups=split_row_groups, filters=filters)
-    states = build_partials_parquet(
-        spark, path, columns, factory, ingest, splits=splits, filters=filters
+    states = map_parquet_batches(
+        spark, path, columns, _partials_fold(factory, ingest), STATE_SCHEMA,
+        splits=splits, filters=filters,
     )
     return _collect_states(states, len(splits))
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..core.murmur import hash128
 from ..sources.webpages import _splitmix64  # deterministic counter-based hash
+from .build import spread_small_input
 
 U64 = np.uint64
 SHINGLE_K = 8
@@ -566,16 +567,6 @@ def _band_keys_from_sig(sig: np.ndarray) -> np.ndarray:
     return key
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Signature work is CPU-bound in the worker: spread an under-partitioned
-    corpus across the cluster before the mapInArrow (no-op at real scale,
-    where the input already has >= cores partitions). Shared helper —
-    see build.spread_small_input."""
-    from .build import spread_small_input
-
-    return spread_small_input(df)
-
-
 # docs per kernel invocation: bounds every intermediate (gram buffer,
 # lexsort temps, murmur matrix, signature chunk) to a few MB so the whole
 # pass stays cache-resident — measured 2.5× faster than whole-batch arrays
@@ -588,32 +579,6 @@ _KERNEL_DOC_CHUNK = 512
 def _doc_chunks(rb: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
     for lo in range(0, rb.num_rows, _KERNEL_DOC_CHUNK):
         yield rb.slice(lo, _KERNEL_DOC_CHUNK)
-
-
-def minhash_band_keys(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, band, key): one row per band, key = hash of the band's rows."""
-    df = _spread(df)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for whole in batches:
-            for rb in _doc_chunks(whole):
-                pdf = rb.to_pandas()
-                sig = _minhash_signatures(pdf[text_col])
-                n = len(pdf)
-                key = _band_keys_from_sig(sig)
-                ids = np.repeat(pdf[id_col].to_numpy(), N_BANDS)
-                band_idx = np.tile(np.arange(N_BANDS), n)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "doc_id": pa.array(ids, pa.int64()),
-                        "band": pa.array(band_idx, pa.int32()),
-                        "key": pa.array(key.ravel().astype(np.int64), pa.int64()),
-                    }
-                )
-
-    return df.select(id_col, text_col).mapInArrow(fn, "doc_id long, band int, key long")
 
 
 def minhash_doc_features(
@@ -631,7 +596,7 @@ def minhash_doc_features(
     The gram hashes are already computed for the signatures, so emitting
     them costs one Arrow column, not a second scan — the verify stage then
     never recomputes shingles or rejoins the corpus text."""
-    df = _spread(df)
+    df = spread_small_input(df)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for whole in batches:
@@ -1179,7 +1144,7 @@ def winnow_fingerprints(
     k-gram rolling-hash sequence → min hash per sliding window of ``window``
     positions → distinct selected hashes per doc. Robust to local edits; the
     standard plagiarism/near-dup fingerprint. Output: (doc_id, fp) rows."""
-    df = _spread(df)
+    df = spread_small_input(df)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -1290,7 +1255,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     SQL-renderable kernel winnowing uses — so the ENTIRE signature scheme
     (distinct grams → per-bit ±1 votes → sign bits) has a bit-exact DuckDB
     oracle (:func:`simhash_sql`)."""
-    df = _spread(df)
+    df = spread_small_input(df)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # per-chunk kernel calls: the bit-vote stage allocates (8, n_grams)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.base import sketch_from_bytes
-from .build import pack_arrow_array
+from .build import ingest_array
 
 
 # stage-1 dice window bounds: flush on whichever trips first. ~512k rows
@@ -54,41 +54,17 @@ _ITEM_TYPES = {
 }
 
 
-def _packed_slice_ingest(sk, sl: pa.Array) -> None:
-    """Default slice ingest: pack the Arrow slice and add items (CMS/MMS/HLL
-    — anything speaking the packed-bytes protocol)."""
-    data, offs, lens, tag = pack_arrow_array(sl)
-    sk.add_packed(data, offs, lens, type_tag=tag)
-
-
-def numeric_slice_ingest(sk, sl: pa.Array) -> None:
-    """Float64 slice ingest for numeric sketches (KLL/t-digest): NULLs arrive
-    as NaN and are dropped inside ``add_batch``, mirroring quantile_cont."""
-    sk.add_batch(sl.to_numpy(zero_copy_only=False).astype(np.float64))
-
-
-def auto_slice_ingest(sk, sl: pa.Array) -> None:
-    """Dispatch on the sketch's protocol, mirroring ``build.default_ingest``:
-    packed item bytes for add_packed sketches (CMS/MMS/HLL/Bloom), float64
-    batches for the numeric ones (KLL/t-digest). The safe default for the
-    generic :func:`grouped_estimate` — a t-digest factory with the packed
-    default would die executor-side with an opaque AttributeError."""
-    if hasattr(sk, "add_packed"):
-        _packed_slice_ingest(sk, sl)
-    else:
-        numeric_slice_ingest(sk, sl)
-
-
 def _state_fold(
     group_col: str,
     value_col: str,
     factory: Callable[[], object],
-    ingest: Callable[[object, pa.Array], None],
     drop_null_keys: bool = False,
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     """The stage-1 fold as a batches→batches kernel, shared by the
     DataFrame path (``mapInArrow`` after a Spark scan) and the
-    columnar-direct path (``sources.parquet_direct`` — no JVM row pivot).
+    columnar-direct :func:`grouped_quantiles_parquet` (no JVM row pivot).
+    Each key-slice goes through ``build.ingest_array``, so the sketch's
+    own protocol picks packed items or float64 values.
     ``drop_null_keys`` performs the NULL-group drop inside the kernel for
     the direct path, where no Catalyst filter ran upstream."""
     # snapshot the caps into the closure (captured by value, so they ship to
@@ -123,7 +99,7 @@ def _state_fold(
                 sk = sketches.get(key)
                 if sk is None:
                     sk = sketches[key] = factory()
-                ingest(sk, sl)
+                ingest_array(sk, sl)
 
         # buffer a bounded window before dicing: one sort + one Python
         # group loop per ~512k rows instead of per 10k-row Arrow batch —
@@ -250,7 +226,6 @@ def grouped_sketch_states(
     group_col: str,
     value_col: str,
     factory: Callable[[], object],
-    ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
 ) -> DataFrame:
     """(group, state): one merged serialized sketch per group, two-level.
 
@@ -266,7 +241,7 @@ def grouped_sketch_states(
     float64-coerce an int key column inside the Arrow kernel (NaN for the
     null), breaking the declared schema — and silently corrupting int keys
     above 2^53 in the same window."""
-    states, gtype = _partial_states(df, group_col, value_col, factory, ingest)
+    states, gtype = _partial_states(df, group_col, value_col, factory)
     return _merge_states(states, group_col, gtype)
 
 
@@ -275,84 +250,16 @@ def _partial_states(
     group_col: str,
     value_col: str,
     factory: Callable[[], object],
-    ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
 ) -> tuple[DataFrame, str]:
     """Stage 1 only: the shuffle-free per-(task, group) partial states (and
     the group type) — the input both the states API and the fused
     merge-readouts consume."""
     gtype = dict(df.dtypes)[group_col]
     df = df.where(F.col(group_col).isNotNull())
-    partials = _state_fold(group_col, value_col, factory, ingest)
+    partials = _state_fold(group_col, value_col, factory)
     return (
         df.select(group_col, value_col).mapInArrow(
             partials, f"{group_col} {gtype}, state binary"
-        ),
-        gtype,
-    )
-
-
-def grouped_sketch_states_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    factory: Callable[[], object],
-    ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
-    gtype: str | None = None,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_sketch_states` over a parquet path via the
-    COLUMNAR-DIRECT ingest (sources/parquet_direct.py): each task reads its
-    own file split with pyarrow and folds it, skipping Spark's columnar →
-    row → Arrow double pivot — measured on this box the pivot costs ~8× the
-    scan itself in JVM CPU and its per-thread throughput drops ~2.6× at 8
-    task threads, which capped this operator's N→4N scaling at ~0.44 while
-    the fold itself scaled cleanly. Same states, same merge, same oracle.
-    ``filters`` are the direct source's pushdown layer (statistics-pruned
-    splits + columnar residual mask — see the source module)."""
-    states, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col, factory, ingest, gtype,
-        split_row_groups, filters,
-    )
-    return _merge_states(states, group_col, gtype)
-
-
-def _partial_states_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    factory: Callable[[], object],
-    ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
-    gtype: str | None = None,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-    min_splits: int | None = None,
-) -> tuple[DataFrame, str]:
-    """Stage 1 of the columnar-direct form (see
-    :func:`grouped_sketch_states_parquet` for the trade-offs).
-
-    ``min_splits``: when set (the quantile/distinct/estimate forms pass the
-    core count), a small input (one single-row-group file — the gate
-    tables' shape) is row-range-sharded so the fold runs at scan
-    parallelism instead of one task per file (parquet_direct.shard_splits).
-    Only callers whose merged result is partition-layout-independent may
-    set it (KLL/HLL/t-digest merges; bitwise so in the exact regimes the
-    gates run in) — CMS top-n retained sets break boundary ties by merge
-    order, so the top-n forms leave it unset. At real scale the split list
-    is already ≥ cores and sharding is a no-op."""
-    from ..sources.parquet_direct import map_parquet_batches, spark_type_of
-
-    if gtype is None:
-        gtype = spark_type_of(path, group_col)
-    partials = _state_fold(group_col, value_col, factory, ingest, drop_null_keys=True)
-    return (
-        map_parquet_batches(
-            spark, path, [group_col, value_col], partials,
-            f"{group_col} {gtype}, state binary",
-            split_row_groups=split_row_groups, filters=filters,
-            min_splits=min_splits,
         ),
         gtype,
     )
@@ -432,46 +339,6 @@ def _topn_cols(sk) -> dict:
     }
 
 
-def grouped_topn_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    n: int,
-    e: float = 0.001,
-    p: float = 0.99,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_topn` over a parquet path via the columnar-direct
-    ingest — identical semantics (same fold, same states-only exchange,
-    same readout; parity-tested per group against the DataFrame form), with
-    the scan feeding the Python kernel columnar-to-columnar instead of
-    through Spark's row pivot (see :func:`grouped_sketch_states_parquet`
-    for the measurements and when NOT to prefer this path). The item type
-    comes from the parquet footer the same way the DataFrame form reads it
-    from the Spark schema; ``filters`` are the source's pushdown layer."""
-    from ..core.cms_topn import CmsTopn
-    from ..sources.parquet_direct import spark_types_of
-
-    types = spark_types_of(path, [group_col, value_col])
-    gtype, vtype = types[group_col], types[value_col]
-    item_type = _ITEM_TYPES.get(vtype)
-    if item_type is None:
-        raise TypeError(
-            f"grouped_topn value column type {vtype!r} has no sketch item "
-            f"encoding (supported: {sorted(_ITEM_TYPES)})"
-        )
-    partials, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col,
-        lambda: CmsTopn(n, e, p, update="linear"), gtype=gtype,
-        split_row_groups=split_row_groups, filters=filters,
-    )
-    return _merge_readout(
-        partials, group_col, gtype, _topn_cols, f"item {item_type}, frequency long"
-    )
-
-
 def grouped_quantiles(
     df: DataFrame,
     group_col: str,
@@ -495,9 +362,7 @@ def grouped_quantiles(
 
     if len(qs) != len(q_names):
         raise ValueError("qs and q_names must have the same length")
-    partials, gtype = _partial_states(
-        df, group_col, value_col, lambda: KllSketch(k), ingest=numeric_slice_ingest
-    )
+    partials, gtype = _partial_states(df, group_col, value_col, lambda: KllSketch(k))
     return _merge_readout(
         partials, group_col, gtype, _quantile_cols(qs, q_names),
         ", ".join(f"{n} double" for n in q_names),
@@ -523,24 +388,33 @@ def grouped_quantiles_parquet(
     split_row_groups: bool = False,
     filters: list[tuple] | None = None,
 ) -> DataFrame:
-    """:func:`grouped_quantiles` over a parquet path via the columnar-direct
-    ingest — identical semantics and oracle (same fold, same states-only
-    exchange, same distributed readout); the scan feeds the Python kernel
-    columnar-to-columnar instead of through Spark's row pivot, which is
-    this operator's dominant cost and scaling cap on wide parallelism (see
-    :func:`grouped_sketch_states_parquet` for the measurements).
-    ``split_row_groups`` is the giant-file remedy (one task per row group);
-    ``filters`` push (column, op, literal) conjuncts into the scan —
-    statistics-pruned splits plus a columnar residual mask, the direct
-    source's answer to Catalyst pushdown."""
+    """:func:`grouped_quantiles` over a parquet path via the COLUMNAR-DIRECT
+    ingest (sources/parquet_direct.py) — identical semantics and oracle
+    (same fold, same states-only exchange, same distributed readout). Each
+    task reads its own file split with pyarrow and folds it, skipping
+    Spark's columnar → row → Arrow double pivot: the pivot cost ~8× the
+    scan itself in JVM CPU and its per-thread throughput dropped ~2.6× at
+    8 task threads, which capped this operator's N→4N scaling at ~0.44
+    while the fold itself scaled cleanly (BENCH/BASELINE.md §2b).
+    The group type comes from the parquet footer. ``split_row_groups`` is
+    the giant-file remedy (one task per row group); ``filters`` push
+    (column, op, literal) conjuncts into the scan — statistics-pruned
+    splits plus a columnar residual mask, the direct source's answer to
+    Catalyst pushdown. A small input (one single-row-group file — the gate
+    tables' shape) is row-range-sharded up to the core count
+    (parquet_direct.shard_splits), which KLL's layout-independent merge
+    allows (bitwise so in the exact regime)."""
     from ..core.kll import KllSketch
+    from ..sources.parquet_direct import map_parquet_batches, spark_type_of
 
     if len(qs) != len(q_names):
         raise ValueError("qs and q_names must have the same length")
-    partials, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col, lambda: KllSketch(k),
-        ingest=numeric_slice_ingest, split_row_groups=split_row_groups,
-        filters=filters,
+    gtype = spark_type_of(path, group_col)
+    partials = map_parquet_batches(
+        spark, path, [group_col, value_col],
+        _state_fold(group_col, value_col, lambda: KllSketch(k), drop_null_keys=True),
+        f"{group_col} {gtype}, state binary",
+        split_row_groups=split_row_groups, filters=filters,
         min_splits=spark.sparkContext.defaultParallelism,
     )
     return _merge_readout(
@@ -557,7 +431,6 @@ def grouped_estimate(
     estimator: Callable[[object], object],
     out_field: str,
     out_type: str,
-    ingest: Callable[[object, pa.Array], None] = auto_slice_ingest,
 ) -> DataFrame:
     """Two-level scale form of ``groupwise.groupwise_estimate``: one row
     (group, estimate) per group for ANY mergeable sketch, built through the
@@ -567,44 +440,13 @@ def grouped_estimate(
     row exchange and a parallelism cap equal to the group count; here stage 1
     folds shuffle-free at scan parallelism and only sketch states move.
 
-    The default ingest dispatches on the sketch's protocol (packed items vs
-    float64 batches); pass one explicitly to pin it. The estimate equals the
+    Stage 1 feeds the sketch through its own protocol (packed items or
+    float64 values, ``build.ingest_array``). The estimate equals the
     single-sketch build wherever the sketch's merge is order-independent
     (HLL set/register union, KLL in the exact regime, t-digest with
     ``delta ≥ πN`` — singleton centroids survive any merge order), which is
     exactly the regime the correctness gates run in."""
-    partials, gtype = _partial_states(df, group_col, value_col, factory, ingest)
-    return _merge_readout(
-        partials, group_col, gtype,
-        lambda sk: {out_field: [estimator(sk)]}, f"{out_field} {out_type}",
-    )
-
-
-def grouped_estimate_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    factory: Callable[[], object],
-    estimator: Callable[[object], object],
-    out_field: str,
-    out_type: str,
-    ingest: Callable[[object, pa.Array], None] = auto_slice_ingest,
-    gtype: str | None = None,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_estimate` over a parquet path via the columnar-direct
-    ingest — same fold, same states-only exchange, same fused readout; see
-    :func:`grouped_sketch_states_parquet` for the row-pivot measurements and
-    when the JVM scan is still the right choice. ``filters`` are the direct
-    source's pushdown layer; ``gtype`` overrides the footer-derived group
-    Spark type, as on the states API."""
-    partials, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col, factory, ingest, gtype=gtype,
-        split_row_groups=split_row_groups, filters=filters,
-        min_splits=spark.sparkContext.defaultParallelism,
-    )
+    partials, gtype = _partial_states(df, group_col, value_col, factory)
     return _merge_readout(
         partials, group_col, gtype,
         lambda sk: {out_field: [estimator(sk)]}, f"{out_field} {out_type}",
@@ -631,32 +473,4 @@ def grouped_distinct(
         df, group_col, value_col,
         lambda: HyperLogLog(p=p, sparse_limit=sparse_limit),
         lambda sk: int(sk.estimate()), out_col, "long",
-        ingest=_packed_slice_ingest,
-    )
-
-
-def grouped_distinct_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    p: int = 14,
-    sparse_limit: int | None = 1 << 22,
-    out_col: str = "distinct_values",
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_distinct` over a parquet path via the columnar-direct
-    ingest — identical semantics; see :func:`grouped_sketch_states_parquet`
-    for the row-pivot measurements this path avoids and the cases where the
-    JVM scan is still the right choice. ``filters`` are the source's
-    pushdown layer."""
-    from ..core.hll import HyperLogLog
-
-    return grouped_estimate_parquet(
-        spark, path, group_col, value_col,
-        lambda: HyperLogLog(p=p, sparse_limit=sparse_limit),
-        lambda sk: int(sk.estimate()), out_col, "long",
-        ingest=_packed_slice_ingest,
-        split_row_groups=split_row_groups, filters=filters,
     )

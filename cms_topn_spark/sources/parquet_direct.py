@@ -12,10 +12,10 @@ efficiency of any transfer-dominated Python operator regardless of how well
 the kernel itself scales.
 
 For operators whose Python kernel consumes whole columns (the sketch folds:
-grouped quantiles/distinct/top-n, corpus profiles), the pivot is pure
-overhead — the data is columnar on disk and columnar in the kernel. This
-source distributes the parquet FILE SPLITS as task rows and lets every task
-read its own split columnar-to-columnar with pyarrow:
+grouped quantiles, corpus profiles), the pivot is pure overhead — the data
+is columnar on disk and columnar in the kernel. This source distributes the
+parquet FILE SPLITS as task rows and lets every task read its own split
+columnar-to-columnar with pyarrow:
 
     files-DataFrame (one row per file) → mapInArrow(read + fold)
 
@@ -74,20 +74,13 @@ def parquet_files(path: str) -> list[str]:
 
 def spark_type_of(path: str, column: str) -> str:
     """Spark SQL type string of a parquet column (one listing + one footer
-    read; callers needing several columns use :func:`spark_types_of`)."""
-    return spark_types_of(path, [column])[column]
-
-
-def spark_types_of(path: str, columns: list[str]) -> dict[str, str]:
-    """Spark SQL type strings for several parquet columns from ONE listing
-    and ONE footer read."""
+    read)."""
     import pyarrow.parquet as pq
 
     files = parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
-    schema = pq.read_schema(files[0])
-    return {c: _spark_type(schema.field(c).type, c) for c in columns}
+    return _spark_type(pq.read_schema(files[0]).field(column).type, column)
 
 
 def _spark_type(t: pa.DataType, column: str) -> str:
@@ -243,7 +236,6 @@ def map_parquet_batches(
     columns: list[str],
     fold: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
     out_schema: str,
-    files: list[str] | None = None,
     split_row_groups: bool = False,
     splits: list[tuple[str, int]] | None = None,
     filters: list[tuple] | None = None,
@@ -256,10 +248,6 @@ def map_parquet_batches(
     ``use_threads=False`` on the pyarrow reader: each task is already one
     core's worth of work — per-task thread pools would oversubscribe the
     executor and wreck the task-count = parallelism accounting.
-
-    ``files``: pre-resolved file list — callers that already listed the
-    directory (e.g. to size the merge strategy) pass it to avoid a second
-    listing and the TOCTOU window between two listings.
 
     ``split_row_groups``: one task per (file, row-group) instead of per
     file — the remedy when a few giant files would otherwise serialize the
@@ -280,9 +268,7 @@ def map_parquet_batches(
     if filters:
         _check_filters(filters)
     if splits is None:
-        splits = parquet_splits(
-            path, files=files, split_row_groups=split_row_groups, filters=filters
-        )
+        splits = parquet_splits(path, split_row_groups=split_row_groups, filters=filters)
     # ``min_splits`` (see shard_splits): fan small split lists out by row
     # ranges so the fold's parallelism isn't capped by the file count
     sharded = shard_splits(splits, min_splits or 0)
@@ -370,7 +356,6 @@ def map_parquet_batches(
 
 def parquet_splits(
     path: str,
-    files: list[str] | None = None,
     split_row_groups: bool = False,
     filters: list[tuple] | None = None,
 ) -> list[tuple[str, int]]:
@@ -387,8 +372,7 @@ def parquet_splits(
     anyway and reads only those. Stats-free columns/footers conservatively
     keep their splits; correctness never depends on pruning, only on the
     residual mask."""
-    if files is None:
-        files = parquet_files(path)
+    files = parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
     if filters:

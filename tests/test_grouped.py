@@ -344,97 +344,34 @@ def test_grouped_quantiles_parquet_direct_matches_dataframe_form(spark, sf001_di
         for r in grouped_quantiles_parquet(spark, path, "user_id", "value", k=4096).collect()
     )
     assert a == b and len(a) > 0
-
-    tmp = tempfile.mkdtemp()
-    p2 = os.path.join(tmp, "t.parquet")
-    spark.createDataFrame(
-        [(1, 1.0), (None, 2.0), (1, 3.0), (2, None)], "g int, v double"
-    ).coalesce(1).write.mode("overwrite").parquet(p2)
-    got = sorted(
-        tuple(r)
-        for r in grouped_quantiles_parquet(
-            spark, p2, "g", "v", qs=(0.5,), q_names=("q50",)
-        ).collect()
-    )
-    assert got == [(1, 2.0)]
-
-
-def test_grouped_topn_parquet_direct_state_parity(spark, sf001_dir):
-    """The columnar-direct per-group CMS build merges to the same canonical
-    per-group STATE as the DataFrame form: identical counter matrices,
-    identical totals, identical (item, frequency) top-n sets. Canonical
-    readout rather than raw serialized bytes on purpose — the frame carries
-    insertion-sequence tie-breakers that legitimately differ when the two
-    paths split the input into different task orders (same rule as
-    test_sketch_agg_parquet_matches_dataframe_form)."""
-    import numpy as np
-
-    from cms_topn_spark.core import CmsTopn, sketch_from_bytes
-    from cms_topn_spark.operators.grouped import (
-        grouped_sketch_states,
-        grouped_sketch_states_parquet,
-        grouped_topn,
-        grouped_topn_parquet,
-    )
-
-    path = os.path.join(sf001_dir, "events.parquet")
-    factory = lambda: CmsTopn(5, 0.0001, 0.99, update="linear")
-    a = {
-        r["event_type"]: sketch_from_bytes(bytes(r["state"]))
-        for r in grouped_sketch_states(
-            spark.read.parquet(path), "event_type", "user_id", factory
-        ).collect()
-    }
-    b = {
-        r["event_type"]: sketch_from_bytes(bytes(r["state"]))
-        for r in grouped_sketch_states_parquet(
-            spark, path, "event_type", "user_id", factory
-        ).collect()
-    }
-    assert set(a) == set(b) and len(a) > 0
-    for g in a:
-        assert np.array_equal(a[g].counters, b[g].counters)
-        assert a[g].total == b[g].total
-        assert dict(a[g].topn_list()) == dict(b[g].topn_list())
-
-    # readout parity too: same (group, item, frequency) rows either way
-    ra = sorted(
-        tuple(r)
-        for r in grouped_topn(
-            spark.read.parquet(path), "event_type", "user_id", 5, e=0.0001
-        ).collect()
-    )
-    rb = sorted(
-        tuple(r)
-        for r in grouped_topn_parquet(
-            spark, path, "event_type", "user_id", 5, e=0.0001
-        ).collect()
-    )
-    assert ra == rb and len(ra) > 0
-
-
-def test_grouped_distinct_parquet_direct_matches_dataframe_form(spark, sf001_dir):
-    """Direct-ingest per-group HLL distinct counts equal the DataFrame form
-    row-for-row (sparse-exact regime at sf0.001, so both equal the truth)."""
-    from cms_topn_spark.operators.grouped import (
-        grouped_distinct,
-        grouped_distinct_parquet,
-    )
-
-    path = os.path.join(sf001_dir, "events.parquet")
+    # a string group key through the direct source
     a = sorted(
         tuple(r)
-        for r in grouped_distinct(
-            spark.read.parquet(path), "event_type", "user_id"
+        for r in grouped_quantiles(
+            spark.read.parquet(path), "event_type", "value", k=4096
         ).collect()
     )
     b = sorted(
         tuple(r)
-        for r in grouped_distinct_parquet(
-            spark, path, "event_type", "user_id"
+        for r in grouped_quantiles_parquet(
+            spark, path, "event_type", "value", k=4096
         ).collect()
     )
     assert a == b and len(a) > 0
+
+    tmp = tempfile.mkdtemp()
+    for gtype, g1, g2 in (("int", 1, 2), ("string", "a", "b")):
+        p2 = os.path.join(tmp, f"t_{gtype}.parquet")
+        spark.createDataFrame(
+            [(g1, 1.0), (None, 2.0), (g1, 3.0), (g2, None)], f"g {gtype}, v double"
+        ).coalesce(1).write.mode("overwrite").parquet(p2)
+        got = sorted(
+            tuple(r)
+            for r in grouped_quantiles_parquet(
+                spark, p2, "g", "v", qs=(0.5,), q_names=("q50",)
+            ).collect()
+        )
+        assert got == [(g1, 2.0)]
 
 
 def test_parquet_direct_column_order_independent(spark, tmp_path):
@@ -484,7 +421,7 @@ def test_grouped_estimate_tdigest_matches_groupwise_bitwise(spark, sf001_dir):
     whatever the partial split — the property q_tdigest_median_by_type's
     oracle (quantile_cont) relies on."""
     from cms_topn_spark.core import TDigest
-    from cms_topn_spark.operators.grouped import grouped_estimate, numeric_slice_ingest
+    from cms_topn_spark.operators.grouped import grouped_estimate
     from cms_topn_spark.operators.groupwise import groupwise_estimate
 
     events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
@@ -498,7 +435,7 @@ def test_grouped_estimate_tdigest_matches_groupwise_bitwise(spark, sf001_dir):
     )
     two_level = {
         r["event_type"]: r["median_value"]
-        for r in grouped_estimate(events, *args, ingest=numeric_slice_ingest).collect()
+        for r in grouped_estimate(events, *args).collect()
     }
     one_task = {
         r["event_type"]: r["median_value"]
@@ -508,54 +445,19 @@ def test_grouped_estimate_tdigest_matches_groupwise_bitwise(spark, sf001_dir):
     # and invariant under a different partitioning of the same rows
     repart = {
         r["event_type"]: r["median_value"]
-        for r in grouped_estimate(
-            events.repartition(13), *args, ingest=numeric_slice_ingest
-        ).collect()
+        for r in grouped_estimate(events.repartition(13), *args).collect()
     }
     assert repart == two_level
 
 
-def test_grouped_estimate_parquet_matches_dataframe_form(spark, sf001_dir):
-    """Columnar-direct twin of grouped_estimate: same fold, same states, same
-    readout — medians must match the DataFrame form bitwise."""
-    from cms_topn_spark.core import TDigest
-    from cms_topn_spark.operators.grouped import (
-        grouped_estimate,
-        grouped_estimate_parquet,
-        numeric_slice_ingest,
-    )
-
-    p = os.path.join(sf001_dir, "events.parquet")
-    args = (
-        "event_type",
-        "value",
-        lambda: TDigest(delta=1e7),
-        lambda sk: sk.quantile(0.5),
-        "median_value",
-        "double",
-    )
-    df_form = {
-        r["event_type"]: r["median_value"]
-        for r in grouped_estimate(
-            spark.read.parquet(p), *args, ingest=numeric_slice_ingest
-        ).collect()
-    }
-    direct = {
-        r["event_type"]: r["median_value"]
-        for r in grouped_estimate_parquet(
-            spark, p, *args, ingest=numeric_slice_ingest
-        ).collect()
-    }
-    assert direct == df_form and len(direct) > 0
-
-
 def test_grouped_estimate_default_ingest_dispatches_on_protocol(spark, sf001_dir):
-    """The generic form's DEFAULT ingest must work for both sketch protocols:
-    numeric add_batch (t-digest — would die with AttributeError under the
-    packed default) and packed add_packed (HLL), without the caller naming
-    an ingest."""
+    """Stage 1 must feed both sketch protocols without the caller naming an
+    ingest: numeric add_batch (t-digest, KLL — no add_packed, so a packed
+    ingest would die executor-side with AttributeError) and packed
+    add_packed (HLL)."""
     from cms_topn_spark.core import TDigest
     from cms_topn_spark.core.hll import HyperLogLog
+    from cms_topn_spark.core.kll import KllSketch
     from cms_topn_spark.operators.grouped import grouped_estimate
 
     events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
@@ -583,3 +485,15 @@ def test_grouped_estimate_default_ingest_dispatches_on_protocol(spark, sf001_dir
         .collect()
     }
     assert got == exact
+    # the states API dispatches too: one merged KLL per group over every row
+    kll = {
+        r["event_type"]: sketch_from_bytes(bytes(r["state"]))
+        for r in grouped_sketch_states(
+            events, "event_type", "value", lambda: KllSketch(200)
+        ).collect()
+    }
+    counts = {
+        r["event_type"]: r["c"]
+        for r in events.groupBy("event_type").agg(F.count("value").alias("c")).collect()
+    }
+    assert {g: sk.n for g, sk in kll.items()} == counts

@@ -112,6 +112,11 @@ class TestCompanionAggs:
 
     def test_kll_quantiles_exact(self, spark, lineitem):
         k = kll_add_agg(lineitem, "l_extendedprice", k=1 << 20)
+        # a decimal column feeds the numeric sketch as float64 values too
+        dec = kll_add_agg(
+            lineitem.select(F.col("l_extendedprice").cast("decimal(15,2)").alias("p")),
+            "p", k=1 << 20,
+        )
         vals = np.array([r[0] for r in lineitem.select("l_extendedprice").collect()])
         v = np.sort(vals)
         for q in (0.25, 0.5, 0.75):
@@ -119,6 +124,7 @@ class TestCompanionAggs:
             i = int(np.floor(t))
             expect = v[i] + (v[min(i + 1, len(v) - 1)] - v[i]) * (t - i)
             assert k.quantile(q) == pytest.approx(expect, abs=1e-9)
+            assert dec.quantile(q) == k.quantile(q)
 
     def test_tdigest_median(self, spark, events):
         n = events.count()
@@ -570,8 +576,7 @@ class TestParquetDirectPushdown:
 
     def test_stats_prune_splits_and_values(self, spark, tmp_path):
         from cms_topn_spark.core.kll import KllSketch
-        from cms_topn_spark.operators.build import sketch_agg_parquet
-        from cms_topn_spark.operators.build import numeric_ingest
+        from cms_topn_spark.operators.build import default_ingest, sketch_agg_parquet
         from cms_topn_spark.sources.parquet_direct import parquet_splits
 
         p = self._sorted_file(tmp_path)
@@ -581,7 +586,7 @@ class TestParquetDirectPushdown:
         assert len(parquet_splits(p, split_row_groups=True, filters=flt)) == 2
         sk = sketch_agg_parquet(
             spark, p, ["v"], lambda: KllSketch(8192),
-            ingest=numeric_ingest, filters=flt, split_row_groups=True,
+            ingest=default_ingest, filters=flt, split_row_groups=True,
         )
         assert sk.n == 2000  # exactly the rows with ts in [3000, 5000)
 
