@@ -17,15 +17,14 @@ tdigest_add_agg, mms_add_agg) sharing the same build/merge machinery.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     BooleanType,
     DoubleType,
@@ -127,6 +126,15 @@ _TOPN_SCHEMAS = {
 }
 
 
+_TAG_TO_ARROW = {
+    enc.TYPE_INT32: pa.int32(),
+    enc.TYPE_INT64: pa.int64(),
+    enc.TYPE_FLOAT64: pa.float64(),
+    enc.TYPE_STRING: pa.string(),
+    enc.TYPE_BINARY: pa.binary(),
+}
+
+
 def topn(spark: SparkSession, sketch: CmsTopn | None, type_tag: int | None = None) -> DataFrame:
     """The topn() SRF: DataFrame(item, frequency) sorted frequency desc.
     Empty/NULL sketch → 0 rows (expected/results.out:5-15)."""
@@ -157,20 +165,19 @@ def cms_topn_add_udf():
     (expected/add.out:4-36). This mirrors the reference's scalar form for
     tables that carry sketch columns (sql/add.sql); the bulk path
     (cms_topn_add_agg) is the one to use for building."""
-    from pyspark.sql.types import BinaryType
 
-    @pandas_udf(BinaryType())
-    def add(states: pd.Series, items: pd.Series) -> pd.Series:
+    @arrow_udf(BinaryType())
+    def add(states: pa.Array, items: pa.Array) -> pa.Array:
         out = []
-        for st, item in zip(states, items):
+        for st, item in zip(states.to_pylist(), items.to_pylist()):
             if st is None:
                 out.append(None)
                 continue
-            sk = sketch_from_bytes(bytes(st))
+            sk = sketch_from_bytes(st)
             if item is not None:
                 sk.add(item)
             out.append(sk.to_bytes())
-        return pd.Series(out)
+        return pa.array(out, type=pa.binary())
 
     return add
 
@@ -189,26 +196,28 @@ def topn_explode(
     in the schema table, so typed columns are the rule; only unbound
     (TYPE_UNSET) sketches render as strings, and a column mixing bound tags
     raises rather than silently stringifying."""
-    from pyspark.sql.types import ArrayType
-
     if type_tag is None:
         probe = df.select(state_col).where(F.col(state_col).isNotNull()).first()
         if probe is not None:
             type_tag = sketch_from_bytes(bytes(probe[0])).item_type
     item_t = _TOPN_SCHEMAS.get(type_tag, StringType())
     native = type_tag in _TOPN_SCHEMAS
-    item_schema = StructType(
-        [StructField("item", item_t, True), StructField("frequency", LongType(), True)]
+    out_type = ArrayType(
+        StructType([StructField("item", item_t, True), StructField("frequency", LongType(), True)])
+    )
+    # int32 items widen to the declared long on the way back to the JVM
+    out_arrow = pa.list_(
+        pa.struct([("item", _TAG_TO_ARROW.get(type_tag, pa.string())), ("frequency", pa.int64())])
     )
 
-    @pandas_udf(ArrayType(item_schema))
-    def explode_topn(states: pd.Series) -> pd.Series:
+    @arrow_udf(out_type)
+    def explode_topn(states: pa.Array) -> pa.Array:
         out = []
-        for st in states:
+        for st in states.to_pylist():
             if st is None:
                 out.append([])
                 continue
-            sk = sketch_from_bytes(bytes(st))
+            sk = sketch_from_bytes(st)
             if native and sk.item_type not in (type_tag, enc.TYPE_UNSET):
                 raise TypeError(
                     f"sketch bound to item type tag {sk.item_type} in a "
@@ -216,11 +225,11 @@ def topn_explode(
                 )
             out.append(
                 [
-                    (i if native else str(i), int(f))
+                    {"item": i if native else str(i), "frequency": int(f)}
                     for i, f in sk.topn_list(type_tag if native else None)
                 ]
             )
-        return pd.Series(out)
+        return pa.array(out, type=out_arrow)
 
     return df.select(
         "*", F.explode(explode_topn(F.col(state_col))).alias("_t")
@@ -243,42 +252,23 @@ def _cached_sketch(b: bytes):
     return sk
 
 
-_TAG_TO_ARROW = {
-    enc.TYPE_INT32: pa.int32(),
-    enc.TYPE_INT64: pa.int64(),
-    enc.TYPE_FLOAT64: pa.float64(),
-    enc.TYPE_STRING: pa.string(),
-    enc.TYPE_BINARY: pa.binary(),
-}
+def _pack_for_probe(items: pa.Array, sk) -> tuple:
+    """Encode the non-NULL items of a probe column with the sketch's BOUND
+    item type → (data, offsets, lengths).
 
-
-def _pack_for_probe(items: pd.Series, sk) -> tuple:
-    """Encode a probe column with the sketch's BOUND item type.
-
-    A nullable integer column reaches pandas as float64 (NaN for nulls); naive
-    packing would tag it TYPE_FLOAT64 and every estimate would silently be 0.
-    Dropping nulls first, then casting the Arrow array to the sketch's bound
-    type, restores build-time encoding; a genuinely incompatible column (e.g.
-    strings probed against an int sketch, or 7.5 against int64) raises instead
-    of hashing garbage. Returns (data, offsets, lengths, notnull_mask).
-
-    Contract asymmetry (deliberate): the scalar API (CmsTopn.estimate) rejects
-    ANY float probe against an int-bound sketch, while this column path
-    accepts a float64 column whose values are all integral — because pandas
-    delivers every NULL-bearing int column as float64, and rejecting those
-    would make NULL-tolerant probes impossible. The cast is checked (non-
-    integral values or >2^53 magnitudes raise), so the loosening can never
-    hash a different key than the build did."""
+    A numeric column of another width or family (int32 against an int64
+    sketch, double against an int sketch) goes through a checked cast to the
+    bound type: 7.0 probes as 7, while 7.5 or an out-of-range value raises,
+    so a probe never hashes a different key than the build did. A
+    cross-family column (strings against an int sketch) raises instead of
+    returning silently-zero estimates."""
     from ..operators.build import arrow_type_tag
 
-    mask = items.notna().to_numpy()
-    arr = pa.Array.from_pandas(items)
-    if arr.null_count:
-        arr = arr.drop_null()
+    arr = items.drop_null() if items.null_count else items
     want = getattr(sk, "item_type", enc.TYPE_UNSET)
-    numeric = (enc.TYPE_INT32, enc.TYPE_INT64, enc.TYPE_FLOAT64)
-    if want != enc.TYPE_UNSET and len(arr) and arrow_type_tag(arr.type) != want:
-        have = arrow_type_tag(arr.type)
+    have = arrow_type_tag(arr.type)
+    if want != enc.TYPE_UNSET and have != want:
+        numeric = (enc.TYPE_INT32, enc.TYPE_INT64, enc.TYPE_FLOAT64)
         if not (have in numeric and want in numeric):
             # int vs string sketch etc. — cross-family probes are type errors,
             # not silently-zero estimates ("not proper type for this cms_topn")
@@ -286,17 +276,6 @@ def _pack_for_probe(items: pd.Series, sk) -> tuple:
                 f"probe column type tag {have} is not compatible with the "
                 f"sketch's bound item type tag {want}"
             )
-        if have == enc.TYPE_FLOAT64 and want != enc.TYPE_FLOAT64:
-            # a NULL-bearing int column reached pandas as float64; above 2^53
-            # the low bits were already rounded away — probing the rounded
-            # value would silently return the wrong key's estimate
-            vals = arr.to_numpy(zero_copy_only=False)
-            if np.any(np.abs(vals) > 2.0**53):
-                raise ValueError(
-                    "probe values above 2^53 arrived as float64 (NULL-bearing"
-                    " batch) and cannot be recovered exactly; filter NULLs"
-                    " upstream or probe via a string column"
-                )
         try:
             arr = arr.cast(_TAG_TO_ARROW[want])
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as e:
@@ -304,46 +283,62 @@ def _pack_for_probe(items: pd.Series, sk) -> tuple:
                 f"probe column type {arr.type} has values not representable "
                 f"in the sketch's bound item type tag {want}"
             ) from e
-    data, offsets, lengths, tag = pack_arrow_array(arr)
-    if want != enc.TYPE_UNSET and len(lengths) and tag != want:
-        raise TypeError(
-            f"probe column encoded as tag {tag}, sketch is bound to {want}"
-        )
-    return data, offsets, lengths, mask
+    data, offsets, lengths, _tag = pack_arrow_array(arr)
+    return data, offsets, lengths
+
+
+def _probe_udf(sketch_bytes: bytes, method: str, return_type):
+    """Vectorized point probe of a column against a broadcast sketch: one
+    ``method`` call (``estimate_packed`` / ``get_masks_packed`` /
+    ``contains_packed``) per Arrow batch (§3.2 of SURVEY.md — one JVM→Python
+    crossing per batch, zero per-row Python). A NULL item gives NULL, except
+    in a BooleanType membership probe, where a NULL is never contained and
+    gives False (``bloom_anti_join`` keeps NULL-keyed rows)."""
+    membership = isinstance(return_type, BooleanType)
+
+    @arrow_udf(return_type)
+    def probe(items: pa.Array) -> pa.Array:
+        valid = items.is_valid().to_numpy(zero_copy_only=False)
+        out = np.zeros(len(items), dtype=np.bool_ if membership else np.int64)
+        if valid.any():
+            sk = _cached_sketch(sketch_bytes)
+            out[valid] = getattr(sk, method)(*_pack_for_probe(items, sk))
+        return pa.array(out, mask=None if membership else ~valid)
+
+    return probe
 
 
 def frequency_udf(sketch_bytes: bytes):
-    """Vectorized column probe: broadcast the serialized sketch, estimate a
-    whole Arrow batch per call (§3.2 of SURVEY.md — one JVM→Python crossing
-    per batch, zero per-row Python)."""
+    """Column form of cms_topn_frequency: frequency(s, NULL) → NULL."""
+    return _probe_udf(sketch_bytes, "estimate_packed", LongType())
 
-    @pandas_udf(LongType())
-    def probe(items: pd.Series) -> pd.Series:
-        sk = _cached_sketch(sketch_bytes)
-        data, offsets, lengths, mask = _pack_for_probe(items, sk)
-        out = np.zeros(len(items), dtype=np.int64)
-        if mask.any():
-            out[mask] = sk.estimate_packed(data, offsets, lengths)
-        res = pd.Series(out, dtype="Int64")
-        res[~mask] = pd.NA  # frequency(s, NULL) → NULL
-        return res
 
-    return probe
+def mask_udf(mms_bytes: bytes):
+    """Column form of mms_get_mask (§2.1 #8): mask(s, NULL) → NULL."""
+    return _probe_udf(mms_bytes, "get_masks_packed", LongType())
+
+
+def bloom_contains_udf(bloom_bytes: bytes):
+    """Column Bloom membership: NULL → False."""
+    return _probe_udf(bloom_bytes, "contains_packed", BooleanType())
 
 
 def rare_token_probe_udf(sketch_bytes: bytes, threshold: int, delimiter: str = " "):
     """Per-document rare-token statistics as a PURE MAP: split each text,
     probe EVERY token against the broadcast sketch in one packed Murmur pass,
     and segment-sum per document — returns a struct (n_tokens,
-    n_rare_tokens) per row.
+    n_rare_tokens) per row; a NULL text gives NULL fields.
 
     This is the 100-TB shape for "how many below-threshold-frequency tokens
     does each document contain": the explode→probe→groupBy(doc_id)
     formulation shuffles one row PER TOKEN (a corpus-token-count-sized
     exchange ~50× the document count) to recombine what was never apart;
-    here tokens never leave the task and the plan has zero exchanges."""
-    from pyspark.sql.types import StructField, StructType
+    here tokens never leave the task and the plan has zero exchanges.
 
+    ``delimiter`` is a regex, as in Spark's ``F.split``, but in Arrow's RE2
+    dialect rather than Java's: plain delimiters and character classes split
+    identically; Java-only constructs (lookaround, backreferences) are not
+    supported."""
     schema = StructType(
         [
             StructField("n_tokens", LongType()),
@@ -351,56 +346,26 @@ def rare_token_probe_udf(sketch_bytes: bytes, threshold: int, delimiter: str = "
         ]
     )
 
-    @pandas_udf(schema)
-    def probe(texts: pd.Series) -> pd.DataFrame:
-        sk = _cached_sketch(sketch_bytes)
-        # NULL text → NULL struct fields (split(NULL) yields no tokens in
-        # the explode formulation and its SQL oracle; fabricating a
-        # 1-token row for NULL would silently diverge from both)
-        null_mask = texts.isna().to_numpy()
-        # regex=True matches Spark's F.split, which ALWAYS treats the
-        # delimiter as a regex (pandas' default would treat a single-char
-        # "." literally while the explode formulation splits on any char).
-        # Residual caveat: exotic patterns can still differ between Java's
-        # and Python's regex dialects; plain delimiters are identical.
-        toks = texts.fillna("").str.split(delimiter, regex=True)
-        lens = toks.str.len().to_numpy(dtype=np.int64)
-        if lens.sum() == 0:
-            rare_out = lens.copy()
-        else:
-            flat = pa.Array.from_pandas(toks.explode(), type=pa.string())
-            data, offsets, lengths, _tag = pack_arrow_array(flat)
+    @arrow_udf(schema)
+    def probe(texts: pa.Array) -> pa.Array:
+        # NULL text → NULL fields (split(NULL) yields no tokens in the
+        # explode formulation and its SQL oracle; fabricating a 1-token row
+        # for NULL would silently diverge from both)
+        toks = pc.split_pattern_regex(texts, delimiter)
+        lens = pc.list_value_length(toks).fill_null(0).to_numpy().astype(np.int64)
+        rare_out = np.zeros_like(lens)
+        if lens.sum():
+            sk = _cached_sketch(sketch_bytes)
+            data, offsets, lengths, _tag = pack_arrow_array(pc.list_flatten(toks))
             est = sk.estimate_packed(data, offsets, lengths)
             rare = np.concatenate(([0], np.cumsum(est < threshold, dtype=np.int64)))
             ends = np.cumsum(lens)
             rare_out = rare[ends] - rare[ends - lens]
-        out = pd.DataFrame(
-            {
-                "n_tokens": pd.Series(lens, dtype="Int64"),
-                "n_rare_tokens": pd.Series(rare_out, dtype="Int64"),
-            }
+        nulls = texts.is_null().to_numpy(zero_copy_only=False)
+        return pa.StructArray.from_arrays(
+            [pa.array(lens, mask=nulls), pa.array(rare_out, mask=nulls)],
+            names=["n_tokens", "n_rare_tokens"],
         )
-        out.loc[null_mask, ["n_tokens", "n_rare_tokens"]] = pd.NA
-        return out
-
-    return probe
-
-
-def mask_udf(mms_bytes: bytes):
-    """Vectorized mms_get_mask column probe (§2.1 #8) — the distributed form
-    of probing a min-mask sketch for a whole column of items; mirrors
-    frequency_udf (same worker cache, same typed encoding)."""
-
-    @pandas_udf(LongType())
-    def probe(items: pd.Series) -> pd.Series:
-        sk = _cached_sketch(mms_bytes)
-        data, offsets, lengths, mask = _pack_for_probe(items, sk)
-        out = np.zeros(len(items), dtype=np.int64)
-        if mask.any():
-            out[mask] = sk.get_masks_packed(data, offsets, lengths).astype(np.int64)
-        res = pd.Series(out, dtype="Int64")
-        res[~mask] = pd.NA
-        return res
 
     return probe
 
@@ -441,19 +406,6 @@ def mms_add_agg(
         sk.add_packed(data, offsets, lengths, masks, tag)
 
     return sketch_agg(df.select(item_col, mask_col), lambda: MinMaskSketch(e, p), ingest, **kw)
-
-
-def bloom_contains_udf(bloom_bytes: bytes):
-    @pandas_udf(BooleanType())
-    def probe(items: pd.Series) -> pd.Series:
-        bf = _cached_sketch(bloom_bytes)
-        data, offsets, lengths, mask = _pack_for_probe(items, bf)
-        out = np.zeros(len(items), dtype=bool)
-        if mask.any():
-            out[mask] = bf.contains_packed(data, offsets, lengths)
-        return pd.Series(out)
-
-    return probe
 
 
 def bloom_semi_join(

@@ -28,28 +28,33 @@ from ..sources.webpages import _splitmix64
 U64 = np.uint64
 
 
-def _batch_embedding_matrix(arr: pa.ChunkedArray | pa.Array) -> np.ndarray:
-    """Arrow list<float> column → (n, dim) float64 matrix without per-row Python."""
+def _batch_embedding_matrix(
+    arr: pa.ChunkedArray | pa.Array, dtype=np.float64
+) -> np.ndarray:
+    """Arrow list<float> column → (n, dim) ``dtype`` matrix without per-row
+    Python. float32 keeps the raw stored precision, for kernels that must
+    replicate Catalyst's float arithmetic bit-for-bit
+    (:func:`_score_candidates_topk`)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    if isinstance(arr, pa.ListArray) or isinstance(arr, pa.LargeListArray):
-        offsets = arr.offsets.to_numpy()
-        if len(arr):
-            lens = np.diff(offsets[: len(arr) + 1])
-            # NULL or ragged rows would otherwise produce a garbage reshape
-            # (null-first ⇒ dim 0) or an opaque ValueError deep inside a
-            # GEMM — name the actual cause
-            if arr.null_count or lens.min() != lens.max():
-                raise ValueError(
-                    "embeddings must be non-NULL and equal-length; got "
-                    f"{arr.null_count} nulls, lengths {int(lens.min())}"
-                    f"..{int(lens.max())}"
-                )
-        flat = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
-        dim = int(offsets[1] - offsets[0]) if len(arr) else 0
-        start = int(offsets[0])
-        return flat[start : start + len(arr) * dim].reshape(len(arr), dim)
-    raise TypeError(f"expected list<float> embeddings, got {arr.type}")
+    if not isinstance(arr, (pa.ListArray, pa.LargeListArray)):
+        raise TypeError(f"expected list<float> embeddings, got {arr.type}")
+    offsets = arr.offsets.to_numpy()
+    if len(arr):
+        lens = np.diff(offsets[: len(arr) + 1])
+        # NULL or ragged rows would otherwise produce a garbage reshape
+        # (null-first ⇒ dim 0) or an opaque ValueError deep inside a
+        # GEMM — name the actual cause
+        if arr.null_count or lens.min() != lens.max():
+            raise ValueError(
+                "embeddings must be non-NULL and equal-length; got "
+                f"{arr.null_count} nulls, lengths {int(lens.min())}"
+                f"..{int(lens.max())}"
+            )
+    flat = arr.values.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    dim = int(offsets[1] - offsets[0]) if len(arr) else 0
+    start = int(offsets[0])
+    return flat[start : start + len(arr) * dim].reshape(len(arr), dim)
 
 
 def brute_force_topk(
@@ -359,29 +364,6 @@ def _cosine_expr() -> F.Column:
     return dot / (norm(F.col("qv")) * norm(F.col("nv")))
 
 
-def _batch_embedding_matrix_f32(arr: pa.ChunkedArray | pa.Array) -> np.ndarray:
-    """Arrow list<float> column → (n, dim) float32 matrix — the raw stored
-    precision, for kernels that must replicate Catalyst's float arithmetic
-    bit-for-bit (:func:`_score_candidates_topk`)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if not (isinstance(arr, pa.ListArray) or isinstance(arr, pa.LargeListArray)):
-        raise TypeError(f"expected list<float> embeddings, got {arr.type}")
-    offsets = arr.offsets.to_numpy()
-    if len(arr):
-        lens = np.diff(offsets[: len(arr) + 1])
-        if arr.null_count or lens.min() != lens.max():
-            raise ValueError(
-                "embeddings must be non-NULL and equal-length; got "
-                f"{arr.null_count} nulls, lengths {int(lens.min())}"
-                f"..{int(lens.max())}"
-            )
-    flat = arr.values.to_numpy(zero_copy_only=False)
-    dim = int(offsets[1] - offsets[0]) if len(arr) else 0
-    start = int(offsets[0])
-    return flat[start : start + len(arr) * dim].reshape(len(arr), dim)
-
-
 def _score_candidates_topk(
     cand: DataFrame,
     df: DataFrame,
@@ -438,7 +420,7 @@ def _score_candidates_topk(
             names = rb.schema.names
             qid = rb.column(names.index("query_id")).to_numpy()
             nid = rb.column(names.index("neighbor_id")).to_numpy()
-            nm = _batch_embedding_matrix_f32(rb.column(names.index("nv")))
+            nm = _batch_embedding_matrix(rb.column(names.index("nv")), np.float32)
             n = len(qid)
             if n == 0:
                 continue

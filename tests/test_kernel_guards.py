@@ -141,3 +141,20 @@ class TestEstimateBatchAndOverflow:
         sk.add_batch(["x"], counts=[5])
         assert sk.estimate("x") == big + 5
         assert sk.total == big + 5
+
+
+class TestEmbeddingMatrix:
+    @pytest.mark.parametrize("dtype", [np.float64, np.float32])
+    def test_matrix_and_null_or_ragged_rows_raise(self, dtype):
+        import pyarrow as pa
+
+        from cms_topn_spark.operators.similarity import _batch_embedding_matrix
+
+        f32_list = pa.list_(pa.float32())
+        arr = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], type=f32_list)
+        mat = _batch_embedding_matrix(arr.slice(1), dtype)  # non-zero offset
+        assert mat.dtype == dtype and mat.tolist() == [[3.0, 4.0], [5.0, 6.0]]
+        with pytest.raises(ValueError, match="1 nulls"):
+            _batch_embedding_matrix(pa.array([[1.0, 2.0], None], type=f32_list), dtype)
+        with pytest.raises(ValueError, match="lengths 1..2"):
+            _batch_embedding_matrix(pa.array([[1.0, 2.0], [3.0]], type=f32_list), dtype)

@@ -169,9 +169,10 @@ class TestCompanionAggs:
 
 
 class TestProbeTyping:
-    """Probe UDFs must encode with the sketch's BOUND type: a nullable int
-    column reaches pandas as float64 and would otherwise hash as floats,
-    silently returning 0 (and false negatives from Bloom)."""
+    """Probe UDFs must encode with the sketch's BOUND type: an int32 column
+    probing an int64 sketch (or a double column probing an int sketch) would
+    otherwise hash a different key, silently returning 0 (and false
+    negatives from Bloom)."""
 
     def test_frequency_udf_nullable_int_column(self, spark):
         df = spark.createDataFrame([(7,)] * 100 + [(9,)] * 3, "v long")
@@ -208,27 +209,28 @@ class TestProbeTyping:
 
         with pytest.raises((PythonException, Py4JJavaError)):
             ints.withColumn("f", probe(F.col("v"))).collect()
+        # a double column against an int-bound sketch goes through a checked
+        # cast: an integral value probes as its int, a fractional one raises
+        isk = cms_topn_add_agg(spark.createDataFrame([(7,)] * 3, "v long"), "v", n=5)
+        iprobe = frequency_udf(isk.to_bytes())
+        whole = spark.createDataFrame([(7.0,)], "v double")
+        assert whole.withColumn("f", iprobe(F.col("v"))).collect()[0]["f"] == isk.estimate(7)
+        frac = spark.createDataFrame([(7.5,)], "v double")
+        with pytest.raises((PythonException, Py4JJavaError)):
+            frac.withColumn("f", iprobe(F.col("v"))).collect()
 
-    def test_probe_above_2_53_with_nulls_raises(self, spark):
-        """A NULL-bearing bigint column reaches pandas as float64 — values
-        above 2^53 are already rounded, so probing must raise, not return a
-        silently-wrong estimate."""
+    def test_probe_above_2_53_with_nulls_is_exact(self, spark):
+        """A NULL-bearing bigint column reaches the probe as typed int64 with
+        a validity bitmap, so a value above 2^53 probes exactly."""
         big = (1 << 60) + 1
         df = spark.createDataFrame([(big,), (big,)], "v long")
         sk = cms_topn_add_agg(df, "v", n=3)
         probe = frequency_udf(sk.to_bytes())
         probe_df = spark.createDataFrame(
             [(1, big), (2, None)], "id int, v long"
-        ).coalesce(1)  # the big value and the NULL must share one Arrow batch
-        from py4j.protocol import Py4JJavaError
-        from pyspark.errors import PythonException
-
-        with pytest.raises((PythonException, Py4JJavaError)):
-            probe_df.withColumn("f", probe(F.col("v"))).collect()
-        # without NULLs the column stays int64 and the probe is exact
-        clean = spark.createDataFrame([(big,)], "v long")
-        got = clean.withColumn("f", probe(F.col("v"))).collect()[0]["f"]
-        assert got == 2
+        ).coalesce(1)  # the big value and the NULL share one Arrow batch
+        got = {r["id"]: r["f"] for r in probe_df.withColumn("f", probe(F.col("v"))).collect()}
+        assert got == {1: 2, 2: None}
 
     def test_mask_udf_matches_driver_get_mask(self, spark, events):
         from cms_topn_spark.functions.sketch_api import mask_udf
@@ -333,6 +335,11 @@ class TestSketchColumnForms:
         assert by_id[3] is None  # NULL sketch → NULL
         assert bytes(by_id[4]) == base  # NULL item → unchanged
         assert sketch_from_bytes(bytes(by_id[1])).topn_list() == [("alpha", 1)]
+        # a NULL-bearing int item column keeps its int items (no float64 NaN)
+        ints = spark.createDataFrame([(1, base, 7), (2, base, None)], "id int, state binary, item long")
+        by_id = {r["id"]: r["s"] for r in ints.select("id", add("state", "item").alias("s")).collect()}
+        assert sketch_from_bytes(bytes(by_id[1])).topn_list() == [(7, 1)]
+        assert bytes(by_id[2]) == base
 
     def test_topn_explode_over_sketch_table(self, spark, events):
         # copy.source scenario: table of sketches → concatenated topn groups
