@@ -1001,7 +1001,7 @@ def q_stream_windowed_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time WINDOWED streaming under the hard gate (the last streaming
     surface): events stream through windowed_sketch_stream — watermarked
     event-time windows, one mergeable CMS top-n state per window, per-window
-    idempotent fsync'd frames (streaming/stream_agg.py:133-203) — and every
+    idempotent fsync'd frames (stream_agg._fold_windows) — and every
     window's topn must equal the window-grouped batch GROUP BY oracle.
     Staged as 4 files with maxFilesPerTrigger=1, so rows reach each window
     from MULTIPLE micro-batches out of event-time order: the per-window fold

@@ -23,17 +23,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    Row,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, BooleanType, LongType, Row, StructField, StructType
 
 from ..core import (
     BloomFilter,
@@ -47,6 +37,8 @@ from ..core import (
 from ..core import encoding as enc
 from ..operators.build import (
     STATE_SCHEMA,
+    TAG_ARROW_TYPES,
+    TAG_TOPN_TYPES,
     _collect_states,
     _fold_task,
     build_partials,
@@ -115,38 +107,15 @@ def cms_topn_union_agg(df: DataFrame, state_col: str = "state") -> CmsTopn | Non
     return _collect_states(states, plan_num_partitions(df))
 
 
-# item decode type per encoding tag for the topn() SRF family; unbound /
-# unknown tags render as string (upstream's text output for untyped calls)
-_TOPN_SCHEMAS = {
-    enc.TYPE_INT32: LongType(),
-    enc.TYPE_INT64: LongType(),
-    enc.TYPE_STRING: StringType(),
-    enc.TYPE_FLOAT64: DoubleType(),
-    enc.TYPE_BINARY: BinaryType(),
-}
-
-
-_TAG_TO_ARROW = {
-    enc.TYPE_INT32: pa.int32(),
-    enc.TYPE_INT64: pa.int64(),
-    enc.TYPE_FLOAT64: pa.float64(),
-    enc.TYPE_STRING: pa.string(),
-    enc.TYPE_BINARY: pa.binary(),
-}
-
-
 def topn(spark: SparkSession, sketch: CmsTopn | None, type_tag: int | None = None) -> DataFrame:
     """The topn() SRF: DataFrame(item, frequency) sorted frequency desc.
     Empty/NULL sketch → 0 rows (expected/results.out:5-15)."""
-    item_t = _TOPN_SCHEMAS.get(
+    item_t = TAG_TOPN_TYPES.get(
         type_tag if type_tag is not None else (sketch.item_type if sketch else enc.TYPE_STRING),
-        StringType(),
-    )
-    schema = StructType(
-        [StructField("item", item_t, True), StructField("frequency", LongType(), True)]
+        "string",
     )
     rows = [] if sketch is None else [Row(item=i, frequency=f) for i, f in sketch.topn_list(type_tag)]
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, f"item {item_t}, frequency bigint")
 
 
 def cms_topn_frequency(sketch: CmsTopn | None, item) -> int | None:
@@ -193,24 +162,21 @@ def topn_explode(
     family → double, string/binary kept), matching the driver-level
     :func:`topn`. When ``type_tag`` is not given it is read from the first
     non-NULL state (one footer-sized driver action). Every encodable tag is
-    in the schema table, so typed columns are the rule; only unbound
-    (TYPE_UNSET) sketches render as strings, and a column mixing bound tags
-    raises rather than silently stringifying."""
+    in the item-type table (``build.TAG_TOPN_TYPES``), so typed columns are
+    the rule; only unbound (TYPE_UNSET) sketches render as strings, and a
+    column mixing bound tags raises rather than silently stringifying."""
     if type_tag is None:
         probe = df.select(state_col).where(F.col(state_col).isNotNull()).first()
         if probe is not None:
             type_tag = sketch_from_bytes(bytes(probe[0])).item_type
-    item_t = _TOPN_SCHEMAS.get(type_tag, StringType())
-    native = type_tag in _TOPN_SCHEMAS
-    out_type = ArrayType(
-        StructType([StructField("item", item_t, True), StructField("frequency", LongType(), True)])
-    )
-    # int32 items widen to the declared long on the way back to the JVM
+    native = type_tag in TAG_TOPN_TYPES
+    item_t = TAG_TOPN_TYPES.get(type_tag, "string")
+    # int32 items widen to the declared bigint on the way back to the JVM
     out_arrow = pa.list_(
-        pa.struct([("item", _TAG_TO_ARROW.get(type_tag, pa.string())), ("frequency", pa.int64())])
+        pa.struct([("item", TAG_ARROW_TYPES.get(type_tag, pa.string())), ("frequency", pa.int64())])
     )
 
-    @arrow_udf(out_type)
+    @arrow_udf(f"array<struct<item:{item_t},frequency:bigint>>")
     def explode_topn(states: pa.Array) -> pa.Array:
         out = []
         for st in states.to_pylist():
@@ -277,7 +243,7 @@ def _pack_for_probe(items: pa.Array, sk) -> tuple:
                 f"sketch's bound item type tag {want}"
             )
         try:
-            arr = arr.cast(_TAG_TO_ARROW[want])
+            arr = arr.cast(TAG_ARROW_TYPES[want])
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as e:
             raise TypeError(
                 f"probe column type {arr.type} has values not representable "

@@ -56,6 +56,50 @@ _PA_STATE_SCHEMA = pa.schema(
 )
 
 
+# The item-type table, one decision for every surface that turns a column
+# into sketch items or sketch items back into a column: Spark column type →
+# encoding tag → (Arrow type, topn item column type). Unbound tags render as
+# strings in topn()/topn_explode.
+SPARK_ITEM_TAGS = {
+    "tinyint": enc.TYPE_INT32,
+    "smallint": enc.TYPE_INT32,
+    "int": enc.TYPE_INT32,
+    "bigint": enc.TYPE_INT64,
+    "float": enc.TYPE_FLOAT64,
+    "double": enc.TYPE_FLOAT64,
+    "string": enc.TYPE_STRING,
+    "binary": enc.TYPE_BINARY,
+}
+TAG_ARROW_TYPES = {
+    enc.TYPE_INT32: pa.int32(),
+    enc.TYPE_INT64: pa.int64(),
+    enc.TYPE_FLOAT64: pa.float64(),
+    enc.TYPE_STRING: pa.string(),
+    enc.TYPE_BINARY: pa.binary(),
+}
+# the encoding hashes every float as float64, and int items decode as bigint
+TAG_TOPN_TYPES = {
+    enc.TYPE_INT32: "bigint",
+    enc.TYPE_INT64: "bigint",
+    enc.TYPE_FLOAT64: "double",
+    enc.TYPE_STRING: "string",
+    enc.TYPE_BINARY: "binary",
+}
+
+
+def spark_item_tag(spark_type: str, caller: str) -> int:
+    """The encoding tag of a Spark value-column type; ``TypeError`` for a
+    type the table does not hold (boolean, timestamp, decimal, composites),
+    so no caller ever hashes a stand-in encoding of it."""
+    tag = SPARK_ITEM_TAGS.get(spark_type)
+    if tag is None:
+        raise TypeError(
+            f"{caller} value column type {spark_type!r} has no sketch item "
+            f"encoding (supported: {sorted(SPARK_ITEM_TAGS)})"
+        )
+    return tag
+
+
 def arrow_type_tag(t: pa.DataType) -> int:
     if pa.types.is_int32(t) or pa.types.is_int16(t) or pa.types.is_int8(t):
         return enc.TYPE_INT32

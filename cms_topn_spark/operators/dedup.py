@@ -31,7 +31,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -471,15 +470,6 @@ def _doc_gram_hashes(texts, k: int = SHINGLE_K) -> tuple[np.ndarray, np.ndarray,
     h1, _ = hash128(gram_bytes, np.arange(len(k_u), dtype=np.int64) * k,
                     np.full(len(k_u), k, dtype=np.int64))
     return d_u, h1, n
-
-
-def _minhash_signatures(texts: pd.Series, k: int = SHINGLE_K) -> np.ndarray:
-    """(n_docs, N_PERM) uint64 minhash matrix — vectorized across the batch;
-    perms evaluated in blocks so the (grams × perms) matrix stays cache-sized."""
-    if len(texts) == 0:
-        return np.empty((0, N_PERM), dtype=U64)
-    d_u, h1, n = _doc_gram_hashes(texts, k)
-    return _signatures_from_hashes(d_u, h1, n)
 
 
 def _mod_mersenne61_inplace(vals: np.ndarray) -> np.ndarray:

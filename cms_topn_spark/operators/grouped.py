@@ -9,9 +9,8 @@ operator is the scale form, the same shape as the global build:
       and emits (group, state) — one row per (task, group-in-task);
   stage 2: hash-repartition the *sketch-sized* rows by group and fold each
       partition's states into one live sketch per group — fused with the
-      statistic readout for the quantile/top-n/distinct forms, so the merged
-      state never crosses back to the JVM (the states API keeps the unfused
-      merge for probe-style consumers).
+      readout (a statistic, or the serialized state for the states API), so
+      no merged state crosses back to the JVM only to be read again.
 
 The shuffle therefore moves |groups-per-partition| · |state| bytes instead of
 the raw rows — the count-min analogue of a map-side combine. Skewed groups
@@ -30,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.base import sketch_from_bytes
-from .build import ingest_array
+from .build import TAG_TOPN_TYPES, ingest_array, spark_item_tag
 
 
 # stage-1 dice window bounds: flush on whichever trips first. ~512k rows
@@ -38,20 +37,6 @@ from .build import ingest_array
 # bounds per-task memory even when the value column is document-sized text.
 _DICE_MAX_ROWS = 524_288
 _DICE_MAX_BYTES = 128 << 20
-
-# Spark value-column dtype → topn item column type; the per-tag decode
-# matches functions/sketch_api._TOPN_SCHEMAS (int family decodes to long,
-# float family to double — the encoding hashes all floats as float64).
-_ITEM_TYPES = {
-    "tinyint": "long",
-    "smallint": "long",
-    "int": "long",
-    "bigint": "long",
-    "float": "double",
-    "double": "double",
-    "string": "string",
-    "binary": "binary",
-}
 
 
 def _state_fold(
@@ -134,50 +119,6 @@ def _state_fold(
     return partials
 
 
-def _fold_partition_states(
-    states: DataFrame, group_col: str
-) -> tuple[DataFrame, Callable]:
-    """Shared stage-2 shape: hash-repartition the (group, state) partials by
-    group and return (repartitioned frame, per-partition folder) — the
-    folder walks a partition's pandas chunks once and merges every group's
-    states into a dict of live sketches. One Python-side fold per
-    PARTITION instead of one ``applyInPandas`` slice per GROUP: at high
-    group cardinality the per-group overhead (a pandas frame sliced in and
-    another built out per group, ~0.5 ms each) dominated the whole
-    operator — 15k groups cost ~7.5 s through applyInPandas and ~0.5 s
-    through this fold over the same exchange. Merge order within a group is arrival order, exactly as
-    unordered as the applyInPandas row order was; all gated readouts run in
-    merge-order-independent regimes."""
-    P = states.sparkSession.sparkContext.defaultParallelism
-
-    def fold(pdfs: Iterator[pd.DataFrame]) -> dict:
-        groups: dict = {}
-        for pdf in pdfs:
-            for g, st in zip(pdf[group_col], pdf["state"]):
-                sk = sketch_from_bytes(bytes(st))
-                acc = groups.get(g)
-                groups[g] = sk if acc is None else acc.merge(sk)
-        return groups
-
-    return states.repartition(P, group_col), fold
-
-
-def _merge_states(states: DataFrame, group_col: str, gtype: str) -> DataFrame:
-    parts, fold = _fold_partition_states(states, group_col)
-
-    def merge_partition(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        groups = fold(pdfs)
-        if groups:
-            yield pd.DataFrame(
-                {
-                    group_col: list(groups.keys()),
-                    "state": [sk.to_bytes() for sk in groups.values()],
-                }
-            )
-
-    return parts.mapInPandas(merge_partition, f"{group_col} {gtype}, state binary")
-
-
 def _merge_readout(
     partials: DataFrame,
     group_col: str,
@@ -196,16 +137,27 @@ def _merge_readout(
 
     ``readout`` maps a group's merged live sketch to column → list-of-values (one
     list entry per output row for that group; statistics readouts return
-    length-1 lists, explodes return one entry per retained item).
+    length-1 lists, explodes return one entry per retained item, and the
+    states API returns the serialized state).
 
-    Stage 2 runs as ONE fold + ONE readout pass per partition
-    (:func:`_fold_partition_states`), not one applyInPandas slice per
-    group — the per-group pandas overhead dominated at high group
-    cardinality."""
-    parts, fold = _fold_partition_states(partials, group_col)
+    The partials are hash-repartitioned by group and each PARTITION's
+    states fold into a dict of live sketches in one pass, instead of one
+    ``applyInPandas`` slice per GROUP: at high group cardinality the
+    per-group overhead (a pandas frame sliced in and another built out per
+    group, ~0.5 ms each) dominated the whole operator — 15k groups cost
+    ~7.5 s through applyInPandas and ~0.5 s through this fold over the same
+    exchange. Merge order within a group is arrival order, exactly as
+    unordered as the applyInPandas row order was; all gated readouts run in
+    merge-order-independent regimes."""
+    P = partials.sparkSession.sparkContext.defaultParallelism
 
     def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        groups = fold(pdfs)
+        groups: dict = {}
+        for pdf in pdfs:
+            for g, st in zip(pdf[group_col], pdf["state"]):
+                sk = sketch_from_bytes(bytes(st))
+                acc = groups.get(g)
+                groups[g] = sk if acc is None else acc.merge(sk)
         if not groups:
             return
         out_g: list = []
@@ -218,7 +170,9 @@ def _merge_readout(
                 out_cols.setdefault(c, []).extend(vals)
         yield pd.DataFrame({group_col: out_g, **out_cols})
 
-    return parts.mapInPandas(fn, f"{group_col} {gtype}, {out_schema}")
+    return partials.repartition(P, group_col).mapInPandas(
+        fn, f"{group_col} {gtype}, {out_schema}"
+    )
 
 
 def grouped_sketch_states(
@@ -242,7 +196,9 @@ def grouped_sketch_states(
     null), breaking the declared schema — and silently corrupting int keys
     above 2^53 in the same window."""
     states, gtype = _partial_states(df, group_col, value_col, factory)
-    return _merge_states(states, group_col, gtype)
+    return _merge_readout(
+        states, group_col, gtype, lambda sk: {"state": [sk.to_bytes()]}, "state binary"
+    )
 
 
 def _partial_states(
@@ -312,19 +268,12 @@ def grouped_topn(
     are outside this table; nothing silently degrades to ``str(item)``."""
     from ..core.cms_topn import CmsTopn
 
-    vtype = dict(df.dtypes)[value_col]
-    item_type = _ITEM_TYPES.get(vtype)
-    if item_type is None:
-        raise TypeError(
-            f"grouped_topn value column type {vtype!r} has no sketch item "
-            f"encoding (supported: {sorted(_ITEM_TYPES)})"
-        )
-
+    tag = spark_item_tag(dict(df.dtypes)[value_col], "grouped_topn")
     partials, gtype = _partial_states(
         df, group_col, value_col, lambda: CmsTopn(n, e, p, update="linear")
     )
     return _merge_readout(
-        partials, group_col, gtype, _topn_cols, f"item {item_type}, frequency long"
+        partials, group_col, gtype, _topn_cols, f"item {TAG_TOPN_TYPES[tag]}, frequency long"
     )
 
 

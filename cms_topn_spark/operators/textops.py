@@ -59,28 +59,6 @@ def token_stats_sql(table: str = "documents") -> str:
     """
 
 
-def lang_pred_expr(text_col: str) -> Column:
-    """The stopword-argmax language prediction as a reusable Column
-    (deterministic precedence en>de>fr>es; zero hits → 'und').
-
-    Hot-path note: this inlines each per-language split+filter TWICE (inside
-    greatest() and in its when() branch) and Catalyst does not CSE through
-    lambda bodies — fine for one-off use, but full-corpus consumers should
-    stage the hit counts as columns once (:func:`stage_stopword_hits` +
-    :func:`lang_pred_from_hit_cols`, the repetition_stats materialization
-    trick) so each array builds once per row."""
-    hits = {lang: stopword_hits(text_col, lang) for lang in LANG_PRECEDENCE}
-    # the first language (in precedence order) whose hits equal the max wins
-    mx = F.greatest(*[hits[lang] for lang in LANG_PRECEDENCE])
-    return (
-        F.when(mx == F.lit(0), F.lit("und"))
-        .when(hits["en"] == mx, F.lit("en"))
-        .when(hits["de"] == mx, F.lit("de"))
-        .when(hits["fr"] == mx, F.lit("fr"))
-        .otherwise(F.lit("es"))
-    )
-
-
 def stage_stopword_hits(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Materialize per-language stopword hit counts as ``_hits_<lang>``
     columns ONCE, from ONE staged token array. Catalyst's project-collapse
@@ -116,7 +94,8 @@ def lang_pred_from_hit_cols() -> Column:
 
 
 def lang_pred_sql(text_expr: str = "text") -> str:
-    """The SQL rendering of :func:`lang_pred_expr` (a CASE fragment)."""
+    """The SQL rendering of :func:`lang_pred_from_hit_cols` over a text
+    expression (a DuckDB CASE fragment)."""
     h = {
         lang: f"len(list_filter(string_split({text_expr},' '), t -> t IN ({_in_list(STOPWORDS[lang])})))"
         for lang in LANG_PRECEDENCE

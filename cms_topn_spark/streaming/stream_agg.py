@@ -1,23 +1,30 @@
 """Structured Streaming sketch aggregation.
 
-Two shapes, matching how the mergeable-state protocol meets streams:
+Every sketch stream is the batch fold run once per micro-batch — correct
+under Spark's unordered micro-batch parallelism because sketch merges
+commute and associate (SURVEY.md §2.3 protocol contract). Two shapes:
 
-1. **Global streaming build** (`sketch_stream_agg`): every micro-batch builds
-   per-partition partials exactly like the batch path, merges them into one
-   delta state, and folds that into a persisted global state under
-   ``state_dir``. Batch-id high-water-marking makes the fold idempotent, so
-   Spark's checkpoint/replay semantics (foreachBatch is at-least-once) yield
-   exactly-once state: a replayed batch id is skipped. Restart = reopen the
-   same checkpoint + state dir and keep going; the state file IS the sketch
-   (read it any time with ``read_stream_state``).
+1. **Folds into persisted states** (`sketch_stream_agg`,
+   `windowed_sketch_stream`): every micro-batch builds per-task partials
+   exactly like the batch path (``build_partials``, or grouped stage 1 by
+   window), folds them on the driver with ``fold_states``, and folds that
+   delta into the persisted state under ``state_dir`` (one global state, or
+   one state per event-time window). Batch-id high-water-marking makes the
+   fold idempotent, so Spark's checkpoint/replay semantics (foreachBatch is
+   at-least-once) yield exactly-once state: a replayed batch id is skipped.
+   Restart = reopen the same checkpoint + state dir and keep going; the
+   state file IS the sketch (read it with ``read_stream_state`` /
+   ``read_window_states``).
 
-2. **Keyed stateful operator** (`keyed_sketch_stream`): per-key CMS top-n via
-   ``applyInPandasWithState`` — the custom-stateful-operator form for keyed
-   heavy hitters with Spark-managed state. Emits the current top-1 per key on
-   every update.
+2. **Keyed stateful operators** (`keyed_sketch_stream`,
+   `keyed_quantile_stream`): one sketch per key in Spark-managed state via
+   ``applyInPandasWithState`` (update mode, no timeout), emitting the key's
+   current readout on every update.
 
-Merge commutativity/associativity is what makes both correct under Spark's
-unordered micro-batch parallelism (SURVEY.md §2.3 protocol contract).
+Item-sketch streams take the same item types as batch builds (the
+item-type table in ``operators/build.py``); a value column outside it
+raises ``TypeError`` when the stream is defined, before ``start()``, so a
+bad column never reaches a checkpoint.
 """
 
 from __future__ import annotations
@@ -29,8 +36,15 @@ from typing import Callable, Iterator
 import pandas as pd
 import pyarrow as pa
 
-from ..core.base import SketchError, fold_states, merge_serialized, sketch_from_bytes
-from ..operators.build import build_partials, default_ingest
+from ..core.base import SketchError, fold_states, sketch_from_bytes
+from ..operators.build import (
+    SPARK_ITEM_TAGS,
+    TAG_ARROW_TYPES,
+    build_partials,
+    default_ingest,
+    ingest_array,
+    spark_item_tag,
+)
 
 COMMIT_FILE = "committed_batch_id"
 STATE_FILE = "state.bin"
@@ -102,7 +116,6 @@ def sketch_stream_agg(
     factory: Callable[[], object],
     state_dir: str,
     checkpoint_dir: str,
-    ingest=default_ingest,
     trigger_available_now: bool = True,
 ):
     """Start a streaming query folding the stream into one mergeable state."""
@@ -113,7 +126,7 @@ def sketch_stream_agg(
         committed, prev = _read_frame(p)
         if batch_id <= committed:
             return  # replayed batch after restart — already folded
-        states = build_partials(batch_df, factory, ingest).collect()
+        states = build_partials(batch_df, factory, default_ingest).collect()
         delta = fold_states(r["state"] for r in states)
         if delta is not None:  # an empty batch leaves the state as it is
             # committed ⊕ delta: the merge order every commit has used
@@ -141,6 +154,16 @@ def windowed_sketch_stream(
 ):
     """Event-time windowed sketch build: one mergeable state PER WINDOW.
 
+    Each micro-batch runs grouped stage 1 keyed by window start (one
+    ``mapInArrow``, Arrow-typed columns, no row shuffle), so the driver
+    collects one state per (task, window-in-task) and folds them per window
+    with ``fold_states`` — the same per-task shape ``sketch_stream_agg``
+    collects. NULL rules are the aggregate's: NULL values are skipped, a row
+    with a NULL event time has no window and is dropped, and a window whose
+    values are all NULL gets no state. Value columns take the batch item
+    types (native ints, exact above 2^53); for an item sketch (one with
+    ``add_packed``) any other type raises ``TypeError`` here, before start.
+
     Late rows (within the watermark) fold into their window's existing state
     — merges are commutative, so late data needs no reprocessing. State files
     are ``state_dir/w=<window_start_unix>.bin``, each a frame carrying the
@@ -151,8 +174,11 @@ def windowed_sketch_stream(
     fully-committed batches. Read any window with :func:`read_window_states`."""
     import pyspark.sql.functions as F
 
+    from ..operators.grouped import _partial_states
+
+    if hasattr(factory(), "add_packed"):
+        spark_item_tag(dict(stream_df.dtypes)[value_col], "windowed_sketch_stream")
     os.makedirs(state_dir, exist_ok=True)
-    value_type = dict(stream_df.dtypes)[value_col]
 
     def _committed_marker() -> int:
         p = os.path.join(state_dir, COMMIT_FILE)
@@ -164,24 +190,18 @@ def windowed_sketch_stream(
     def process_batch(batch_df, batch_id: int) -> None:
         if batch_id <= _committed_marker():
             return
-        # rows without an event time cannot be assigned a window; letting
-        # them through yields a NULL _w group whose key cannot be cast back
-        # to `_w long` — the query would fail AND WEDGE (the same batch
-        # replays into the same failure on every restart)
-        win = (
-            batch_df.where(F.col(ts_col).isNotNull())
-            .withColumn("_w", F.window(F.col(ts_col), window).start.cast("long"))
-            .select("_w", value_col)
+        # a NULL event time gives a NULL _w, which stage 1 drops like any
+        # NULL group key
+        win = batch_df.withColumn("_w", F.window(F.col(ts_col), window).start.cast("long"))
+        partials, _ = _partial_states(win, "_w", value_col, factory)
+        by_window: dict[int, list] = {}
+        for r in partials.collect():
+            by_window.setdefault(r["_w"], []).append(r["state"])
+        _fold_windows(
+            state_dir,
+            batch_id,
+            [(w, fold_states(by_window[w]).to_bytes()) for w in sorted(by_window)],
         )
-        states = (
-            win.repartition("_w")
-            .groupBy("_w")
-            .applyInPandas(
-                _window_partial(factory, value_col, value_type), "_w long, state binary"
-            )
-            .collect()
-        )
-        _fold_windows(state_dir, batch_id, [(r["_w"], bytes(r["state"])) for r in states])
         tmp = os.path.join(state_dir, f".{COMMIT_FILE}.tmp")
         with open(tmp, "w") as f:
             f.write(str(batch_id))
@@ -205,19 +225,7 @@ def _fold_windows(state_dir: str, batch_id: int, states: list[tuple[int, bytes]]
         folded_at, prev = _read_frame(path)
         if folded_at >= batch_id:
             continue  # this window already folded this batch (crash replay)
-        _write_frame(path, batch_id, merge_serialized(prev, delta))
-
-
-_SPARK_TO_ARROW = {
-    "tinyint": pa.int32(),
-    "smallint": pa.int32(),
-    "int": pa.int32(),
-    "bigint": pa.int64(),
-    "float": pa.float64(),
-    "double": pa.float64(),
-    "string": pa.string(),
-    "binary": pa.binary(),
-}
+        _write_frame(path, batch_id, fold_states([prev, delta]).to_bytes())
 
 
 def _typed_arrow(vals: pd.Series, spark_dtype: str) -> pa.Array:
@@ -226,12 +234,10 @@ def _typed_arrow(vals: pd.Series, spark_dtype: str) -> pa.Array:
     pandas delivers nullable int columns as float64; re-casting to the
     declared type keeps streaming-built sketches hash-compatible with
     batch-built sketches over the same data (a string-ified or float-ified
-    item encodes — and therefore hashes — differently). Types outside the
-    sketch encoding table (boolean, timestamp, decimal, ...) fall back to
-    their string form — the documented contract for exotic item types."""
-    target = _SPARK_TO_ARROW.get(spark_dtype)
-    if target is None:
-        return pa.Array.from_pandas(vals.astype(str))
+    item encodes — and therefore hashes — differently). ``spark_dtype`` is
+    a type of the item-type table; callers check that when the stream is
+    defined."""
+    target = TAG_ARROW_TYPES[SPARK_ITEM_TAGS[spark_dtype]]
     arr = pa.Array.from_pandas(vals)
     if arr.type != target:
         if pa.types.is_integer(target) and pa.types.is_floating(arr.type):
@@ -250,18 +256,6 @@ def _typed_arrow(vals: pd.Series, spark_dtype: str) -> pa.Array:
     return arr
 
 
-def _window_partial(factory, value_col: str, value_type: str):
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = factory()
-        vals = pdf[value_col].dropna()
-        if len(vals):
-            arr = _typed_arrow(vals, value_type)
-            default_ingest(sk, pa.RecordBatch.from_arrays([arr], ["v"]))
-        return pd.DataFrame({"_w": [pdf["_w"].iloc[0]], "state": [sk.to_bytes()]})
-
-    return run
-
-
 def read_window_states(state_dir: str) -> dict[int, object]:
     """window_start_unix → deserialized sketch."""
     out = {}
@@ -271,6 +265,34 @@ def read_window_states(state_dir: str) -> dict[int, object]:
             if payload is not None:
                 out[int(f[2:-4])] = sketch_from_bytes(payload)
     return out
+
+
+def _keyed_stream(stream_df, key_col: str, factory, ingest, readout, out_schema: str):
+    """The one ``applyInPandasWithState`` driver behind the keyed streams:
+    per key, load the serialized sketch from Spark-managed state (or start
+    one with ``factory()``), ``ingest(sketch, pdf)`` every pandas chunk of
+    the micro-batch, save the state, and emit ``key`` plus the columns of
+    ``readout(sketch)`` (column → one-element list) under
+    ``"key string, " + out_schema``. Update mode, no timeout."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        sk = sketch_from_bytes(bytes(state.get[0])) if state.exists else factory()
+        for pdf in pdfs:
+            ingest(sk, pdf)
+        state.update((sk.to_bytes(),))
+        # str() key: the output schema declares `key string`, and a bigint
+        # key would fail the pandas→Arrow conversion inside
+        # applyInPandasWithState
+        yield pd.DataFrame({"key": [str(key[0])], **readout(sk)})
+
+    return stream_df.groupBy(key_col).applyInPandasWithState(
+        update,
+        outputStructType="key string, " + out_schema,
+        stateStructType="state binary",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def keyed_sketch_stream(
@@ -286,47 +308,32 @@ def keyed_sketch_stream(
     Output per update: (key, total, top_item, top_freq). State: the serialized
     CmsTopn, built with the value column's NATIVE type — so it merges and
     probes hash-compatibly with batch-built sketches over the same column
-    (top_item is rendered as string for the fixed output schema only). Uses
-    applyInPandasWithState (update mode, no timeout)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    (top_item is rendered as string for the fixed output schema only). The
+    value column takes the batch item types; any other raises ``TypeError``
+    here, before start. NULL values are skipped; pandas delivers a
+    NULL-bearing int column as float64, which is cast back exactly or raises
+    ``ValueError`` above 2^53."""
     from ..core.cms_topn import CmsTopn
 
     value_type = dict(stream_df.dtypes)[value_col]
+    spark_item_tag(value_type, "keyed_sketch_stream")
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            sk = sketch_from_bytes(bytes(state.get[0]))
-        else:
-            sk = CmsTopn(n, eps, conf, update="linear")
-        for pdf in pdfs:
-            vals = pdf[value_col].dropna()
-            if len(vals):
-                arr = _typed_arrow(vals, value_type)
-                default_ingest(sk, pa.RecordBatch.from_arrays([arr], ["v"]))
-        state.update((sk.to_bytes(),))
+    def ingest(sk, pdf: pd.DataFrame) -> None:
+        vals = pdf[value_col].dropna()
+        if len(vals):
+            ingest_array(sk, _typed_arrow(vals, value_type))
+
+    def readout(sk) -> dict:
         top = sk.topn_list()
-        yield pd.DataFrame(
-            {
-                # str() like top_item below: the output schema declares
-                # `key string`, and a bigint key would fail the
-                # pandas→Arrow conversion inside applyInPandasWithState
-                "key": [str(key[0])],
-                "total": [sk.total],
-                "top_item": [str(top[0][0]) if top else None],
-                "top_freq": [top[0][1] if top else None],
-            }
-        )
+        return {
+            "total": [sk.total],
+            "top_item": [str(top[0][0]) if top else None],
+            "top_freq": [top[0][1] if top else None],
+        }
 
-    return (
-        stream_df.groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType="key string, total long, top_item string, top_freq long",
-            stateStructType="state binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_stream(
+        stream_df, key_col, lambda: CmsTopn(n, eps, conf, update="linear"), ingest,
+        readout, "total long, top_item string, top_freq long",
     )
 
 
@@ -350,44 +357,23 @@ def keyed_quantile_stream(
     same interpolation the batch grouped form gates on; beyond it the KLL
     rank-error bound applies per key. NULL values arrive as NaN and are
     dropped inside ``add_batch``, mirroring the aggregate's NULL skip."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..core.kll import KllSketch
 
     if len(qs) != len(q_names):
         raise ValueError("qs and q_names must have the same length")
     qs = tuple(float(q) for q in qs)
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            sk = sketch_from_bytes(bytes(state.get[0]))
-        else:
-            sk = KllSketch(k)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-            if len(vals):
-                sk.add_batch(vals)
-        state.update((sk.to_bytes(),))
-        quants = sk.quantiles(qs)
-        yield pd.DataFrame(
-            {
-                # str() key for the fixed output schema, like keyed_sketch_stream
-                "key": [str(key[0])],
-                "n": [sk.n],
-                **{name: [v] for name, v in zip(q_names, quants)},
-            }
-        )
+    def ingest(sk, pdf: pd.DataFrame) -> None:
+        vals = pdf[value_col].to_numpy(dtype="float64", na_value=float("nan"))
+        if len(vals):
+            sk.add_batch(vals)
 
-    out_schema = "key string, n long, " + ", ".join(f"{n} double" for n in q_names)
-    return (
-        stream_df.groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType="state binary",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    def readout(sk) -> dict:
+        return {"n": [sk.n], **{name: [v] for name, v in zip(q_names, sk.quantiles(qs))}}
+
+    return _keyed_stream(
+        stream_df, key_col, lambda: KllSketch(k), ingest, readout,
+        "n long, " + ", ".join(f"{n} double" for n in q_names),
     )
 
 

@@ -226,7 +226,7 @@ def test_duplicate_clusters_rejects_nonpositive_iters(spark):
 def test_grouped_topn_double_and_binary_items_typed(spark):
     """Float and binary value columns keep their type through grouped_topn
     (no str() fallback), matching the driver-level typed topn per group —
-    r4 verdict item: extend the _TOPN_SCHEMAS coverage to every encodable
+    r4 verdict item: extend the item-type table coverage to every encodable
     item type."""
     from pyspark.sql.types import BinaryType, DoubleType
 

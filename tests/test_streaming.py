@@ -251,6 +251,42 @@ class TestWindowedStream:
         for w, sk in states.items():
             assert sk.total == exact[w]
 
+    def test_windowed_null_rules_and_bigint_above_2_53(self, spark, tmp_path):
+        """The aggregate NULL rules per window — NULL values skipped, a
+        NULL-ts row dropped, an all-NULL window gets no state — and a
+        NULL-bearing bigint above 2^53 counts exactly (no float64 detour)."""
+        from cms_topn_spark.streaming.stream_agg import (
+            read_window_states,
+            windowed_sketch_stream,
+        )
+
+        big, day = (1 << 60) + 1, 86400
+        rows = [
+            (100 * day + 60, big),
+            (100 * day + 120, None),
+            (100 * day + 180, big),
+            (100 * day + 240, 5),
+            (101 * day + 60, None),  # every value NULL: no window state
+            (101 * day + 120, None),
+            (None, 7),  # no event time: no window
+            (102 * day + 60, 5),
+        ]
+        src = str(tmp_path / "src")
+        spark.createDataFrame(rows, "t long, v bigint").select(
+            F.timestamp_seconds("t").alias("ts"), "v"
+        ).write.parquet(src)
+        stream = spark.readStream.schema("ts timestamp, v bigint").parquet(src)
+        windowed_sketch_stream(
+            stream, "ts", "v", str(tmp_path / "wstate"), str(tmp_path / "wckpt"),
+            lambda: CmsTopn(3, update="linear"), window="1 day",
+        ).awaitTermination(120)
+        states = read_window_states(str(tmp_path / "wstate"))
+        assert sorted(states) == [100 * day, 102 * day]
+        assert states[100 * day].total == 3
+        assert states[100 * day].topn_list() == [(big, 2), (5, 1)]
+        assert states[102 * day].total == 1
+        assert states[102 * day].topn_list() == [(5, 1)]
+
     def test_windowed_int_column_binds_native_type(self, spark, tmp_path, sf001_dir):
         """Streaming-built sketches over int columns must hash-compatibly
         match batch-built sketches (no astype(str) coercion)."""
@@ -288,13 +324,26 @@ class TestWindowedStream:
         )
 
 
-def test_typed_arrow_exotic_types_fall_back_to_string():
-    import pandas as pd
+def test_stream_builds_reject_value_types_without_item_encoding(spark, tmp_path):
+    """A boolean value column has no sketch item encoding, so both CMS
+    stream builds raise on call, before any state or checkpoint exists —
+    no stand-in string hashing a batch-built sketch could not merge with."""
+    from cms_topn_spark.streaming.stream_agg import windowed_sketch_stream
 
-    from cms_topn_spark.streaming.stream_agg import _typed_arrow
-
-    arr = _typed_arrow(pd.Series([True, False, True]), "boolean")
-    assert arr.to_pylist() == ["True", "False", "True"]  # string fallback
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("a", True, 1)], "k string, b boolean, t long"
+    ).select("k", "b", F.timestamp_seconds("t").alias("ts")).write.parquet(src)
+    stream = spark.readStream.schema("k string, b boolean, ts timestamp").parquet(src)
+    with pytest.raises(TypeError, match="no sketch item encoding"):
+        keyed_sketch_stream(stream, "k", "b")
+    state = str(tmp_path / "state")
+    with pytest.raises(TypeError, match="no sketch item encoding"):
+        windowed_sketch_stream(
+            stream, "ts", "b", state, str(tmp_path / "ckpt"),
+            lambda: CmsTopn(3, update="linear"),
+        )
+    assert not os.path.exists(state)
 
 
 def test_typed_arrow_above_2_53_float64_raises():

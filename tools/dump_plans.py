@@ -1,16 +1,78 @@
-"""Regenerate BENCH/PLANS.md — physical-plan snapshots of the key queries.
+"""Physical-plan dumps of the key queries, run from the repo root.
 
-Usage: python tools/dump_plans.py > /tmp/plans.md, then MERGE into
-BENCH/PLANS.md: the committed file also carries per-round manually-added
-sections (grouped KLL, bucketed/as-of/range joins, partition pruning —
-everything after the IVF section) that this script does NOT regenerate.
-A blind redirect erases that history (it happened in round 7; restored).
+Usage:
+  python tools/dump_plans.py > plans.md
+      Regenerate BENCH/PLANS.md — then MERGE into it: the committed file
+      also carries per-round manually-added sections (grouped KLL,
+      bucketed/as-of/range joins, partition pruning — everything after the
+      IVF section) that this mode does NOT regenerate. A blind redirect
+      erases that history (it happened in round 7; restored).
+  python tools/dump_plans.py --explain OUT_DIR SUFFIX NAME...
+      Write ``.explain("formatted")`` of each NAME to
+      ``OUT_DIR/<NAME>_<SUFFIX>.txt`` (the plans/r08/ layout: run once per
+      tree with SUFFIX before/after). NAME is a ``queries()`` name or one of
+      the ``materialize=False`` stage forms of :data:`STAGES`, whose gate
+      queries eagerly localCheckpoint their result and so show only the
+      post-checkpoint tail.
 """
-# The generation logic lives inline in the committed BENCH/PLANS.md header;
-# regenerate by running the script body from the repo root:
+import io
+import os
+import shutil
 import sys
+import tempfile
+from contextlib import redirect_stdout
 
 sys.path.insert(0, ".")
+
+
+def _minhash_stage(docs, tmp):
+    from cms_topn_spark.operators import dedup
+
+    return dedup.minhash_lsh_pairs(docs, 0.8, materialize=False)
+
+
+def _incremental_stage(docs, tmp):
+    """A small batch (doc_id % 150 == 0) against a persisted index of
+    doc_id % 3 != 0 — disjoint ids, and the batch's bucket set is a strict
+    subset of the key buckets, so the bucketed bands.parquet read engages
+    (the growing-corpus regime)."""
+    from pyspark.sql import functions as F
+
+    from cms_topn_spark.operators import dedup
+
+    idx_dir = os.path.join(tmp, "minhash_idx")
+    idx = dedup.minhash_index_build(docs.where(F.col("doc_id") % 3 != 0), idx_dir)
+    batch = docs.where((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 50 == 0))
+    return dedup.incremental_near_dup(batch, idx, 0.8, materialize=False, index_dir=idx_dir)
+
+
+STAGES = {
+    "minhash_lsh_pairs_stage": _minhash_stage,
+    "incremental_near_dup_stage": _incremental_stage,
+}
+
+
+def explain(spark, sf: str, out_dir: str, suffix: str, names: list[str]) -> None:
+    import __spark_entry__ as e
+
+    os.makedirs(out_dir, exist_ok=True)
+    qs = e.queries()
+    docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+    tmp = tempfile.mkdtemp(prefix="dump_plans_")
+    try:
+        for name in names:
+            df = STAGES[name](docs, tmp) if name in STAGES else qs[name](spark, sf)
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+                f.write(f"# {name} — .explain('formatted'), {suffix} "
+                        "(sf0.01 input; plan shape is sf-independent)\n")
+                f.write(buf.getvalue())
+            print(f"{name}_{suffix}.txt written", file=sys.stderr)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
 
 if __name__ == "__main__":
     from cms_topn_spark.spark_session import get_spark
@@ -18,6 +80,10 @@ if __name__ == "__main__":
 
     spark = get_spark("plans", cpus=4)
     sf = "/root/testdata/sf0.01"
+    if sys.argv[1:2] == ["--explain"]:
+        explain(spark, sf, sys.argv[2], sys.argv[3], sys.argv[4:])
+        spark.stop()
+        sys.exit(0)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString
 
     def show(title, df, note, grep=None, fmt="formatted"):
