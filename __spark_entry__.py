@@ -123,10 +123,10 @@ def q_hll_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type distinct users through the two-level scale form
-    (operators/grouped.py grouped_distinct) rather than
-    groupwise_estimate's whole-rows-to-one-task shuffle: with only a
-    handful of event types the groupwise form caps parallelism at the
-    group count AND exchanges every raw row; the grouped form folds HLL
+    (operators/grouped.py grouped_distinct) rather than a
+    whole-rows-to-one-task shuffle: with only a handful of event types that
+    form caps parallelism at the group count AND exchanges every raw row;
+    the grouped form folds HLL
     states shuffle-free at scan parallelism and exchanges states only.
     Identical estimates — HLL union (sparse-exact sets / dense register
     max) is order-independent, and the packed int64 ingest applies the
@@ -174,9 +174,9 @@ def q_tdigest_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type t-digest median through the two-level scale form
     (operators/grouped.py grouped_estimate): stage 1 folds per-(task, group)
     digests shuffle-free, stage 2 exchanges DIGEST STATES (not rows) and
-    reads the median out fused. The prior groupwise form shuffled all rows
-    of each of the 5 event types to a single task — a parallelism-5 ceiling
-    and this query's r5 noise sensitivity. In the exact regime (delta ≥ πN
+    reads the median out fused. A rows-to-one-task form would shuffle all
+    rows of each of the 5 event types to a single task — a parallelism-5
+    ceiling and this query's r5 noise sensitivity. In the exact regime (delta ≥ πN
     ⇒ every centroid a singleton) the merged digest holds the identical
     sorted value multiset whatever the merge order, so quantile(0.5) is
     bitwise quantile_cont and partitioning-invariant."""
@@ -437,7 +437,7 @@ def q_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-batch prep step: documents greedily packed into ≤256-token
     groups. Packing is a sequential fold, so the scale form shards the
     order first: id-mod buckets are packed independently in parallel (one
-    applyInPandas task per bucket; n_buckets sized to the cluster), and
+    applyInArrow task per bucket; n_buckets sized to the cluster), and
     the greedy boundary rule is matched EXACTLY by a recursive-CTE oracle
     — pack membership, not just pack counts, is value-checked."""
     from cms_topn_spark.operators.pipeline import pack_documents
@@ -857,8 +857,8 @@ def q_cosine_near_dup_pairs(spark, sf_dir):
     16-table × 8-plane hyperplane LSH has per-pair recall ≈ 0.34 — its output
     would NOT coincide with the exact oracle. cosine_near_dup_pairs_lsh stays
     the first-class operator for true near-dup thresholds (recall ≥ 0.995 at
-    s ≥ 0.9) and is pytest-verified on planted duplicates; the corpus-
-    broadcast baseline (cosine_near_dup_pairs) is pytest-only."""
+    s ≥ 0.9) and is pytest-verified on planted duplicates against this
+    blocked exact form."""
     return similarity.cosine_near_dup_pairs_blocked(
         _t(spark, sf_dir, "embeddings"), COSINE_DUP_THRESHOLD
     )

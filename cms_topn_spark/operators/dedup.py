@@ -591,11 +591,7 @@ def minhash_doc_features(
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for whole in batches:
             for rb in _doc_chunks(whole):
-                pdf = rb.to_pandas()
-                n = len(pdf)
-                if n == 0:
-                    continue
-                d_u, h1, _ = _doc_gram_hashes(pdf[text_col])
+                d_u, h1, n = _doc_gram_hashes(rb.column(1).to_pylist())
                 sig = _signatures_from_hashes(d_u, h1, n)
                 keys = _band_keys_from_sig(sig).astype(np.int64)
                 # every doc has ≥1 gram (zero-padded), so segments cover 0..n-1
@@ -609,7 +605,7 @@ def minhash_doc_features(
                     pa.array(k_off, pa.int64()), pa.array(keys.ravel(), pa.int64())
                 )
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(pdf[id_col].to_numpy(), pa.int64()), keys_arr, grams],
+                    [rb.column(0).cast(pa.int64()), keys_arr, grams],
                     ["doc_id", "keys", "grams"],
                 )
 
@@ -1138,9 +1134,8 @@ def winnow_fingerprints(
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            pdf = rb.to_pandas()
             out_ids, out_fp = [], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, t in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
                 t = t or ""
                 k = SHINGLE_K
                 n = max(len(t) - k + 1, 1)
@@ -1253,13 +1248,10 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
         # (the minhash L3-thrash story); ≤512-doc chunks keep it ~6 MB
         for whole in batches:
             for rb in _doc_chunks(whole):
-                pdf = rb.to_pandas()  # _doc_chunks never yields empty slices
-                sigs = _simhash_kernel(pdf[text_col])
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "doc_id": pa.array(pdf[id_col].to_numpy(), pa.int64()),
-                        "simhash": pa.array(sigs, pa.int64()),
-                    }
+                sigs = _simhash_kernel(rb.column(1).to_pylist())
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0).cast(pa.int64()), pa.array(sigs, pa.int64())],
+                    ["doc_id", "simhash"],
                 )
 
     return df.select(id_col, text_col).mapInArrow(fn, "doc_id long, simhash long")

@@ -1,8 +1,9 @@
-"""Two-level per-group sketch aggregation for high-cardinality GROUP BY.
+"""Two-level per-group sketch aggregation for GROUP BY at any cardinality.
 
-``groupwise.groupwise_estimate`` shuffles whole groups to single tasks —
-right when groups are few, wrong when a group's rows dwarf an executor. This
-operator is the scale form, the same shape as the global build:
+Shuffling whole groups to single tasks moves every raw row and caps
+parallelism at the group count — wrong when groups are few or a group's
+rows dwarf an executor. This operator has the same shape as the global
+build:
 
   stage 1 (map-side, shuffle-free): each task partitions its Arrow batches by
       key with one C++ sort, folds every key-slice into that key's sketch,
@@ -233,26 +234,35 @@ def grouped_probe(
 
     Input is the (group, state) frame from :func:`grouped_sketch_states`;
     output is one row per (group, item) with the estimated frequency. The
-    probe runs inside ``mapInPandas`` over sketch-sized rows — no state ever
+    probe runs inside ``mapInArrow`` over sketch-sized rows — no state ever
     reaches the driver, so the pattern holds at any group cardinality."""
-    from ..core.base import sketch_from_bytes
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DataType
 
     gtype = dict(states.dtypes)[group_col]
     schema = f"{group_col} {gtype}, {item_col} {item_type}, {freq_col} long"
+    # built with the declared item type: mapInArrow reads each output vector
+    # as the schema says, so an int64 vector under an ``int`` column fails
+    item_arr = pa.array(items, to_arrow_type(DataType.fromDDL(item_type)))
+    n_items = len(items)
 
-    def probe(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            out_g, out_i, out_f = [], [], []
-            for g, st in zip(pdf[group_col], pdf["state"]):
-                sk = sketch_from_bytes(bytes(st))
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            n = rb.num_rows
+            freqs: list = []
+            for st in rb.column("state").to_pylist():
                 # one packed Murmur pass per state, not a per-item loop
-                for it, f in zip(items, sk.estimate_many(items)):
-                    out_g.append(g)
-                    out_i.append(it)
-                    out_f.append(f)
-            yield pd.DataFrame({group_col: out_g, item_col: out_i, freq_col: out_f})
+                freqs.extend(sketch_from_bytes(st).estimate_many(items))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(group_col).take(np.repeat(np.arange(n), n_items)),
+                    item_arr.take(np.tile(np.arange(n_items), n)),
+                    pa.array(freqs, pa.int64()),
+                ],
+                [group_col, item_col, freq_col],
+            )
 
-    return states.mapInPandas(probe, schema)
+    return states.mapInArrow(probe, schema)
 
 
 def grouped_topn(
@@ -299,10 +309,9 @@ def grouped_quantiles(
     """Per-group KLL quantiles at ANY group cardinality — the map-side-combine
     scale form for numeric sketches: stage 1 folds each task's rows into
     per-(task, group) KLL states shuffle-free, stage 2 shuffles and merges
-    STATES (k float64s per group, not the group's rows), stage 3 reads the
-    quantiles out of each merged state distributed (mapInPandas — no state
-    ever reaches the driver). Contrast ``groupwise.groupwise_estimate``,
-    which ships whole groups to single tasks and only suits few-group cases.
+    STATES (k float64s per group, not the group's rows) and reads the
+    quantiles out of each merged state in the same distributed pass — no
+    state ever reaches the driver, and no group's raw rows are shuffled.
 
     In the exact regime (per-group n below the compaction threshold for
     ``k``) each quantile equals DuckDB/PostgreSQL ``quantile_cont`` bitwise;
@@ -381,12 +390,11 @@ def grouped_estimate(
     out_field: str,
     out_type: str,
 ) -> DataFrame:
-    """Two-level scale form of ``groupwise.groupwise_estimate``: one row
-    (group, estimate) per group for ANY mergeable sketch, built through the
-    same per-(task, group) partial-state fold + states-only exchange + fused
-    merge-readout as the typed grouped forms. ``groupwise_estimate`` shuffles
-    each group's RAW ROWS to one task — with few groups that is both a full
-    row exchange and a parallelism cap equal to the group count; here stage 1
+    """One row (group, estimate) per group for ANY mergeable sketch, built
+    through the same per-(task, group) partial-state fold + states-only
+    exchange + fused merge-readout as the typed grouped forms. Shuffling
+    each group's RAW ROWS to one task would be both a full row exchange and
+    a parallelism cap equal to the group count with few groups; here stage 1
     folds shuffle-free at scan parallelism and only sketch states move.
 
     Stage 1 feeds the sketch through its own protocol (packed items or

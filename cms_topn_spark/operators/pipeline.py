@@ -20,6 +20,7 @@ individual operators — sits under the DuckDB value-hash oracle
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -256,8 +257,6 @@ def pack_documents(
     in, the two engines would silently diverge). The greedy fold's input is
     therefore well-defined; the SQL oracle applies the identical filter.
     """
-    import pandas as pd
-
     if max_tokens <= 0:
         raise ValueError("pack_documents: max_tokens must be positive")
     if n_buckets <= 0:
@@ -265,32 +264,28 @@ def pack_documents(
 
     df = df.where(F.col(id_col).isNotNull() & F.col(text_col).isNotNull())
     toks = df.select(
-        F.col(id_col),
+        F.col(id_col).cast("long").alias(id_col),
         F.pmod(F.col(id_col), F.lit(int(n_buckets))).cast("long").alias("bucket"),
         F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_tokens"),
     )
 
     cap = int(max_tokens)
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        pack_ids = []
+    def pack(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by(id_col)
+        pack_ids: list = []
         pid, acc = 0, 0
-        first = True
-        for n in pdf["n_tokens"]:
-            n = int(n)
-            if not first and acc + n > cap:
+        for n in tbl.column("n_tokens").to_pylist():
+            if pack_ids and acc + n > cap:
                 pid += 1
                 acc = n
             else:
                 acc += n
-            first = False
             pack_ids.append(pid)
-        pdf["pack_id"] = pd.Series(pack_ids, dtype="int64")
-        return pdf[[id_col, "bucket", "pack_id", "n_tokens"]]
+        return tbl.append_column("pack_id", pa.array(pack_ids, pa.int64()))
 
     schema = f"{id_col} long, bucket long, pack_id long, n_tokens long"
-    return toks.groupBy("bucket").applyInPandas(pack, schema)
+    return toks.groupBy("bucket").applyInArrow(pack, schema)
 
 
 def pack_documents_sql(

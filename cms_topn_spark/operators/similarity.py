@@ -138,48 +138,6 @@ def brute_force_topk_sql(
     """
 
 
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (a_id, b_id) with cos ≥ t, a<b.
-
-    Exactness baseline: the corpus matrix is broadcast (normalized float64)
-    and each partition GEMMs its rows against it — O(n²/P) per task, fine up
-    to ~10⁵ vectors. At web scale, swap the candidate generation for the LSH
-    buckets of :func:`lsh_topk` (same verify step); the broadcast variant is
-    what the DuckDB oracle can check exactly."""
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    mat = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    spark = df.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        all_ids, all_mat = b_ids.value, b_mat.value
-        for rb in batches:
-            my_ids = rb.column(0).to_numpy()
-            my_mat = _batch_embedding_matrix(rb.column(1))
-            my_mat = my_mat / np.linalg.norm(my_mat, axis=1, keepdims=True)
-            sims = my_mat @ all_mat.T
-            keep = sims >= threshold
-            # a < b halves the output and drops self-pairs
-            keep &= my_ids[:, None] < all_ids[None, :]
-            r, c = np.nonzero(keep)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "a_id": pa.array(my_ids[r], pa.int64()),
-                    "b_id": pa.array(all_ids[c], pa.int64()),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInArrow(fn, "a_id long, b_id long")
-
-
 def cosine_near_dup_pairs_sql(
     threshold: float, table: str = "embeddings", prelude: str = ""
 ) -> str:
@@ -213,9 +171,9 @@ def cosine_near_dup_pairs_blocked(
     while compute stays the unavoidable O(n²·d/P) of an EXACT all-pairs
     similarity — this is the standard blocked formulation that distributes it
     with bounded task memory (a task holds two blocks, ~2n/B vectors). Output
-    is identical to the brute-force baseline at ANY threshold, which is what
-    lets low-threshold scans (no LSH regime) keep an exact oracle; for true
-    near-duplicate thresholds (≥0.8-0.9) prefer
+    is the exact all-pairs set (:func:`cosine_near_dup_pairs_sql`) at ANY
+    threshold, which is what lets low-threshold scans (no LSH regime) keep
+    an exact oracle; for true near-duplicate thresholds (≥0.8-0.9) prefer
     :func:`cosine_near_dup_pairs_lsh`, whose cost is O(candidates) instead of
     O(n²).
 
@@ -235,7 +193,7 @@ def cosine_near_dup_pairs_blocked(
     B = int(n_blocks)
 
     src = df.select(
-        F.col(id_col).alias("vec_id"),
+        F.col(id_col).cast("long").alias("vec_id"),
         F.col(vec_col).alias("emb"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).alias("blk"),
     )
@@ -256,19 +214,18 @@ def cosine_near_dup_pairs_blocked(
         ).alias("pk"),
     )
 
-    def gemm(key, lpdf, rpdf):
-        import pandas as pd
-
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({"a_id": [], "b_id": []}).astype("int64")
-        pk = int(key[0])
+    def gemm(key, lt: pa.Table, rt: pa.Table) -> pa.Table:
+        if lt.num_rows == 0 or rt.num_rows == 0:  # a (0, 0) @ (d, n) GEMM raises
+            empty = pa.array([], pa.int64())
+            return pa.table({"a_id": empty, "b_id": empty})
+        pk = key[0].as_py()
         diagonal = (pk // B) == (pk % B)
-        lid = lpdf["vec_id"].to_numpy()
-        rid = rpdf["vec_id"].to_numpy()
-        lm = np.array(list(lpdf["emb"]), dtype=np.float64)
-        rm = np.array(list(rpdf["emb"]), dtype=np.float64)
-        lm /= np.linalg.norm(lm, axis=1, keepdims=True)
-        rm /= np.linalg.norm(rm, axis=1, keepdims=True)
+        lid = lt.column("vec_id").to_numpy()
+        rid = rt.column("vec_id").to_numpy()
+        lm = _batch_embedding_matrix(lt.column("emb"))
+        rm = _batch_embedding_matrix(rt.column("emb"))
+        lm = lm / np.linalg.norm(lm, axis=1, keepdims=True)
+        rm = rm / np.linalg.norm(rm, axis=1, keepdims=True)
         sims = lm @ rm.T
         keep = sims >= threshold
         if diagonal:
@@ -277,14 +234,12 @@ def cosine_near_dup_pairs_blocked(
             keep &= lid[:, None] != rid[None, :]
         r, c = np.nonzero(keep)
         a, b = lid[r], rid[c]
-        return pd.DataFrame(
-            {"a_id": np.minimum(a, b), "b_id": np.maximum(a, b)}
-        )
+        return pa.table({"a_id": np.minimum(a, b), "b_id": np.maximum(a, b)})
 
     lazy = (
         left.groupBy("pk")
         .cogroup(right.groupBy("pk"))
-        .applyInPandas(gemm, "a_id long, b_id long")
+        .applyInArrow(gemm, "a_id long, b_id long")
     )
     # materialize=False exposes the lazy plan (for inspection/composition) —
     # note the count-only pruning hazard above applies to it
@@ -476,9 +431,10 @@ def cosine_near_dup_pairs_lsh(
 
     Candidates come from a hyperplane-LSH bucket SELF-join (cost
     O(Σ bucket²) per table, never O(n²) and never a corpus broadcast), then
-    exact cosine verification. Complements :func:`cosine_near_dup_pairs`
-    (the broadcast exactness baseline): false positives are impossible (every
-    emitted pair is verified); recall at similarity s is
+    exact cosine verification. Complements
+    :func:`cosine_near_dup_pairs_blocked` (the exact all-pairs form): false
+    positives are impossible (every emitted pair is verified); recall at
+    similarity s is
     1 − (1 − p^B)^T with p = 1 − arccos(s)/π, B = N_PLANES, T = N_TABLES —
     ≥ 99.5 % at s = 0.9 with the default 16 × 8 configuration, and tunable by
     the table/plane constants.

@@ -46,18 +46,14 @@ def test_grouped_equals_per_group_filter_build(spark, sf001_dir):
 
 
 def test_grouped_probe_matches_exact(spark, sf001_dir):
+    """Exact at collision-free width, for a ``long`` and an ``int`` item
+    column (the item column is built with the declared type)."""
     from cms_topn_spark.operators.grouped import grouped_probe
 
     events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
     states = grouped_sketch_states(
         events, "event_type", "user_id", lambda: CmsTopn(10, 0.0001, 0.99, update="linear")
     )
-    got = {
-        (r["event_type"], r["user_id"]): r["frequency"]
-        for r in grouped_probe(
-            states, "event_type", list(range(10)), item_col="user_id", item_type="long"
-        ).collect()
-    }
     exact = {
         (r["event_type"], r["user_id"]): r["c"]
         for r in events.where(F.col("user_id") < 10)
@@ -65,11 +61,18 @@ def test_grouped_probe_matches_exact(spark, sf001_dir):
         .agg(F.count("*").alias("c"))
         .collect()
     }
-    for k, c in exact.items():
-        assert got[k] == c
-    # probed-but-absent pairs estimate 0 at collision-free width
-    for k, f in got.items():
-        assert f == exact.get(k, 0)
+    for item_type in ("long", "int"):
+        got = {
+            (r["event_type"], r["user_id"]): r["frequency"]
+            for r in grouped_probe(
+                states, "event_type", list(range(10)), item_col="user_id", item_type=item_type
+            ).collect()
+        }
+        for k, c in exact.items():
+            assert got[k] == c
+        # probed-but-absent pairs estimate 0 at collision-free width
+        for k, f in got.items():
+            assert f == exact.get(k, 0)
 
 
 def test_grouped_topn_shape(spark, sf001_dir):
@@ -413,16 +416,17 @@ def test_grouped_topn_partitioning_invariant_on_margined_items(spark, sf001_dir)
     assert a == b and len(a) > 0
 
 
-def test_grouped_estimate_tdigest_matches_groupwise_bitwise(spark, sf001_dir):
+def test_grouped_estimate_tdigest_matches_quantile_cont_bitwise(spark, sf001_dir):
     """The two-level grouped_estimate (per-task digests → states-only
-    exchange → fused readout) must reproduce the rows-to-one-task groupwise
-    form BITWISE in the exact regime: with delta ≥ πN every centroid stays a
-    singleton, so the merged digest holds the identical sorted value multiset
-    whatever the partial split — the property q_tdigest_median_by_type's
-    oracle (quantile_cont) relies on."""
+    exchange → fused readout) must equal DuckDB quantile_cont BITWISE in the
+    exact regime: with delta ≥ πN every centroid stays a singleton, so the
+    merged digest holds the identical sorted value multiset whatever the
+    partial split — the property q_tdigest_median_by_type's oracle relies
+    on."""
+    import duckdb
+
     from cms_topn_spark.core import TDigest
     from cms_topn_spark.operators.grouped import grouped_estimate
-    from cms_topn_spark.operators.groupwise import groupwise_estimate
 
     events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
     args = (
@@ -437,11 +441,14 @@ def test_grouped_estimate_tdigest_matches_groupwise_bitwise(spark, sf001_dir):
         r["event_type"]: r["median_value"]
         for r in grouped_estimate(events, *args).collect()
     }
-    one_task = {
-        r["event_type"]: r["median_value"]
-        for r in groupwise_estimate(events, *args).collect()
-    }
-    assert two_level == one_task and len(two_level) > 0
+    con = duckdb.connect()
+    want = dict(
+        con.execute(
+            f"SELECT event_type, quantile_cont(value, 0.5) "
+            f"FROM '{sf001_dir}/events.parquet' GROUP BY event_type"
+        ).fetchall()
+    )
+    assert two_level == want and len(two_level) > 0  # bitwise, not approx
     # and invariant under a different partitioning of the same rows
     repart = {
         r["event_type"]: r["median_value"]

@@ -130,6 +130,30 @@ class TestDedup:
         n2 = compare(dedup.minhash_lsh_pairs(docs, 0.8), con, dedup.jaccard_pairs_sql())
         assert n == n2  # LSH recall = 1 at this threshold/band config
 
+    def test_null_doc_id_flows_through_and_never_pairs(self, spark):
+        """A NULL doc_id reaches the kernels as a NULL Arrow value, not a
+        float NaN: the jobs run, and the NULL id can never satisfy the
+        a.doc_id < b.doc_id band join, so it never pairs — the same answer
+        as the exact all-pairs form."""
+        from cms_topn_spark.operators import dedup
+
+        base = "the quick brown fox jumps over the lazy dog by the river bank "
+        rows = [
+            (1, base + "alpha"),
+            (2, base + "alpha!"),
+            (None, base + "alpha"),  # a copy of doc 1 with no id
+            (4, "an unrelated document body with different words 12345"),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        lsh = {(r["a_id"], r["b_id"]) for r in dedup.minhash_lsh_pairs(df, 0.8).collect()}
+        exact = {(r["a_id"], r["b_id"]) for r in dedup.jaccard_pairs_exact(df, 0.8).collect()}
+        assert lsh == exact == {(1, 2)}
+        sigs = [(r["doc_id"], r["simhash"]) for r in dedup.simhash(df).collect()]
+        assert sorted(i for i, _ in sigs if i is not None) == [1, 2, 4]
+        by_id = dict(sigs)
+        assert len(sigs) == 4 and by_id[None] == by_id[1]
+        assert dedup.winnow_fingerprints(df).where(F.col("doc_id").isNull()).count() > 0
+
     def test_jaccard_pruned_matches_oracle(self, docs, con):
         from cms_topn_spark.operators import dedup
 
@@ -548,32 +572,27 @@ class TestSimilarity:
         assert direct == joined
         assert len(joined) == 3 * 119  # 3 present queries × (120 − self)
 
-    def test_cosine_blocked_matches_oracle_and_baseline(self, spark, sf001_dir, con):
-        """Block-GEMM exact pairs (the demonstrated, collect-free shape):
-        equals the DuckDB oracle at a low threshold (where no LSH regime
-        exists) and the broadcast baseline row-for-row."""
+    def test_cosine_blocked_matches_oracle(self, spark, sf001_dir, con):
+        """Block-GEMM exact pairs (the demonstrated, collect-free shape)
+        equal the DuckDB all-pairs oracle at a low threshold (where no LSH
+        regime exists), at the default block count and at 3 blocks, and for
+        a 32-bit ``vec_id`` (cast to the declared ``long`` before the
+        cogroup)."""
         from cms_topn_spark.operators import similarity
 
         emb = spark.read.parquet(os.path.join(sf001_dir, "embeddings.parquet"))
-        compare(
-            similarity.cosine_near_dup_pairs_blocked(emb, 0.4),
-            con,
-            similarity.cosine_near_dup_pairs_sql(0.4),
-        )
-        blocked = {
-            (r["a_id"], r["b_id"])
-            for r in similarity.cosine_near_dup_pairs_blocked(emb, 0.4, n_blocks=3).collect()
-        }
-        baseline = {
-            (r["a_id"], r["b_id"])
-            for r in similarity.cosine_near_dup_pairs(emb, 0.4).collect()
-        }
-        assert blocked == baseline
+        emb_int = emb.withColumn("vec_id", F.col("vec_id").cast("int"))
+        for df, n_blocks in ((emb, None), (emb, 3), (emb_int, None)):
+            compare(
+                similarity.cosine_near_dup_pairs_blocked(df, 0.4, n_blocks=n_blocks),
+                con,
+                similarity.cosine_near_dup_pairs_sql(0.4),
+            )
 
     def test_cosine_lsh_near_dup_pairs_planted(self, spark, sf001_dir):
         """Bucketed near-dup pairs: planted exact duplicates (cosine 1.0 ⇒
         identical signatures ⇒ deterministically co-bucketed) are all found,
-        no false positives vs the broadcast-exact baseline."""
+        no false positives vs the exact block-GEMM pairs."""
         from pyspark.sql import functions as F
 
         from cms_topn_spark.operators import similarity
@@ -589,7 +608,7 @@ class TestSimilarity:
         }
         exact = {
             (r["a_id"], r["b_id"])
-            for r in similarity.cosine_near_dup_pairs(planted, 0.95).collect()
+            for r in similarity.cosine_near_dup_pairs_blocked(planted, 0.95).collect()
         }
         assert {(i, i + 1_000_000) for i in range(10)} <= got
         assert got <= exact  # verification step ⇒ no false positives
@@ -973,9 +992,9 @@ class TestFingerprintContamination:
 
 
 class TestPackDocuments:
-    def _docs(self, spark, texts):
+    def _docs(self, spark, texts, id_type="long"):
         rows = [(i, t) for i, t in enumerate(texts)]
-        return spark.createDataFrame(rows, "doc_id long, text string")
+        return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
 
     def test_greedy_boundaries_exact_fit_and_oversize(self, spark):
         from cms_topn_spark.operators.pipeline import pack_documents
@@ -1000,17 +1019,20 @@ class TestPackDocuments:
 
         rng = np.random.default_rng(5)
         texts = [" ".join(["t"] * int(n)) for n in rng.integers(1, 40, 200)]
-        df = self._docs(spark, texts)
-        got = sorted(
-            tuple(r) for r in pack_documents(df, max_tokens=64, n_buckets=4).collect()
-        )
-        con = duckdb.connect()
-        con.register("documents", df.toPandas())
-        exp = sorted(
-            tuple(r)
-            for r in con.execute(pack_documents_sql(64, 4)).fetchall()
-        )
-        assert got == exp
+        # a 32-bit id packs like a 64-bit one: it is cast to the declared
+        # ``long`` before the grouped UDF
+        for id_type in ("long", "int"):
+            df = self._docs(spark, texts, id_type)
+            got = sorted(
+                tuple(r) for r in pack_documents(df, max_tokens=64, n_buckets=4).collect()
+            )
+            con = duckdb.connect()
+            con.register("documents", df.toPandas())
+            exp = sorted(
+                tuple(r)
+                for r in con.execute(pack_documents_sql(64, 4)).fetchall()
+            )
+            assert got == exp
 
     def test_partitioning_invariance(self, spark):
         import numpy as np

@@ -146,9 +146,9 @@ if __name__ == "__main__":
         similarity.cosine_near_dup_pairs_blocked(emb, 0.4, materialize=False),
         "block-pair cogroup: each vector shuffles to B+1 GEMM tasks — the "
         "whole lineage is scan → explode → two hash exchanges → "
-        "FlatMapCoGroupsInPandas; NO collect, NO BroadcastExchange of the "
+        "FlatMapCoGroupsInArrow; NO collect, NO BroadcastExchange of the "
         "corpus anywhere",
-        grep=("Exchange", "CoGroup", "FlatMap", "Scan", "Generate"),
+        grep=("Exchange", "FlatMapCoGroupsInArrow", "Scan", "Generate"),
         fmt="simple",
     )
     from cms_topn_spark.operators.sessions import sessionize
