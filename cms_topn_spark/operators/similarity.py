@@ -502,15 +502,19 @@ def cosine_near_dup_pairs_lsh(
     return out
 
 
-def probe_masks(n_planes: int, probe_hamming: int) -> list[int]:
-    """All XOR masks within Hamming distance ``probe_hamming`` of a bucket
-    key — the multi-probe neighborhood. probe_hamming >= n_planes enumerates
-    the ENTIRE key space (the full-probe exactness regime)."""
+def _check_full_probe(n_planes: int, probe_hamming: int) -> None:
     if n_planes > 12 and probe_hamming >= n_planes:
         raise ValueError(
             "full-probe enumeration of 2^n_planes masks is only sensible for "
             "small n_planes (the explicit oracle regime); use n_planes <= 12"
         )
+
+
+def probe_masks(n_planes: int, probe_hamming: int) -> list[int]:
+    """All XOR masks within Hamming distance ``probe_hamming`` of a bucket
+    key — the multi-probe neighborhood. probe_hamming >= n_planes enumerates
+    the ENTIRE key space (the full-probe exactness regime)."""
+    _check_full_probe(n_planes, probe_hamming)
     return [m for m in range(1 << n_planes) if bin(m).count("1") <= probe_hamming]
 
 
@@ -584,7 +588,10 @@ def _lsh_search(
     join is skipped outright (:func:`_lsh_candidates_full_probe`); the
     sublinear production regime goes through the generic bucket join
     (:func:`_lsh_candidates_join`). Candidate-set parity between the two
-    paths at full probe is pytest-pinned on random corpora."""
+    paths at full probe is pytest-pinned on random corpora. Full probe at
+    ``n_planes > 12`` raises ``ValueError``: it would silently score every
+    query against the whole corpus."""
+    _check_full_probe(n_planes, probe_hamming)
     if probe_hamming >= n_planes:
         cand = _lsh_candidates_full_probe(sigs, query_ids)
     else:

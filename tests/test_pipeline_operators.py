@@ -572,6 +572,19 @@ class TestSimilarity:
         assert direct == joined
         assert len(joined) == 3 * 119  # 3 present queries × (120 − self)
 
+    def test_full_probe_guard_covers_lsh_topk_and_lsh_query(self, spark, tmp_path):
+        """Full probe above 12 planes raises in both search entry points
+        instead of silently scoring every query against the whole corpus."""
+        from cms_topn_spark.operators import similarity
+
+        rows = [(i, [float(i % 3), 1.0, float(i % 5)]) for i in range(12)]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        with pytest.raises(ValueError, match="full-probe"):
+            similarity.lsh_topk(emb, [0, 1], n_planes=16, probe_hamming=16)
+        index = similarity.lsh_build(emb, str(tmp_path / "idx"), n_planes=16, n_tables=2)
+        with pytest.raises(ValueError, match="full-probe"):
+            similarity.lsh_query(index, emb, [0, 1], probe_hamming=17)
+
     def test_cosine_blocked_matches_oracle(self, spark, sf001_dir, con):
         """Block-GEMM exact pairs (the demonstrated, collect-free shape)
         equal the DuckDB all-pairs oracle at a low threshold (where no LSH

@@ -6,18 +6,21 @@ row-count, schema width and the order-insensitive multiset of row values
 (columns sorted by name, floats kept raw — same spirit as the driver's
 value-hash).
 
-Usage: python tools/check_oracles.py [sf_dir] [query ...]
+Usage: python tools/check_oracles.py [--cpus N] [--shuffle-partitions P]
+                                     [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -59,13 +62,20 @@ def rowset(cols: list[str], rows: list[tuple]):
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser(usage=__doc__.split("Usage: ")[1])
+    ap.add_argument("--cpus", type=int, default=8, help="local[N] core count")
+    ap.add_argument("--shuffle-partitions", type=int, default=16)
+    # the layout flags may appear anywhere; the rest is [sf_dir] [query ...]
+    args, sys.argv[1:] = ap.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
     from cms_topn_spark.spark_session import get_spark
 
-    spark = get_spark("oracle-check", cpus=8, shuffle_partitions=16)
+    spark = get_spark(
+        "oracle-check", cpus=args.cpus, shuffle_partitions=args.shuffle_partitions
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
