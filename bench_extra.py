@@ -8,7 +8,6 @@ tools/make_scaled_data.py — plus:
 
 - ``--noop``: time ``df.write.format("noop")`` instead of ``.count()`` so the
   full row set is computed (guide §1.4);
-- ``--explain DIR``: write ``.explain("formatted")`` per query to DIR;
 - ``--queries a,b,c``: subset (default: bench.py's HEADLINE list).
 
 Usage:
@@ -18,12 +17,10 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import io
 import json
 import os
 import sys
 import time
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -33,7 +30,6 @@ def main() -> None:
     ap.add_argument("--queries", default=None)
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--noop", action="store_true")
-    ap.add_argument("--explain", default=None)
     ap.add_argument("--no-warm", action="store_true")
     args = ap.parse_args()
 
@@ -53,17 +49,6 @@ def main() -> None:
         for name in names:
             qs[name](spark, warm_dir).count()
         print("warm pass done", file=sys.stderr)
-
-    if args.explain:
-        os.makedirs(args.explain, exist_ok=True)
-        for name in names:
-            df = qs[name](spark, sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
-                f.write(buf.getvalue())
-            print(f"explain {name} written", file=sys.stderr)
 
     out: dict[str, float] = {}
     for p in range(args.passes):

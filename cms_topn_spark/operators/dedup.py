@@ -626,6 +626,34 @@ def _band_bucket_col() -> F.Column:
     return F.pmod(F.xxhash64("key"), F.lit(N_KEY_BUCKETS)).cast("int")
 
 
+def _band_rows(feats: DataFrame) -> DataFrame:
+    """(doc_id, sz, band, key): one row per LSH band key of each document of
+    a feature frame. ``sz`` is the doc's gram-set size; it rides along the
+    band rows (+8 B/row) so the candidate size pre-filter needs no features
+    join."""
+    return feats.select(
+        "doc_id", F.size("grams").alias("sz"), F.posexplode("keys").alias("band", "key")
+    )
+
+
+def _write_bands(feats: DataFrame, index_dir: str, mode: str) -> None:
+    """Write the band rows of ``feats`` to the index's ``bands.parquet``
+    stage, partitioned by key-hash bucket (write ``mode`` as Spark's)."""
+    (
+        _band_rows(feats)
+        .withColumn("bucket", _band_bucket_col())
+        # cluster by bucket before the partitioned write: without it every
+        # scan task writes a sliver into every bucket directory
+        # (tasks × buckets tiny files — measured 2× slower to read back
+        # than the unbucketed stage); clustered, each bucket is one file
+        # per write
+        .repartition(F.col("bucket"))
+        .write.partitionBy("bucket")
+        .mode(mode)
+        .parquet(f"{index_dir}/bands.parquet")
+    )
+
+
 def minhash_index_build(df: DataFrame, index_dir: str, id_col: str = "doc_id",
                         text_col: str = "text") -> DataFrame:
     """Persist :func:`minhash_doc_features` as a parquet index stage — the
@@ -640,31 +668,16 @@ def minhash_index_build(df: DataFrame, index_dir: str, id_col: str = "doc_id",
 
     - ``features.parquet`` (doc_id, keys, grams) — the verify side, keyed
       by doc id;
-    - ``bands.parquet`` (doc_id, band, key) PARTITIONED BY the key's hash
-      bucket — the candidate-join side. A batch's band keys map to a set
-      of buckets, so :func:`incremental_near_dup` prunes the per-batch
+    - ``bands.parquet`` (doc_id, sz, band, key) PARTITIONED BY the key's
+      hash bucket — the candidate-join side. A batch's band keys map to a
+      set of buckets, so :func:`incremental_near_dup` prunes the per-batch
       index read to matching partitions instead of streaming (and
       re-exploding) the whole stage; derived from the written features
       stage, so band rows never pay a second kernel pass."""
     feats = minhash_doc_features(df, id_col, text_col)
     feats.write.mode("overwrite").parquet(f"{index_dir}/features.parquet")
     loaded = minhash_index_load(df.sparkSession, index_dir)
-    (
-        loaded.select(
-            "doc_id", F.size("grams").alias("sz"),
-            F.posexplode("keys").alias("band", "key"),
-        )
-        .withColumn("bucket", _band_bucket_col())
-        # cluster by bucket before the partitioned write: without it every
-        # scan task writes a sliver into every bucket directory
-        # (tasks × buckets tiny files — measured 2× slower to read back
-        # than the unbucketed stage); clustered, each bucket is one file
-        # per write
-        .repartition(F.col("bucket"))
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(f"{index_dir}/bands.parquet")
-    )
+    _write_bands(loaded, index_dir, "overwrite")
     return loaded
 
 
@@ -705,18 +718,64 @@ def minhash_index_append(batch: DataFrame, index_dir: str, id_col: str = "doc_id
     across appends, as everywhere in the lifecycle."""
     feats = minhash_doc_features(batch, id_col, text_col).localCheckpoint(eager=True)
     feats.write.mode("append").parquet(f"{index_dir}/features.parquet")
-    (
-        feats.select(
-            "doc_id", F.size("grams").alias("sz"),
-            F.posexplode("keys").alias("band", "key"),
-        )
-        .withColumn("bucket", _band_bucket_col())
-        .repartition(F.col("bucket"))  # one file per bucket per append
-        .write.partitionBy("bucket")
-        .mode("append")
-        .parquet(f"{index_dir}/bands.parquet")
-    )
+    _write_bands(feats, index_dir, "append")
     return minhash_index_load(batch.sparkSession, index_dir)
+
+
+def _near_dup_pairs(
+    probe: DataFrame,
+    threshold: float,
+    index: DataFrame | None = None,
+    index_bands: DataFrame | None = None,
+) -> DataFrame:
+    """The one MinHash pair pipeline behind :func:`minhash_lsh_pairs`,
+    :func:`incremental_near_dup` and ``streaming.near_dup_stream``: every
+    pair (a_id < b_id) with gram-Jaccard ≥ ``threshold`` that has at least
+    one side in ``probe``. ``probe`` and ``index`` are feature frames
+    (doc_id, keys, grams) with disjoint ids; ``index=None`` is the empty
+    index. ``index_bands`` defaults to the band rows of ``index`` and may
+    instead be the index's bucket-pruned ``bands.parquet`` stage
+    (:func:`minhash_index_bands`).
+
+    Candidates come from ONE band join: the probe's band rows against
+    index ∪ probe band rows on (band, key). A probe–index match always
+    qualifies and a probe–probe match only from its larger-id side, so each
+    pair is emitted once per shared band and the distinct only drops
+    repeats across bands. With no index the join is the band self-join
+    (the ``from_index`` literal folds away).
+
+    ``probe`` is read by several branches, so pass a persisted or
+    checkpointed frame; its lifetime stays with the caller. Returns the
+    lazy verified pair frame."""
+    probe_bands = _band_rows(probe)
+    other = probe_bands.withColumn("from_index", F.lit(False))
+    feats = probe
+    if index is not None:
+        if index_bands is None:
+            index_bands = _band_rows(index)
+        other = index_bands.withColumn("from_index", F.lit(True)).unionByName(other)
+        feats = index.unionByName(probe)
+    cand = (
+        probe_bands.alias("b")
+        .join(
+            other.alias("a"),
+            (F.col("b.band") == F.col("a.band"))
+            & (F.col("b.key") == F.col("a.key"))
+            & (F.col("b.doc_id") != F.col("a.doc_id"))
+            & (F.col("a.from_index") | (F.col("b.doc_id") < F.col("a.doc_id"))),
+        )
+        .select(
+            F.least("b.doc_id", "a.doc_id").alias("a_id"),
+            F.greatest("b.doc_id", "a.doc_id").alias("b_id"),
+            # the ratio test is symmetric, so the sizes need no orientation
+            F.col("b.sz").alias("sz_a"),
+            F.col("a.sz").alias("sz_b"),
+        )
+        .where(_size_ratio_ok(threshold))  # commutes with distinct; -45 % rows
+        .select("a_id", "b_id")
+        .distinct()
+    )
+    return _verify_gram_pairs(cand, feats, threshold)
 
 
 def incremental_near_dup(
@@ -725,8 +784,6 @@ def incremental_near_dup(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
-    batch_feats: DataFrame | None = None,
     index_dir: str | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup dedup of a new crawl batch against a prior
@@ -734,12 +791,12 @@ def incremental_near_dup(
     exact-digest ``incremental_dedup`` (Bloom anti-join).
 
     Emits every pair (a_id, b_id), a < b, with gram-Jaccard ≥ ``threshold``
-    where AT LEAST ONE side is in the batch: batch-vs-prior pairs come from
-    joining the batch's band keys against the persisted index
-    (:func:`minhash_index_build`); batch-vs-batch pairs come from the same
-    join because the batch's features union into the probe side. Equals the
-    batch-touching subset of the full-corpus exact operator at the
-    threshold (the 32×4 banding's miss probability < 1e-7 at s = 0.8, as
+    where AT LEAST ONE side is in the batch: batch-vs-prior and
+    batch-vs-batch pairs come from one join of the batch's band keys
+    against the persisted index (:func:`minhash_index_build`) plus the
+    batch's own keys (:func:`_near_dup_pairs`). Equals the batch-touching
+    subset of the full-corpus exact operator at the threshold (the 32×4
+    banding's miss probability < 1e-7 at s = 0.8, as
     :func:`minhash_lsh_pairs`).
 
     Scale shape — the reason this operator exists: per batch, the kernel
@@ -756,12 +813,6 @@ def incremental_near_dup(
     not re-tokenizing/re-hashing 10¹² documents nightly — holds either
     way. Ids must be unique across prior∪batch (the crawl invariant).
 
-    ``batch_feats`` lets a caller that already computed the batch's
-    features (e.g. the streaming shape, which also appends them to the
-    index) pass them in instead of paying the kernel pass twice; pass an
-    unpersisted/checkpointed frame — the operator manages its own persist
-    lifetime.
-
     ``index_dir`` (round-7 verdict #2): when the index stage carries the
     band-bucket layout (:func:`minhash_index_build` writes
     ``bands.parquet`` partitioned by key-hash bucket), pass the stage dir
@@ -773,24 +824,18 @@ def incremental_near_dup(
     so it could never satisfy the key-equality join. Must name the same
     stage ``index_feats`` was loaded from; without it (or for a pre-round-8
     stage without bands.parquet) the join derives band rows from
-    ``index_feats`` as before."""
+    ``index_feats`` as before.
+
+    The pair set (tiny by construction) is materialized eagerly via
+    localCheckpoint so the batch-feature cache is released before
+    returning."""
     import os as _os
 
-    if batch_feats is None:
-        batch_feats = minhash_doc_features(batch, id_col, text_col)
-    bf = batch_feats.persist()
-    all_feats = index_feats.unionByName(bf)
-    # gram-set size rides along the band rows (+8 B/row) so the verify's
-    # size pre-filter needs no extra joins (see _verify_gram_pairs)
-    b_bands = bf.select(
-        "doc_id", F.size("grams").alias("sz"),
-        F.posexplode("keys").alias("band", "key"),
-    )
-    a_bands = None
+    bf = minhash_doc_features(batch, id_col, text_col).persist()
+    index_bands = None
     if index_dir is not None and _os.path.exists(
         _os.path.join(index_dir, "bands.parquet")
     ):
-        spark = bf.sparkSession
         # engage the bucketed stage only when the batch's bucket set is a
         # strict subset — i.e. when partition pruning actually skips index
         # data. A batch big enough to occupy every bucket (the gate-scale
@@ -813,7 +858,7 @@ def incremental_near_dup(
         # them by construction. Either decision is result-identical
         # (pruned-vs-unpruned parity is pytest-pinned); the sample only
         # picks which plan computes it.
-        bucket_col = b_bands.select(_band_bucket_col().alias("bucket"))
+        bucket_col = _band_rows(bf).select(_band_bucket_col().alias("bucket"))
         sampled = [
             r["bucket"]
             for r in bucket_col.limit(64 * N_KEY_BUCKETS).distinct().collect()
@@ -822,51 +867,27 @@ def incremental_near_dup(
         if len(sampled) < N_KEY_BUCKETS:
             buckets = [r["bucket"] for r in bucket_col.distinct().collect()]
         if len(buckets) < N_KEY_BUCKETS:
-            stage = minhash_index_bands(spark, index_dir, buckets)
+            stage = minhash_index_bands(bf.sparkSession, index_dir, buckets)
             if "sz" in stage.columns:  # stages written before the sz column
-                a_bands = stage.unionByName(b_bands)
-    if a_bands is None:
-        a_bands = all_feats.select(
-            "doc_id", F.size("grams").alias("sz"),
-            F.posexplode("keys").alias("band", "key"),
-        )
-    lt = F.col("b.doc_id") < F.col("a.doc_id")
-    cand = (
-        b_bands.alias("b")
-        .join(
-            a_bands.alias("a"),
-            (F.col("b.band") == F.col("a.band"))
-            & (F.col("b.key") == F.col("a.key"))
-            & (F.col("b.doc_id") != F.col("a.doc_id")),
-        )
-        .select(
-            F.least("b.doc_id", "a.doc_id").alias("a_id"),
-            F.greatest("b.doc_id", "a.doc_id").alias("b_id"),
-            F.when(lt, F.col("b.sz")).otherwise(F.col("a.sz")).alias("sz_a"),
-            F.when(lt, F.col("a.sz")).otherwise(F.col("b.sz")).alias("sz_b"),
-        )
-        .where(_size_ratio_ok(threshold))  # commutes with distinct; -45 % rows
-        .distinct()
+                index_bands = stage
+    out = _near_dup_pairs(bf, threshold, index_feats, index_bands).localCheckpoint(
+        eager=True
     )
-    verified = _verify_gram_pairs(cand, all_feats, threshold)
-    if not materialize:
-        # lazy path: the caller owns recomputation; nothing may stay
-        # persisted past return (no handle to unpersist)
-        bf.unpersist()
-        return verified
-    out = verified.localCheckpoint(eager=True)
     bf.unpersist()
     return out
 
 
 def _size_ratio_ok(threshold: float):
-    """The verify's int-only size pre-filter as a reusable predicate:
-    J ≤ min(|A|,|B|)/max(|A|,|B|), so pairs failing it cannot pass the
-    exact verify. A deterministic row-level function of (sz_a, sz_b), so
-    it commutes with the candidate ``distinct()`` — producers apply it
-    BEFORE their distinct to shrink that exchange (measured −45 % rows);
-    :func:`_verify_gram_pairs` re-applies it (idempotent) so callers
-    without the sizes threaded through stay correct."""
+    """The verify's int-only size pre-filter over the candidate columns
+    (sz_a, sz_b): since |∩| ≤ min(|A|,|B|) and |∪| ≥ max(|A|,|B|),
+    J ≤ min/max as reals, so keep a pair iff double(min)/double(max) ≥
+    threshold. Rounding-safe: real x ≤ y ⟹ rounded(x) ≤ rounded(y), so any
+    pair passing the verify's rounded i/u ≥ t test also passes this one —
+    the filter only drops pairs the verify itself would drop (~55 % of
+    candidates on the bench corpus, before any gram array moves). A
+    deterministic row-level function of the two sizes, symmetric in them,
+    so it commutes with the candidate ``distinct()`` and runs before it to
+    shrink that exchange (measured −45 % rows)."""
     return (
         F.least("sz_a", "sz_b").cast("double")
         / F.greatest("sz_a", "sz_b").cast("double")
@@ -875,48 +896,32 @@ def _size_ratio_ok(threshold: float):
 
 
 def _verify_gram_pairs(cand: DataFrame, feats: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard verification shared by :func:`minhash_lsh_pairs` and
-    :func:`incremental_near_dup`: candidate pairs (a_id, b_id) join back to
-    the per-doc gram-hash sets in ``feats`` and survive iff
-    |∩| / |∪| ≥ threshold. One implementation so the full and incremental
-    operators cannot silently diverge on the verify math — the exact
-    equality their shared oracle and the fuzz invariant depend on.
+    """Exact-Jaccard verification of the size-filtered candidate pairs
+    (a_id, b_id) of :func:`_near_dup_pairs`: each pair joins back to the
+    per-doc gram-hash sets in ``feats`` and survives iff
+    |∩| / |∪| ≥ threshold. One implementation for every MinHash pair
+    operator, so the full and incremental operators cannot silently diverge
+    on the verify math — the exact equality their shared oracle and the
+    fuzz invariant depend on.
 
-    Two-stage shape (the pair-join verify's dominant cost is shipping two
-    ~kB gram arrays per candidate through two exchanges):
-
-    1. SIZE pre-filter on int columns only: since i ≤ min(|A|,|B|) and
-       u ≥ max(|A|,|B|), J ≤ min/max as reals; keep a pair iff
-       double(min)/double(max) ≥ threshold. Rounding-safe: real x ≤ y ⟹
-       rounded(x) ≤ rounded(y), so any pair passing the final rounded
-       i/u ≥ t test also passes this one — the filter can only drop pairs
-       the verify itself would drop. On the bench corpus it drops ~55 % of
-       candidates before any array moves. Callers that already carry the
-       sizes on the candidate frame (``sz_a``/``sz_b`` — both band-join
-       producers thread them through for free) skip the two size joins
-       entirely; otherwise they are fetched here.
-    2. Array fetch for survivors + a sort-merge intersection kernel: each
-       side's hash set is sorted (they arrive in gram-word order, not hash
-       order) and |∩| is a searchsorted count — the same distinct-element
-       count ``array_intersect`` produced (per-doc gram hashes are distinct
-       words' hashes), computed vectorized instead of per-row hash sets.
-       The final predicate double(i)/double(u) ≥ t is the same arithmetic
-       Catalyst evaluated."""
-    if not {"sz_a", "sz_b"}.issubset(set(cand.columns)):
-        sizes = feats.select(F.col("doc_id"), F.size("grams").alias("sz"))
-        sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a"))
-        sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b"))
-        cand = cand.join(sa, "a_id").join(sb, "b_id")
-    cand = cand.where(_size_ratio_ok(threshold)).select("a_id", "b_id")
-    # Spread the surviving id-only pairs across the cluster BEFORE the
-    # array joins: AQE rightly coalesces the tiny candidate exchange to a
-    # handful of partitions, but every downstream stage inherits that —
-    # the gram-array fetch, the Arrow boundary and the intersection kernel
-    # all ran ~4-way on a 32-core session (measured: the kernel wall was
-    # ~5 s of the verify's ~7 s at the 10× bench scale). A round-robin
-    # repartition of 16-byte id rows costs nothing and restores kernel
-    # parallelism whatever join strategy fires; at real scale the pair set
-    # is large and the spread is what you want anyway.
+    The verify's dominant cost is shipping two ~kB gram arrays per
+    candidate through two joins, which is why candidates arrive already
+    size-filtered (:func:`_size_ratio_ok`). The kernel is a sort-merge
+    intersection: each a-side hash set is sorted (they arrive in gram-word
+    order, not hash order) and |∩| is a searchsorted count — the same
+    distinct-element count ``array_intersect`` produced (per-doc gram
+    hashes are distinct words' hashes), computed vectorized instead of
+    per-row hash sets. The final predicate double(i)/double(u) ≥ t is the
+    same arithmetic Catalyst evaluated."""
+    # Spread the id-only pairs across the cluster BEFORE the array joins:
+    # AQE rightly coalesces the tiny candidate exchange to a handful of
+    # partitions, and broadcast gram-array joins keep that partitioning, so
+    # the Arrow boundary and the intersection kernel ran ~4-way on a
+    # 32-core session (measured: the kernel wall was ~5 s of the verify's
+    # ~7 s at the 10× bench scale). This pays only while those joins
+    # broadcast: when the features side outgrows the broadcast threshold,
+    # each join hash-exchanges on its id and supersedes this round-robin
+    # exchange.
     cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
     fa = feats.select(F.col("doc_id").alias("a_id"), F.col("grams").alias("gs_a"))
     fb = feats.select(F.col("doc_id").alias("b_id"), F.col("grams").alias("gs_b"))
@@ -965,7 +970,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash-LSH candidates + exact-Jaccard verification.
 
@@ -986,41 +990,15 @@ def minhash_lsh_pairs(
     Plan shape: ONE kernel pass builds band keys + gram-hash sets per doc
     (:func:`minhash_doc_features`, persisted — at petabyte scale write it to
     a parquet stage instead; it is O(corpus tokens) like any tokenized
-    intermediate). Candidates come from the band self-join; the verify stage
-    joins the candidate pairs straight back to the cached per-doc gram sets,
-    so it costs O(candidate pairs) with no second corpus scan, no string
-    shingle rebuild, and no semi-join staging. The returned pair set (tiny by
+    intermediate). Candidates come from the band self-join — the
+    empty-index case of :func:`_near_dup_pairs`; the verify stage joins the
+    candidate pairs straight back to the cached per-doc gram sets, so it
+    costs O(candidate pairs) with no second corpus scan, no string shingle
+    rebuild, and no semi-join staging. The returned pair set (tiny by
     construction — it is the dedup output) is materialized eagerly via
-    localCheckpoint so the feature cache is released before returning;
-    ``materialize=False`` returns the lazy plan instead (for composition or
-    plan inspection — the caller then owns the feature cache lifetime)."""
+    localCheckpoint so the feature cache is released before returning."""
     feats = minhash_doc_features(df, id_col, text_col).persist()
-    # gram-set size rides along the band rows (+8 B/row) so the verify's
-    # size pre-filter needs no extra joins; sizes are functions of the ids,
-    # so the 4-column distinct has the same cardinality
-    bandrows = feats.select(
-        "doc_id", F.size("grams").alias("sz"),
-        F.posexplode("keys").alias("band", "key"),
-    )
-    a, b = bandrows.alias("a"), bandrows.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"),
-            F.col("a.sz").alias("sz_a"), F.col("b.sz").alias("sz_b"),
-        )
-        .where(_size_ratio_ok(threshold))  # commutes with distinct; -45 % rows
-        .distinct()
-    )
-    verified = _verify_gram_pairs(cand, feats, threshold)
-    if not materialize:
-        return verified
-    out = verified.localCheckpoint(eager=True)
+    out = _near_dup_pairs(feats, threshold).localCheckpoint(eager=True)
     feats.unpersist()
     return out
 

@@ -159,7 +159,6 @@ def cosine_near_dup_pairs_blocked(
     n_blocks: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact cosine pairs via distributed block-GEMM — no driver collect,
     no corpus broadcast.
@@ -236,14 +235,12 @@ def cosine_near_dup_pairs_blocked(
         a, b = lid[r], rid[c]
         return pa.table({"a_id": np.minimum(a, b), "b_id": np.maximum(a, b)})
 
-    lazy = (
+    return (
         left.groupBy("pk")
         .cogroup(right.groupBy("pk"))
         .applyInArrow(gemm, "a_id long, b_id long")
+        .localCheckpoint(eager=True)
     )
-    # materialize=False exposes the lazy plan (for inspection/composition) —
-    # note the count-only pruning hazard above applies to it
-    return lazy.localCheckpoint(eager=True) if materialize else lazy
 
 
 # ------------------------------------------------------------- LSH path
@@ -424,7 +421,6 @@ def cosine_near_dup_pairs_lsh(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
     max_candidate_fraction: float | None = None,
 ) -> DataFrame:
     """Bucketed cosine near-duplicate pairs — the 100-TB shape.
@@ -480,22 +476,13 @@ def cosine_near_dup_pairs_lsh(
             )
     emb_a = df.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("qv"))
     emb_b = df.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("nv"))
-    lazy = (
+    out = (
         cand.join(emb_a, "a_id")
         .join(emb_b, "b_id")
         .where(_cosine_expr() >= threshold)
         .select("a_id", "b_id")
+        .localCheckpoint(eager=True)
     )
-    if not materialize:
-        # nothing may stay persisted past return on the lazy path (the
-        # caller has no handle to unpersist) — the returned plan stays
-        # valid and recomputes signatures/candidates instead of reading
-        # the dropped caches
-        sigs.unpersist()
-        if max_candidate_fraction is not None:
-            cand.unpersist()
-        return lazy
-    out = lazy.localCheckpoint(eager=True)
     sigs.unpersist()
     if max_candidate_fraction is not None:
         cand.unpersist()

@@ -46,16 +46,13 @@ from ..operators.build import (
     spark_item_tag,
 )
 
-COMMIT_FILE = "committed_batch_id"
 STATE_FILE = "state.bin"
 
 # Every persisted state is one self-describing frame written with a single
 # atomic rename: | magic "STR1" | version u32 | batch_id i64 | sketch bytes |.
 # The batch id travels INSIDE the same file as the state it reflects, so there
 # is no window in which the state is folded but the commit record isn't (the
-# torn-commit failure mode of a separate marker file). The standalone
-# COMMIT_FILE below is only a whole-batch fast-skip hint; correctness never
-# depends on it.
+# torn-commit failure mode of a separate marker file).
 _FRAME = struct.Struct("<4sIq")
 _FRAME_MAGIC = b"STR1"
 
@@ -170,8 +167,7 @@ def windowed_sketch_stream(
     batch id that last folded into it: on a replay after a crash that folded
     only SOME windows of a batch, the already-at-this-batch windows are
     skipped per-file, so no window ever double-counts (exactly-once without a
-    cross-file transaction). The separate COMMIT_FILE is only a fast-skip for
-    fully-committed batches. Read any window with :func:`read_window_states`."""
+    cross-file transaction). Read any window with :func:`read_window_states`."""
     import pyspark.sql.functions as F
 
     from ..operators.grouped import _partial_states
@@ -180,16 +176,7 @@ def windowed_sketch_stream(
         spark_item_tag(dict(stream_df.dtypes)[value_col], "windowed_sketch_stream")
     os.makedirs(state_dir, exist_ok=True)
 
-    def _committed_marker() -> int:
-        p = os.path.join(state_dir, COMMIT_FILE)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as f:
-            return int(f.read().strip())
-
     def process_batch(batch_df, batch_id: int) -> None:
-        if batch_id <= _committed_marker():
-            return
         # a NULL event time gives a NULL _w, which stage 1 drops like any
         # NULL group key
         win = batch_df.withColumn("_w", F.window(F.col(ts_col), window).start.cast("long"))
@@ -202,10 +189,6 @@ def windowed_sketch_stream(
             batch_id,
             [(w, fold_states(by_window[w]).to_bytes()) for w in sorted(by_window)],
         )
-        tmp = os.path.join(state_dir, f".{COMMIT_FILE}.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, os.path.join(state_dir, COMMIT_FILE))
 
     return (
         stream_df.withWatermark(ts_col, watermark)
@@ -392,8 +375,8 @@ def near_dup_stream(
 
     1. computes its features ONCE (band keys + gram sets, batch-sized),
     2. emits near-dup pairs against the index built from all COMMITTED
-       prior batches (operators/dedup.py incremental_near_dup — the prior
-       corpus text is never re-read), and
+       prior batches (the pair pipeline of operators/dedup.py
+       incremental_near_dup — the prior corpus text is never re-read), and
     3. appends its own features, so the next batch dedups against
        prior ∪ this.
 
@@ -422,7 +405,7 @@ def near_dup_stream(
     excluded by id, but their features would double in the index."""
     import hashlib
 
-    from ..operators.dedup import incremental_near_dup, minhash_doc_features
+    from ..operators.dedup import _near_dup_pairs, minhash_doc_features
 
     feat_root = os.path.join(index_root, "features")
     pairs_root = os.path.join(index_root, "pairs")
@@ -447,15 +430,8 @@ def near_dup_stream(
             for d in sorted(os.listdir(feat_root))
             if d in committed
         ]
-        if prior:
-            idx = spark.read.parquet(*prior)
-        else:
-            idx = spark.createDataFrame(
-                [], "doc_id long, keys array<long>, grams array<long>"
-            )
-        pairs = incremental_near_dup(
-            batch_df, idx, threshold, id_col, text_col, batch_feats=feats
-        )
+        idx = spark.read.parquet(*prior) if prior else None
+        pairs = _near_dup_pairs(feats, threshold, idx)
         pairs.write.mode("overwrite").parquet(os.path.join(pairs_root, sub))
         feats.write.mode("overwrite").parquet(os.path.join(feat_root, sub))
         # the commit point: manifest gains the subdir in one atomic rename

@@ -74,15 +74,11 @@ def test_near_dup_bands_partition_pruning(spark, minhash_index):
     # and the pruned path answers EXACTLY like the unpruned one
     got = sorted(
         tuple(r)
-        for r in incremental_near_dup(
-            batch, idx, threshold=0.8, batch_feats=feats, index_dir=d
-        ).collect()
+        for r in incremental_near_dup(batch, idx, threshold=0.8, index_dir=d).collect()
     )
     want = sorted(
         tuple(r)
-        for r in incremental_near_dup(
-            batch, idx, threshold=0.8, batch_feats=feats
-        ).collect()
+        for r in incremental_near_dup(batch, idx, threshold=0.8).collect()
     )
     assert got == want
 

@@ -261,7 +261,10 @@ class TestDedup:
         ANY old/batch split, incremental_near_dup == the batch-touching
         subset of the full-corpus operator. Engine-vs-engine with the SAME
         band scheme and the same exact verify, so equality is exact — no
-        banding-miss probability can separate the two sides."""
+        banding-miss probability can separate the two sides. The
+        empty-prior split (every doc in the batch) must equal
+        minhash_lsh_pairs exactly: the full operator is the empty-index
+        case of the shared band join."""
         from hypothesis import HealthCheck, given, settings
         from hypothesis import strategies as st
 
@@ -290,19 +293,22 @@ class TestDedup:
         def run(texts):
             rows = [(i, t) for i, t in enumerate(texts)]
             docs = spark.createDataFrame(rows, "doc_id long, text string")
-            old = docs.where("doc_id % 3 != 0")
-            batch = docs.where("doc_id % 3 = 0")
-            feats = dedup.minhash_doc_features(old)
-            got = {
-                (r["a_id"], r["b_id"])
-                for r in dedup.incremental_near_dup(batch, feats, 0.8).collect()
-            }
             full = {
                 (r["a_id"], r["b_id"])
                 for r in dedup.minhash_lsh_pairs(docs, 0.8).collect()
             }
-            expect = {(a, b) for a, b in full if a % 3 == 0 or b % 3 == 0}
-            assert got == expect
+            # batch = doc_id % m == 0; m = 1 leaves the prior corpus empty,
+            # so there the expected set is all of minhash_lsh_pairs
+            for m in (3, 1):
+                old = docs.where(f"doc_id % {m} != 0")
+                batch = docs.where(f"doc_id % {m} = 0")
+                feats = dedup.minhash_doc_features(old)
+                got = {
+                    (r["a_id"], r["b_id"])
+                    for r in dedup.incremental_near_dup(batch, feats, 0.8).collect()
+                }
+                expect = {(a, b) for a, b in full if a % m == 0 or b % m == 0}
+                assert got == expect
 
         run()
 
@@ -651,6 +657,29 @@ class TestSimilarity:
             emb, 0.95, max_candidate_fraction=0.5
         )
         assert out.count() == 0  # no natural pairs above 0.95 at sf0.001
+
+
+@pytest.mark.parametrize(
+    "module, op, table, threshold",
+    [
+        ("dedup", "minhash_lsh_pairs", "documents", 0.8),
+        ("similarity", "cosine_near_dup_pairs_lsh", "embeddings", 0.9),
+        ("similarity", "cosine_near_dup_pairs_blocked", "embeddings", 0.4),
+    ],
+)
+def test_pair_operator_releases_its_caches(spark, sf001_dir, module, op, table, threshold):
+    """A pair operator returns its eagerly checkpointed pair set and drops
+    every cache it made on the way: the persisted-RDD count grows by at
+    most the output's one entry."""
+    import importlib
+
+    fn = getattr(importlib.import_module(f"cms_topn_spark.operators.{module}"), op)
+    df = spark.read.parquet(os.path.join(sf001_dir, f"{table}.parquet"))
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = fn(df, threshold)
+    after = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert after - before <= 1
+    out.count()  # the returned pair set stays readable
 
 
 class TestCuratePipeline:

@@ -11,9 +11,10 @@ Usage:
       Write ``.explain("formatted")`` of each NAME to
       ``OUT_DIR/<NAME>_<SUFFIX>.txt`` (the plans/r08/ layout: run once per
       tree with SUFFIX before/after). NAME is a ``queries()`` name or one of
-      the ``materialize=False`` stage forms of :data:`STAGES`, whose gate
-      queries eagerly localCheckpoint their result and so show only the
-      post-checkpoint tail.
+      the stage forms of :data:`STAGES`. Their gate queries eagerly
+      localCheckpoint the result and so show only the post-checkpoint tail;
+      a stage form instead writes the executed plan of the SQL execution
+      that materialized the result (:func:`executed_plan`).
 """
 import io
 import os
@@ -28,7 +29,7 @@ sys.path.insert(0, ".")
 def _minhash_stage(docs, tmp):
     from cms_topn_spark.operators import dedup
 
-    return dedup.minhash_lsh_pairs(docs, 0.8, materialize=False)
+    return dedup.minhash_lsh_pairs(docs, 0.8)
 
 
 def _incremental_stage(docs, tmp):
@@ -43,13 +44,36 @@ def _incremental_stage(docs, tmp):
     idx_dir = os.path.join(tmp, "minhash_idx")
     idx = dedup.minhash_index_build(docs.where(F.col("doc_id") % 3 != 0), idx_dir)
     batch = docs.where((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 50 == 0))
-    return dedup.incremental_near_dup(batch, idx, 0.8, materialize=False, index_dir=idx_dir)
+    return dedup.incremental_near_dup(batch, idx, 0.8, index_dir=idx_dir)
 
 
 STAGES = {
     "minhash_lsh_pairs_stage": _minhash_stage,
     "incremental_near_dup_stage": _incremental_stage,
 }
+
+
+def executed_plan(spark, run) -> str:
+    """Call ``run()`` and return the formatted physical plan of the last SQL
+    execution it started, read from the SQL status store — for an operator
+    that eagerly materializes its result, the executed (final adaptive)
+    plan that produced it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last():
+        lst = store.executionsList()
+        n = lst.size()
+        return lst.apply(n - 1) if n else None
+
+    before = last()
+    mark = before.executionId() if before is not None else -1
+    run()
+    # the store is filled by an asynchronous listener
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    e = last()
+    if e is None or e.executionId() <= mark:
+        raise RuntimeError("the call started no SQL execution")
+    return e.physicalPlanDescription()
 
 
 def explain(spark, sf: str, out_dir: str, suffix: str, names: list[str]) -> None:
@@ -61,14 +85,19 @@ def explain(spark, sf: str, out_dir: str, suffix: str, names: list[str]) -> None
     tmp = tempfile.mkdtemp(prefix="dump_plans_")
     try:
         for name in names:
-            df = STAGES[name](docs, tmp) if name in STAGES else qs[name](spark, sf)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
+            if name in STAGES:
+                what = "executed plan (formatted)"
+                plan = executed_plan(spark, lambda: STAGES[name](docs, tmp))
+            else:
+                what = ".explain('formatted')"
+                buf = io.StringIO()
+                with redirect_stdout(buf):
+                    qs[name](spark, sf).explain("formatted")
+                plan = buf.getvalue()
             with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-                f.write(f"# {name} — .explain('formatted'), {suffix} "
+                f.write(f"# {name} — {what}, {suffix} "
                         "(sf0.01 input; plan shape is sf-independent)\n")
-                f.write(buf.getvalue())
+                f.write(plan)
             print(f"{name}_{suffix}.txt written", file=sys.stderr)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -86,8 +115,18 @@ if __name__ == "__main__":
         sys.exit(0)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString
 
+    def executed(run):
+        # the final plan's operator tree: the formatted plan's first
+        # paragraph, without the adaptive plan's initial form
+        tree = executed_plan(spark, run).split("\n\n", 1)[0]
+        return tree.split("\n+- == Initial Plan ==", 1)[0]
+
     def show(title, df, note, grep=None, fmt="formatted"):
-        plan = df._jdf.queryExecution().explainString(mode(fmt))
+        """``df`` is a lazy frame, or a plan string from :func:`executed`."""
+        if isinstance(df, str):
+            plan = df
+        else:
+            plan = df._jdf.queryExecution().explainString(mode(fmt))
         print(f"## {title}\n\n{note}\n\n```")
         if grep:
             for line in plan.splitlines():
@@ -125,31 +164,28 @@ if __name__ == "__main__":
     )
     show(
         "MinHash LSH pairs (single-pass features)",
-        dedup.minhash_lsh_pairs(docs, 0.8, materialize=False),
+        executed(lambda: dedup.minhash_lsh_pairs(docs, 0.8)),
         "ONE MapInArrow pass emits band keys + gram-hash sets; the exact "
         "verify joins candidate pairs straight back to the cached per-doc "
         "frame — no second corpus scan, no driver-side step",
         grep=("Join", "Exchange", "MapInArrow", "InMemory"),
-        fmt="simple",
     )
     emb = spark.read.parquet(sf + "/embeddings.parquet")
     show(
         "Cosine near-dup (bucketed)",
-        similarity.cosine_near_dup_pairs_lsh(emb, 0.9, materialize=False),
+        executed(lambda: similarity.cosine_near_dup_pairs_lsh(emb, 0.9)),
         "LSH bucket self-join — candidate generation never broadcasts the "
         "corpus and never goes O(n²)",
         grep=("Join", "Exchange"),
-        fmt="simple",
     )
     show(
         "Cosine exact pairs (block-GEMM, the demonstrated query)",
-        similarity.cosine_near_dup_pairs_blocked(emb, 0.4, materialize=False),
+        executed(lambda: similarity.cosine_near_dup_pairs_blocked(emb, 0.4)),
         "block-pair cogroup: each vector shuffles to B+1 GEMM tasks — the "
         "whole lineage is scan → explode → two hash exchanges → "
         "FlatMapCoGroupsInArrow; NO collect, NO BroadcastExchange of the "
         "corpus anywhere",
         grep=("Exchange", "FlatMapCoGroupsInArrow", "Scan", "Generate"),
-        fmt="simple",
     )
     from cms_topn_spark.operators.sessions import sessionize
 
