@@ -10,6 +10,13 @@ checkpoint) is written once and works for all of them:
     to_bytes()           -> bytes             (canonical little-endian layout)
     from_bytes(b)        -> sketch            (exact inverse; round-trip == b)
 
+Two hooks serve the grouped build (operators/grouped.py) and have working
+defaults, so a sketch overrides them only with a kernel that treats many
+groups at once:
+
+    fold_window(...)     -> None              (stage 1: one sorted window)
+    merge_groups(groups) -> iter of sketches  (stage 2: per-group folds)
+
 The serialized frame starts with a common 8-byte header::
 
     magic  b"SKS1"  | kind u8 | version u8 | item_type u8 | flags u8
@@ -24,7 +31,7 @@ from __future__ import annotations
 
 import struct
 from abc import ABC, abstractmethod
-from typing import Iterable
+from typing import Iterable, Iterator, Sequence
 
 MAGIC = b"SKS1"
 HEADER = struct.Struct("<4sBBBB")
@@ -89,6 +96,34 @@ class MergeableSketch(ABC):
     @classmethod
     @abstractmethod
     def from_bytes(cls, b: bytes) -> "MergeableSketch": ...
+
+    # ---- grouped-build hooks (operators/grouped.py) ----
+
+    def fold_window(self, factory, carried: dict, keys: list, values, bounds, ingest) -> None:
+        """Stage-1 hook: fold one group-sorted window into the states a task
+        carries. ``values[bounds[i]:bounds[i + 1]]`` (an Arrow array) holds
+        the rows of group ``keys[i]``; ``carried`` maps a group to its
+        sketch and gains an entry for every group with a non-NULL value.
+        ``self`` is an empty sketch from ``factory`` and is not modified.
+        The default feeds each group's slice to its carried sketch with
+        ``ingest(sketch, slice)``, one call per group."""
+        for i, key in enumerate(keys):
+            lo, hi = int(bounds[i]), int(bounds[i + 1])
+            sl = values.slice(lo, hi - lo)
+            if sl.null_count == len(sl):
+                continue
+            sk = carried.get(key)
+            if sk is None:
+                sk = carried[key] = factory()
+            ingest(sk, sl)
+
+    @classmethod
+    def merge_groups(cls, groups: Iterable[Sequence[bytes]]) -> Iterator["MergeableSketch"]:
+        """Stage-2 hook: one merged sketch per group, in group order, each
+        folding the group's serialized states in arrival order. The default
+        is the pairwise fold, :func:`fold_states`."""
+        for states in groups:
+            yield fold_states(states)
 
     def pack_header(self, item_type: int = 0, flags: int = 0) -> bytes:
         return HEADER.pack(MAGIC, self.KIND, self.VERSION, item_type, flags)

@@ -33,13 +33,21 @@ collision-free (the regime of all golden tests).
 
 from __future__ import annotations
 
+import functools
 import math
 import struct
 
 import numpy as np
 
 from . import encoding as enc
-from .base import KIND_CMS_TOPN, MergeableSketch, frame_guarded, SketchError, register
+from .base import (
+    KIND_CMS_TOPN,
+    MergeableSketch,
+    SketchError,
+    frame_guarded,
+    register,
+    sketch_from_bytes,
+)
 from .murmur import MURMUR_SEED, hash128
 
 U64 = np.uint64
@@ -49,6 +57,12 @@ UPDATE_LINEAR = 1
 
 _FIXED = struct.Struct("<IIIIddQQ")  # depth, width, n, topn_count, eps, conf, total, next_seq
 _ENTRY = struct.Struct("<QQI")  # freq, seq, item_len
+
+# counters per block in the grouped kernels (groups × depth × width). One
+# array for every group of a task or partition, plus its bincount and sum
+# transients, costs more worker memory than the per-group loops it replaces;
+# at 2^18 (2 MB of uint64) a worker retains no more than with those loops
+_BLOCK_CELLS = 1 << 18
 
 
 def sizing(eps: float, confidence: float) -> tuple[int, int]:
@@ -356,6 +370,40 @@ class CmsTopn(MergeableSketch):
         but gets a merge-path-dependent insertion-order tie-break, exactly as
         the reference's insertion-ordered array would (property-tested in
         tests/test_properties.py)."""
+        self._merge_check(other)
+        out = self._like(
+            self.counters + other.counters,
+            self.item_type if self.item_type != enc.TYPE_UNSET else other.item_type,
+            self.total + other.total,
+            # seq ranges concatenate on merge (a's items before b's), which both
+            # reproduces the golden union tie order (expected/union.out:63-68:
+            # 'two' from a sorts before 'three' from b at equal frequency) and
+            # keeps merge associative: ((a⊕b)⊕c and a⊕(b⊕c) assign identical seqs.
+            self.next_seq + other.next_seq,
+            {},
+        )
+        cand: dict[bytes, int] = {}
+        for src, shift in ((self, 0), (other, self.next_seq)):
+            for it, e in src.topn.items():
+                seq = int(e[1]) + shift
+                if it not in cand or seq < cand[it]:
+                    cand[it] = seq
+        if cand:
+            items = list(cand.keys())
+            data, offsets, lengths = enc.encode_bytes_list(items)
+            h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
+            cols = out._cols(h1, h2)
+            est = out._estimate_cols(cols).astype(np.int64)
+            ranked = sorted(
+                ((items[i], int(est[i]), cand[items[i]]) for i in range(len(items))),
+                key=lambda t: (-t[1], t[2], t[0]),
+            )
+            for it, freq, seq in ranked[: out.n]:
+                out.topn[it] = [freq, seq]
+        return out
+
+    def _merge_check(self, other) -> None:
+        """The checks of :meth:`merge`, with its verbatim errors."""
         if not isinstance(other, CmsTopn):
             raise SketchError("cannot merge cms_topns of different types")
         if (
@@ -375,38 +423,177 @@ class CmsTopn(MergeableSketch):
             and self.item_type != other.item_type
         ):
             raise SketchError("cannot merge cms_topns of different types")
+
+    def _like(self, counters, item_type: int, total: int, next_seq: int, topn: dict) -> "CmsTopn":
+        """A sketch with this one's parameters and the given state."""
         out = CmsTopn.__new__(CmsTopn)
         out.n, out.eps, out.confidence = self.n, self.eps, self.confidence
         out.update_mode = self.update_mode
         out.depth, out.width = self.depth, self.width
-        out.counters = self.counters + other.counters
-        out.item_type = self.item_type if self.item_type != enc.TYPE_UNSET else other.item_type
-        out.total = self.total + other.total
-        # seq ranges concatenate on merge (a's items before b's), which both
-        # reproduces the golden union tie order (expected/union.out:63-68:
-        # 'two' from a sorts before 'three' from b at equal frequency) and
-        # keeps merge associative: ((a⊕b)⊕c and a⊕(b⊕c) assign identical seqs.
-        out.next_seq = self.next_seq + other.next_seq
-        cand: dict[bytes, int] = {}
-        for src, shift in ((self, 0), (other, self.next_seq)):
-            for it, e in src.topn.items():
-                seq = int(e[1]) + shift
+        out.counters, out.item_type = counters, item_type
+        out.total, out.next_seq, out.topn = total, next_seq, topn
+        return out
+
+    # ---------------- grouped kernels (linear update) ----------------
+
+    def fold_window(self, factory, carried: dict, keys: list, values, bounds, ingest) -> None:
+        """Stage-1 hook (see :meth:`MergeableSketch.fold_window`). Linear
+        update builds every group's state for the window in one kernel,
+        :meth:`_window_states`. A task that folds several windows keeps this
+        contract: a fresh state per window, then :meth:`merge` into the
+        carried state in window order. Conservative update keeps the
+        per-group loop: its counters depend on how the rows are batched."""
+        if self.update_mode != UPDATE_LINEAR:
+            return super().fold_window(factory, carried, keys, values, bounds, ingest)
+        fresh = self._window_states(values, bounds)
+        again = [i for i in fresh if keys[i] in carried]
+        if again:
+            merged = CmsTopn._merge_level(
+                [carried[keys[i]] for i in again], [fresh[i] for i in again]
+            )
+            fresh.update(zip(again, merged))
+        for i, sk in fresh.items():
+            carried[keys[i]] = sk
+
+    def _window_states(self, values, bounds) -> dict[int, "CmsTopn"]:
+        """Segment index → the state ``add_packed`` gives a new sketch for
+        the non-NULL values of ``values[bounds[i]:bounds[i + 1]]``, byte for
+        byte; an all-NULL segment gets none. One Murmur pass for the window,
+        one ``lexsort`` dedupe on (segment, h1, h2), one ``bincount`` per
+        block of at most ``_BLOCK_CELLS`` counters. On a new sketch
+        ``add_packed``'s strict-eviction loop keeps the top n by (estimate
+        desc, first index asc), so that is the order taken here."""
+        data, offsets, lengths, tag = enc.pack_arrow_array(values)
+        n_seg = len(bounds) - 1
+        seg = np.repeat(np.arange(n_seg), np.diff(bounds))
+        if values.null_count:
+            seg = seg[values.is_valid().to_numpy(zero_copy_only=False)]
+        if len(seg) == 0:
+            return {}
+        seg_items = np.bincount(seg, minlength=n_seg)  # each state's total and next_seq
+        seg_first = np.cumsum(seg_items) - seg_items
+        h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
+        # stable, so each (segment, item) run starts at the item's first index
+        order = np.lexsort((h2, h1, seg))
+        ss, s1, s2 = seg[order], h1[order], h2[order]
+        new = np.ones(len(order), dtype=bool)
+        new[1:] = (ss[1:] != ss[:-1]) | (s1[1:] != s1[:-1]) | (s2[1:] != s2[:-1])
+        first = order[new]
+        useg = ss[new]
+        counts = np.diff(np.append(np.flatnonzero(new), len(order)))
+        cols = self._cols(h1[first], h2[first])
+        groups, gstart, gsize = np.unique(useg, return_index=True, return_counts=True)
+        ustart = np.append(gstart, len(first))
+
+        d, w = self.depth, self.width
+        rows = np.arange(d).reshape(d, 1)
+        per_block = max(1, _BLOCK_CELLS // (d * w))
+        blocks = []
+        est = np.empty(len(first), dtype=U64)
+        for b in range(0, len(groups), per_block):
+            nb = min(per_block, len(groups) - b)
+            lo, hi = ustart[b], ustart[b + nb]
+            local = np.repeat(np.arange(nb), gsize[b : b + nb])
+            c = cols[:, lo:hi]
+            # float64 weights stay exact: no cell can exceed the window's rows
+            block = np.bincount(
+                ((local * d + rows) * w + c).ravel(),
+                weights=np.tile(counts[lo:hi], d),
+                minlength=nb * d * w,
+            ).astype(U64).reshape(nb, d, w)
+            est[lo:hi] = block[local, rows, c].min(axis=0)
+            blocks.append(block)
+
+        rank = np.lexsort((first, -est.astype(np.int64), useg))
+        keep = rank[np.arange(len(first)) - np.repeat(gstart, gsize) < self.n]
+        kfirst = first[keep]
+        seqs = (kfirst - seg_first[useg[keep]]).tolist()
+        freqs = est[keep].tolist()
+        mv = memoryview(data) if isinstance(data, (bytes, bytearray)) else memoryview(
+            np.ascontiguousarray(data)
+        )
+        items = [
+            bytes(mv[o : o + ln])
+            for o, ln in zip(offsets[kfirst].tolist(), lengths[kfirst].tolist())
+        ]
+        out = {}
+        t = 0
+        for j, (g, k) in enumerate(zip(groups.tolist(), np.minimum(gsize, self.n).tolist())):
+            topn = {items[i]: [freqs[i], seqs[i]] for i in range(t, t + k)}
+            t += k
+            total = int(seg_items[g])
+            out[g] = self._like(blocks[j // per_block][j % per_block], tag, total, total, topn)
+        return out
+
+    @classmethod
+    def merge_groups(cls, groups):
+        """Stage-2 hook (see :meth:`MergeableSketch.merge_groups`): the
+        level-wise merge. Groups are taken in blocks of about
+        ``_BLOCK_CELLS`` state counters, and level k merges the k-th state of
+        every group in the block into that group's accumulator in one step
+        (:meth:`_merge_level`), so each result is byte-equal to
+        ``functools.reduce(CmsTopn.merge, states)``."""
+        block, cells = [], 0
+        for states in groups:
+            block.append([sketch_from_bytes(bytes(b)) for b in states])
+            cells += sum(len(b) for b in states) // 8
+            if cells >= _BLOCK_CELLS:
+                yield from _merge_block(block)
+                block, cells = [], 0
+        if block:
+            yield from _merge_block(block)
+
+    @staticmethod
+    def _merge_level(accs: list, others: list) -> list:
+        """``[a.merge(b) for a, b in zip(accs, others)]`` in one step, byte
+        for byte, for linear sketches of one (depth, width, n): counters sum
+        in place, every candidate is hashed in one Murmur pass and ranked by
+        (−freq, seq, item bytes) with one ``lexsort``, then truncated to n."""
+        a0 = accs[0]
+        d, w, n = a0.depth, a0.width, a0.n
+        counters = np.empty((len(accs), d, w), dtype=U64)
+        pair, items, seqs = [], [], []
+        for i, (a, b) in enumerate(zip(accs, others)):
+            a._merge_check(b)
+            np.add(a.counters, b.counters, out=counters[i])
+            cand = {it: e[1] for it, e in a.topn.items()}
+            for it, e in b.topn.items():
+                seq = e[1] + a.next_seq
                 if it not in cand or seq < cand[it]:
                     cand[it] = seq
-        out.topn = {}
-        if cand:
-            items = list(cand.keys())
-            data, offsets, lengths = enc.encode_bytes_list(items)
-            h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
-            cols = out._cols(h1, h2)
-            est = out._estimate_cols(cols).astype(np.int64)
-            ranked = sorted(
-                ((items[i], int(est[i]), cand[items[i]]) for i in range(len(items))),
-                key=lambda t: (-t[1], t[2], t[0]),
+            pair += [i] * len(cand)
+            items += cand
+            seqs += cand.values()
+        c = len(items)
+        p = np.asarray(pair, dtype=np.int64)
+        s = np.asarray(seqs, dtype=U64)
+        h1, h2 = hash128(*enc.encode_bytes_list(items), MURMUR_SEED)
+        cols = a0._cols(h1, h2)
+        est = counters[p, np.arange(d).reshape(d, 1), cols].min(axis=0).astype(np.int64)
+        # ~est ascending is est descending, with no int64 overflow
+        order = np.lexsort((s, ~est, p))
+        po, fo, so = p[order], est[order], s[order]
+        if np.any((po[1:] == po[:-1]) & (fo[1:] == fo[:-1]) & (so[1:] == so[:-1])):
+            # an equal (freq, seq) falls to the item bytes, as in merge
+            by_item = np.empty(c, dtype=np.int64)
+            by_item[sorted(range(c), key=items.__getitem__)] = np.arange(c)
+            order = np.lexsort((by_item, s, ~est, p))
+        size = np.bincount(p, minlength=len(accs))
+        keep = order[np.arange(c) - np.repeat(np.cumsum(size) - size, size) < n]
+        topns: list[dict] = [{} for _ in accs]
+        freqs = est.tolist()
+        for t in keep.tolist():
+            topns[pair[t]][items[t]] = [freqs[t], seqs[t]]
+        return [
+            a._like(
+                counters[i],
+                a.item_type if a.item_type != enc.TYPE_UNSET else b.item_type,
+                a.total + b.total,
+                a.next_seq + b.next_seq,
+                topns[i],
             )
-            for it, freq, seq in ranked[: out.n]:
-                out.topn[it] = [freq, seq]
-        return out
+            for i, (a, b) in enumerate(zip(accs, others))
+        ]
 
     # ---------------- serialization ----------------
 
@@ -472,3 +659,25 @@ class CmsTopn(MergeableSketch):
     # identity hash would break the hash/eq contract the moment two equal
     # sketches met in a set; key containers by to_bytes() instead
     __hash__ = None
+
+
+def _merge_block(block: list[list]) -> list:
+    """One merged sketch per group of live states. The level-wise merge
+    needs one linear (depth, width, n) for the block; anything else (another
+    kind, conservative update, mixed shapes) takes the pairwise fold, which
+    raises merge's errors where they occur."""
+    head = block[0][0]
+    if not all(
+        isinstance(sk, CmsTopn) and sk.update_mode == UPDATE_LINEAR
+        and (sk.depth, sk.width, sk.n) == (head.depth, head.width, head.n)
+        for states in block
+        for sk in states
+    ):
+        return [functools.reduce(lambda a, b: a.merge(b), states) for states in block]
+    accs = [states[0] for states in block]
+    for k in range(1, max(map(len, block))):
+        live = [i for i, states in enumerate(block) if len(states) > k]
+        merged = CmsTopn._merge_level([accs[i] for i in live], [block[i][k] for i in live])
+        for i, sk in zip(live, merged):
+            accs[i] = sk
+    return accs

@@ -98,6 +98,48 @@ def encode_arrow_strings(arr) -> tuple[bytes, np.ndarray, np.ndarray]:
     return data, offs[:-1], np.diff(offs)
 
 
+def arrow_type_tag(t) -> int:
+    """Item-type tag of a pyarrow type; composite types raise ``TypeError``."""
+    import pyarrow as pa
+
+    if pa.types.is_int32(t) or pa.types.is_int16(t) or pa.types.is_int8(t):
+        return TYPE_INT32
+    if pa.types.is_int64(t):
+        return TYPE_INT64
+    if pa.types.is_floating(t):
+        return TYPE_FLOAT64
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return TYPE_STRING
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return TYPE_BINARY
+    raise TypeError(f"composite types are not supported (got {t})")
+
+
+def pack_arrow_array(arr) -> tuple[bytes | np.ndarray, np.ndarray, np.ndarray, int]:
+    """Arrow array → (data, offsets, lengths, type_tag), nulls dropped.
+
+    Strings/binary are zero-copy views over the Arrow buffers; fixed-width
+    types are encoded via their canonical little-endian forms (§2.1 #10)."""
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if pa.types.is_dictionary(arr.type):
+        arr = arr.cast(arr.type.value_type)
+    tag = arrow_type_tag(arr.type)
+    if arr.null_count:
+        arr = arr.drop_null()
+    if tag in (TYPE_STRING, TYPE_BINARY):
+        data, offsets, lengths = encode_arrow_strings(arr)
+    elif tag == TYPE_INT32:
+        data, offsets, lengths = encode_int32(arr.to_numpy(zero_copy_only=False))
+    elif tag == TYPE_INT64:
+        data, offsets, lengths = encode_int64(arr.to_numpy(zero_copy_only=False))
+    else:
+        data, offsets, lengths = encode_float64(arr.to_numpy(zero_copy_only=False))
+    return data, offsets, lengths, tag
+
+
 def encode_any(values, type_tag: int) -> tuple[bytes, np.ndarray, np.ndarray]:
     if type_tag == TYPE_INT32:
         return encode_int32(values)

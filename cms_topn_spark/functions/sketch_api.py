@@ -43,7 +43,6 @@ from ..operators.build import (
     _fold_task,
     build_partials,
     default_ingest,
-    pack_arrow_array,
     plan_num_partitions,
     sketch_agg,
 )
@@ -228,11 +227,9 @@ def _pack_for_probe(items: pa.Array, sk) -> tuple:
     so a probe never hashes a different key than the build did. A
     cross-family column (strings against an int sketch) raises instead of
     returning silently-zero estimates."""
-    from ..operators.build import arrow_type_tag
-
     arr = items.drop_null() if items.null_count else items
     want = getattr(sk, "item_type", enc.TYPE_UNSET)
-    have = arrow_type_tag(arr.type)
+    have = enc.arrow_type_tag(arr.type)
     if want != enc.TYPE_UNSET and have != want:
         numeric = (enc.TYPE_INT32, enc.TYPE_INT64, enc.TYPE_FLOAT64)
         if not (have in numeric and want in numeric):
@@ -249,7 +246,7 @@ def _pack_for_probe(items: pa.Array, sk) -> tuple:
                 f"probe column type {arr.type} has values not representable "
                 f"in the sketch's bound item type tag {want}"
             ) from e
-    data, offsets, lengths, _tag = pack_arrow_array(arr)
+    data, offsets, lengths, _tag = enc.pack_arrow_array(arr)
     return data, offsets, lengths
 
 
@@ -322,7 +319,7 @@ def rare_token_probe_udf(sketch_bytes: bytes, threshold: int, delimiter: str = "
         rare_out = np.zeros_like(lens)
         if lens.sum():
             sk = _cached_sketch(sketch_bytes)
-            data, offsets, lengths, _tag = pack_arrow_array(pc.list_flatten(toks))
+            data, offsets, lengths, _tag = enc.pack_arrow_array(pc.list_flatten(toks))
             est = sk.estimate_packed(data, offsets, lengths)
             rare = np.concatenate(([0], np.cumsum(est < threshold, dtype=np.int64)))
             ends = np.cumsum(lens)
@@ -367,7 +364,7 @@ def mms_add_agg(
         tbl = tbl.drop_null()
         if tbl.num_rows == 0:
             return
-        data, offsets, lengths, tag = pack_arrow_array(tbl.column(0).combine_chunks())
+        data, offsets, lengths, tag = enc.pack_arrow_array(tbl.column(0).combine_chunks())
         masks = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.uint64)
         sk.add_packed(data, offsets, lengths, masks, tag)
 

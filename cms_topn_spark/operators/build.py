@@ -100,50 +100,13 @@ def spark_item_tag(spark_type: str, caller: str) -> int:
     return tag
 
 
-def arrow_type_tag(t: pa.DataType) -> int:
-    if pa.types.is_int32(t) or pa.types.is_int16(t) or pa.types.is_int8(t):
-        return enc.TYPE_INT32
-    if pa.types.is_int64(t):
-        return enc.TYPE_INT64
-    if pa.types.is_floating(t):
-        return enc.TYPE_FLOAT64
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return enc.TYPE_STRING
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return enc.TYPE_BINARY
-    raise TypeError(f"composite types are not supported (got {t})")
-
-
-def pack_arrow_array(arr: pa.Array) -> tuple[bytes | np.ndarray, np.ndarray, np.ndarray, int]:
-    """Arrow array → (data, offsets, lengths, type_tag), nulls dropped.
-
-    Strings/binary are zero-copy views over the Arrow buffers; fixed-width
-    types are encoded via their canonical little-endian forms (§2.1 #10)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if pa.types.is_dictionary(arr.type):
-        arr = arr.cast(arr.type.value_type)
-    tag = arrow_type_tag(arr.type)
-    if arr.null_count:
-        arr = arr.drop_null()
-    if tag in (enc.TYPE_STRING, enc.TYPE_BINARY):
-        data, offsets, lengths = enc.encode_arrow_strings(arr)
-    elif tag == enc.TYPE_INT32:
-        data, offsets, lengths = enc.encode_int32(arr.to_numpy(zero_copy_only=False))
-    elif tag == enc.TYPE_INT64:
-        data, offsets, lengths = enc.encode_int64(arr.to_numpy(zero_copy_only=False))
-    else:
-        data, offsets, lengths = enc.encode_float64(arr.to_numpy(zero_copy_only=False))
-    return data, offsets, lengths, tag
-
-
 def ingest_array(sketch, arr: pa.Array) -> None:
     """Feed one Arrow array into a sketch, NULLs dropped, dispatching on the
     sketch's protocol: packed item bytes for ``add_packed`` sketches
     (CMS/MMS/HLL/Bloom), float64 values for the numeric ones (KLL/t-digest,
     which take any numeric column, decimals included)."""
     if hasattr(sketch, "add_packed"):
-        data, offsets, lengths, tag = pack_arrow_array(arr)
+        data, offsets, lengths, tag = enc.pack_arrow_array(arr)
         sketch.add_packed(data, offsets, lengths, type_tag=tag)
     else:
         if arr.null_count:
@@ -165,7 +128,7 @@ def weighted_ingest(sketch, batch: pa.RecordBatch) -> None:
     tbl = pa.Table.from_batches([batch]).drop_null()
     if tbl.num_rows == 0:
         return
-    data, offsets, lengths, tag = pack_arrow_array(tbl.column(0).combine_chunks())
+    data, offsets, lengths, tag = enc.pack_arrow_array(tbl.column(0).combine_chunks())
     counts = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
     sketch.add_packed(data, offsets, lengths, counts=counts, type_tag=tag)
 

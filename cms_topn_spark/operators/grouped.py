@@ -3,15 +3,25 @@
 Shuffling whole groups to single tasks moves every raw row and caps
 parallelism at the group count — wrong when groups are few or a group's
 rows dwarf an executor. This operator has the same shape as the global
-build:
+build, with one ``mapInArrow`` per stage:
 
-  stage 1 (map-side, shuffle-free): each task partitions its Arrow batches by
-      key with one C++ sort, folds every key-slice into that key's sketch,
-      and emits (group, state) — one row per (task, group-in-task);
-  stage 2: hash-repartition the *sketch-sized* rows by group and fold each
-      partition's states into one live sketch per group — fused with the
-      readout (a statistic, or the serialized state for the states API), so
-      no merged state crosses back to the JVM only to be read again.
+  stage 1 (map-side, shuffle-free): each task buffers its Arrow batches into
+      bounded windows, sorts each window by key with one C++ sort and hands
+      it to the sketch's ``fold_window`` hook, which folds every group's
+      slice into the state the task carries for that group; the task emits
+      (group, state), one row per (task, group-in-task);
+  stage 2: hash-repartition the *sketch-sized* rows by group, sort each
+      partition's states by group (stable, so arrival order holds within a
+      group) and merge them through the sketch's ``merge_groups`` hook —
+      fused with the readout (a statistic, or the serialized state for the
+      states API), so no merged state crosses back to the JVM only to be
+      read again.
+
+The hooks live on the sketch protocol (core/base.py). Their defaults are a
+per-group loop (stage 1) and the pairwise fold (stage 2). Linear-update
+count-min overrides both with kernels that treat all groups at once
+(core/cms_topn.py): one hash pass per window, and a level-wise merge that
+folds the k-th state of every group in one step.
 
 The shuffle therefore moves |groups-per-partition| · |state| bytes instead of
 the raw rows — the count-min analogue of a map-side combine. Skewed groups
@@ -23,7 +33,6 @@ from __future__ import annotations
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -34,72 +43,61 @@ from .build import TAG_TOPN_TYPES, ingest_array, spark_item_tag
 
 
 # stage-1 dice window bounds: flush on whichever trips first. ~512k rows
-# keeps the per-window Python group loop amortized; ~128 MB of Arrow buffers
+# keeps the per-window sort and fold amortized; ~128 MB of Arrow buffers
 # bounds per-task memory even when the value column is document-sized text.
 _DICE_MAX_ROWS = 524_288
 _DICE_MAX_BYTES = 128 << 20
+
+
+def _key_runs(keys) -> tuple[np.ndarray, np.ndarray]:
+    """A sorted key column as numpy, and its run boundaries: run i is rows
+    ``bounds[i]:bounds[i + 1]``."""
+    kn = keys.to_numpy()
+    return kn, np.flatnonzero(np.concatenate(([True], kn[1:] != kn[:-1], [True])))
 
 
 def _state_fold(
     group_col: str,
     value_col: str,
     factory: Callable[[], object],
-    drop_null_keys: bool = False,
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
     """The stage-1 fold as a batches→batches kernel, shared by the
     DataFrame path (``mapInArrow`` after a Spark scan) and the
     columnar-direct :func:`grouped_quantiles_parquet` (no JVM row pivot).
-    Each key-slice goes through ``build.ingest_array``, so the sketch's
-    own protocol picks packed items or float64 values.
-    ``drop_null_keys`` performs the NULL-group drop inside the kernel for
-    the direct path, where no Catalyst filter ran upstream."""
+    Each window goes through the sketch's ``fold_window`` hook; the default
+    feeds every key-slice through ``build.ingest_array``, so the sketch's
+    own protocol picks packed items or float64 values. NULL keys sort last
+    and are dropped here, so the direct path, where no Catalyst filter ran
+    upstream, needs no filter of its own."""
     # snapshot the caps into the closure (captured by value, so they ship to
     # the workers with the task instead of re-resolving module globals there)
     max_rows, max_bytes = _DICE_MAX_ROWS, _DICE_MAX_BYTES
     cols = [group_col, value_col]
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sketches: dict = {}
+        proto = factory()
+        carried: dict = {}
 
         def dice(tbl: pa.Table) -> None:
-            keys = tbl.column(0)
-            order = pc.sort_indices(keys)
-            tbl = tbl.take(order)
-            keys = tbl.column(0).combine_chunks()
-            vals = tbl.column(1).combine_chunks()
-            if len(keys) == 0:
+            tbl = tbl.take(pc.sort_indices(tbl.column(0)))
+            tbl = tbl.slice(0, tbl.num_rows - tbl.column(0).null_count)
+            if tbl.num_rows == 0:
                 return
-            # group boundaries on the sorted key column (C++-side compare)
-            kn = keys.to_numpy(zero_copy_only=False)
-            bounds = np.flatnonzero(
-                np.concatenate(([True], kn[1:] != kn[:-1], [True]))
+            kn, bounds = _key_runs(tbl.column(0))
+            proto.fold_window(
+                factory, carried, list(kn[bounds[:-1]]),
+                tbl.column(1).combine_chunks(), bounds, ingest_array,
             )
-            for i in range(len(bounds) - 1):
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                key = kn[lo]
-                if key is None:
-                    continue
-                sl = vals.slice(lo, hi - lo)
-                if sl.null_count == len(sl):
-                    continue
-                sk = sketches.get(key)
-                if sk is None:
-                    sk = sketches[key] = factory()
-                ingest_array(sk, sl)
 
-        # buffer a bounded window before dicing: one sort + one Python
-        # group loop per ~512k rows instead of per 10k-row Arrow batch —
-        # at G groups in the task this is G slice-ingests per window, not
-        # G × (batches in window). Bounded in ROWS and BYTES: the row cap
-        # alone would let a wide value column (e.g. grouped_topn over
-        # document text) buffer GBs per task, so wide batches flush early
-        # on accumulated Arrow buffer size.
+        # buffer a bounded window before dicing: one sort and one fold per
+        # ~512k rows instead of per 10k-row Arrow batch. Bounded in ROWS and
+        # BYTES: the row cap alone would let a wide value column (e.g.
+        # grouped_topn over document text) buffer GBs per task, so wide
+        # batches flush early on accumulated Arrow buffer size.
         pend: list = []
         pend_rows = pend_bytes = 0
         for rb in batches:
             rb = rb.select(cols)  # order by NAME — file schema order varies
-            if drop_null_keys and rb.column(0).null_count:
-                rb = rb.filter(pc.is_valid(rb.column(0)))
             pend.append(rb)
             pend_rows += rb.num_rows
             pend_bytes += rb.nbytes
@@ -108,12 +106,12 @@ def _state_fold(
                 pend, pend_rows, pend_bytes = [], 0, 0
         if pend:
             dice(pa.Table.from_batches(pend).combine_chunks())
-        if sketches:
-            ks = list(sketches.keys())
+        if carried:
+            ks = list(carried.keys())
             yield pa.RecordBatch.from_pydict(
                 {
                     group_col: pa.array(ks),
-                    "state": pa.array([sketches[k].to_bytes() for k in ks], pa.binary()),
+                    "state": pa.array([carried[k].to_bytes() for k in ks], pa.binary()),
                 }
             )
 
@@ -128,51 +126,61 @@ def _merge_readout(
     out_schema: str,
 ) -> DataFrame:
     """Merge each group's partial states AND read the final statistics out
-    in the SAME Python eval. The two-step form (applyInPandas merge →
-    mapInPandas readout) ships every merged state Python→JVM→Arrow→Python
-    between the two evals — at KLL k=4096 over 1,500 groups that is
-    ~100 MB of Arrow traffic whose only purpose is plumbing, and for the
-    top-n readout it previously cost a SECOND shuffle (the merged frame was
-    re-grouped for the explode). Here partials go in once, scalars come
-    out, and the merged state dies inside the worker.
+    in the SAME ``mapInArrow``: partials go in once, typed columns come
+    out, and the merged state dies inside the worker. A separate merge
+    would ship every merged state Python→JVM→Arrow→Python before the
+    readout, and the top-n explode would cost a second shuffle.
 
-    ``readout`` maps a group's merged live sketch to column → list-of-values (one
-    list entry per output row for that group; statistics readouts return
-    length-1 lists, explodes return one entry per retained item, and the
-    states API returns the serialized state).
+    ``readout`` maps a group's merged live sketch to column → list-of-values
+    (one entry per output row for that group: statistics readouts return
+    length-1 lists, explodes one entry per retained item, and the states
+    API the serialized state). Each output column is built with the Arrow
+    type that ``out_schema`` declares; the group column passes through with
+    the type it arrived with.
 
-    The partials are hash-repartitioned by group and each PARTITION's
-    states fold into a dict of live sketches in one pass, instead of one
-    ``applyInPandas`` slice per GROUP: at high group cardinality the
-    per-group overhead (a pandas frame sliced in and another built out per
-    group, ~0.5 ms each) dominated the whole operator — 15k groups cost
-    ~7.5 s through applyInPandas and ~0.5 s through this fold over the same
-    exchange. Merge order within a group is arrival order, exactly as
-    unordered as the applyInPandas row order was; all gated readouts run in
-    merge-order-independent regimes."""
+    The partials are hash-repartitioned by group. Each partition is sorted
+    by group with one stable C++ sort and its groups go through the
+    sketch's ``merge_groups`` hook in one call — one step per merge level
+    for linear count-min, the pairwise fold by default — instead of one
+    Python slice per group. Merge order within a group is arrival order,
+    exactly as unordered as the shuffle's row order; all gated readouts run
+    in merge-order-independent regimes."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
     P = partials.sparkSession.sparkContext.defaultParallelism
+    fields = list(to_arrow_schema(DataType.fromDDL(out_schema)))
 
-    def fn(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        groups: dict = {}
-        for pdf in pdfs:
-            for g, st in zip(pdf[group_col], pdf["state"]):
-                sk = sketch_from_bytes(bytes(st))
-                acc = groups.get(g)
-                groups[g] = sk if acc is None else acc.merge(sk)
-        if not groups:
+    def merge_readout(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = [rb for rb in batches if rb.num_rows]
+        if not batches:
             return
-        out_g: list = []
-        out_cols: dict[str, list] = {}
-        for g, acc in groups.items():
-            cols = readout(acc)
-            n = len(next(iter(cols.values())))
-            out_g.extend([g] * n)
+        tbl = pa.Table.from_batches(batches)
+        # sort the keys only: the states stay where they arrived
+        order = pc.sort_indices(tbl.column(group_col))
+        keys = tbl.column(group_col).take(order)
+        _, bounds = _key_runs(keys)
+        states = tbl.column("state").to_pylist()
+        order = order.to_numpy().tolist()
+        sketch_cls = type(sketch_from_bytes(states[0]))
+        reps: list[int] = []
+        out: dict[str, list] = {f.name: [] for f in fields}
+        for sk in sketch_cls.merge_groups(
+            [states[i] for i in order[lo:hi]]
+            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist())
+        ):
+            cols = readout(sk)
+            reps.append(len(cols[fields[0].name]))
             for c, vals in cols.items():
-                out_cols.setdefault(c, []).extend(vals)
-        yield pd.DataFrame({group_col: out_g, **out_cols})
+                out[c].extend(vals)
+        yield pa.RecordBatch.from_arrays(
+            [keys.take(np.repeat(bounds[:-1], reps)).combine_chunks()]
+            + [pa.array(out[f.name], f.type) for f in fields],
+            [group_col] + [f.name for f in fields],
+        )
 
-    return partials.repartition(P, group_col).mapInPandas(
-        fn, f"{group_col} {gtype}, {out_schema}"
+    return partials.repartition(P, group_col).mapInArrow(
+        merge_readout, f"{group_col} {gtype}, {out_schema}"
     )
 
 
@@ -192,10 +200,8 @@ def grouped_sketch_states(
     nothing there either.
 
     NULL group keys are dropped up front (documented semantics, like
-    aggregate functions skipping NULLs): letting them through would
-    float64-coerce an int key column inside the Arrow kernel (NaN for the
-    null), breaking the declared schema — and silently corrupting int keys
-    above 2^53 in the same window."""
+    aggregate functions skipping NULLs), by a filter Catalyst can push into
+    the scan."""
     states, gtype = _partial_states(df, group_col, value_col, factory)
     return _merge_readout(
         states, group_col, gtype, lambda sk: {"state": [sk.to_bytes()]}, "state binary"
@@ -288,14 +294,8 @@ def grouped_topn(
 
 
 def _topn_cols(sk) -> dict:
-    items, freqs = [], []
-    for item, freq in sk.topn_list():
-        items.append(item)
-        freqs.append(freq)
-    return {
-        "item": pd.Series(items, dtype=object),
-        "frequency": pd.Series(freqs, dtype="int64"),
-    }
+    top = sk.topn_list()
+    return {"item": [item for item, _ in top], "frequency": [freq for _, freq in top]}
 
 
 def grouped_quantiles(
@@ -370,7 +370,7 @@ def grouped_quantiles_parquet(
     gtype = spark_type_of(path, group_col)
     partials = map_parquet_batches(
         spark, path, [group_col, value_col],
-        _state_fold(group_col, value_col, lambda: KllSketch(k), drop_null_keys=True),
+        _state_fold(group_col, value_col, lambda: KllSketch(k)),
         f"{group_col} {gtype}, state binary",
         split_row_groups=split_row_groups, filters=filters,
         min_splits=spark.sparkContext.defaultParallelism,

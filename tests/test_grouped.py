@@ -4,6 +4,8 @@ sketch aggregation)."""
 import os
 
 import numpy as np
+import pyarrow.compute as pc
+import pytest
 from pyspark.sql import functions as F
 
 from cms_topn_spark.core import CmsTopn, sketch_from_bytes
@@ -27,22 +29,45 @@ def test_grouped_states_match_exact_counts(spark, sf001_dir):
                 assert sk.estimate(int(uid)) == c
 
 
-def test_grouped_equals_per_group_filter_build(spark, sf001_dir):
+@pytest.mark.parametrize("update", ["linear", "conservative"])
+def test_grouped_equals_per_group_filter_build(spark, sf001_dir, update):
+    """Linear update runs the whole-window and level-wise kernels;
+    conservative update runs the protocol defaults (per-group loop and
+    pairwise fold). Both must match the per-group aggregate."""
     from cms_topn_spark.functions.sketch_api import cms_topn_add_agg
 
     events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
     states = {
         r["event_type"]: sketch_from_bytes(bytes(r["state"]))
         for r in grouped_sketch_states(
-            events, "event_type", "user_id", lambda: CmsTopn(5, update="linear")
+            events, "event_type", "user_id", lambda: CmsTopn(5, update=update)
         ).collect()
     }
     for et in list(states)[:2]:
         direct = cms_topn_add_agg(
-            events.where(F.col("event_type") == et), "user_id", n=5
+            events.where(F.col("event_type") == et), "user_id", n=5, update=update
         )
+        assert states[et].update_mode == direct.update_mode
         assert np.array_equal(states[et].counters, direct.counters)
         assert dict(states[et].topn_list()) == dict(direct.topn_list())
+
+
+def test_grouped_module_imports_no_pandas():
+    """Both grouped stages are ``mapInArrow``: no pandas import, at module
+    level or inside a function."""
+    import ast
+
+    from cms_topn_spark.operators import grouped as grouped_mod
+
+    tree = ast.parse(open(grouped_mod.__file__).read())
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported.update(a.name.split(".")[0] for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            imported.add(node.module.split(".")[0])
+    assert "pandas" not in imported
+    assert "mapInPandas" not in open(grouped_mod.__file__).read()
 
 
 def test_grouped_probe_matches_exact(spark, sf001_dir):
@@ -283,10 +308,19 @@ def test_grouped_topn_unrepresentable_type_raises(spark):
 
 def test_dice_byte_bound_flush_preserves_results(spark, sf001_dir, monkeypatch):
     """Forcing the byte cap to trip on every Arrow batch (wide-value
-    protection path) must not change any merged state's estimates."""
-    from cms_topn_spark.operators import grouped as grouped_mod
+    protection path) folds one window per batch. The carried state follows
+    the multi-window contract — a fresh state per window, then
+    ``CmsTopn.merge`` in window order — and its counters and totals equal
+    the single-window build's."""
+    import functools
 
-    events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
+    import pyarrow.parquet as pq
+
+    from cms_topn_spark.operators import grouped as grouped_mod
+    from cms_topn_spark.operators.build import ingest_array
+
+    path = os.path.join(sf001_dir, "events.parquet")
+    events = spark.read.parquet(path)
     want = {
         (r["event_type"], r["user_id"]): r["c"]
         for r in events.groupBy("event_type", "user_id")
@@ -294,13 +328,39 @@ def test_dice_byte_bound_flush_preserves_results(spark, sf001_dir, monkeypatch):
         .collect()
         if r["user_id"] < 10
     }
+    factory = lambda: CmsTopn(10, 0.0001, 0.99, update="linear")  # noqa: E731
+    whole = {
+        r["event_type"]: sketch_from_bytes(bytes(r["state"]))
+        for r in grouped_sketch_states(events, "event_type", "user_id", factory).collect()
+    }
     monkeypatch.setattr(grouped_mod, "_DICE_MAX_BYTES", 1)
-    states = grouped_sketch_states(
-        events, "event_type", "user_id",
-        lambda: CmsTopn(10, 0.0001, 0.99, update="linear"),
-    ).collect()
-    for r in states:
+
+    # the contract, on the kernel itself: one window per batch
+    batches = pq.read_table(path, columns=["event_type", "user_id"]).to_batches(max_chunksize=300)
+    assert len(batches) > 1
+    fresh: dict = {}
+    for rb in batches:
+        for et in set(rb.column(0).drop_null().to_pylist()):
+            values = rb.filter(pc.equal(rb.column(0), et)).column(1)
+            if values.null_count < len(values):
+                sk = factory()
+                ingest_array(sk, values)
+                fresh.setdefault(et, []).append(sk)
+    folded = {
+        rb.column(0)[i].as_py(): rb.column(1)[i].as_py()
+        for rb in grouped_mod._state_fold("event_type", "user_id", factory)(iter(batches))
+        for i in range(rb.num_rows)
+    }
+    assert folded == {
+        et: functools.reduce(CmsTopn.merge, sks).to_bytes() for et, sks in fresh.items()
+    }
+
+    windowed = grouped_sketch_states(events, "event_type", "user_id", factory).collect()
+    assert {r["event_type"] for r in windowed} == set(whole)
+    for r in windowed:
         sk = sketch_from_bytes(bytes(r["state"]))
+        assert np.array_equal(sk.counters, whole[r["event_type"]].counters)
+        assert sk.total == whole[r["event_type"]].total
         for (et, uid), c in want.items():
             if et == r["event_type"]:
                 assert sk.estimate(int(uid)) == c

@@ -5,6 +5,8 @@ algebra, round-trips, and partition-invariance — over randomized streams."""
 import functools
 
 import numpy as np
+import pyarrow as pa
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -13,6 +15,7 @@ from cms_topn_spark.core import (
     CmsTopn,
     HyperLogLog,
     KllSketch,
+    SketchError,
     TDigest,
     fold_states,
     merge_serialized,
@@ -329,3 +332,138 @@ def test_murmur_equal_length_fast_path_bit_identical(items, seed):
     o1, o2 = hash128(datao, offso, lenso, seed)
     wanto = [hash128_one(it, seed) for it in items]
     assert [(int(a), int(b)) for a, b in zip(o1, o2)] == wanto
+
+
+# ---- grouped count-min kernels: whole-window fold and level-wise merge ----
+
+_ITEM_COLUMNS = {
+    "int32": (pa.int32(), st.integers(-3, 3)),
+    "int64": (pa.int64(), st.integers(2**62, 2**62 + 6)),
+    "float64": (pa.float64(), st.sampled_from([0.0, -0.0, 0.5, -2.25, 1e300, float("inf")])),
+    "string": (pa.string(), st.text(alphabet="ab€", max_size=3)),
+    "binary": (pa.binary(), st.binary(max_size=3)),
+}
+
+
+# kernel changes are exercised at ≥250 examples
+KERNEL_SETTINGS = dict(SETTINGS, max_examples=250)
+
+
+def _linear(n: int, vals, eps: float = 0.1) -> CmsTopn:
+    sk = CmsTopn(n, eps, 0.99, update="linear")
+    sk.add_batch(vals)
+    return sk
+
+
+@given(
+    data=st.data(),
+    kind=st.sampled_from(sorted(_ITEM_COLUMNS)),
+    n=st.integers(1, 4),
+    n_batches=st.integers(1, 3),
+)
+@settings(**KERNEL_SETTINGS)
+def test_window_fold_equals_per_group_add_packed(data, kind, n, n_batches):
+    """Every window's state for a group is byte-equal to ``add_packed`` of
+    that group's non-NULL values on a new sketch, and a task folding several
+    windows merges them in window order. NULL keys form no group; n runs
+    below and above a group's distinct count."""
+    from cms_topn_spark.operators import grouped
+    from cms_topn_spark.operators.build import ingest_array
+
+    typ, values = _ITEM_COLUMNS[kind]
+    rows = data.draw(
+        st.lists(st.tuples(st.none() | st.integers(0, 3), st.none() | values), max_size=120)
+    )
+    tbl = pa.table(
+        {"g": pa.array([g for g, _ in rows], pa.int64()), "v": pa.array([v for _, v in rows], typ)}
+    )
+    batches = tbl.to_batches(max_chunksize=max(1, -(-len(rows) // n_batches)))
+    factory = lambda: CmsTopn(n, 0.1, 0.99, update="linear")  # noqa: E731
+
+    want: dict = {}
+    for rb in batches:
+        keys, vals = rb.column(0).to_pylist(), rb.column(1).to_pylist()
+        for g in sorted({k for k in keys if k is not None}):
+            sl = [v for k, v in zip(keys, vals) if k == g]
+            if all(v is None for v in sl):
+                continue
+            sk = factory()
+            ingest_array(sk, pa.array(sl, typ))
+            want[g] = sk if g not in want else want[g].merge(sk)
+
+    saved = grouped._DICE_MAX_ROWS
+    grouped._DICE_MAX_ROWS = 1  # one window per batch
+    try:
+        fold = grouped._state_fold("g", "v", factory)
+    finally:
+        grouped._DICE_MAX_ROWS = saved
+    got = {
+        g: st_
+        for rb in fold(iter(batches))
+        for g, st_ in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist())
+    }
+    assert got == {g: sk.to_bytes() for g, sk in want.items()}
+
+
+@given(
+    groups=st.lists(
+        st.lists(st.lists(st.integers(0, 12), max_size=30), min_size=1, max_size=5),
+        min_size=1,
+        max_size=6,
+    ),
+    n=st.integers(1, 4),
+)
+@settings(**KERNEL_SETTINGS)
+def test_level_merge_equals_pairwise_fold(groups, n):
+    """``merge_groups`` gives each group the bytes of
+    ``functools.reduce(CmsTopn.merge)`` over its states in arrival order,
+    1–5 states per group, empty states included."""
+    states = [[_linear(n, vals).to_bytes() for vals in g] for g in groups]
+    want = [
+        functools.reduce(CmsTopn.merge, map(CmsTopn.from_bytes, g)).to_bytes() for g in states
+    ]
+    assert [sk.to_bytes() for sk in CmsTopn.merge_groups(states)] == want
+
+
+def test_level_merge_breaks_freq_seq_ties_on_item_bytes():
+    """A crafted state whose ``next_seq`` does not clear its own entries
+    makes two candidates tie on (freq, seq); the item bytes decide, as in
+    ``CmsTopn.merge``."""
+    a = _linear(1, ["y"])
+    a.next_seq = 0
+    b = _linear(1, ["x"])
+    want = a.merge(b)
+    assert want.topn_list() == [("x", 1)]
+    merged = list(CmsTopn.merge_groups([[a.to_bytes(), b.to_bytes()], [b.to_bytes(), a.to_bytes()]]))
+    assert merged[0].to_bytes() == want.to_bytes()
+    assert merged[1].to_bytes() == b.merge(a).to_bytes()
+
+
+@pytest.mark.parametrize(
+    "other",
+    [
+        lambda: _linear(3, [1, 2]),
+        lambda: _linear(2, [1, 2], eps=0.05),
+        lambda: _linear(2, [1, 2], eps=0.1000001),  # same shape, other eps
+        lambda: CmsTopn(2, 0.1, 0.99, update="conservative"),
+        lambda: _linear(2, ["s"]),
+        lambda: KllSketch(8),
+    ],
+)
+def test_grouped_kernels_raise_merge_errors(other):
+    """Mismatched parameters, update modes, item types or kinds raise the
+    text ``CmsTopn.merge`` raises, from the level-wise merge and from a
+    window folded into a carried state."""
+    a = _linear(2, [1, 2, 3])
+    b = other()
+    with pytest.raises(SketchError) as want:
+        a.merge(b)
+    with pytest.raises(SketchError) as got:
+        list(CmsTopn.merge_groups([[a.to_bytes()], [a.to_bytes(), b.to_bytes()]]))
+    assert str(got.value) == str(want.value)
+    if isinstance(b, CmsTopn) and b.update_mode == a.update_mode:
+        with pytest.raises(SketchError) as want:
+            b.merge(a)
+        with pytest.raises(SketchError) as got:
+            a.fold_window(None, {7: b}, [7], pa.array([1, 2, 3], pa.int32()), [0, 3], None)
+        assert str(got.value) == str(want.value)
