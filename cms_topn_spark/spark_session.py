@@ -11,9 +11,17 @@ Python workers fork from ``cms_topn_spark.worker_daemon`` instead of
 ``importlib.invalidate_caches()``, and on Python 3.11 that makes every
 importer over ``pyspark.zip`` re-read its central directory: about 15 reads
 and 60-120 ms of CPU per task. The daemon module re-reads an archive only
-when its stat changed, then runs Spark's daemon unchanged. The daemon can
-import it because ``get_spark`` puts the package root on ``PYTHONPATH``
-before the JVM starts.
+when its stat changed. It also imports numpy, pyarrow and pandas once and
+calls ``gc.freeze()`` before Spark's daemon forks, so workers share that
+library heap copy-on-write and the full ``gc.collect()`` Spark's daemon
+runs after every task of a reused worker skips it (36-97 ms → under 1 ms
+per task). The daemon can import the module because ``get_spark`` puts the
+package root on ``PYTHONPATH`` before the JVM starts. Workers get
+``PYTHONSAFEPATH=1``: the daemon starts as ``python -m``, which would put
+the JVM's working directory first on ``sys.path``, so a ``cms_topn_spark``
+directory there would shadow the driver's copy. It is not exported to the
+driver's own environment, where scripts import modules from their own
+directory.
 """
 
 from __future__ import annotations
@@ -75,6 +83,9 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.python.worker.reuse", "true")
         .config("spark.python.daemon.module", "cms_topn_spark.worker_daemon")
+        # `python -m` would put the JVM's working directory first on the
+        # daemon's sys.path, ahead of the PYTHONPATH entry set above
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

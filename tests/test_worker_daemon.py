@@ -1,11 +1,14 @@
-"""The worker daemon's zip-directory guard: unchanged archives are read once,
-changed or newly shipped ones are still picked up."""
+"""The worker daemon: its zip-directory guard reads unchanged archives once
+and still picks up changed or newly shipped ones; workers fork from a frozen
+heap that already holds the libraries, and import the driver's package."""
 
 from __future__ import annotations
 
 import collections
 import importlib
+import json
 import os
+import subprocess
 import sys
 import uuid
 import zipfile
@@ -105,3 +108,92 @@ def test_session_workers_run_the_guard_and_import_late_py_files(spark, tmp_path)
             return importlib.import_module(name).NAME
 
         assert set(sc.parallelize(range(8), 4).map(probe).collect()) == {name}
+
+
+def test_session_workers_fork_from_a_frozen_preimported_heap(spark):
+    def probe(_):
+        import gc
+        import sys
+        import weakref
+
+        tracked = gc.get_objects()  # every generation but the permanent one
+        frozen = {
+            name: name in sys.modules and not any(o is sys.modules[name] for o in tracked)
+            for name in ("numpy", "pyarrow", "pandas")
+        }
+        del tracked
+
+        class Node:
+            pass
+
+        a, b = Node(), Node()
+        a.peer, b.peer = b, a
+        ref = weakref.ref(a)
+        del a, b
+        in_cycle = ref() is not None
+        gc.collect()
+        return gc.get_freeze_count(), frozen, in_cycle, ref() is None
+
+    results = spark.sparkContext.parallelize(range(8), 4).map(probe).collect()
+    for freeze_count, frozen, in_cycle, reclaimed in results:
+        assert freeze_count > 0
+        # imported by the daemon before the freeze, not by the task
+        assert frozen == {"numpy": True, "pyarrow": True, "pandas": True}
+        # garbage made during a task is still collected
+        assert in_cycle and reclaimed
+
+
+_DECOY_DAEMON = """\
+from pyspark.daemon import manager
+
+if __name__ == "__main__":
+    manager()
+"""
+
+_DRIVER = """\
+import json
+
+import cms_topn_spark
+from cms_topn_spark.spark_session import get_spark
+
+spark = get_spark("decoy_cwd", cpus=2, shuffle_partitions=2)
+
+
+def where(_):
+    import cms_topn_spark
+
+    return cms_topn_spark.__file__
+
+
+files = spark.sparkContext.parallelize(range(4), 2).map(where).collect()
+spark.stop()
+print(json.dumps({"driver": cms_topn_spark.__file__, "workers": sorted(set(files))}))
+"""
+
+
+def test_workers_import_the_drivers_package_not_the_working_directorys(tmp_path):
+    work = tmp_path / "work"
+    decoy = work / "cms_topn_spark"
+    decoy.mkdir(parents=True)
+    (decoy / "__init__.py").write_text("")
+    (decoy / "worker_daemon.py").write_text(_DECOY_DAEMON)
+    script = tmp_path / "driver.py"  # outside `work`, so the driver imports the real package
+    script.write_text(_DRIVER)
+    root = os.path.dirname(os.path.dirname(worker_daemon.__file__))
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=work,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    result = json.loads(out.stdout.strip().splitlines()[-1])
+    assert result["driver"] == os.path.join(root, "cms_topn_spark", "__init__.py")
+    assert result["workers"] == [result["driver"]]
