@@ -1129,13 +1129,13 @@ def q_grouped_kll_quantiles_filtered(spark: SparkSession, sf_dir: str) -> DataFr
     """The direct ingest's PREDICATE PUSHDOWN under the gate — the answer to
     its one documented trade-off (bypassing Catalyst's scan pushdown):
     per-user value quartiles over only the 'click' events, with the
-    (column, op, literal) filter pushed into the scan in two layers — the
-    driver prunes splits whose row-group statistics prove no match (the
-    lakehouse-manifest analogue; pruning is pytest-asserted on sorted
-    multi-row-group files) and each task applies the residual mask columnar-
-    side with Arrow compute before the fold sees a batch. SQL-WHERE NULL
-    semantics; the filter column is read for the mask and dropped before the
-    fold. Exact regime as grouped_kll_quantiles ⇒ bitwise quantile_cont
+    (column, op, literal) filter pushed into the scan in two layers as one
+    Arrow expression — Arrow's row-group statistics pruning drops the
+    splits that cannot match (the lakehouse-manifest analogue; pruning is
+    pytest-asserted on sorted multi-row-group files) and each task applies
+    the same expression as the residual filter before the fold sees a
+    batch. SQL-WHERE NULL semantics; the filter column is read for the
+    filter and dropped before the fold. Exact regime as grouped_kll_quantiles ⇒ bitwise quantile_cont
     oracle with the same WHERE."""
     from cms_topn_spark.operators.grouped import grouped_quantiles_parquet
 

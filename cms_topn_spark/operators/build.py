@@ -306,7 +306,7 @@ def sketch_agg_parquet(
     same merge. The split list is computed ONCE (one listing, one footer
     pass) and both sizes the merge strategy and feeds the task mapping;
     ``filters`` push (column, op, literal) conjuncts into the scan —
-    statistics-pruned splits plus a columnar residual mask (see
+    Arrow's row-group pruning plus its residual filter (see
     parquet_direct.map_parquet_batches)."""
     from ..sources.parquet_direct import map_parquet_batches, parquet_splits
 

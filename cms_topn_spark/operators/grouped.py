@@ -356,8 +356,8 @@ def grouped_quantiles_parquet(
     while the fold itself scaled cleanly (BENCH/BASELINE.md §2b).
     The group type comes from the parquet footer. ``split_row_groups`` is
     the giant-file remedy (one task per row group); ``filters`` push
-    (column, op, literal) conjuncts into the scan — statistics-pruned
-    splits plus a columnar residual mask, the direct source's answer to
+    (column, op, literal) conjuncts into the scan — Arrow's row-group
+    pruning plus its residual filter, the direct source's answer to
     Catalyst pushdown. A small input (one single-row-group file — the gate
     tables' shape) is row-range-sharded up to the core count
     (parquet_direct.shard_splits), which KLL's layout-independent merge

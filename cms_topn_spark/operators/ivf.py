@@ -30,7 +30,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .similarity import _batch_embedding_matrix
+from .similarity import (
+    _batch_embedding_matrix,
+    _query_vectors,
+    _score_candidates_topk,
+)
 
 
 def kmeans_fit(
@@ -151,18 +155,16 @@ def _ivf_search(
     n_probe = min(int(n_probe), int(cents.shape[0]))
     spark = df.sparkSession
     empty_schema = "query_id long, neighbor_id long, rank int"
-    qids = [int(q) for q in query_ids]
-    qrows = df.where(F.col(id_col).isin(qids)).select(id_col, vec_col).collect()
-    if not qrows:
+    q_ids, q_mat = _query_vectors(df, query_ids, id_col, vec_col)
+    if not len(q_ids):
         return spark.createDataFrame([], empty_schema)
-    q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
     d2 = (q_mat * q_mat).sum(1)[:, None] - 2.0 * (q_mat @ cents.T)
     d2 += (cents * cents).sum(1)[None, :]
     probe_cells = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
     q_probes = spark.createDataFrame(
         [
-            (int(r[id_col]), int(c))
-            for r, cells in zip(qrows, probe_cells)
+            (int(q), int(c))
+            for q, cells in zip(q_ids, probe_cells)
             for c in cells
         ],
         "query_id long, cell int",
@@ -186,9 +188,7 @@ def _ivf_search(
     # bit-identical scores to the old per-row HOF cosine (see
     # similarity._score_candidates_topk); only candidate embeddings are
     # ever fetched — the unfiltered corpus is still never broadcast
-    from .similarity import _score_candidates_topk
-
-    return _score_candidates_topk(cand, df, query_ids, k, id_col, vec_col)
+    return _score_candidates_topk(cand, df, q_ids, q_mat, k, id_col, vec_col)
 
 
 def ivf_topk(

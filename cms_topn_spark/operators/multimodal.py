@@ -2,8 +2,9 @@
 
 The Spark-side plumbing is real and tested: schema convention, Arrow batch
 shapes, ``mapInArrow`` UDF signatures, partition preservation, and the
-numpy feature/resize/frame-sample math. The *codec* is the only stub: this
-container ships no image/audio libraries, so decode dispatches on mime —
+decode → pixel-statistics gate operator (:func:`media_pixel_stats`). The
+*codec* is the only stub: this container ships no image/audio libraries,
+so decode dispatches on mime —
 
 - ``x-fake/*`` (the deterministic synthetic format below) decodes for real,
 - real formats (image/jpeg, audio/wav, …) use Pillow/soundfile when
@@ -241,110 +242,3 @@ def media_pixel_stats_sql(n: int, every: int = 2) -> str:
     GROUP BY v.media_id, p2.is_vid, p2.w, p2.h, p2.nf
     """
 
-
-def resize_nn(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize (real math, no codec needed)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).astype(np.int64)
-    xs = (np.arange(out_w) * w // out_w).astype(np.int64)
-    return img[ys][:, xs]
-
-
-def image_features(df: DataFrame, hist_bins: int = 8) -> DataFrame:
-    """Per-image feature vector: channel means/stds + grey histogram.
-
-    mapInArrow over (media_id, media, mime); videos contribute frame 0.
-    Output: (media_id, features array<double>) — feeds the ANN operators."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            ids = rb.column(0).to_numpy()
-            payloads = rb.column(1)
-            mimes = rb.column(2).to_pylist()
-            feats = []
-            for i in range(len(ids)):
-                payload = payloads[i].as_py()
-                mime = mimes[i]
-                if mime == "x-fake/video":
-                    img = decode_video_frames(payload, mime, every=10**9)[0]
-                else:
-                    img = decode_image(payload, mime)
-                fl = img.astype(np.float64)
-                grey = fl.mean(axis=2)
-                hist, _ = np.histogram(grey, bins=hist_bins, range=(0, 256))
-                feats.append(
-                    np.concatenate(
-                        [fl.mean(axis=(0, 1)) / 255.0, fl.std(axis=(0, 1)) / 255.0,
-                         hist / max(grey.size, 1)]
-                    )
-                )
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "media_id": pa.array(ids, pa.int64()),
-                    "features": pa.array([f.tolist() for f in feats], pa.list_(pa.float64())),
-                }
-            )
-
-    return df.select("media_id", "media", "mime").mapInArrow(
-        fn, "media_id long, features array<double>"
-    )
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode raw RGB; schema-stable."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            ids = rb.column(0).to_numpy()
-            payloads = rb.column(1)
-            mimes = rb.column(2).to_pylist()
-            out = []
-            for i in range(len(ids)):
-                img = decode_image(payloads[i].as_py(), mimes[i])
-                out.append(resize_nn(img, out_w, out_h).tobytes())
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "media_id": pa.array(ids, pa.int64()),
-                    "media": pa.array(out, pa.binary()),
-                    "mime": pa.array(["x-raw/rgb8"] * len(ids), pa.string()),
-                    "width": pa.array([out_w] * len(ids), pa.int32()),
-                    "height": pa.array([out_h] * len(ids), pa.int32()),
-                    "n_frames": pa.array([1] * len(ids), pa.int32()),
-                }
-            )
-
-    return df.select("media_id", "media", "mime").where(df.mime == "x-fake/image").mapInArrow(
-        fn, MEDIA_SCHEMA
-    )
-
-
-def sample_frames(df: DataFrame, every: int = 2) -> DataFrame:
-    """Frame sampling for video rows: one output row per kept frame."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            ids = rb.column(0).to_numpy()
-            payloads = rb.column(1)
-            mimes = rb.column(2).to_pylist()
-            out_ids, out_frame, out_media, w_, h_ = [], [], [], [], []
-            for i in range(len(ids)):
-                frames = decode_video_frames(payloads[i].as_py(), mimes[i], every=every)
-                for fidx in range(frames.shape[0]):
-                    out_ids.append(int(ids[i]))
-                    out_frame.append(fidx * every)
-                    out_media.append(frames[fidx].tobytes())
-                    h_.append(frames.shape[1])
-                    w_.append(frames.shape[2])
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "media_id": pa.array(out_ids, pa.int64()),
-                    "frame_no": pa.array(out_frame, pa.int32()),
-                    "media": pa.array(out_media, pa.binary()),
-                    "width": pa.array(w_, pa.int32()),
-                    "height": pa.array(h_, pa.int32()),
-                }
-            )
-
-    return df.where(df.mime == "x-fake/video").select("media_id", "media", "mime").mapInArrow(
-        fn, "media_id long, frame_no int, media binary, width int, height int"
-    )

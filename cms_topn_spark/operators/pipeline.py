@@ -139,25 +139,6 @@ def _sample_hash_sql(key_col: str, salt: int) -> str:
     )
 
 
-def hash_sample(
-    df: DataFrame, fraction: float, key_col: str = "doc_id", salt: int = 0
-) -> DataFrame:
-    """Deterministic corpus sampling: keep rows whose key hash falls below
-    fraction·2⁶⁰. The standard way to cut a training corpus to a budget at
-    100 TB: reproducible across runs and engines (no RNG state to seed or
-    ship), uniform regardless of key skew, and a PURE MAP — no shuffle, no
-    sort, embarrassingly parallel, pushable below column-pruned scans."""
-    threshold = int(fraction * (1 << 60))
-    return df.where(_sample_hash_expr(key_col, salt) < F.lit(threshold))
-
-
-def hash_sample_sql(
-    table: str, fraction: float, key_col: str = "doc_id", salt: int = 0
-) -> str:
-    threshold = int(fraction * (1 << 60))
-    return f"SELECT * FROM {table} WHERE {_sample_hash_sql(key_col, salt)} < {threshold}"
-
-
 def stratified_sample(
     df: DataFrame,
     fractions: dict,
@@ -167,8 +148,11 @@ def stratified_sample(
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. keep 100 % of a rare language
     and 10 % of the dominant one — the standard corpus-rebalancing move).
-    Strata not named in ``fractions`` are dropped. Same hash rule as
-    :func:`hash_sample`, so it stays a pure shuffle-free map."""
+    A row is kept when its key hash falls below fraction·2⁶⁰ for its
+    stratum: reproducible across runs and engines (no RNG state to seed or
+    ship), uniform regardless of key skew, and a PURE MAP — no shuffle, no
+    sort. One stratum at one fraction is plain deterministic sampling.
+    Strata not named in ``fractions`` are dropped."""
     if not fractions:
         raise ValueError("stratified_sample requires at least one stratum fraction")
     thr = None

@@ -57,6 +57,22 @@ def _batch_embedding_matrix(
     return flat[start : start + len(arr) * dim].reshape(len(arr), dim)
 
 
+def _query_vectors(
+    df: DataFrame, query_ids: list[int], id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The query ids found in ``df`` and their vectors as a float64 matrix
+    (row i belongs to id i), in one collect — the one query-vector fetch of
+    every search path. A float32 cast of the matrix has the same bits as
+    collecting the rows straight into float32."""
+    rows = (
+        df.where(F.col(id_col).isin([int(q) for q in query_ids]))
+        .select(id_col, vec_col)
+        .collect()
+    )
+    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    return ids, np.array([r[vec_col] for r in rows], dtype=np.float64)
+
+
 def brute_force_topk(
     df: DataFrame,
     query_ids: list[int],
@@ -68,13 +84,7 @@ def brute_force_topk(
 
     Output: (query_id, neighbor_id, rank) with rank 1..k ordered by cosine
     similarity desc, neighbor_id asc on ties."""
-    qrows = (
-        df.where(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
+    q_ids, q_mat = _query_vectors(df, query_ids, id_col, vec_col)
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
     spark = df.sparkSession
     b_ids = spark.sparkContext.broadcast(q_ids)
@@ -319,7 +329,8 @@ def _cosine_expr() -> F.Column:
 def _score_candidates_topk(
     cand: DataFrame,
     df: DataFrame,
-    query_ids: list[int],
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -341,16 +352,10 @@ def _score_candidates_topk(
     the window input no longer scales with the candidate count. A batch
     containing a NaN score (zero-norm vector) skips pruning for safety:
     Spark orders NaN above all reals, and emitting the full batch keeps the
-    window's view identical in that corner."""
-    qrows = (
-        df.where(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float32)
+    window's view identical in that corner. ``q_ids``/``q_mat`` are the
+    query vectors from :func:`_query_vectors`."""
     spark = df.sparkSession
-    b_q = spark.sparkContext.broadcast((q_ids, q_mat))
+    b_q = spark.sparkContext.broadcast((q_ids, q_mat.astype(np.float32)))
 
     emb_n = df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
     with_vec = cand.join(emb_n, "neighbor_id")
@@ -587,7 +592,8 @@ def _lsh_search(
     # bit-identical scores to the old per-row HOF cosine (see
     # _score_candidates_topk); only candidate embeddings are ever fetched —
     # the unfiltered corpus is still never broadcast
-    return _score_candidates_topk(cand, df, query_ids, k, id_col, vec_col)
+    q_ids, q_mat = _query_vectors(df, query_ids, id_col, vec_col)
+    return _score_candidates_topk(cand, df, q_ids, q_mat, k, id_col, vec_col)
 
 
 def _lsh_candidates_join(

@@ -13,19 +13,23 @@ the kernel itself scales.
 
 For operators whose Python kernel consumes whole columns (the sketch folds:
 grouped quantiles, corpus profiles), the pivot is pure overhead — the data
-is columnar on disk and columnar in the kernel. This source distributes the
-parquet FILE SPLITS as task rows and lets every task read its own split
+is columnar on disk and columnar in the kernel. This source hands out the
+parquet FILE SPLITS as task ids and lets every task read its own split
 columnar-to-columnar with pyarrow:
 
-    files-DataFrame (one row per file) → mapInArrow(read + fold)
+    spark.range(one id per split) → mapInArrow(read split[id] + fold)
 
-Column pruning happens via ``columns`` (pyarrow reads only those column
-chunks); each file is one task, so the scan parallelism is the file count —
-the same unit a 100-TB Iceberg table's manifest hands out. Predicate
-pushdown happens via ``filters`` — (column, op, literal) conjuncts applied
-in two layers like a lakehouse scan: the driver prunes splits whose
-row-group statistics prove no match (pruned splits are never scheduled),
-and tasks apply the residual mask columnar-side with Arrow compute.
+The split frame is a ``Range``, so the kernel runs on the same Python
+worker pool as every other ``mapInArrow`` operator (no RDD touch). Column
+pruning happens via ``columns`` (pyarrow reads only those column chunks);
+each file is one task, so the scan parallelism is the file count — the same
+unit a 100-TB Iceberg table's manifest hands out. Predicate pushdown
+happens via ``filters`` — (column, op, literal) conjuncts that become one
+Arrow expression (``pq.filters_to_expression``), applied in two layers like
+a lakehouse scan: Arrow's row-group statistics pruning
+(``ParquetFileFragment.subset``) drops splits on the driver (pruned splits
+are never scheduled) and row groups inside a task's whole-file split, and
+tasks apply the residual filter columnar-side with the same expression.
 Trade-offs, stated plainly: this bypasses Catalyst's scan node, so only
 these explicit tri-op conjuncts push down — no derived expressions, no
 partition-directory pruning, no join-side dynamic pruning; use the JVM scan
@@ -107,7 +111,10 @@ def _spark_type(t: pa.DataType, column: str) -> str:
 _FILTER_OPS = {"==", "!=", "<", "<=", ">", ">=", "in"}
 
 
-def _check_filters(filters) -> None:
+def _filter_expression(filters):
+    """The Arrow expression for a conjunct list, or None without filters."""
+    if not filters:
+        return None
     for f in filters:
         if len(f) != 3 or f[1] not in _FILTER_OPS:
             raise ValueError(
@@ -116,7 +123,7 @@ def _check_filters(filters) -> None:
             )
         if f[1] == "in":
             # a bare string would iterate per-CHARACTER (silently empty
-            # results); a None element would make pc.is_in pass NULL rows,
+            # results); a None element would make is_in pass NULL rows,
             # violating the documented SQL NULL semantics — reject both
             if isinstance(f[2], (str, bytes)) or not hasattr(f[2], "__iter__"):
                 raise ValueError(
@@ -128,72 +135,23 @@ def _check_filters(filters) -> None:
                     f"bad filter conjunct {f!r}: None inside 'in' would pass "
                     "NULL rows; filter NULLs explicitly if you mean that"
                 )
+    import pyarrow.parquet as pq
+
+    return pq.filters_to_expression(filters)
 
 
-def _stats_may_match(stats, op, val) -> bool:
-    """False only when the row-group statistics PROVE no row matches the
-    conjunct — missing/partial stats keep the split (conservative). Parquet
-    min/max exclude NULLs, and a NULL fails every conjunct anyway, so
-    pruning on non-null bounds is exact."""
-    if stats is None or not stats.has_min_max:
-        return True
-    mn, mx = stats.min, stats.max
-    try:
-        if op == "==":
-            return not (val < mn or val > mx)
-        if op == "!=":
-            return not (mn == mx == val)
-        if op == "<":
-            return mn < val
-        if op == "<=":
-            return mn <= val
-        if op == ">":
-            return mx > val
-        if op == ">=":
-            return mx >= val
-        if op == "in":
-            return any(not (v < mn or v > mx) for v in val)
-    except TypeError:
-        # incomparable literal vs stats types (e.g. bytes stats for a str
-        # literal on some writers) — keep the split, let the residual decide
-        return True
-    return True
+def _fragment(path: str, expr, row_groups: list[int] | None = None):
+    """The parquet fragment of ``path`` (all row groups, or those listed),
+    pruned by Arrow to the row groups whose statistics may match ``expr``.
+    Missing statistics keep a row group; correctness never depends on
+    pruning, only on the residual filter."""
+    import pyarrow.dataset as ds
+    from pyarrow.fs import LocalFileSystem
 
-
-def _row_group_may_match(md, rg: int, filters) -> bool:
-    rgm = md.row_group(rg)
-    cols = {rgm.column(i).path_in_schema: i for i in range(rgm.num_columns)}
-    for col, op, val in filters:
-        i = cols.get(col)
-        if i is None:
-            continue  # nested/renamed column — no stats to prune on
-        if not _stats_may_match(rgm.column(i).statistics, op, val):
-            return False
-    return True
-
-
-def _filter_mask(rb: pa.RecordBatch, filters):
-    import pyarrow.compute as pc
-
-    mask = None
-    for col, op, val in filters:
-        c = rb.column(rb.schema.get_field_index(col))
-        if op == "==":
-            m = pc.equal(c, val)
-        elif op == "!=":
-            m = pc.not_equal(c, val)
-        elif op == "<":
-            m = pc.less(c, val)
-        elif op == "<=":
-            m = pc.less_equal(c, val)
-        elif op == ">":
-            m = pc.greater(c, val)
-        elif op == ">=":
-            m = pc.greater_equal(c, val)
-        else:  # "in"
-            m = pc.is_in(c, value_set=pa.array(list(val), c.type))
-        mask = m if mask is None else pc.and_kleene(mask, m)
-    return mask
+    frag = ds.ParquetFileFormat().make_fragment(
+        path, LocalFileSystem(), row_groups=row_groups
+    )
+    return frag if expr is None else frag.subset(expr)
 
 
 def shard_splits(
@@ -243,7 +201,15 @@ def map_parquet_batches(
 ) -> DataFrame:
     """Run ``fold`` (a batches→batches kernel, same contract as a
     ``mapInArrow`` function) over ``columns`` of the parquet data at
-    ``path``, one task per file, reading columnar-direct in the worker.
+    ``path``, one task per split, reading columnar-direct in the worker.
+
+    The split frame is ``spark.range(0, n, 1, n)``: one id per partition,
+    deterministically (Range slices its interval evenly, unlike a
+    round-robin ``repartition``, which can collide splits into one task),
+    and the kernel looks up ``sharded[id]`` from its closure. The closure
+    therefore grows with the split count; PySpark broadcasts a pickled
+    command above 1 MB, so a long split list ships once per executor, not
+    per task.
 
     ``use_threads=False`` on the pyarrow reader: each task is already one
     core's worth of work — per-task thread pools would oversubscribe the
@@ -256,31 +222,23 @@ def map_parquet_batches(
     file on the driver; a real lakehouse hands out the same splits from
     the table manifest without touching footers.
 
-    ``filters``: conjunctive (column, op, literal) predicates, pushed down
-    in two layers exactly like a lakehouse scan: the DRIVER prunes splits
-    whose row-group statistics prove no row can match (the manifest-pruning
-    analogue — pruned splits are never scheduled, their column chunks never
-    read), and each TASK applies the residual predicate columnar-side with
-    Arrow compute before the fold sees a batch. Filter-only columns are
-    read for the mask and dropped before the fold, so the fold's contract
+    ``filters``: conjunctive (column, op, literal) predicates, turned into
+    one Arrow expression and pushed down in two layers exactly like a
+    lakehouse scan: Arrow's statistics pruning drops the row groups that
+    cannot match (on the DRIVER's split list — pruned splits are never
+    scheduled, their column chunks never read — and inside a task's
+    whole-file split), and each TASK applies the residual filter
+    columnar-side before the fold sees a batch. Filter-only columns are
+    read for the filter and dropped before the fold, so the fold's contract
     (exactly ``columns``) is unchanged. NULL semantics are SQL WHERE's:
     NULLs never pass."""
-    if filters:
-        _check_filters(filters)
+    expr = _filter_expression(filters)
     if splits is None:
         splits = parquet_splits(path, split_row_groups=split_row_groups, filters=filters)
     # ``min_splits`` (see shard_splits): fan small split lists out by row
     # ranges so the fold's parallelism isn't capped by the file count
     sharded = shard_splits(splits, min_splits or 0)
-    # exactly one split per partition: parallelize's deterministic list
-    # slicing, NOT .repartition(n) — round-robin starts at a random offset
-    # per input partition, so splits can collide into one task and leave
-    # others empty (a straggler wave). This is the module's one RDD touch,
-    # on an n-row list of (path, row_group, shard, n_shards).
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(sharded, len(sharded)),
-        "path string, row_group int, shard int, n_shards int",
-    )
+    ids = spark.range(0, len(sharded), 1, len(sharded))
 
     read_cols = columns
     if filters:
@@ -293,45 +251,27 @@ def map_parquet_batches(
 
         def split_batches() -> Iterator[pa.RecordBatch]:
             for rb in batches:
-                for p, rg, shard, n_shards in zip(
-                    rb.column(0).to_pylist(),
-                    rb.column(1).to_pylist(),
-                    rb.column(2).to_pylist(),
-                    rb.column(3).to_pylist(),
-                ):
+                for i in rb.column(0).to_pylist():
+                    p, rg, shard, n_shards = sharded[i]
+                    frag = _fragment(p, expr, None if rg < 0 else [rg])
+                    groups = frag.row_groups
+                    if not groups:
+                        continue
+                    # shard row range over the split's RAW rows (before
+                    # the residual filter) — every shard of a split derives
+                    # the same range bounds, so shards partition the split
+                    # exactly
+                    split_rows = sum(g.num_rows for g in groups)
+                    lo = split_rows * shard // n_shards
+                    hi = split_rows * (shard + 1) // n_shards
+                    pos = 0
                     # close each handle as its split is exhausted — a task
                     # over many splits must not hold every fd until GC
-                    with pq.ParquetFile(p) as pf:
-                        if rg >= 0:
-                            kw = {"row_groups": [rg]}
-                            split_rows = pf.metadata.row_group(rg).num_rows
-                        elif filters:
-                            # whole-file split: the footer is already parsed
-                            # by ParquetFile, so re-derive the matching row
-                            # groups and skip the others' column chunks
-                            mrgs = [
-                                g
-                                for g in range(pf.metadata.num_row_groups)
-                                if _row_group_may_match(pf.metadata, g, filters)
-                            ]
-                            if not mrgs:
-                                continue
-                            kw = {"row_groups": mrgs}
-                            split_rows = sum(
-                                pf.metadata.row_group(g).num_rows for g in mrgs
-                            )
-                        else:
-                            kw = {}
-                            split_rows = pf.metadata.num_rows
-                        # shard row range over the split's RAW rows (before
-                        # any residual mask) — every shard of a split derives
-                        # the same range bounds, so shards partition the
-                        # split exactly
-                        lo = split_rows * shard // n_shards
-                        hi = split_rows * (shard + 1) // n_shards
-                        pos = 0
+                    with pq.ParquetFile(p, metadata=frag.metadata) as pf:
                         for raw in pf.iter_batches(
-                            columns=read_cols, use_threads=False, **kw
+                            columns=read_cols,
+                            use_threads=False,
+                            row_groups=[g.id for g in groups],
                         ):
                             nrows = raw.num_rows
                             if n_shards > 1:
@@ -343,15 +283,22 @@ def map_parquet_batches(
                                         break
                                     continue
                                 raw = raw.slice(s, e - s)
-                            if filters:
-                                # null mask entries = SQL three-valued FALSE
-                                raw = raw.filter(_filter_mask(raw, filters))
-                                raw = raw.select(columns)
-                            yield raw
+                            if expr is None:
+                                yield raw
+                            else:
+                                # a NULL filter result drops the row (SQL
+                                # three-valued FALSE); RecordBatch.filter
+                                # takes no expression, Table.filter does
+                                yield from (
+                                    pa.Table.from_batches([raw])
+                                    .filter(expr)
+                                    .select(columns)
+                                    .to_batches()
+                                )
 
         yield from fold(split_batches())
 
-    return fdf.mapInArrow(read_and_fold, out_schema)
+    return ids.mapInArrow(read_and_fold, out_schema)
 
 
 def parquet_splits(
@@ -364,35 +311,29 @@ def parquet_splits(
     list to :func:`map_parquet_batches`, so the footers are read a single
     time and the strategy can never disagree with the task count.
 
-    With ``filters``, splits whose row-group statistics prove no match are
-    dropped here — the manifest-pruning layer: a pruned split is never
-    scheduled and its column chunks are never read. Without
-    ``split_row_groups`` a file is kept if ANY of its row groups may match;
-    the task then re-derives the matching groups from the footer it parses
-    anyway and reads only those. Stats-free columns/footers conservatively
-    keep their splits; correctness never depends on pruning, only on the
-    residual mask."""
+    With ``filters``, Arrow's statistics pruning
+    (``ParquetFileFragment.subset``) drops the splits that cannot match —
+    the manifest-pruning layer: a pruned split is never scheduled and its
+    column chunks are never read. Without ``split_row_groups`` a file is
+    kept if ANY of its row groups may match; the task then prunes the same
+    way and reads only the matching groups. Stats-free columns/footers
+    conservatively keep their splits; correctness never depends on pruning,
+    only on the residual filter."""
     files = parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
-    if filters:
-        _check_filters(filters)
-    if not split_row_groups and not filters:
+    expr = _filter_expression(filters)
+    if not split_row_groups and expr is None:
         return [(f, -1) for f in files]
-    import pyarrow.parquet as pq
-
     splits: list[tuple[str, int]] = []
     for f in files:
-        md = pq.read_metadata(f)
-        rgs = range(md.num_row_groups)
-        if filters:
-            rgs = [rg for rg in rgs if _row_group_may_match(md, rg, filters)]
+        groups = _fragment(f, expr).row_groups
         if split_row_groups:
-            splits.extend((f, rg) for rg in rgs)
-        elif rgs:
+            splits.extend((f, g.id) for g in groups)
+        elif groups:
             splits.append((f, -1))
     # two degenerate shapes fall back to one whole-file task so callers see
-    # ordinary empty-RESULT semantics instead of a parallelize([], 0) crash:
+    # ordinary empty-RESULT semantics instead of an empty split frame:
     # footer-only files (0 row groups) and filters that prune every split
-    # (the residual mask then drops every row of the one task)
+    # (the task's own pruning then reads no row of the one file)
     return splits or [(files[0], -1)]

@@ -2,16 +2,11 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from cms_topn_spark.operators.multimodal import (
     decode_image,
     decode_video_frames,
     encode_fake_image,
-    image_features,
-    resize_images,
-    resize_nn,
-    sample_frames,
     synthesize_media,
 )
 
@@ -31,12 +26,6 @@ class TestCodec:
         with pytest.raises(NotImplementedError, match="codec"):
             decode_video_frames(b"whatever", "video/mp4")
 
-    def test_resize_nn(self):
-        img = decode_image(encode_fake_image(32, 16, 7), "x-fake/image")
-        out = resize_nn(img, 8, 8)
-        assert out.shape == (8, 8, 3)
-        assert np.array_equal(out[0, 0], img[0, 0])  # corner preserved
-
 
 class TestSparkPlumbing:
     def test_synthesize_schema_and_determinism(self, spark):
@@ -47,49 +36,6 @@ class TestSparkPlumbing:
         assert a == b  # partitioning-independent
         mimes = {r["mime"] for r in a}
         assert mimes == {"x-fake/image", "x-fake/video"}
-
-    def test_image_features_shape(self, spark):
-        df = synthesize_media(spark, 100, partitions=4)
-        feats = image_features(df, hist_bins=8).collect()
-        assert len(feats) == 100
-        for r in feats:
-            assert len(r["features"]) == 3 + 3 + 8
-            assert all(0.0 <= v <= 1.0 + 1e-9 for v in r["features"][:6])
-
-    def test_resize_images_schema_stable(self, spark):
-        df = synthesize_media(spark, 60, partitions=2)
-        out = resize_images(df, 8, 8)
-        assert out.columns == df.columns
-        rows = out.collect()
-        n_imgs = df.where(F.col("mime") == "x-fake/image").count()
-        assert len(rows) == n_imgs
-        for r in rows:
-            assert r["width"] == 8 and r["height"] == 8
-            assert len(bytes(r["media"])) == 8 * 8 * 3  # raw RGB8 batch shape
-
-    def test_sample_frames_explodes_videos(self, spark):
-        df = synthesize_media(spark, 80, partitions=2)
-        vids = df.where(F.col("mime") == "x-fake/video").collect()
-        sampled = sample_frames(df, every=2).collect()
-        expect = sum((r["n_frames"] + 1) // 2 for r in vids)
-        assert len(sampled) == expect
-        by_id = {}
-        for r in sampled:
-            by_id.setdefault(r["media_id"], []).append(r["frame_no"])
-        for vid in vids:
-            assert by_id[vid["media_id"]] == list(range(0, vid["n_frames"], 2))
-
-    def test_features_feed_ann(self, spark):
-        # the multimodal features compose with the similarity operators
-        from cms_topn_spark.operators.similarity import brute_force_topk
-
-        df = synthesize_media(spark, 50, partitions=2)
-        feats = image_features(df).select(
-            F.col("media_id").alias("vec_id"),
-            F.col("features").cast("array<float>").alias("embedding"),
-        )
-        topk = brute_force_topk(feats, query_ids=[0, 1], k=3).collect()
-        assert len(topk) == 6
 
 
 def test_media_pixel_stats_matches_duckdb_oracle(spark):

@@ -739,27 +739,7 @@ class TestCuratePipeline:
                       [tuple(r) for r in got]) == rowset(ocols, orows)
 
 
-    def test_hash_sample_deterministic_and_engine_exact(self, docs, con):
-        from cms_topn_spark.operators import pipeline
-
-        a = {r["doc_id"] for r in pipeline.hash_sample(docs, 0.3).collect()}
-        b = {r["doc_id"] for r in pipeline.hash_sample(docs.repartition(7), 0.3).collect()}
-        assert a == b  # partitioning-invariant, no RNG state
-        # rate lands near the target (60-bit uniform hash)
-        assert 0.2 <= len(a) / docs.count() <= 0.4
-        # different salt = different (but still deterministic) sample
-        c = {r["doc_id"] for r in pipeline.hash_sample(docs, 0.3, salt=1).collect()}
-        assert c != a
-        # the DECISION matches DuckDB row-for-row
-        want = {
-            r[0]
-            for r in con.execute(
-                pipeline.hash_sample_sql("documents", 0.3)
-            ).fetchall()
-        }
-        assert a == {d for d in a if d in want} and want == a
-
-    def test_stratified_sample_rates_and_missing_strata(self, spark, con):
+    def test_stratified_sample_rates_and_missing_strata(self, spark, docs):
         from cms_topn_spark.operators import pipeline
 
         rows = [(i, "en" if i % 4 else "rare") for i in range(2000)]
@@ -777,6 +757,19 @@ class TestCuratePipeline:
         assert {r["stratum"] for r in got2} == {"rare"}
         with pytest.raises(ValueError, match="at least one stratum"):
             pipeline.stratified_sample(df, {}, "stratum")
+        # one stratum over the corpus: plain deterministic sampling
+        corpus = docs.withColumn("stratum", F.lit("all"))
+
+        def sample(frame, salt=0):
+            out = pipeline.stratified_sample(frame, {"all": 0.3}, "stratum", salt=salt)
+            return {r["doc_id"] for r in out.collect()}
+
+        a = sample(corpus)
+        assert sample(corpus.repartition(7)) == a  # no RNG state
+        # rate lands near the target (60-bit uniform hash)
+        assert 0.2 <= len(a) / docs.count() <= 0.4
+        # different salt = different (but still deterministic) sample
+        assert sample(corpus, salt=1) != a
 
     def test_probe_masks_full_probe_guard(self):
         from cms_topn_spark.operators import similarity

@@ -96,6 +96,10 @@ EXPECTED_RDD_SCANS = {
     "jaccard_pairs_pruned": 3,  # kept: sizes + both self-join sides
     "tfidf_top_terms": 2,  # tf: df aggregation + score join
     "curate_corpus": 1,  # staged feature frame: gates + dedup consume it once
+    # columnar-direct ingest: the split ids come from spark.range (a Range
+    # leaf), not a parallelized RDD, so the final plan scans no RDD — a
+    # return to 1 means the source is back on the RDD worker pool
+    "grouped_kll_quantiles": 0,
 }
 
 

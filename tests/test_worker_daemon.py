@@ -134,7 +134,21 @@ def test_session_workers_fork_from_a_frozen_preimported_heap(spark):
         gc.collect()
         return gc.get_freeze_count(), frozen, in_cycle, ref() is None
 
+    def arrow_probe(batches):
+        import json
+
+        import pyarrow as pa
+
+        for rb in batches:
+            probes = [json.dumps(probe(i)) for i in rb.column(0).to_pylist()]
+            yield pa.RecordBatch.from_pydict({"probe": probes})
+
+    # both task kinds a session runs: RDD `map` tasks and the SQL Arrow
+    # tasks every library operator uses (mapInArrow, here over a Range)
     results = spark.sparkContext.parallelize(range(8), 4).map(probe).collect()
+    arrow = spark.range(8, numPartitions=4).mapInArrow(arrow_probe, "probe string")
+    results += [json.loads(r["probe"]) for r in arrow.collect()]
+    assert len(results) == 16
     for freeze_count, frozen, in_cycle, reclaimed in results:
         assert freeze_count > 0
         # imported by the daemon before the freeze, not by the task

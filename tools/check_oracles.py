@@ -63,8 +63,10 @@ def rowset(cols: list[str], rows: list[tuple]):
 
 def main() -> int:
     ap = argparse.ArgumentParser(usage=__doc__.split("Usage: ")[1])
-    ap.add_argument("--cpus", type=int, default=8, help="local[N] core count")
-    ap.add_argument("--shuffle-partitions", type=int, default=16)
+    # None lets get_spark decide: SPARK_GRAFT_CPUS or the CPU affinity, and
+    # max(cpus, 8) shuffle partitions
+    ap.add_argument("--cpus", type=int, default=None, help="local[N] core count")
+    ap.add_argument("--shuffle-partitions", type=int, default=None)
     # the layout flags may appear anywhere; the rest is [sf_dir] [query ...]
     args, sys.argv[1:] = ap.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
