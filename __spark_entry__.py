@@ -42,6 +42,7 @@ from cms_topn_spark.functions.sketch_api import (
 )
 from cms_topn_spark.operators import dedup, similarity, textops
 from cms_topn_spark.operators.build import build_partials
+from cms_topn_spark.spark_session import local_frame
 
 
 _PYFILES_SESSIONS: set = set()
@@ -118,7 +119,7 @@ def q_cms_topn_union_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hll_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = hll_add_agg(_t(spark, sf_dir, "lineitem"), "l_partkey", p=14, sparse_limit=1 << 22)
-    return spark.createDataFrame([(int(h.estimate()),)], "distinct_parts long")
+    return local_frame(spark, [(int(h.estimate()),)], "distinct_parts long")
 
 
 def q_hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,7 +166,8 @@ def q_kll_length_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kll_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = kll_add_agg(_t(spark, sf_dir, "lineitem"), "l_extendedprice", k=1 << 21)
     qs = k.quantiles([0.25, 0.5, 0.75, 0.9])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(float(x) for x in qs)], "q25 double, q50 double, q75 double, q90 double"
     )
 
@@ -941,7 +943,7 @@ def q_stream_keyed_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.catalog.dropTempView(qn)
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "key string, total long, top_freq long")
+    return local_frame(spark, rows, "key string, total long, top_freq long")
 
 
 def q_stream_keyed_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -992,7 +994,8 @@ def q_stream_keyed_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.catalog.dropTempView(qn)
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "key string, n long, q25 double, q50 double, q75 double"
     )
 
@@ -1059,7 +1062,7 @@ def q_stream_windowed_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "window_start long, item string, frequency long")
+    return local_frame(spark, rows, "window_start long, item string, frequency long")
 
 
 def q_grouped_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1185,7 +1188,8 @@ def q_corpus_profile_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _profile_df(spark: SparkSession, p: dict) -> DataFrame:
     """One row per profile dict — shared by both corpus_profile entries so
     the schema string and the dict→tuple conversion live in one place."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(p.values())],
         "distinct_texts long, total_tokens long, top_token string, "
         "top_token_freq long, len_q25 double, len_q50 double, len_q75 double",
@@ -1268,7 +1272,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.catalog.dropTempView(qn)
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "digest string")
+    return local_frame(spark, rows, "digest string")
 
 
 def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1313,7 +1317,7 @@ def q_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "a_id long, b_id long")
+    return local_frame(spark, rows, "a_id long, b_id long")
 
 
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1403,7 +1407,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
         spark.catalog.dropTempView(qn)
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, "p_event_id long, c_event_id long")
+    return local_frame(spark, rows, "p_event_id long, c_event_id long")
 
 
 def q_grouped_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,6 +46,7 @@ from ..operators.build import (
     plan_num_partitions,
     sketch_agg,
 )
+from ..spark_session import local_frame
 
 # ---------------------------------------------------------------- cms_topn
 
@@ -114,7 +115,7 @@ def topn(spark: SparkSession, sketch: CmsTopn | None, type_tag: int | None = Non
         "string",
     )
     rows = [] if sketch is None else [Row(item=i, frequency=f) for i, f in sketch.topn_list(type_tag)]
-    return spark.createDataFrame(rows, f"item {item_t}, frequency bigint")
+    return local_frame(spark, rows, f"item {item_t}, frequency bigint")
 
 
 def cms_topn_frequency(sketch: CmsTopn | None, item) -> int | None:

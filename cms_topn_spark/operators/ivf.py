@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..spark_session import local_frame
 from .similarity import (
     _batch_embedding_matrix,
     _query_vectors,
@@ -157,11 +158,12 @@ def _ivf_search(
     empty_schema = "query_id long, neighbor_id long, rank int"
     q_ids, q_mat = _query_vectors(df, query_ids, id_col, vec_col)
     if not len(q_ids):
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     d2 = (q_mat * q_mat).sum(1)[:, None] - 2.0 * (q_mat @ cents.T)
     d2 += (cents * cents).sum(1)[None, :]
     probe_cells = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
-    q_probes = spark.createDataFrame(
+    q_probes = local_frame(
+        spark,
         [
             (int(q), int(c))
             for q, cells in zip(q_ids, probe_cells)
@@ -255,13 +257,15 @@ def ivf_build(
     needs no immediate re-read."""
     spark = df.sparkSession
     cents = kmeans_fit(df, n_cells, iters, id_col, vec_col)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in cents[i]]) for i in range(len(cents))],
         "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids.parquet")
     assigned = ivf_assign(df, cents, id_col, vec_col)
     assigned.write.mode("overwrite").parquet(f"{index_dir}/assignments.parquet")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(n_cells), int(cents.shape[1]), int(iters))],
         "n_cells int, dim int, iters int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/meta.parquet")

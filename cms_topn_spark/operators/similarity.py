@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.webpages import _splitmix64
+from ..spark_session import local_frame
 
 U64 = np.uint64
 
@@ -685,7 +686,8 @@ def lsh_build(
     spark = df.sparkSession
     sigs = lsh_signatures(df, id_col, vec_col, n_planes, n_tables)
     sigs.write.mode("overwrite").parquet(f"{index_dir}/signatures.parquet")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(n_planes), int(n_tables))], "n_planes int, n_tables int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/meta.parquet")
     return lsh_load(spark, index_dir)

@@ -22,13 +22,17 @@ the JVM's working directory first on ``sys.path``, so a ``cms_topn_spark``
 directory there would shadow the driver's copy. It is not exported to the
 driver's own environment, where scripts import modules from their own
 directory.
+
+RDD tasks (``sc.parallelize``, ``createDataFrame(list)``) run on a second
+daemon with its own workers, so the library builds frames from driver-side
+rows with :func:`local_frame` and keeps every Python task on one pool.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -93,3 +97,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s column
+    order) that runs no Python task. ``createDataFrame(list)`` ships rows
+    through an RDD ``map``, and PySpark runs RDD tasks on a second worker
+    daemon with its own pool; one Arrow table becomes a ``LocalRelation``
+    in the JVM instead."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)

@@ -45,6 +45,7 @@ from ..operators.build import (
     ingest_array,
     spark_item_tag,
 )
+from ..spark_session import local_frame
 
 STATE_FILE = "state.bin"
 
@@ -469,7 +470,7 @@ def read_near_dup_pairs(spark, index_root: str):
         names = []  # no stream has run on this root yet — empty, not a crash
     dirs = [os.path.join(pairs_root, d) for d in names if d in committed]
     if not dirs:
-        return spark.createDataFrame([], "a_id long, b_id long")
+        return local_frame(spark, [], "a_id long, b_id long")
     # distinct: a re-fed document (id-uniqueness contract violation, or a
     # deliberate reprocess) may re-emit a pair into a later run's subdir
     return spark.read.parquet(*dirs).distinct()

@@ -1,6 +1,7 @@
 """The worker daemon: its zip-directory guard reads unchanged archives once
 and still picks up changed or newly shipped ones; workers fork from a frozen
-heap that already holds the libraries, and import the driver's package."""
+heap that already holds the libraries, and import the driver's package;
+frames built from driver-side rows run no RDD task (no second daemon)."""
 
 from __future__ import annotations
 
@@ -211,3 +212,23 @@ def test_workers_import_the_drivers_package_not_the_working_directorys(tmp_path)
     result = json.loads(out.stdout.strip().splitlines()[-1])
     assert result["driver"] == os.path.join(root, "cms_topn_spark", "__init__.py")
     assert result["workers"] == [result["driver"]]
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(1, 2.5, "a", b"x", [1.0, 2.0]), (None, None, None, None, None)],
+         "a long, b double, c string, d binary, e array<double>"),
+        ([], "a_id long, b_id long"),
+    ],
+)
+def test_local_frame_matches_create_data_frame_without_an_rdd(spark, rows, schema):
+    from cms_topn_spark.spark_session import local_frame
+
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    # a LocalRelation runs no Python task, so no RDD worker daemon starts
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
