@@ -739,7 +739,30 @@ class TestCuratePipeline:
                       [tuple(r) for r in got]) == rowset(ocols, orows)
 
 
-    def test_stratified_sample_rates_and_missing_strata(self, spark, docs):
+    def test_hash_sample_deterministic_and_engine_exact(self, docs, con):
+        """One stratum at one fraction is plain deterministic sampling."""
+        from cms_topn_spark.operators import pipeline
+
+        corpus = docs.withColumn("stratum", F.lit("all"))
+
+        def sample(frame, salt=0):
+            out = pipeline.stratified_sample(frame, {"all": 0.3}, "stratum", salt=salt)
+            return {r["doc_id"] for r in out.collect()}
+
+        a = sample(corpus)
+        assert sample(corpus.repartition(7)) == a  # partitioning-invariant, no RNG state
+        # rate lands near the target (60-bit uniform hash)
+        assert 0.2 <= len(a) / docs.count() <= 0.4
+        # different salt = different (but still deterministic) sample
+        assert sample(corpus, salt=1) != a
+        # the DECISION matches DuckDB row-for-row
+        sql = pipeline.stratified_sample_sql(
+            "(SELECT *, 'all' AS stratum FROM documents)", {"all": 0.3}, "stratum"
+        )
+        want = {r[0] for r in con.execute(f"SELECT doc_id FROM ({sql})").fetchall()}
+        assert want == a
+
+    def test_stratified_sample_rates_and_missing_strata(self, spark):
         from cms_topn_spark.operators import pipeline
 
         rows = [(i, "en" if i % 4 else "rare") for i in range(2000)]
@@ -757,19 +780,6 @@ class TestCuratePipeline:
         assert {r["stratum"] for r in got2} == {"rare"}
         with pytest.raises(ValueError, match="at least one stratum"):
             pipeline.stratified_sample(df, {}, "stratum")
-        # one stratum over the corpus: plain deterministic sampling
-        corpus = docs.withColumn("stratum", F.lit("all"))
-
-        def sample(frame, salt=0):
-            out = pipeline.stratified_sample(frame, {"all": 0.3}, "stratum", salt=salt)
-            return {r["doc_id"] for r in out.collect()}
-
-        a = sample(corpus)
-        assert sample(corpus.repartition(7)) == a  # no RNG state
-        # rate lands near the target (60-bit uniform hash)
-        assert 0.2 <= len(a) / docs.count() <= 0.4
-        # different salt = different (but still deterministic) sample
-        assert sample(corpus, salt=1) != a
 
     def test_probe_masks_full_probe_guard(self):
         from cms_topn_spark.operators import similarity
