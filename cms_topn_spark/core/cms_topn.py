@@ -22,9 +22,11 @@ Semantics follow the reference extension and its golden regression outputs:
 - item-type stickiness: first item binds the type; mismatched adds/reads raise
   (expected/add.out:38-43, expected/results.out:17-19).
 
-Batch adds are fully vectorized (numpy); per-unique-item work is bounded by a
-``est >= current-min`` prefilter so the Python-side top-n loop only touches
-plausible candidates. In ``conservative`` mode a batch is applied as a
+Batch adds are fully vectorized (numpy). A new top-n takes its n entries with
+one ``lexsort`` by (estimate desc, first index asc), the order the sequential
+strict-eviction loop keeps; a non-empty one runs that loop, bounded by an
+``est > current-min`` prefilter once full, so it only touches candidates that
+can enter. In ``conservative`` mode a batch is applied as a
 "parallel conservative" update (estimates read from the pre-batch state, cells
 raised with ``maximum.at``), which preserves the one-sided error guarantee and
 equals the reference's sequential behavior whenever the batch is
@@ -231,12 +233,28 @@ class CmsTopn(MergeableSketch):
         est_post = self._estimate_cols(cols)
 
         # ---- top-n maintenance (first-appearance order for tie parity) ----
+        if not self.topn:
+            # a new top-n: the strict-eviction loop below keeps the top n by
+            # (estimate desc, first index asc), so take those directly
+            keep = _fresh_rank(est_post, first_idx)[: self.n]
+            kfirst = first_idx[keep]
+            self.topn = {
+                item: [freq, self.next_seq + j]
+                for item, freq, j in zip(
+                    _item_bytes(data, offsets, lengths, kfirst),
+                    est_post[keep].tolist(),
+                    kfirst.tolist(),
+                )
+            }
+            self.next_seq += int(n_items)
+            return
         # prefilter: when the array is full, the entry rule is STRICT
         # (freq > evicted min, expected/add.out:60-76), so only est > cur_min
         # can change anything: a member at est == cur_min would be a no-op
         # update (stored ≥ min and counters are monotone force stored == est).
         # This strictness is what keeps long-tail keys (est == cur_min == 1,
-        # e.g. mostly-unique URLs) out of the Python loop entirely.
+        # e.g. mostly-unique URLs) out of the Python loop once the top-n is
+        # full; a new top-n never reaches the loop.
         if len(self.topn) >= self.n:
             cur_min = min(e[0] for e in self.topn.values())
             cand = np.nonzero(est_post > U64(cur_min))[0]
@@ -246,11 +264,6 @@ class CmsTopn(MergeableSketch):
             self.next_seq += int(n_items)
             return
         order = cand[np.argsort(first_idx[cand], kind="stable")]
-        offs = np.asarray(offsets, dtype=np.int64)
-        lens = np.asarray(lengths, dtype=np.int64)
-        mv = memoryview(data) if isinstance(data, (bytes, bytearray)) else memoryview(
-            np.ascontiguousarray(data)
-        )
         base_seq = self.next_seq
         # lazy-invalidated min-heap keyed by the eviction rule (lowest freq,
         # then newest seq) — O(log n) per candidate instead of an O(n) scan
@@ -271,9 +284,8 @@ class CmsTopn(MergeableSketch):
         est_list = est_post.tolist()
         first_list = first_idx.tolist()
         full = self.n
-        for k in order.tolist():
+        for k, item in zip(order.tolist(), _item_bytes(data, offsets, lengths, first_idx[order])):
             j = first_list[k]
-            item = bytes(mv[offs[j] : offs[j] + lens[j]])
             freq = est_list[k]
             ent = self.topn.get(item)
             if ent is not None:
@@ -460,9 +472,8 @@ class CmsTopn(MergeableSketch):
         the non-NULL values of ``values[bounds[i]:bounds[i + 1]]``, byte for
         byte; an all-NULL segment gets none. One Murmur pass for the window,
         one ``lexsort`` dedupe on (segment, h1, h2), one ``bincount`` per
-        block of at most ``_BLOCK_CELLS`` counters. On a new sketch
-        ``add_packed``'s strict-eviction loop keeps the top n by (estimate
-        desc, first index asc), so that is the order taken here."""
+        block of at most ``_BLOCK_CELLS`` counters, and each segment's top n
+        by :func:`_fresh_rank`, the order a new sketch keeps."""
         data, offsets, lengths, tag = enc.pack_arrow_array(values)
         n_seg = len(bounds) - 1
         seg = np.repeat(np.arange(n_seg), np.diff(bounds))
@@ -504,18 +515,12 @@ class CmsTopn(MergeableSketch):
             est[lo:hi] = block[local, rows, c].min(axis=0)
             blocks.append(block)
 
-        rank = np.lexsort((first, -est.astype(np.int64), useg))
+        rank = _fresh_rank(est, first, useg)
         keep = rank[np.arange(len(first)) - np.repeat(gstart, gsize) < self.n]
         kfirst = first[keep]
         seqs = (kfirst - seg_first[useg[keep]]).tolist()
         freqs = est[keep].tolist()
-        mv = memoryview(data) if isinstance(data, (bytes, bytearray)) else memoryview(
-            np.ascontiguousarray(data)
-        )
-        items = [
-            bytes(mv[o : o + ln])
-            for o, ln in zip(offsets[kfirst].tolist(), lengths[kfirst].tolist())
-        ]
+        items = _item_bytes(data, offsets, lengths, kfirst)
         out = {}
         t = 0
         for j, (g, k) in enumerate(zip(groups.tolist(), np.minimum(gsize, self.n).tolist())):
@@ -659,6 +664,30 @@ class CmsTopn(MergeableSketch):
     # identity hash would break the hash/eq contract the moment two equal
     # sketches met in a set; key containers by to_bytes() instead
     __hash__ = None
+
+
+def _fresh_rank(est: np.ndarray, first: np.ndarray, seg: np.ndarray | None = None) -> np.ndarray:
+    """Candidate indices by estimate desc, then first index asc, within
+    ascending ``seg`` when given.
+
+    On a new top-n the sequential strict-eviction loop keeps exactly the
+    head n of this order: its heap minimum is the member with the lowest
+    estimate and, among equal estimates, the latest first index, and a later
+    item enters only when its estimate is strictly higher, that is, when it
+    ranks above that member here. ``~est`` ascending is ``est`` descending,
+    with no overflow."""
+    return np.lexsort((first, ~est) if seg is None else (first, ~est, seg))
+
+
+def _item_bytes(data, offsets, lengths, idx: np.ndarray) -> list[bytes]:
+    """The payloads of items ``idx`` of a packed batch."""
+    mv = memoryview(data) if isinstance(data, (bytes, bytearray)) else memoryview(
+        np.ascontiguousarray(data)
+    )
+    return [
+        bytes(mv[o : o + ln])
+        for o, ln in zip(np.asarray(offsets)[idx].tolist(), np.asarray(lengths)[idx].tolist())
+    ]
 
 
 def _merge_block(block: list[list]) -> list:

@@ -8,7 +8,9 @@ This module reimplements the 128-bit hash from the published algorithm
 vectorized across a *batch* of variable-length byte strings:
 
 - all payloads are packed into one zero-padded ``(n, blocks*16)`` uint8 matrix
-  (pure fancy-indexing, no Python per-row loop),
+  by a row gather over a sliding-window view of the payload bytes, with the
+  bytes past each row's length zeroed (no per-byte index arrays and no Python
+  per-row loop),
 - the 16-byte body rounds loop over ``max(nblocks)`` *columns* while staying
   vectorized over rows,
 - the tail is handled branch-free: because padding bytes are zero, reading the
@@ -87,8 +89,6 @@ def hash128(
         cls = np.floor(np.log2(nblocks + 1)).astype(np.int64)
         h1 = np.empty(n, dtype=U64)
         h2 = np.empty(n, dtype=U64)
-        if isinstance(data, (bytes, bytearray, memoryview)):
-            data = np.frombuffer(data, dtype=np.uint8)
         for c in np.unique(cls):
             idx = np.nonzero(cls == c)[0]
             a, b = _hash128_dense(data, offs[idx], lens[idx], seed)
@@ -108,31 +108,32 @@ def _hash128_dense(
     nblocks = lens // 16
     maxb = int(nblocks.max())
     # maxb body blocks + one zero-padded tail block per row
-    buf = np.zeros((n, (maxb + 1) * 16), dtype=np.uint8)
-    total = int(lens.sum())
-    if total:
-        if isinstance(data, (bytes, bytearray, memoryview)):
-            flat = np.frombuffer(data, dtype=np.uint8)
+    W = (maxb + 1) * 16
+    if isinstance(data, (bytes, bytearray, memoryview)):
+        flat = np.frombuffer(data, dtype=np.uint8)
+    else:
+        flat = np.asarray(data, dtype=np.uint8)
+    L = int(lens[0])
+    equal = bool((lens == L).all())
+    if equal and np.array_equal(offs, np.arange(n, dtype=np.int64) * L):
+        # back-to-back equal-length payloads (fixed-width encodings, k-gram
+        # words): one strided block copy
+        buf = np.zeros((n, W), dtype=np.uint8)
+        buf[:, :L] = flat[: n * L].reshape(n, L)
+    else:
+        # row gather: row i is the W bytes from offs[i] of the zero-padded
+        # payload (a window view, so no per-byte index arrays), then every
+        # byte at or past the row's length, which belongs to the next
+        # payloads, is zeroed. Peak memory is about the payload plus two
+        # (n, W) arrays.
+        windows = np.lib.stride_tricks.sliding_window_view(
+            np.concatenate((flat, np.zeros(W, dtype=np.uint8))), W
+        )
+        buf = windows[offs]
+        if equal:
+            buf[:, L:] = 0
         else:
-            flat = np.asarray(data, dtype=np.uint8)
-        L = int(lens[0])
-        if (lens == L).all():
-            # equal-length fast path (fixed-width encodings, k-gram words):
-            # a strided block copy — or a (n, L) gather when rows aren't
-            # back-to-back — instead of the generic per-byte scatter below,
-            # whose three int64 index arrays cost ~24 index bytes per
-            # payload byte (measured ~10× of the whole hash for 8-byte
-            # grams). Bits are identical; only how ``buf`` fills changes.
-            if np.array_equal(offs, np.arange(n, dtype=np.int64) * L):
-                buf[:, :L] = flat[: n * L].reshape(n, L)
-            else:
-                buf[:, :L] = flat[offs[:, None] + np.arange(L, dtype=np.int64)]
-        else:
-            rows = np.repeat(np.arange(n), lens)
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            within = np.arange(total) - np.repeat(starts, lens)  # 0..len_i-1 per item
-            src = np.repeat(offs, lens) + within
-            buf[rows, within] = flat[src]
+            np.multiply(buf, np.arange(W) < lens[:, None], out=buf)
 
     words = buf.view("<u8")  # (n, 2*(maxb+1)) little-endian 64-bit words
 

@@ -1353,8 +1353,9 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
             F.col("a.simhash").alias("sa"),
             F.col("b.simhash").alias("sb"),
         )
+        # a row function of (sa, sb), so filtering before the distinct
+        # keeps the same rows and shuffles only the near ones
+        .where(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= max_hamming)
         .distinct()
     )
-    return cand.where(
-        F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= max_hamming
-    ).select("a_id", "b_id")
+    return cand.select("a_id", "b_id")

@@ -355,6 +355,103 @@ def _linear(n: int, vals, eps: float = 0.1) -> CmsTopn:
     return sk
 
 
+def _reference_add(sk: CmsTopn, items: list, counts, tag: int) -> None:
+    """``sk.add_packed`` over ``items`` (bytes) as a sequential reference:
+    scalar hashes, per-item counter updates (conservative update reads every
+    estimate before the batch raises any cell), then the strict-eviction
+    top-n loop in first-appearance order, evicting the member with the
+    lowest frequency and, among equals, the newest seq."""
+    from cms_topn_spark.core.cms_topn import UPDATE_LINEAR
+    from cms_topn_spark.core.murmur import hash128_one
+
+    if not items:
+        return
+    if sk.item_type == enc.TYPE_UNSET:
+        sk.item_type = tag
+    counts = [1] * len(items) if counts is None else [int(c) for c in counts]
+    first: dict = {}
+    summed: dict = {}
+    for j, (it, c) in enumerate(zip(items, counts)):
+        first.setdefault(it, j)
+        summed[it] = summed.get(it, 0) + c
+    cols = {}
+    for it in first:
+        h1, h2 = hash128_one(it)
+        cols[it] = [(h1 + i * h2) % (1 << 64) % sk.width for i in range(sk.depth)]
+    cells = sk.counters
+
+    def est(it):
+        return min(int(cells[i, c]) for i, c in enumerate(cols[it]))
+
+    if sk.update_mode == UPDATE_LINEAR:
+        for it in first:
+            for i, c in enumerate(cols[it]):
+                cells[i, c] = int(cells[i, c]) + summed[it]
+    else:
+        raised = {it: est(it) + summed[it] for it in first}
+        for it in first:
+            for i, c in enumerate(cols[it]):
+                cells[i, c] = max(int(cells[i, c]), raised[it])
+    sk.total += sum(counts)
+    base = sk.next_seq
+    topn = sk.topn
+    for it, j in first.items():
+        freq = est(it)
+        if it in topn:
+            topn[it][0] = freq
+        elif len(topn) < sk.n:
+            topn[it] = [freq, base + j]
+        else:
+            victim = min(topn, key=lambda k: (topn[k][0], -topn[k][1]))
+            if freq > topn[victim][0]:
+                del topn[victim]
+                topn[it] = [freq, base + j]
+    sk.next_seq = base + len(items)
+
+
+def _reference_ingest(sk: CmsTopn, arr: pa.Array) -> None:
+    data, offsets, lengths, tag = enc.pack_arrow_array(arr)
+    buf = np.frombuffer(data, np.uint8) if isinstance(data, bytes) else np.asarray(data, np.uint8)
+    items = [buf[o : o + ln].tobytes() for o, ln in zip(offsets.tolist(), lengths.tolist())]
+    _reference_add(sk, items, None, tag)
+
+
+# 21 items and eps 0.3 (width 10): estimates tie often and n runs below and
+# above the distinct count
+_FEW_ITEMS = st.sampled_from([b""] + [bytes([c]) * k for c in b"abcdefghij" for k in (1, 2)])
+_COUNTS = {
+    "ones": None,
+    "small": st.integers(0, 3),
+    # above 2^40: max count × items passes 2^52, the exact-scatter branch
+    "huge": st.integers(0, 3).map(lambda c: (c << 50) + c),
+}
+
+
+@given(
+    data=st.data(),
+    update=st.sampled_from(["linear", "conservative"]),
+    n=st.integers(1, 24),
+    n_batches=st.integers(1, 3),
+)
+@settings(**KERNEL_SETTINGS)
+def test_add_packed_equals_sequential_reference(data, update, n, n_batches):
+    """``add_packed`` is byte-equal to the sequential reference after every
+    batch: the first batch meets a new top-n, later ones a non-empty one."""
+    got = CmsTopn(n, 0.3, 0.99, update=update)
+    want = CmsTopn(n, 0.3, 0.99, update=update)
+    for _ in range(n_batches):
+        items = data.draw(st.lists(_FEW_ITEMS, max_size=40))
+        kind = data.draw(st.sampled_from(sorted(_COUNTS)))
+        counts = None
+        if _COUNTS[kind] is not None:
+            counts = data.draw(st.lists(_COUNTS[kind], min_size=len(items), max_size=len(items)))
+        lens = np.array([len(it) for it in items], dtype=np.int64)
+        offs = np.cumsum(lens) - lens
+        got.add_packed(b"".join(items), offs, lens, counts=counts, type_tag=enc.TYPE_BINARY)
+        _reference_add(want, items, counts, enc.TYPE_BINARY)
+        assert got.to_bytes() == want.to_bytes()
+
+
 @given(
     data=st.data(),
     kind=st.sampled_from(sorted(_ITEM_COLUMNS)),
@@ -363,12 +460,11 @@ def _linear(n: int, vals, eps: float = 0.1) -> CmsTopn:
 )
 @settings(**KERNEL_SETTINGS)
 def test_window_fold_equals_per_group_add_packed(data, kind, n, n_batches):
-    """Every window's state for a group is byte-equal to ``add_packed`` of
-    that group's non-NULL values on a new sketch, and a task folding several
-    windows merges them in window order. NULL keys form no group; n runs
-    below and above a group's distinct count."""
+    """Every window's state for a group is byte-equal to the sequential
+    reference over that group's non-NULL values on a new sketch, and a task
+    folding several windows merges them in window order. NULL keys form no
+    group; n runs below and above a group's distinct count."""
     from cms_topn_spark.operators import grouped
-    from cms_topn_spark.operators.build import ingest_array
 
     typ, values = _ITEM_COLUMNS[kind]
     rows = data.draw(
@@ -388,7 +484,7 @@ def test_window_fold_equals_per_group_add_packed(data, kind, n, n_batches):
             if all(v is None for v in sl):
                 continue
             sk = factory()
-            ingest_array(sk, pa.array(sl, typ))
+            _reference_ingest(sk, pa.array(sl, typ))
             want[g] = sk if g not in want else want[g].merge(sk)
 
     saved = grouped._DICE_MAX_ROWS
