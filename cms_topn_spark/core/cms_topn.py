@@ -16,9 +16,10 @@ Semantics follow the reference extension and its golden regression outputs:
   eviction replaces the lowest-frequency entry, output sorted frequency desc
   with insertion-order ties (expected/add.out:44-133, expected/add_agg.out),
 - union: counters sum elementwise, candidates = union of both top-n sets
-  re-estimated against the merged counters (expected/union.out:51-88); merges
-  of sketches with different parameters or item types raise the reference's
-  verbatim errors (expected/union.out:41-49),
+  re-estimated against the merged counters (expected/union.out:51-88), one
+  numpy kernel for a single merge and for every group of a grouped build;
+  merges of sketches with different parameters or item types raise the
+  reference's verbatim errors (expected/union.out:41-49),
 - item-type stickiness: first item binds the type; mismatched adds/reads raise
   (expected/add.out:38-43, expected/results.out:17-19).
 
@@ -370,9 +371,7 @@ class CmsTopn(MergeableSketch):
     # ---------------- merge ----------------
 
     def merge(self, other: "CmsTopn") -> "CmsTopn":
-        """Union per expected/union.out: counters sum elementwise, candidates
-        = union of both top-n sets re-ranked against the merged counters,
-        seq ranges concatenate (a's items order before b's on frequency ties).
+        """Union per expected/union.out, by :meth:`_merge_level`.
 
         Associativity: counters, totals and all estimates are associative for
         any merge tree. Serialized bytes are additionally identical across
@@ -382,37 +381,7 @@ class CmsTopn(MergeableSketch):
         but gets a merge-path-dependent insertion-order tie-break, exactly as
         the reference's insertion-ordered array would (property-tested in
         tests/test_properties.py)."""
-        self._merge_check(other)
-        out = self._like(
-            self.counters + other.counters,
-            self.item_type if self.item_type != enc.TYPE_UNSET else other.item_type,
-            self.total + other.total,
-            # seq ranges concatenate on merge (a's items before b's), which both
-            # reproduces the golden union tie order (expected/union.out:63-68:
-            # 'two' from a sorts before 'three' from b at equal frequency) and
-            # keeps merge associative: ((a⊕b)⊕c and a⊕(b⊕c) assign identical seqs.
-            self.next_seq + other.next_seq,
-            {},
-        )
-        cand: dict[bytes, int] = {}
-        for src, shift in ((self, 0), (other, self.next_seq)):
-            for it, e in src.topn.items():
-                seq = int(e[1]) + shift
-                if it not in cand or seq < cand[it]:
-                    cand[it] = seq
-        if cand:
-            items = list(cand.keys())
-            data, offsets, lengths = enc.encode_bytes_list(items)
-            h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
-            cols = out._cols(h1, h2)
-            est = out._estimate_cols(cols).astype(np.int64)
-            ranked = sorted(
-                ((items[i], int(est[i]), cand[items[i]]) for i in range(len(items))),
-                key=lambda t: (-t[1], t[2], t[0]),
-            )
-            for it, freq, seq in ranked[: out.n]:
-                out.topn[it] = [freq, seq]
-        return out
+        return CmsTopn._merge_level([self], [other])[0]
 
     def _merge_check(self, other) -> None:
         """The checks of :meth:`merge`, with its verbatim errors."""
@@ -446,7 +415,7 @@ class CmsTopn(MergeableSketch):
         out.total, out.next_seq, out.topn = total, next_seq, topn
         return out
 
-    # ---------------- grouped kernels (linear update) ----------------
+    # ---------------- grouped kernels ----------------
 
     def fold_window(self, factory, carried: dict, keys: list, values, bounds, ingest) -> None:
         """Stage-1 hook (see :meth:`MergeableSketch.fold_window`). Linear
@@ -533,11 +502,11 @@ class CmsTopn(MergeableSketch):
     @classmethod
     def merge_groups(cls, groups):
         """Stage-2 hook (see :meth:`MergeableSketch.merge_groups`): the
-        level-wise merge. Groups are taken in blocks of about
-        ``_BLOCK_CELLS`` state counters, and level k merges the k-th state of
-        every group in the block into that group's accumulator in one step
-        (:meth:`_merge_level`), so each result is byte-equal to
-        ``functools.reduce(CmsTopn.merge, states)``."""
+        level-wise merge, for either update mode. Groups are taken in blocks
+        of about ``_BLOCK_CELLS`` state counters, and level k merges the k-th
+        state of every group in the block into that group's accumulator in
+        one :meth:`_merge_level` call, so each result is the pairwise fold
+        of the group's states in arrival order."""
         block, cells = [], 0
         for states in groups:
             block.append([sketch_from_bytes(bytes(b)) for b in states])
@@ -550,10 +519,18 @@ class CmsTopn(MergeableSketch):
 
     @staticmethod
     def _merge_level(accs: list, others: list) -> list:
-        """``[a.merge(b) for a, b in zip(accs, others)]`` in one step, byte
-        for byte, for linear sketches of one (depth, width, n): counters sum
-        in place, every candidate is hashed in one Murmur pass and ranked by
-        (−freq, seq, item bytes) with one ``lexsort``, then truncated to n."""
+        """The count-min union (expected/union.out:51-88) of each pair
+        ``(accs[i], others[i])``, all of one (depth, width, n); :meth:`merge`
+        is the one-pair case. Each pair passes :meth:`_merge_check` first.
+        Counters sum elementwise, totals and ``next_seq`` add, and the item
+        type is the one either side bound. The candidates are the union of
+        both top-n sets with b's seqs shifted by a's ``next_seq`` (an item in
+        both keeps the smaller seq). Concatenating the seq ranges puts a's
+        items before b's on frequency ties (expected/union.out:63-68) and
+        gives ``(a⊕b)⊕c`` and ``a⊕(b⊕c)`` the same seqs. Every candidate is
+        hashed in one Murmur pass, estimated against the summed counters and
+        ranked by (−freq, seq, item bytes) with one ``lexsort``; each pair
+        keeps its first n."""
         a0 = accs[0]
         d, w, n = a0.depth, a0.width, a0.n
         counters = np.empty((len(accs), d, w), dtype=U64)
@@ -579,12 +556,12 @@ class CmsTopn(MergeableSketch):
         order = np.lexsort((s, ~est, p))
         po, fo, so = p[order], est[order], s[order]
         if np.any((po[1:] == po[:-1]) & (fo[1:] == fo[:-1]) & (so[1:] == so[:-1])):
-            # an equal (freq, seq) falls to the item bytes, as in merge
+            # an equal (freq, seq) falls to the item bytes
             by_item = np.empty(c, dtype=np.int64)
             by_item[sorted(range(c), key=items.__getitem__)] = np.arange(c)
             order = np.lexsort((by_item, s, ~est, p))
-        size = np.bincount(p, minlength=len(accs))
-        keep = order[np.arange(c) - np.repeat(np.cumsum(size) - size, size) < n]
+        # po's runs are the pairs: keep each run's first n
+        keep = order[np.arange(c) - np.searchsorted(po, po) < n]
         topns: list[dict] = [{} for _ in accs]
         freqs = est.tolist()
         for t in keep.tolist():
@@ -692,12 +669,13 @@ def _item_bytes(data, offsets, lengths, idx: np.ndarray) -> list[bytes]:
 
 def _merge_block(block: list[list]) -> list:
     """One merged sketch per group of live states. The level-wise merge
-    needs one linear (depth, width, n) for the block; anything else (another
-    kind, conservative update, mixed shapes) takes the pairwise fold, which
+    needs one (depth, width, n) for the block, which one counter array can
+    hold; anything else (another kind, mixed shapes) takes the pairwise
+    fold, which reaches the same kernel through :meth:`CmsTopn.merge` and
     raises merge's errors where they occur."""
     head = block[0][0]
     if not all(
-        isinstance(sk, CmsTopn) and sk.update_mode == UPDATE_LINEAR
+        isinstance(sk, CmsTopn)
         and (sk.depth, sk.width, sk.n) == (head.depth, head.width, head.n)
         for states in block
         for sk in states

@@ -150,9 +150,7 @@ def plan_num_partitions(df: DataFrame) -> int:
     # keyed per Spark application: a new session (different parallelism /
     # file layout) must not inherit counts. Within one session, rewriting
     # the same path with a different file count can still serve a stale
-    # count — acceptable because every consumer is a perf-only heuristic;
-    # callers that DO rewrite inputs in-session call
-    # invalidate_num_partitions_cache() after the rewrite.
+    # count — acceptable because every consumer is a perf-only heuristic.
     key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
     n = _NPARTS_CACHE.get(key)
     if n is None:
@@ -174,18 +172,6 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     if plan_num_partitions(df) < parallelism:
         df = df.repartition(parallelism)
     return df
-
-
-def invalidate_num_partitions_cache(df: DataFrame | None = None) -> None:
-    """Drop memoized partition counts — the cache-bypass hook for callers
-    that rewrite an input path within one Spark application (the memo would
-    otherwise serve the pre-rewrite file count to the perf heuristics).
-    With ``df``, evicts that plan's entry; with no argument, clears all."""
-    if df is None:
-        _NPARTS_CACHE.clear()
-        return
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    _NPARTS_CACHE.pop(key, None)
 
 
 def _partials_fold(

@@ -18,10 +18,12 @@ build, with one ``mapInArrow`` per stage:
       read again.
 
 The hooks live on the sketch protocol (core/base.py). Their defaults are a
-per-group loop (stage 1) and the pairwise fold (stage 2). Linear-update
-count-min overrides both with kernels that treat all groups at once
-(core/cms_topn.py): one hash pass per window, and a level-wise merge that
-folds the k-th state of every group in one step.
+per-group loop (stage 1) and the pairwise fold (stage 2). Count-min
+overrides both with kernels that treat all groups at once
+(core/cms_topn.py): one hash pass per window for linear update (conservative
+update keeps the per-group loop, since its counters depend on how rows are
+batched), and for either update mode a level-wise merge that folds the k-th
+state of every group in one step.
 
 The shuffle therefore moves |groups-per-partition| · |state| bytes instead of
 the raw rows — the count-min analogue of a map-side combine. Skewed groups
@@ -141,7 +143,7 @@ def _merge_readout(
     The partials are hash-repartitioned by group. Each partition is sorted
     by group with one stable C++ sort and its groups go through the
     sketch's ``merge_groups`` hook in one call — one step per merge level
-    for linear count-min, the pairwise fold by default — instead of one
+    for count-min, the pairwise fold by default — instead of one
     Python slice per group. Merge order within a group is arrival order,
     exactly as unordered as the shuffle's row order; all gated readouts run
     in merge-order-independent regimes."""

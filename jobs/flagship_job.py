@@ -41,6 +41,7 @@ def main() -> None:
     from cms_topn_spark.plans.checkpoint import lineage_summary, run_stage
     from cms_topn_spark.plans.flagship import flagship_factory, flagship_ingest
     from cms_topn_spark.sources.webpages import generate_webpages
+    from cms_topn_spark.spark_session import local_frame
 
     t0 = time.monotonic()
     if args.input.startswith("synth:"):
@@ -68,7 +69,7 @@ def main() -> None:
     out = os.path.join(args.workdir, "results")
     for name in ("url_topn", "host_topn", "token_topn"):
         rows = [(i, f) for i, f in sk[name].topn_list()]
-        spark.createDataFrame(rows, "item string, frequency long").coalesce(1).write.mode(
+        local_frame(spark, rows, "item string, frequency long").coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, name))
     metrics = {

@@ -31,9 +31,9 @@ def test_grouped_states_match_exact_counts(spark, sf001_dir):
 
 @pytest.mark.parametrize("update", ["linear", "conservative"])
 def test_grouped_equals_per_group_filter_build(spark, sf001_dir, update):
-    """Linear update runs the whole-window and level-wise kernels;
-    conservative update runs the protocol defaults (per-group loop and
-    pairwise fold). Both must match the per-group aggregate."""
+    """Linear update runs the whole-window kernel and conservative update
+    the per-group loop; both merge level-wise in stage 2. Both must match
+    the per-group aggregate."""
     from cms_topn_spark.functions.sketch_api import cms_topn_add_agg
 
     events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
@@ -366,22 +366,12 @@ def test_dice_byte_bound_flush_preserves_results(spark, sf001_dir, monkeypatch):
                 assert sk.estimate(int(uid)) == c
 
 
-def test_invalidate_num_partitions_cache(spark):
-    from cms_topn_spark.operators.build import (
-        _NPARTS_CACHE,
-        invalidate_num_partitions_cache,
-        plan_num_partitions,
-    )
+def test_plan_num_partitions_memo(spark):
+    from cms_topn_spark.operators.build import _NPARTS_CACHE, plan_num_partitions
 
     df = spark.range(0, 100, 1, 7)
     assert plan_num_partitions(df) == 7
-    key = (spark.sparkContext.applicationId, df.semanticHash())
-    assert key in _NPARTS_CACHE
-    invalidate_num_partitions_cache(df)
-    assert key not in _NPARTS_CACHE
-    assert plan_num_partitions(df) == 7  # re-probes after eviction
-    invalidate_num_partitions_cache()
-    assert not _NPARTS_CACHE
+    assert (spark.sparkContext.applicationId, df.semanticHash()) in _NPARTS_CACHE
 
 
 def test_grouped_quantiles_parquet_direct_matches_dataframe_form(spark, sf001_dir):

@@ -416,6 +416,41 @@ def _reference_ingest(sk: CmsTopn, arr: pa.Array) -> None:
     _reference_add(sk, items, None, tag)
 
 
+def _reference_merge(a: CmsTopn, b: CmsTopn) -> CmsTopn:
+    """``a.merge(b)`` as a per-candidate reference (expected/union.out):
+    counters sum, b's seqs shift by a's ``next_seq`` (an item in both keeps
+    the smaller seq), and the candidates are re-estimated against the summed
+    counters and sorted by (−freq, seq, item bytes), keeping the first n."""
+    from cms_topn_spark.core.murmur import MURMUR_SEED, hash128
+
+    a._merge_check(b)
+    out = a._like(
+        a.counters + b.counters,
+        a.item_type if a.item_type != enc.TYPE_UNSET else b.item_type,
+        a.total + b.total,
+        a.next_seq + b.next_seq,
+        {},
+    )
+    cand: dict[bytes, int] = {}
+    for src, shift in ((a, 0), (b, a.next_seq)):
+        for it, e in src.topn.items():
+            seq = int(e[1]) + shift
+            if it not in cand or seq < cand[it]:
+                cand[it] = seq
+    if cand:
+        items = list(cand.keys())
+        data, offsets, lengths = enc.encode_bytes_list(items)
+        h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
+        est = out._estimate_cols(out._cols(h1, h2)).astype(np.int64)
+        ranked = sorted(
+            ((items[i], int(est[i]), cand[items[i]]) for i in range(len(items))),
+            key=lambda t: (-t[1], t[2], t[0]),
+        )
+        for it, freq, seq in ranked[: out.n]:
+            out.topn[it] = [freq, seq]
+    return out
+
+
 # 21 items and eps 0.3 (width 10): estimates tie often and n runs below and
 # above the distinct count
 _FEW_ITEMS = st.sampled_from([b""] + [bytes([c]) * k for c in b"abcdefghij" for k in (1, 2)])
@@ -485,7 +520,7 @@ def test_window_fold_equals_per_group_add_packed(data, kind, n, n_batches):
                 continue
             sk = factory()
             _reference_ingest(sk, pa.array(sl, typ))
-            want[g] = sk if g not in want else want[g].merge(sk)
+            want[g] = sk if g not in want else _reference_merge(want[g], sk)
 
     saved = grouped._DICE_MAX_ROWS
     grouped._DICE_MAX_ROWS = 1  # one window per batch
@@ -508,15 +543,22 @@ def test_window_fold_equals_per_group_add_packed(data, kind, n, n_batches):
         max_size=6,
     ),
     n=st.integers(1, 4),
+    update=st.sampled_from(["linear", "conservative"]),
 )
 @settings(**KERNEL_SETTINGS)
-def test_level_merge_equals_pairwise_fold(groups, n):
-    """``merge_groups`` gives each group the bytes of
-    ``functools.reduce(CmsTopn.merge)`` over its states in arrival order,
-    1–5 states per group, empty states included."""
-    states = [[_linear(n, vals).to_bytes() for vals in g] for g in groups]
+def test_level_merge_equals_pairwise_fold(groups, n, update):
+    """``merge_groups`` gives each group the bytes of the reference merge
+    folded over its states in arrival order, for either update mode, 1–5
+    states per group, empty states included."""
+
+    def state(vals):
+        sk = CmsTopn(n, 0.1, 0.99, update=update)
+        sk.add_batch(vals)
+        return sk.to_bytes()
+
+    states = [[state(vals) for vals in g] for g in groups]
     want = [
-        functools.reduce(CmsTopn.merge, map(CmsTopn.from_bytes, g)).to_bytes() for g in states
+        functools.reduce(_reference_merge, map(CmsTopn.from_bytes, g)).to_bytes() for g in states
     ]
     assert [sk.to_bytes() for sk in CmsTopn.merge_groups(states)] == want
 
@@ -524,15 +566,53 @@ def test_level_merge_equals_pairwise_fold(groups, n):
 def test_level_merge_breaks_freq_seq_ties_on_item_bytes():
     """A crafted state whose ``next_seq`` does not clear its own entries
     makes two candidates tie on (freq, seq); the item bytes decide, as in
-    ``CmsTopn.merge``."""
+    the reference merge."""
     a = _linear(1, ["y"])
     a.next_seq = 0
     b = _linear(1, ["x"])
-    want = a.merge(b)
+    want = _reference_merge(a, b)
     assert want.topn_list() == [("x", 1)]
     merged = list(CmsTopn.merge_groups([[a.to_bytes(), b.to_bytes()], [b.to_bytes(), a.to_bytes()]]))
     assert merged[0].to_bytes() == want.to_bytes()
-    assert merged[1].to_bytes() == b.merge(a).to_bytes()
+    assert merged[1].to_bytes() == _reference_merge(b, a).to_bytes()
+
+
+# 12 items and eps 0.3 (width 10): estimates tie often and n runs below and
+# above the candidate count
+_MERGE_ITEMS = {
+    "int64": st.integers(0, 11),
+    "string": st.sampled_from([""] + list("abcdefghijk")),
+}
+
+
+@given(
+    data=st.data(),
+    update=st.sampled_from(["linear", "conservative"]),
+    kind=st.sampled_from(sorted(_MERGE_ITEMS)),
+    n=st.integers(1, 14),
+    n_states=st.integers(2, 4),
+)
+@settings(**KERNEL_SETTINGS)
+def test_merge_equals_reference_merge(data, update, kind, n, n_states):
+    """``CmsTopn.merge`` folded over 2–4 states is byte-equal to the
+    reference merge after every step. States may be empty (no top-n, item
+    type unbound) or hold an empty top-n with a bound type, and a state's
+    ``next_seq`` may be lowered so shifted seqs tie on (freq, seq)."""
+    tag = enc.TYPE_INT64 if kind == "int64" else enc.TYPE_STRING
+    states = []
+    for _ in range(n_states):
+        sk = CmsTopn(n, 0.3, 0.99, update=update)
+        for _ in range(data.draw(st.integers(0, 2))):
+            sk.add_batch(data.draw(st.lists(_MERGE_ITEMS[kind], max_size=30)), type_tag=tag)
+        if not sk.topn and data.draw(st.booleans()):
+            sk.item_type = tag
+        if data.draw(st.booleans()):
+            sk.next_seq = data.draw(st.integers(0, sk.next_seq))
+        states.append(sk)
+    got = want = states[0]
+    for sk in states[1:]:
+        got, want = got.merge(sk), _reference_merge(want, sk)
+        assert got.to_bytes() == want.to_bytes()
 
 
 @pytest.mark.parametrize(
