@@ -17,14 +17,25 @@ groups at once:
     fold_window(...)     -> None              (stage 1: one sorted window)
     merge_groups(groups) -> iter of sketches  (stage 2: per-group folds)
 
+The four hashed sketches (CMS+top-n, min-mask, HLL, Bloom) take items, not
+numbers, and share one item-type policy through :class:`ItemSketch`, the
+reference's "dynamic but sticky" typing (SURVEY.md §1.2): the first add binds
+the type; a batch holding an int outside int32 range encodes as int64 whole;
+an add, a point probe or a union of another bound type raises, except that
+an int32-looking probe reads an int64 sketch as int64 and an int too wide for
+an int32 sketch reads as never added. The error messages are built from the
+class attributes ``NAME`` and ``PLURAL``. KLL and t-digest take numeric
+values and have no item type.
+
 The serialized frame starts with a common 8-byte header::
 
     magic  b"SKS1"  | kind u8 | version u8 | item_type u8 | flags u8
 
-followed by a kind-specific payload. ``kind`` dispatches deserialization via
-the registry below. Byte-for-byte merge determinism (north star: serialized
-``merge(merge(a,b),c) == merge(a,merge(b,c))``) is part of the contract and is
-covered by property tests.
+followed by a kind-specific payload; an ``item_type`` outside
+``encoding.TYPE_NAMES`` is a corrupt frame. ``kind`` dispatches
+deserialization via the registry below. Byte-for-byte merge determinism
+(north star: serialized ``merge(merge(a,b),c) == merge(a,merge(b,c))``) is
+part of the contract and is covered by property tests.
 """
 
 from __future__ import annotations
@@ -32,6 +43,10 @@ from __future__ import annotations
 import struct
 from abc import ABC, abstractmethod
 from typing import Iterable, Iterator, Sequence
+
+import numpy as np
+
+from . import encoding as enc
 
 MAGIC = b"SKS1"
 HEADER = struct.Struct("<4sBBBB")
@@ -133,7 +148,75 @@ class MergeableSketch(ABC):
         magic, kind, version, item_type, flags = HEADER.unpack_from(b, 0)
         if magic != MAGIC:
             raise SketchError("not a serialized sketch (bad magic)")
+        if item_type not in enc.TYPE_NAMES:
+            raise SketchError(f"corrupt serialized sketch: unknown item type tag {item_type}")
         return kind, version, item_type, flags
+
+
+class ItemSketch(MergeableSketch):
+    """A sketch over hashed items, with the item-type policy of the module
+    docstring. Subclasses set ``NAME`` and ``PLURAL`` for the error messages
+    and implement ``add_packed``, which takes packed item bytes and binds
+    ``type_tag`` through :meth:`_bind_type` before touching any state."""
+
+    NAME = ""
+    PLURAL = ""
+    item_type = enc.TYPE_UNSET  # until the first add binds it
+
+    def _bind_type(self, tag: int) -> None:
+        if self.item_type == enc.TYPE_UNSET:
+            self.item_type = tag
+        elif self.item_type != tag:
+            raise SketchError(f"not proper type for this {self.NAME}")
+
+    def add_batch(self, values, counts=None, type_tag: int | None = None) -> None:
+        """Add Python values, NULLs (and their counts) dropped."""
+        if counts is not None:
+            counts = np.asarray(
+                [c for v, c in zip(values, counts) if v is not None], dtype=np.int64
+            )
+        vals = [v for v in values if v is not None]
+        if vals:
+            data, offsets, lengths, type_tag = self._encode_batch(vals, type_tag)
+            self.add_packed(data, offsets, lengths, counts=counts, type_tag=type_tag)
+
+    def _encode_batch(self, values: list, type_tag: int | None):
+        """Non-NULL values → ``(data, offsets, lengths, type_tag)``, the tag
+        from :func:`encoding.resolve_batch_tag` unless given."""
+        if type_tag is None:
+            type_tag = enc.resolve_batch_tag(values, self.item_type)
+        return (*enc.encode_any(values, type_tag), type_tag)
+
+    def _probe_packed(self, values):
+        """Point-probe values → ``(data, offsets, lengths, live)``: the packed
+        bytes of the probes at indices ``live``, each encoded as the bound
+        type would have added it. A NULL, or an int too wide for a bound
+        int32, was never added and is not live; any other type mismatch
+        raises."""
+        bound = self.item_type
+        live, items = [], []
+        for i, v in enumerate(values):
+            if v is None:
+                continue
+            tag = enc.infer_type_tag(v)
+            if bound != enc.TYPE_UNSET and tag != bound:
+                if tag == enc.TYPE_INT32 and bound == enc.TYPE_INT64:
+                    tag = enc.TYPE_INT64
+                elif tag == enc.TYPE_INT64 and bound == enc.TYPE_INT32:
+                    continue
+                else:
+                    raise SketchError(f"not a proper {self.NAME} for the result type")
+            live.append(i)
+            items.append(enc.encode_one(v, tag))
+        return (*enc.pack_bytes(items), live)
+
+    def _merged_type(self, other: "ItemSketch") -> int:
+        """The item type of ``self ∪ other``: the one either side bound; two
+        different bound types raise."""
+        a, b = self.item_type, other.item_type
+        if a != enc.TYPE_UNSET and b != enc.TYPE_UNSET and a != b:
+            raise SketchError(f"cannot merge {self.PLURAL} of different types")
+        return a if a != enc.TYPE_UNSET else b
 
 
 def sketch_from_bytes(b: bytes) -> MergeableSketch:

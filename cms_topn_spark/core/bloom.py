@@ -15,15 +15,18 @@ import struct
 import numpy as np
 
 from . import encoding as enc
-from .base import KIND_BLOOM, MergeableSketch, frame_guarded, SketchError, register
-from .murmur import MURMUR_SEED, hash128
+from .base import KIND_BLOOM, ItemSketch, frame_guarded, SketchError, register
+from .murmur import MURMUR_SEED, hash128, probe_index
 
 U64 = np.uint64
 _FIXED = struct.Struct("<QIQ")  # m_bits, k, n_added
 
 
 @register(KIND_BLOOM)
-class BloomFilter(MergeableSketch):
+class BloomFilter(ItemSketch):
+    NAME = "bloom filter"
+    PLURAL = "bloom filters"
+
     def __init__(self, capacity: int = 100_000, fpp: float = 1e-6):
         if capacity <= 0:
             raise SketchError("Bloom capacity has to be positive")
@@ -34,7 +37,6 @@ class BloomFilter(MergeableSketch):
         self.k = max(1, round(self.m_bits / capacity * ln2))
         self.bits = np.zeros((self.m_bits + 63) // 64, dtype=U64)
         self.n_added = 0
-        self.item_type = enc.TYPE_UNSET
 
     @classmethod
     def with_geometry(cls, m_bits: int, k: int) -> "BloomFilter":
@@ -42,29 +44,7 @@ class BloomFilter(MergeableSketch):
         out.m_bits, out.k = m_bits, k
         out.bits = np.zeros((m_bits + 63) // 64, dtype=U64)
         out.n_added = 0
-        out.item_type = enc.TYPE_UNSET
         return out
-
-    def _bind_type(self, tag: int) -> None:
-        if self.item_type == enc.TYPE_UNSET:
-            self.item_type = tag
-        elif self.item_type != tag:
-            raise SketchError("cannot add items of a different type to this bloom filter")
-
-    def _positions(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        i = np.arange(self.k, dtype=U64).reshape(self.k, 1)
-        return ((h1[None, :] + i * h2[None, :]) % U64(self.m_bits)).astype(np.int64)
-
-    def add_batch(self, values, counts=None, type_tag: int | None = None) -> None:
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return
-        if type_tag is None:
-            # shared int-width promotion/stickiness (resolve_batch_tag): a
-            # wrapped int32 would set DIFFERENT bits than the later probe
-            type_tag = enc.resolve_batch_tag(vals, self.item_type)
-        data, offsets, lengths = enc.encode_any(vals, type_tag)
-        self.add_packed(data, offsets, lengths, type_tag=type_tag)
 
     def add_packed(
         self, data, offsets, lengths, counts=None, type_tag: int = enc.TYPE_BINARY
@@ -75,57 +55,30 @@ class BloomFilter(MergeableSketch):
             return
         self._bind_type(type_tag)
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
-        pos = self._positions(h1, h2).ravel()
+        pos = probe_index(h1, h2, self.k, self.m_bits).ravel()
         word, bit = pos >> 6, pos & 63
         np.bitwise_or.at(self.bits, word, U64(1) << bit.astype(U64))
         self.n_added += len(lengths)
 
     def contains_packed(self, data, offsets, lengths) -> np.ndarray:
         """Vectorized membership test → bool array."""
-        n = len(lengths)
-        if n == 0:
-            return np.empty(0, dtype=bool)
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
-        pos = self._positions(h1, h2)  # (k, n)
+        pos = probe_index(h1, h2, self.k, self.m_bits)  # (k, n)
         word, bit = pos >> 6, pos & 63
         hits = (self.bits[word] >> bit.astype(U64)) & U64(1)
         return hits.all(axis=0)
 
     def contains(self, value) -> bool:
-        """Membership probe, mirroring CmsTopn.estimate's type rules: an int
-        that cannot fit the bound integer width was never added → False; a
-        cross-family probe (string vs int filter) is a type error."""
-        if value is None:
-            return False
-        if self.item_type == enc.TYPE_UNSET:
-            tag = enc.infer_type_tag(value)
-        else:
-            tag = enc.infer_type_tag(value)
-            if tag != self.item_type:
-                if tag == enc.TYPE_INT32 and self.item_type == enc.TYPE_INT64:
-                    tag = enc.TYPE_INT64
-                elif tag == enc.TYPE_INT64 and self.item_type == enc.TYPE_INT32:
-                    return False  # cannot fit the bound type ⇒ never added
-                else:
-                    # the two int-width combinations are handled above, so
-                    # any remaining mismatch is cross-family
-                    raise SketchError(
-                        "cannot query items of a different type on this bloom filter"
-                    )
-        b = enc.encode_one(value, tag)
-        return bool(self.contains_packed(b, np.array([0]), np.array([len(b)]))[0])
+        """Membership probe: NULL, or a value never added (see
+        :meth:`ItemSketch._probe_packed`) → False."""
+        data, offsets, lengths, live = self._probe_packed([value])
+        return bool(self.contains_packed(data, offsets, lengths)[0]) if live else False
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
         if not isinstance(other, BloomFilter) or self.m_bits != other.m_bits or self.k != other.k:
             raise SketchError("cannot merge bloom filters with different parameters")
-        if (
-            self.item_type != enc.TYPE_UNSET
-            and other.item_type != enc.TYPE_UNSET
-            and self.item_type != other.item_type
-        ):
-            raise SketchError("cannot merge bloom filters of different types")
         out = BloomFilter.with_geometry(self.m_bits, self.k)
-        out.item_type = self.item_type if self.item_type != enc.TYPE_UNSET else other.item_type
+        out.item_type = self._merged_type(other)
         out.bits = self.bits | other.bits
         out.n_added = self.n_added + other.n_added
         return out

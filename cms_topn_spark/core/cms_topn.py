@@ -21,7 +21,8 @@ Semantics follow the reference extension and its golden regression outputs:
   merges of sketches with different parameters or item types raise the
   reference's verbatim errors (expected/union.out:41-49),
 - item-type stickiness: first item binds the type; mismatched adds/reads raise
-  (expected/add.out:38-43, expected/results.out:17-19).
+  (expected/add.out:38-43, expected/results.out:17-19), by the policy every
+  hashed sketch shares (:class:`~cms_topn_spark.core.base.ItemSketch`).
 
 Batch adds are fully vectorized (numpy). A new top-n takes its n entries with
 one ``lexsort`` by (estimate desc, first index asc), the order the sequential
@@ -45,13 +46,13 @@ import numpy as np
 from . import encoding as enc
 from .base import (
     KIND_CMS_TOPN,
-    MergeableSketch,
+    ItemSketch,
     SketchError,
     frame_guarded,
     register,
     sketch_from_bytes,
 )
-from .murmur import MURMUR_SEED, hash128
+from .murmur import MURMUR_SEED, hash128, probe_index
 
 U64 = np.uint64
 
@@ -76,7 +77,10 @@ def sizing(eps: float, confidence: float) -> tuple[int, int]:
 
 
 @register(KIND_CMS_TOPN)
-class CmsTopn(MergeableSketch):
+class CmsTopn(ItemSketch):
+    NAME = "cms_topn"
+    PLURAL = "cms_topns"
+
     def __init__(
         self,
         n: int,
@@ -97,7 +101,6 @@ class CmsTopn(MergeableSketch):
         self.update_mode = UPDATE_CONSERVATIVE if update == "conservative" else UPDATE_LINEAR
         self.depth, self.width = sizing(self.eps, self.confidence)
         self.counters = np.zeros((self.depth, self.width), dtype=U64)
-        self.item_type = enc.TYPE_UNSET
         self.total = 0  # items added (N in the eps*N bound)
         self.next_seq = 0  # insertion sequence for tie-breaks
         self.topn: dict[bytes, list] = {}  # item_bytes -> [freq, seq]
@@ -105,10 +108,7 @@ class CmsTopn(MergeableSketch):
     # ---------------- hashing ----------------
 
     def _cols(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        """(d, n) column indices: g_i = h1 + i*h2 mod 2^64 mod width."""
-        d = self.depth
-        i = np.arange(d, dtype=U64).reshape(d, 1)
-        return ((h1[None, :] + i * h2[None, :]) % U64(self.width)).astype(np.int64)
+        return probe_index(h1, h2, self.depth, self.width)
 
     def _estimate_cols(self, cols: np.ndarray) -> np.ndarray:
         est = self.counters[0, cols[0]]
@@ -118,34 +118,13 @@ class CmsTopn(MergeableSketch):
 
     # ---------------- add ----------------
 
-    def _bind_type(self, type_tag: int) -> None:
-        if self.item_type == enc.TYPE_UNSET:
-            self.item_type = type_tag
-        elif self.item_type != type_tag:
-            raise SketchError("not proper type for this cms_topn")
-
     def add(self, value) -> "CmsTopn":
-        """Single-item add (reference-faithful sequential path). None → no-op
-        (cms_topn_add(s, NULL) returns s unchanged, expected/add.out:20-36).
-        Type inference is left to add_batch so a small int added to an
-        int64-bound sketch gets the same sticky coercion as the batch path."""
-        if value is None:
-            return self
+        """Single-item add through ``add_batch``: None is a no-op
+        (cms_topn_add(s, NULL) returns s unchanged, expected/add.out:20-36),
+        and a small int added to an int64-bound sketch gets the batch path's
+        sticky coercion."""
         self.add_batch([value])
         return self
-
-    def add_batch(self, values, counts=None, type_tag: int | None = None) -> None:
-        vals = [v for v in values if v is not None]
-        if counts is not None:
-            counts = np.asarray(
-                [c for v, c in zip(values, counts) if v is not None], dtype=np.int64
-            )
-        if not vals:
-            return
-        if type_tag is None:
-            type_tag = enc.resolve_batch_tag(vals, self.item_type)
-        data, offsets, lengths = enc.encode_any(vals, type_tag)
-        self.add_packed(data, offsets, lengths, counts=counts, type_tag=type_tag)
 
     def add_packed(
         self,
@@ -321,34 +300,13 @@ class CmsTopn(MergeableSketch):
         """Vectorized ``cms_topn_frequency`` over a probe list: coercion rules
         identical to :meth:`estimate` per item, but ONE Murmur pass + one
         counter gather for the whole list — the grouped-probe hot loop runs
-        this once per state instead of a per-item Python round-trip."""
-        enc_bytes: list = []
-        out: list = [0] * len(values)
-        for i, v in enumerate(values):
-            if v is None:
-                out[i] = None
-                enc_bytes.append(None)
-                continue
-            tag = enc.infer_type_tag(v)
-            if self.item_type != enc.TYPE_UNSET and tag != self.item_type:
-                # integers coerce to the sketch's bound integer width; anything
-                # else is the reference's type error (expected/results.out:17-19)
-                if tag == enc.TYPE_INT32 and self.item_type == enc.TYPE_INT64:
-                    tag = enc.TYPE_INT64
-                elif tag == enc.TYPE_INT64 and self.item_type == enc.TYPE_INT32:
-                    enc_bytes.append(None)  # cannot fit the bound type ⇒ 0
-                    continue
-                else:
-                    raise SketchError("not a proper cms_topn for the result type")
-            enc_bytes.append(enc.encode_one(v, tag))
-        live = [i for i, b in enumerate(enc_bytes) if b is not None]
-        if live:
-            data = b"".join(enc_bytes[i] for i in live)
-            lens = np.array([len(enc_bytes[i]) for i in live], dtype=np.int64)
-            offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            est = self.estimate_packed(data, offs, lens)
-            for j, i in enumerate(live):
-                out[i] = int(est[j])
+        this once per state instead of a per-item Python round-trip. A
+        cross-family probe is the reference's type error
+        (expected/results.out:17-19)."""
+        out: list = [None if v is None else 0 for v in values]
+        data, offsets, lengths, live = self._probe_packed(values)
+        for i, e in zip(live, self.estimate_packed(data, offsets, lengths).tolist()):
+            out[i] = e
         return out
 
     def _ordered_entries(self) -> list[tuple[bytes, int, int]]:
@@ -383,8 +341,9 @@ class CmsTopn(MergeableSketch):
         tests/test_properties.py)."""
         return CmsTopn._merge_level([self], [other])[0]
 
-    def _merge_check(self, other) -> None:
-        """The checks of :meth:`merge`, with its verbatim errors."""
+    def _merge_check(self, other) -> int:
+        """The checks of :meth:`merge`, with its verbatim errors → the merged
+        item type."""
         if not isinstance(other, CmsTopn):
             raise SketchError("cannot merge cms_topns of different types")
         if (
@@ -398,12 +357,7 @@ class CmsTopn(MergeableSketch):
             or self.update_mode != other.update_mode
         ):
             raise SketchError("cannot merge cms_topns with different parameters")
-        if (
-            self.item_type != enc.TYPE_UNSET
-            and other.item_type != enc.TYPE_UNSET
-            and self.item_type != other.item_type
-        ):
-            raise SketchError("cannot merge cms_topns of different types")
+        return self._merged_type(other)
 
     def _like(self, counters, item_type: int, total: int, next_seq: int, topn: dict) -> "CmsTopn":
         """A sketch with this one's parameters and the given state."""
@@ -534,9 +488,9 @@ class CmsTopn(MergeableSketch):
         a0 = accs[0]
         d, w, n = a0.depth, a0.width, a0.n
         counters = np.empty((len(accs), d, w), dtype=U64)
-        pair, items, seqs = [], [], []
+        pair, items, seqs, types = [], [], [], []
         for i, (a, b) in enumerate(zip(accs, others)):
-            a._merge_check(b)
+            types.append(a._merge_check(b))
             np.add(a.counters, b.counters, out=counters[i])
             cand = {it: e[1] for it, e in a.topn.items()}
             for it, e in b.topn.items():
@@ -549,7 +503,7 @@ class CmsTopn(MergeableSketch):
         c = len(items)
         p = np.asarray(pair, dtype=np.int64)
         s = np.asarray(seqs, dtype=U64)
-        h1, h2 = hash128(*enc.encode_bytes_list(items), MURMUR_SEED)
+        h1, h2 = hash128(*enc.pack_bytes(items), MURMUR_SEED)
         cols = a0._cols(h1, h2)
         est = counters[p, np.arange(d).reshape(d, 1), cols].min(axis=0).astype(np.int64)
         # ~est ascending is est descending, with no int64 overflow
@@ -569,7 +523,7 @@ class CmsTopn(MergeableSketch):
         return [
             a._like(
                 counters[i],
-                a.item_type if a.item_type != enc.TYPE_UNSET else b.item_type,
+                types[i],
                 a.total + b.total,
                 a.next_seq + b.next_seq,
                 topns[i],

@@ -73,9 +73,15 @@ def encode_bytes_list(values) -> tuple[bytes, np.ndarray, np.ndarray]:
             raise TypeError(
                 f"cannot encode {type(v).__name__} as a string/binary item"
             )
-    lengths = np.fromiter((len(b) for b in bs), dtype=np.int64, count=len(bs))
-    offsets = np.concatenate(([0], np.cumsum(lengths)[:-1])) if len(bs) else np.empty(0, np.int64)
-    return b"".join(bs), offsets, lengths
+    return pack_bytes(bs)
+
+
+def pack_bytes(items: list[bytes]) -> tuple[bytes, np.ndarray, np.ndarray]:
+    """Items that are already ``bytes`` → the packed layout, no per-item checks."""
+    lengths = np.fromiter(map(len, items), dtype=np.int64, count=len(items))
+    offsets = np.zeros(len(items), dtype=np.int64)
+    np.cumsum(lengths[:-1], out=offsets[1:])
+    return b"".join(items), offsets, lengths
 
 
 def encode_arrow_strings(arr) -> tuple[bytes, np.ndarray, np.ndarray]:

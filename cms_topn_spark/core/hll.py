@@ -26,7 +26,7 @@ import struct
 import numpy as np
 
 from . import encoding as enc
-from .base import KIND_HLL, MergeableSketch, frame_guarded, SketchError, register
+from .base import KIND_HLL, ItemSketch, frame_guarded, SketchError, register
 from .murmur import MURMUR_SEED, hash128
 
 U64 = np.uint64
@@ -47,7 +47,10 @@ def _alpha(m: int) -> float:
 
 
 @register(KIND_HLL)
-class HyperLogLog(MergeableSketch):
+class HyperLogLog(ItemSketch):
+    NAME = "hll"
+    PLURAL = "hll sketches"
+
     def __init__(self, p: int = 14, sparse_limit: int | None = None):
         if not (4 <= p <= 18):
             raise SketchError("HLL precision has to be between 4 and 18")
@@ -58,27 +61,8 @@ class HyperLogLog(MergeableSketch):
         self.mode = MODE_SPARSE
         self.sparse: np.ndarray = np.empty(0, dtype=U64)  # sorted unique hashes
         self.registers: np.ndarray | None = None
-        self.item_type = enc.TYPE_UNSET
 
     # ---------------- add ----------------
-
-    def _bind_type(self, tag: int) -> None:
-        if self.item_type == enc.TYPE_UNSET:
-            self.item_type = tag
-        elif self.item_type != tag:
-            raise SketchError("cannot add items of a different type to this hll")
-
-    def add_batch(self, values, counts=None, type_tag: int | None = None) -> None:
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return
-        if type_tag is None:
-            # shared int-width promotion/stickiness rules (resolve_batch_tag):
-            # a per-value int32 wrap would hash a DIFFERENT identity and
-            # silently undercount distincts
-            type_tag = enc.resolve_batch_tag(vals, self.item_type)
-        data, offsets, lengths = enc.encode_any(vals, type_tag)
-        self.add_packed(data, offsets, lengths, type_tag=type_tag)
 
     def add_packed(
         self, data, offsets, lengths, counts=None, type_tag: int = enc.TYPE_BINARY
@@ -161,18 +145,12 @@ class HyperLogLog(MergeableSketch):
     def merge(self, other: "HyperLogLog") -> "HyperLogLog":
         if not isinstance(other, HyperLogLog) or self.p != other.p:
             raise SketchError("cannot merge hll sketches with different parameters")
-        if (
-            self.item_type != enc.TYPE_UNSET
-            and other.item_type != enc.TYPE_UNSET
-            and self.item_type != other.item_type
-        ):
-            raise SketchError("cannot merge hll sketches of different types")
         # min() keeps merge commutative when the two sides were configured
         # with different sparse limits: mode transitions and serialized bytes
         # must not depend on argument order (base.py merge-determinism
         # contract — the Spark tree merge feeds partials in arbitrary order)
         out = HyperLogLog(self.p, min(self.sparse_limit, other.sparse_limit))
-        out.item_type = self.item_type if self.item_type != enc.TYPE_UNSET else other.item_type
+        out.item_type = self._merged_type(other)
         if self.mode == MODE_SPARSE and other.mode == MODE_SPARSE:
             out.sparse = np.union1d(self.sparse, other.sparse)
             if len(out.sparse) > out.sparse_limit:

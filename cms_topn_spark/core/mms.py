@@ -23,10 +23,9 @@ import struct
 
 import numpy as np
 
-from . import encoding as enc
-from .base import KIND_MMS, MergeableSketch, frame_guarded, SketchError, register
+from .base import KIND_MMS, ItemSketch, frame_guarded, SketchError, register
 from .cms_topn import sizing
-from .murmur import MURMUR_SEED, hash128
+from .murmur import MURMUR_SEED, hash128, probe_index
 
 U64 = np.uint64
 _FIXED = struct.Struct("<IIddQ")  # depth, width, eps, conf, total
@@ -41,7 +40,10 @@ def popcount64(x: np.ndarray) -> np.ndarray:
 
 
 @register(KIND_MMS)
-class MinMaskSketch(MergeableSketch):
+class MinMaskSketch(ItemSketch):
+    NAME = "mms"
+    PLURAL = "mms sketches"
+
     def __init__(self, eps: float = 0.001, confidence: float = 0.99):
         # validation messages per _createMms (cms_mms.c:616-627)
         if not (0.0 < eps < 1.0):
@@ -52,19 +54,7 @@ class MinMaskSketch(MergeableSketch):
         self.confidence = float(confidence)
         self.depth, self.width = sizing(eps, confidence)
         self.masks = np.zeros((self.depth, self.width), dtype=U64)
-        self.item_type = enc.TYPE_UNSET
         self.total = 0
-
-    def _bind_type(self, tag: int) -> None:
-        if self.item_type == enc.TYPE_UNSET:
-            self.item_type = tag
-        elif self.item_type != tag:
-            raise SketchError("not proper type for this mms")
-
-    def _cols(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        d = self.depth
-        i = np.arange(d, dtype=U64).reshape(d, 1)
-        return ((h1[None, :] + i * h2[None, :]) % U64(self.width)).astype(np.int64)
 
     def _min_pop_mask(self, cols: np.ndarray) -> np.ndarray:
         """Per item: the probed cell mask with minimum popcount, scanning rows
@@ -82,8 +72,6 @@ class MinMaskSketch(MergeableSketch):
     # ---------------- add ----------------
 
     def add(self, value, mask: int) -> "MinMaskSketch":
-        if value is None:
-            return self
         self.add_batch([value], [mask])
         return self
 
@@ -91,11 +79,7 @@ class MinMaskSketch(MergeableSketch):
         pairs = [(v, m) for v, m in zip(values, masks) if v is not None and m is not None]
         if not pairs:
             return
-        vals = [v for v, _ in pairs]
-        if type_tag is None:
-            # shared int-width promotion/stickiness (resolve_batch_tag)
-            type_tag = enc.resolve_batch_tag(vals, self.item_type)
-        data, offsets, lengths = enc.encode_any(vals, type_tag)
+        data, offsets, lengths, type_tag = self._encode_batch([v for v, _ in pairs], type_tag)
         self.add_packed(
             data, offsets, lengths, np.asarray([m for _, m in pairs], dtype=U64), type_tag
         )
@@ -106,7 +90,7 @@ class MinMaskSketch(MergeableSketch):
             return
         self._bind_type(type_tag)
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
-        cols = self._cols(h1, h2)
+        cols = probe_index(h1, h2, self.depth, self.width)
         # sequential per update, as the write rule is order-dependent
         # (cms_mms.c:705-709); mask streams are short in practice
         for j in range(n):
@@ -123,27 +107,16 @@ class MinMaskSketch(MergeableSketch):
     # ---------------- query ----------------
 
     def get_mask(self, value) -> int | None:
-        """mms_get_mask: NULL → None. Type rules mirror CmsTopn.estimate: an
-        int too wide for the bound type was never added → empty mask 0; a
-        cross-family query (string vs int sketch) is a type error."""
+        """mms_get_mask: NULL → None; a value never added (see
+        :meth:`ItemSketch._probe_packed`) → empty mask 0."""
         if value is None:
             return None
-        tag = enc.infer_type_tag(value)
-        if self.item_type != enc.TYPE_UNSET and tag != self.item_type:
-            if tag == enc.TYPE_INT32 and self.item_type == enc.TYPE_INT64:
-                tag = enc.TYPE_INT64
-            elif tag == enc.TYPE_INT64 and self.item_type == enc.TYPE_INT32:
-                return 0
-            else:
-                # both int-width combinations are handled above, so any
-                # remaining mismatch is cross-family
-                raise SketchError("not a proper mms for the result type")
-        b = enc.encode_one(value, tag)
-        return int(self.get_masks_packed(b, np.array([0]), np.array([len(b)]))[0])
+        data, offsets, lengths, live = self._probe_packed([value])
+        return int(self.get_masks_packed(data, offsets, lengths)[0]) if live else 0
 
     def get_masks_packed(self, data, offsets, lengths) -> np.ndarray:
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
-        return self._min_pop_mask(self._cols(h1, h2))
+        return self._min_pop_mask(probe_index(h1, h2, self.depth, self.width))
 
     def info(self) -> str:
         size_kb = len(self.to_bytes()) // 1024
@@ -160,14 +133,8 @@ class MinMaskSketch(MergeableSketch):
             or self.confidence != other.confidence
         ):
             raise SketchError("cannot merge mms sketches with different parameters")
-        if (
-            self.item_type != enc.TYPE_UNSET
-            and other.item_type != enc.TYPE_UNSET
-            and self.item_type != other.item_type
-        ):
-            raise SketchError("cannot merge mms sketches of different types")
         out = MinMaskSketch(self.eps, self.confidence)
-        out.item_type = self.item_type if self.item_type != enc.TYPE_UNSET else other.item_type
+        out.item_type = self._merged_type(other)
         out.masks = self.masks | other.masks
         out.total = self.total + other.total
         return out

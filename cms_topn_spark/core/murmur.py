@@ -189,6 +189,13 @@ def _hash128_dense(
     return h1, h2
 
 
+def probe_index(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
+    """(k, n) probe indices ``g_i = (h1 + i*h2) mod 2**64 mod m`` for
+    ``i < k`` (Kirsch–Mitzenmacher; cms_mms.c:359-372)."""
+    i = np.arange(k, dtype=U64).reshape(k, 1)
+    return ((h1[None, :] + i * h2[None, :]) % U64(m)).astype(np.int64)
+
+
 def hash128_one(item: bytes, seed: int = MURMUR_SEED) -> tuple[int, int]:
     """Scalar convenience wrapper (used by tests and driver-side probes)."""
     h1, h2 = hash128(item, np.array([0]), np.array([len(item)]), seed)

@@ -38,7 +38,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..core import encoding as enc
-from ..core.base import fold_states
+from ..core.base import ItemSketch, fold_states
 
 STATE_SCHEMA = "partition_id int, state binary, input_rows long, build_wall_ms long"
 
@@ -102,10 +102,10 @@ def spark_item_tag(spark_type: str, caller: str) -> int:
 
 def ingest_array(sketch, arr: pa.Array) -> None:
     """Feed one Arrow array into a sketch, NULLs dropped, dispatching on the
-    sketch's protocol: packed item bytes for ``add_packed`` sketches
+    sketch's protocol: packed item bytes for an ``ItemSketch``
     (CMS/MMS/HLL/Bloom), float64 values for the numeric ones (KLL/t-digest,
     which take any numeric column, decimals included)."""
-    if hasattr(sketch, "add_packed"):
+    if isinstance(sketch, ItemSketch):
         data, offsets, lengths, tag = enc.pack_arrow_array(arr)
         sketch.add_packed(data, offsets, lengths, type_tag=tag)
     else:

@@ -36,7 +36,7 @@ from typing import Callable, Iterator
 import pandas as pd
 import pyarrow as pa
 
-from ..core.base import SketchError, fold_states, sketch_from_bytes
+from ..core.base import ItemSketch, SketchError, fold_states, sketch_from_bytes
 from ..operators.build import (
     SPARK_ITEM_TAGS,
     TAG_ARROW_TYPES,
@@ -159,8 +159,8 @@ def windowed_sketch_stream(
     collects. NULL rules are the aggregate's: NULL values are skipped, a row
     with a NULL event time has no window and is dropped, and a window whose
     values are all NULL gets no state. Value columns take the batch item
-    types (native ints, exact above 2^53); for an item sketch (one with
-    ``add_packed``) any other type raises ``TypeError`` here, before start.
+    types (native ints, exact above 2^53); for an ``ItemSketch`` any other
+    type raises ``TypeError`` here, before start.
 
     Late rows (within the watermark) fold into their window's existing state
     — merges are commutative, so late data needs no reprocessing. State files
@@ -173,7 +173,7 @@ def windowed_sketch_stream(
 
     from ..operators.grouped import _partial_states
 
-    if hasattr(factory(), "add_packed"):
+    if isinstance(factory(), ItemSketch):
         spark_item_tag(dict(stream_df.dtypes)[value_col], "windowed_sketch_stream")
     os.makedirs(state_dir, exist_ok=True)
 

@@ -84,6 +84,16 @@ def test_truncated_frames_raise_sketcherror_everywhere():
     bad = bad[:4] + bytes([99]) + bad[5:]
     with pytest.raises(SketchError):
         sketch_from_bytes(bad)
+    # unknown item-type tag (header byte 6) rejected by every kind
+    for name in ("cms_topn", "hll", "bloom", "kll", "tdigest", "mms"):
+        b = _load(name)
+        cls = type(sketch_from_bytes(b))
+        for tag in (9, 200):
+            bad = b[:6] + bytes([tag]) + b[7:]
+            with pytest.raises(SketchError, match="unknown item type tag"):
+                sketch_from_bytes(bad)
+            with pytest.raises(SketchError, match="unknown item type tag"):
+                cls.from_bytes(bad)
     assert _REGISTRY  # registry populated (guard applied to registered classes)
 
 

@@ -1,4 +1,4 @@
-"""Kernel edge-case guards: typed-query rules, NaN/weight handling, merge
+"""Kernel edge-case guards: the item-type policy, NaN/weight handling, merge
 determinism under mixed configs, and the murmur outlier-batch path."""
 
 import numpy as np
@@ -13,37 +13,66 @@ from cms_topn_spark.core import (
     SketchError,
     TDigest,
 )
+from cms_topn_spark.core import encoding as enc
+
+
+def _add_masks(sk, values):
+    sk.add_batch(values, [3] * len(values))
+
+
+# sketch → (empty sketch, batch add, one-item add, point probe, probe result
+# for an item added once, probe result for an item never added)
+_ITEM_SKETCHES = {
+    "cms_topn": (lambda: CmsTopn(5), CmsTopn.add_batch, CmsTopn.add, CmsTopn.estimate, 1, 0),
+    "mms": (
+        lambda: MinMaskSketch(0.001),
+        _add_masks,
+        lambda sk, v: sk.add(v, 3),
+        MinMaskSketch.get_mask,
+        3,
+        0,
+    ),
+    "hll": (HyperLogLog, HyperLogLog.add_batch, lambda sk, v: sk.add_batch([v]), None, None, None),
+    "bloom": (
+        lambda: BloomFilter(100),
+        BloomFilter.add_batch,
+        lambda sk, v: sk.add_batch([v]),
+        BloomFilter.contains,
+        True,
+        False,
+    ),
+}
 
 
 class TestTypedQueryRules:
-    def test_bloom_contains_wide_int_is_false_not_crash(self):
-        b = BloomFilter(100)
-        b.add_batch([5, 7])  # binds int32
-        assert b.contains(2**40) is False  # cannot fit ⇒ never added
-        assert b.contains(5) is True
-        with pytest.raises(SketchError):
-            b.contains("5")  # cross-family query is a type error
-
-    def test_bloom_small_int_probe_on_int64_filter(self):
-        b = BloomFilter(100)
-        b.add_batch([2**40, 5])  # binds int64 (wide value in batch)
-        assert b.contains(5) is True  # int32-looking probe coerces to int64
-        assert b.contains(2**40) is True
-
-    def test_mms_get_mask_wide_int_is_zero_not_crash(self):
-        m = MinMaskSketch(0.001)
-        m.add(5, 3)  # binds int32
-        assert m.get_mask(2**40) == 0
-        assert m.get_mask(5) == 3
-        with pytest.raises(SketchError):
-            m.get_mask("x")
-
-    def test_cms_single_add_coerces_like_batch(self):
-        s = CmsTopn(5)
-        s.add(2**40)  # binds int64
-        s.add(5)  # must coerce to int64, not raise
-        assert s.estimate(5) == 1
-        assert s.estimate(2**40) == 1
+    @pytest.mark.parametrize("name", list(_ITEM_SKETCHES))
+    def test_item_type_policy(self, name):
+        """The item-type policy every hashed sketch shares (ItemSketch)."""
+        make, add, add_one, probe, hit, never = _ITEM_SKETCHES[name]
+        narrow = make()
+        add_one(narrow, 5)  # the first add binds the type
+        assert narrow.item_type == enc.TYPE_INT32
+        wide = make()
+        add(wide, [2**40, 5])  # one wide int encodes the whole batch as int64
+        assert wide.item_type == enc.TYPE_INT64
+        one_by_one = make()
+        add_one(one_by_one, 2**40)
+        add_one(one_by_one, 5)  # an int32-looking add to an int64 sketch is int64
+        assert one_by_one.to_bytes() == wide.to_bytes()
+        if probe is not None:
+            assert probe(narrow, 5) == hit
+            assert probe(narrow, 2**40) == never  # cannot fit int32 ⇒ never added
+            assert probe(wide, 5) == hit  # int32-looking probe reads as int64
+            assert probe(wide, 2**40) == hit
+            with pytest.raises(SketchError, match=f"not a proper {narrow.NAME} for the result type"):
+                probe(narrow, "5")
+        with pytest.raises(SketchError, match=f"not proper type for this {narrow.NAME}"):
+            add(narrow, ["5"])
+        strings = make()
+        add_one(strings, "5")
+        with pytest.raises(SketchError, match=f"cannot merge {narrow.PLURAL} of different types"):
+            narrow.merge(strings)
+        assert make().merge(narrow).item_type == enc.TYPE_INT32  # the bound side's type
 
 
 class TestNanAndWeightHandling:
