@@ -74,6 +74,20 @@ class TestTypedQueryRules:
             narrow.merge(strings)
         assert make().merge(narrow).item_type == enc.TYPE_INT32  # the bound side's type
 
+    def test_bloom_contains_wide_int_is_false_not_crash(self):
+        b = BloomFilter(100)
+        b.add_batch([5, 7])  # binds int32
+        assert b.contains(2**40) is False  # cannot fit ⇒ never added
+        assert b.contains(5) is True
+        with pytest.raises(SketchError):
+            b.contains("5")  # cross-family query is a type error
+
+    def test_bloom_small_int_probe_on_int64_filter(self):
+        b = BloomFilter(100)
+        b.add_batch([2**40, 5])  # binds int64 (wide value in batch)
+        assert b.contains(5) is True  # int32-looking probe coerces to int64
+        assert b.contains(2**40) is True
+
 
 class TestNanAndWeightHandling:
     def test_tdigest_nan_in_list_dropped(self):
