@@ -20,9 +20,12 @@ groups at once:
 The four hashed sketches (CMS+top-n, min-mask, HLL, Bloom) take items, not
 numbers, and share one item-type policy through :class:`ItemSketch`, the
 reference's "dynamic but sticky" typing (SURVEY.md §1.2): the first add binds
-the type; a batch holding an int outside int32 range encodes as int64 whole;
-an add, a point probe or a union of another bound type raises, except that
-an int32-looking probe reads an int64 sketch as int64 and an int too wide for
+the type; a batch or probe list of Python values is one Arrow array
+(:func:`encoding.python_items`) typed from every value, so a batch of two
+families raises ``TypeError``, ints and floats together are float64, and a
+batch holding an int outside int32 range encodes as int64 whole; an add, a
+point probe or a union of another bound type raises, except that an
+int32-looking probe reads an int64 sketch as int64 and an int too wide for
 an int32 sketch reads as never added. The error messages are built from the
 class attributes ``NAME`` and ``PLURAL``. KLL and t-digest take numeric
 values and have no item type.
@@ -45,6 +48,7 @@ from abc import ABC, abstractmethod
 from typing import Iterable, Iterator, Sequence
 
 import numpy as np
+import pyarrow as pa
 
 from . import encoding as enc
 
@@ -170,7 +174,13 @@ class ItemSketch(MergeableSketch):
             raise SketchError(f"not proper type for this {self.NAME}")
 
     def add_batch(self, values, counts=None, type_tag: int | None = None) -> None:
-        """Add Python values, NULLs (and their counts) dropped."""
+        """Add Python values, NULLs (and their counts) dropped.
+
+        Python ints carry no width, so a batch binds int32 unless it holds an
+        int outside int32 range: two partials of one int stream can bind
+        int32 and int64 and then refuse to merge. Pass
+        ``type_tag=TYPE_INT64``, or feed an Arrow int64 column, to bind every
+        partial to int64."""
         if counts is not None:
             counts = np.asarray(
                 [c for v, c in zip(values, counts) if v is not None], dtype=np.int64
@@ -181,11 +191,9 @@ class ItemSketch(MergeableSketch):
             self.add_packed(data, offsets, lengths, counts=counts, type_tag=type_tag)
 
     def _encode_batch(self, values: list, type_tag: int | None):
-        """Non-NULL values → ``(data, offsets, lengths, type_tag)``, the tag
-        from :func:`encoding.resolve_batch_tag` unless given."""
-        if type_tag is None:
-            type_tag = enc.resolve_batch_tag(values, self.item_type)
-        return (*enc.encode_any(values, type_tag), type_tag)
+        """Non-NULL values → ``(data, offsets, lengths, type_tag)`` through
+        :func:`encoding.python_items`, the type inferred unless given."""
+        return enc.pack_arrow_array(enc.python_items(values, type_tag, self.item_type))
 
     def _probe_packed(self, values):
         """Point-probe values → ``(data, offsets, lengths, live)``: the packed
@@ -193,22 +201,20 @@ class ItemSketch(MergeableSketch):
         type would have added it. A NULL, or an int too wide for a bound
         int32, was never added and is not live; any other type mismatch
         raises."""
+        live = [i for i, v in enumerate(values) if v is not None]
+        if not live:
+            return (*enc.pack_bytes([]), live)
         bound = self.item_type
-        live, items = [], []
-        for i, v in enumerate(values):
-            if v is None:
-                continue
-            tag = enc.infer_type_tag(v)
-            if bound != enc.TYPE_UNSET and tag != bound:
-                if tag == enc.TYPE_INT32 and bound == enc.TYPE_INT64:
-                    tag = enc.TYPE_INT64
-                elif tag == enc.TYPE_INT64 and bound == enc.TYPE_INT32:
-                    continue
-                else:
-                    raise SketchError(f"not a proper {self.NAME} for the result type")
-            live.append(i)
-            items.append(enc.encode_one(v, tag))
-        return (*enc.pack_bytes(items), live)
+        arr = enc.python_items([values[i] for i in live], bound=bound)
+        tag = enc.arrow_type_tag(arr.type)
+        if bound == enc.TYPE_INT32 and tag == enc.TYPE_INT64:
+            ints = arr.to_numpy()
+            fits = (ints >= -(2**31)) & (ints < 2**31)
+            live = [i for i, f in zip(live, fits.tolist()) if f]
+            arr = pa.array(ints[fits], pa.int32())
+        elif bound not in (enc.TYPE_UNSET, tag):
+            raise SketchError(f"not a proper {self.NAME} for the result type")
+        return (*enc.pack_arrow_array(arr)[:3], live)
 
     def _merged_type(self, other: "ItemSketch") -> int:
         """The item type of ``self ∪ other``: the one either side bound; two

@@ -1,4 +1,4 @@
-"""Canonical item → hash-input-bytes encoding.
+"""Canonical item → hash-input-bytes encoding, over Arrow arrays.
 
 Mirrors the reference's ``_convertDatumToBytes`` (cms_mms.c:394-418): by-value
 fixed-width types hash as their first ``typlen`` little-endian bytes (int4 → 4
@@ -6,14 +6,19 @@ LE bytes, int8 → 8 LE bytes), varlena types hash as their payload bytes with n
 header (text → UTF-8 bytes, bytea → raw). This table is frozen: cross-language
 hash compatibility (and therefore golden parity) depends on it.
 
-All encoders return ``(data, offsets, lengths)`` in the packed layout consumed
-by :func:`cms_topn_spark.core.murmur.hash128`, plus the item-type tag stored in
-the serialized sketch header (§1.2 of SURVEY.md: type stickiness).
+There is one encoder, :func:`pack_arrow_array`: an Arrow array →
+``(data, offsets, lengths)`` in the packed layout consumed by
+:func:`cms_topn_spark.core.murmur.hash128`, plus the item-type tag stored in
+the serialized sketch header (§1.2 of SURVEY.md: type stickiness). Python
+values reach it through :func:`python_items`, which makes them one Arrow
+array; ``TAG_ARROW_TYPES`` and :func:`arrow_type_tag` map tags to Arrow types
+and back.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 # item-type tags stored in the serialized header
 TYPE_UNSET = 0
@@ -32,48 +37,15 @@ TYPE_NAMES = {
     TYPE_FLOAT64: "float64",
 }
 
-
-def encode_fixed(values: np.ndarray, itemsize: int) -> tuple[bytes, np.ndarray, np.ndarray]:
-    data = np.ascontiguousarray(values).tobytes()
-    n = len(values)
-    lengths = np.full(n, itemsize, dtype=np.int64)
-    offsets = np.arange(n, dtype=np.int64) * itemsize
-    return data, offsets, lengths
-
-
-def encode_int32(values) -> tuple[bytes, np.ndarray, np.ndarray]:
-    a = np.asarray(values)
-    if a.size and (int(a.max()) >= 2**31 or int(a.min()) < -(2**31)):
-        # a silent C-cast wrap would hash a DIFFERENT identity (verified:
-        # 2**40 wraps to 0) — callers must promote the batch to int64 first
-        # (resolve_batch_tag does); raising here is the backstop
-        raise OverflowError("int32-tagged batch contains values outside int32 range")
-    return encode_fixed(a.astype("<i4"), 4)
-
-
-def encode_int64(values) -> tuple[bytes, np.ndarray, np.ndarray]:
-    return encode_fixed(np.asarray(values).astype("<i8"), 8)
-
-
-def encode_float64(values) -> tuple[bytes, np.ndarray, np.ndarray]:
-    return encode_fixed(np.asarray(values).astype("<f8"), 8)
-
-
-def encode_bytes_list(values) -> tuple[bytes, np.ndarray, np.ndarray]:
-    """values: sequence of ``bytes`` (or str, encoded UTF-8). Nones dropped by
-    caller. Anything else raises: ``bytes(3)`` would silently encode the
-    integer 3 as three NUL bytes and merge unrelated items' counts."""
-    bs = []
-    for v in values:
-        if isinstance(v, str):
-            bs.append(v.encode("utf-8"))
-        elif isinstance(v, (bytes, bytearray, memoryview)):
-            bs.append(bytes(v))
-        else:
-            raise TypeError(
-                f"cannot encode {type(v).__name__} as a string/binary item"
-            )
-    return pack_bytes(bs)
+# the Arrow type each tag encodes from (inverse: arrow_type_tag)
+TAG_ARROW_TYPES = {
+    TYPE_INT32: pa.int32(),
+    TYPE_INT64: pa.int64(),
+    TYPE_FLOAT64: pa.float64(),
+    TYPE_STRING: pa.string(),
+    TYPE_BINARY: pa.binary(),
+}
+_NUMERIC_TAGS = (TYPE_INT32, TYPE_INT64, TYPE_FLOAT64)
 
 
 def pack_bytes(items: list[bytes]) -> tuple[bytes, np.ndarray, np.ndarray]:
@@ -86,8 +58,6 @@ def pack_bytes(items: list[bytes]) -> tuple[bytes, np.ndarray, np.ndarray]:
 
 def encode_arrow_strings(arr) -> tuple[bytes, np.ndarray, np.ndarray]:
     """Zero-copy fast path for a pyarrow StringArray / BinaryArray chunk."""
-    import pyarrow as pa
-
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if arr.null_count:
@@ -106,8 +76,6 @@ def encode_arrow_strings(arr) -> tuple[bytes, np.ndarray, np.ndarray]:
 
 def arrow_type_tag(t) -> int:
     """Item-type tag of a pyarrow type; composite types raise ``TypeError``."""
-    import pyarrow as pa
-
     if pa.types.is_int32(t) or pa.types.is_int16(t) or pa.types.is_int8(t):
         return TYPE_INT32
     if pa.types.is_int64(t):
@@ -125,9 +93,8 @@ def pack_arrow_array(arr) -> tuple[bytes | np.ndarray, np.ndarray, np.ndarray, i
     """Arrow array → (data, offsets, lengths, type_tag), nulls dropped.
 
     Strings/binary are zero-copy views over the Arrow buffers; fixed-width
-    types are encoded via their canonical little-endian forms (§2.1 #10)."""
-    import pyarrow as pa
-
+    types are views of the value buffer in their canonical little-endian
+    forms (§2.1 #10), int8/int16 widened to int32 and float32 to float64."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if pa.types.is_dictionary(arr.type):
@@ -136,70 +103,46 @@ def pack_arrow_array(arr) -> tuple[bytes | np.ndarray, np.ndarray, np.ndarray, i
     if arr.null_count:
         arr = arr.drop_null()
     if tag in (TYPE_STRING, TYPE_BINARY):
-        data, offsets, lengths = encode_arrow_strings(arr)
-    elif tag == TYPE_INT32:
-        data, offsets, lengths = encode_int32(arr.to_numpy(zero_copy_only=False))
-    elif tag == TYPE_INT64:
-        data, offsets, lengths = encode_int64(arr.to_numpy(zero_copy_only=False))
-    else:
-        data, offsets, lengths = encode_float64(arr.to_numpy(zero_copy_only=False))
-    return data, offsets, lengths, tag
+        return (*encode_arrow_strings(arr), tag)
+    if arr.type != TAG_ARROW_TYPES[tag]:
+        arr = arr.cast(TAG_ARROW_TYPES[tag])
+    width = arr.type.byte_width
+    n = len(arr)
+    # the value buffer is native-endian: these are the little-endian forms
+    # on a little-endian host
+    data = np.frombuffer(
+        arr.buffers()[1], dtype=np.uint8, count=n * width, offset=arr.offset * width
+    )
+    return data, np.arange(n, dtype=np.int64) * width, np.full(n, width, dtype=np.int64), tag
 
 
-def encode_any(values, type_tag: int) -> tuple[bytes, np.ndarray, np.ndarray]:
-    if type_tag == TYPE_INT32:
-        return encode_int32(values)
-    if type_tag == TYPE_INT64:
-        return encode_int64(values)
-    if type_tag == TYPE_FLOAT64:
-        return encode_float64(values)
-    if type_tag in (TYPE_STRING, TYPE_BINARY):
-        return encode_bytes_list(values)
-    raise ValueError(f"unknown item type tag {type_tag}")
+def python_items(values, type_tag: int | None = None, bound: int = TYPE_UNSET) -> pa.Array:
+    """Non-NULL Python item values → one Arrow array for :func:`pack_arrow_array`.
 
-
-def infer_type_tag(value) -> int:
-    if isinstance(value, bool):
-        raise TypeError("composite types are not supported")
-    if isinstance(value, (int, np.integer)):
-        v = int(value)
-        if -(2**31) <= v < 2**31:
-            return TYPE_INT32
-        return TYPE_INT64
-    if isinstance(value, (float, np.floating)):
-        return TYPE_FLOAT64
-    if isinstance(value, str):
-        return TYPE_STRING
-    if isinstance(value, (bytes, bytearray, memoryview)):
-        return TYPE_BINARY
-    raise TypeError("composite types are not supported")
-
-
-def resolve_batch_tag(vals, bound_tag: int = TYPE_UNSET) -> int:
-    """Batch encoding tag from the first value, with the int-width rules
-    every sketch must share: any value outside int32 range promotes the
-    WHOLE batch to int64 (a per-value wrap would hash a different identity),
-    and a sketch already bound to int64 keeps int64 encoding (stickiness)."""
-    tag = infer_type_tag(vals[0])
-    if tag == TYPE_INT32 and any(not (-(2**31) <= v < 2**31) for v in vals):
-        tag = TYPE_INT64
-    if tag == TYPE_INT32 and bound_tag == TYPE_INT64:
-        tag = TYPE_INT64
-    return tag
-
-
-def encode_one(value, type_tag: int) -> bytes:
-    if type_tag == TYPE_INT32:
-        return int(value).to_bytes(4, "little", signed=True)
-    if type_tag == TYPE_INT64:
-        return int(value).to_bytes(8, "little", signed=True)
-    if type_tag == TYPE_FLOAT64:
-        return np.float64(value).tobytes()
-    if type_tag == TYPE_STRING:
-        return value.encode("utf-8") if isinstance(value, str) else bytes(value)
-    if type_tag == TYPE_BINARY:
-        return bytes(value)
-    raise ValueError(f"unknown item type tag {type_tag}")
+    Arrow infers the type from every value, so values of two families (int
+    and str, int and bool) or an int outside int64 raise ``TypeError``; a
+    float among ints makes the batch float64. An int batch narrows to int32
+    (PG's int4) unless a value is outside int32 range or ``bound`` is int64.
+    A given ``type_tag`` is a checked cast within the item's family (numbers,
+    or strings and bytes): 1.5 forced to an int raises, and so does 5 forced
+    to a string."""
+    try:
+        arr = pa.array(values)
+        if type_tag is None:
+            if not pa.types.is_integer(arr.type):
+                return arr
+            if bound != TYPE_INT64:
+                try:
+                    return arr if pa.types.is_int32(arr.type) else arr.cast(pa.int32())
+                except pa.ArrowInvalid:
+                    pass  # a value outside int32: the whole batch is int64
+            type_tag = TYPE_INT64
+        elif (arrow_type_tag(arr.type) in _NUMERIC_TAGS) != (type_tag in _NUMERIC_TAGS):
+            raise TypeError(f"{arr.type} items cannot be {TYPE_NAMES[type_tag]} items")
+        want = TAG_ARROW_TYPES[type_tag]
+        return arr if arr.type == want else arr.cast(want)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, pa.ArrowNotImplementedError, OverflowError) as e:
+        raise TypeError(f"cannot convert the items to one item type: {e}") from e
 
 
 def decode_one(item: bytes, type_tag: int):

@@ -80,14 +80,15 @@ class MinMaskSketch(ItemSketch):
         if not pairs:
             return
         data, offsets, lengths, type_tag = self._encode_batch([v for v, _ in pairs], type_tag)
-        self.add_packed(
-            data, offsets, lengths, np.asarray([m for _, m in pairs], dtype=U64), type_tag
-        )
+        self.add_packed(data, offsets, lengths, [m for _, m in pairs], type_tag)
 
-    def add_packed(self, data, offsets, lengths, masks: np.ndarray, type_tag: int) -> None:
+    def add_packed(self, data, offsets, lengths, masks, type_tag: int) -> None:
+        """Bulk add; ``masks`` is cast to uint64 keeping the bits (an int64
+        -1 is the all-ones mask)."""
         n = len(lengths)
         if n == 0:
             return
+        masks = np.asarray(masks, dtype=U64)
         self._bind_type(type_tag)
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
         cols = probe_index(h1, h2, self.depth, self.width)

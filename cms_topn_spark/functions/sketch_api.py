@@ -37,7 +37,6 @@ from ..core import (
 from ..core import encoding as enc
 from ..operators.build import (
     STATE_SCHEMA,
-    TAG_ARROW_TYPES,
     TAG_TOPN_TYPES,
     _collect_states,
     _fold_task,
@@ -45,6 +44,7 @@ from ..operators.build import (
     default_ingest,
     plan_num_partitions,
     sketch_agg,
+    weighted_ingest,
 )
 from ..spark_session import local_frame
 
@@ -75,8 +75,6 @@ def cms_topn_add_agg(
     """Distributed cms_topn_add_agg: validates parameters eagerly (verbatim
     errors), builds per-partition partials, merges them. With ``count_col``
     the input is treated as pre-aggregated (item, count) pairs."""
-    from ..operators.build import weighted_ingest
-
     CmsTopn(n, e, p)  # eager parameter validation, same error order
     cols = [column] if count_col is None else [column, count_col]
     return sketch_agg(
@@ -173,7 +171,9 @@ def topn_explode(
     item_t = TAG_TOPN_TYPES.get(type_tag, "string")
     # int32 items widen to the declared bigint on the way back to the JVM
     out_arrow = pa.list_(
-        pa.struct([("item", TAG_ARROW_TYPES.get(type_tag, pa.string())), ("frequency", pa.int64())])
+        pa.struct(
+            [("item", enc.TAG_ARROW_TYPES.get(type_tag, pa.string())), ("frequency", pa.int64())]
+        )
     )
 
     @arrow_udf(f"array<struct<item:{item_t},frequency:bigint>>")
@@ -241,7 +241,7 @@ def _pack_for_probe(items: pa.Array, sk) -> tuple:
                 f"sketch's bound item type tag {want}"
             )
         try:
-            arr = arr.cast(TAG_ARROW_TYPES[want])
+            arr = arr.cast(enc.TAG_ARROW_TYPES[want])
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as e:
             raise TypeError(
                 f"probe column type {arr.type} has values not representable "
@@ -360,16 +360,9 @@ def tdigest_add_agg(df: DataFrame, column: str, delta: float = 100.0, **kw) -> T
 def mms_add_agg(
     df: DataFrame, item_col: str, mask_col: str, e: float = 0.001, p: float = 0.99, **kw
 ) -> MinMaskSketch | None:
-    def ingest(sk: MinMaskSketch, batch: pa.RecordBatch) -> None:
-        tbl = pa.Table.from_batches([batch])
-        tbl = tbl.drop_null()
-        if tbl.num_rows == 0:
-            return
-        data, offsets, lengths, tag = enc.pack_arrow_array(tbl.column(0).combine_chunks())
-        masks = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.uint64)
-        sk.add_packed(data, offsets, lengths, masks, tag)
-
-    return sketch_agg(df.select(item_col, mask_col), lambda: MinMaskSketch(e, p), ingest, **kw)
+    return sketch_agg(
+        df.select(item_col, mask_col), lambda: MinMaskSketch(e, p), weighted_ingest, **kw
+    )
 
 
 def bloom_semi_join(

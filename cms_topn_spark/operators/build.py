@@ -58,8 +58,8 @@ _PA_STATE_SCHEMA = pa.schema(
 
 # The item-type table, one decision for every surface that turns a column
 # into sketch items or sketch items back into a column: Spark column type →
-# encoding tag → (Arrow type, topn item column type). Unbound tags render as
-# strings in topn()/topn_explode.
+# encoding tag → (Arrow type in ``encoding.TAG_ARROW_TYPES``, topn item column
+# type). Unbound tags render as strings in topn()/topn_explode.
 SPARK_ITEM_TAGS = {
     "tinyint": enc.TYPE_INT32,
     "smallint": enc.TYPE_INT32,
@@ -69,13 +69,6 @@ SPARK_ITEM_TAGS = {
     "double": enc.TYPE_FLOAT64,
     "string": enc.TYPE_STRING,
     "binary": enc.TYPE_BINARY,
-}
-TAG_ARROW_TYPES = {
-    enc.TYPE_INT32: pa.int32(),
-    enc.TYPE_INT64: pa.int64(),
-    enc.TYPE_FLOAT64: pa.float64(),
-    enc.TYPE_STRING: pa.string(),
-    enc.TYPE_BINARY: pa.binary(),
 }
 # the encoding hashes every float as float64, and int items decode as bigint
 TAG_TOPN_TYPES = {
@@ -123,14 +116,15 @@ def default_ingest(sketch, batch: pa.RecordBatch) -> None:
 
 
 def weighted_ingest(sketch, batch: pa.RecordBatch) -> None:
-    """Feed (item, count) pairs — for pre-aggregated inputs, e.g. the output
-    of an upstream groupBy that already holds partial counts."""
+    """Feed (item, weight) pairs, rows with a NULL in either column dropped.
+    The weight goes to ``add_packed`` positionally: a count for CMS (e.g. the
+    partial counts of an upstream groupBy) and Bloom, a mask for MMS."""
     tbl = pa.Table.from_batches([batch]).drop_null()
     if tbl.num_rows == 0:
         return
     data, offsets, lengths, tag = enc.pack_arrow_array(tbl.column(0).combine_chunks())
-    counts = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-    sketch.add_packed(data, offsets, lengths, counts=counts, type_tag=tag)
+    weights = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
+    sketch.add_packed(data, offsets, lengths, weights, type_tag=tag)
 
 
 _NPARTS_CACHE: dict = {}

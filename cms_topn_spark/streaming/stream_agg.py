@@ -37,14 +37,8 @@ import pandas as pd
 import pyarrow as pa
 
 from ..core.base import ItemSketch, SketchError, fold_states, sketch_from_bytes
-from ..operators.build import (
-    SPARK_ITEM_TAGS,
-    TAG_ARROW_TYPES,
-    build_partials,
-    default_ingest,
-    ingest_array,
-    spark_item_tag,
-)
+from ..core.encoding import TAG_ARROW_TYPES
+from ..operators.build import SPARK_ITEM_TAGS, build_partials, ingest_array, spark_item_tag
 from ..spark_session import local_frame
 
 STATE_FILE = "state.bin"
@@ -124,8 +118,10 @@ def sketch_stream_agg(
         committed, prev = _read_frame(p)
         if batch_id <= committed:
             return  # replayed batch after restart — already folded
-        states = build_partials(batch_df, factory, default_ingest).collect()
-        delta = fold_states(r["state"] for r in states)
+        # a direct collect, not sketch_agg: every micro-batch is a new plan,
+        # so sketch_agg's partition count would cost a plan→RDD conversion
+        # per batch
+        delta = fold_states(r["state"] for r in build_partials(batch_df, factory).collect())
         if delta is not None:  # an empty batch leaves the state as it is
             # committed ⊕ delta: the merge order every commit has used
             prev = (delta if prev is None else sketch_from_bytes(prev).merge(delta)).to_bytes()

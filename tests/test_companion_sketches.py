@@ -96,14 +96,14 @@ class TestBloom:
         bf = BloomFilter(capacity=10_000, fpp=1e-6)
         members = [f"key-{i}" for i in range(5000)]
         bf.add_batch(members)
-        data, offs, lens = enc.encode_bytes_list(members)
+        data, offs, lens = enc.pack_bytes([m.encode() for m in members])
         assert bf.contains_packed(data, offs, lens).all()
 
     def test_fpp_bound(self):
         bf = BloomFilter(capacity=10_000, fpp=1e-4)
         bf.add_batch([f"key-{i}" for i in range(10_000)])
         probes = [f"other-{i}" for i in range(20_000)]
-        data, offs, lens = enc.encode_bytes_list(probes)
+        data, offs, lens = enc.pack_bytes([p.encode() for p in probes])
         fp = int(bf.contains_packed(data, offs, lens).sum())
         assert fp / 20_000 < 1e-3  # order of magnitude headroom
 

@@ -16,8 +16,8 @@ from cms_topn_spark.core import (
 from cms_topn_spark.core import encoding as enc
 
 
-def _add_masks(sk, values):
-    sk.add_batch(values, [3] * len(values))
+def _add_masks(sk, values, **kw):
+    sk.add_batch(values, [3] * len(values), **kw)
 
 
 # sketch → (empty sketch, batch add, one-item add, point probe, probe result
@@ -44,11 +44,38 @@ _ITEM_SKETCHES = {
 }
 
 
+# mixed-family Python batch → (type_tag given to add_batch, the bound type
+# or the error); Arrow infers one type from every value, never the first only
+_MIXED_BATCHES = {
+    "int_float": ([2, 1.5], None, enc.TYPE_FLOAT64),
+    "int_bool": ([5, True], None, TypeError),
+    "int_str": ([1, "a"], None, TypeError),
+    "float_as_int32": ([2, 1.5], enc.TYPE_INT32, TypeError),
+}
+
+
 class TestTypedQueryRules:
-    @pytest.mark.parametrize("name", list(_ITEM_SKETCHES))
-    def test_item_type_policy(self, name):
+    @pytest.mark.parametrize(
+        "name, mixed",
+        [pytest.param(n, None, id=n) for n in _ITEM_SKETCHES]
+        + [pytest.param(n, m, id=f"{n}-{m}") for n in _ITEM_SKETCHES for m in _MIXED_BATCHES],
+    )
+    def test_item_type_policy(self, name, mixed):
         """The item-type policy every hashed sketch shares (ItemSketch)."""
         make, add, add_one, probe, hit, never = _ITEM_SKETCHES[name]
+        if mixed is not None:
+            batch, type_tag, want = _MIXED_BATCHES[mixed]
+            sk = make()
+            if want is TypeError:
+                with pytest.raises(TypeError, match="cannot convert the items to one item type"):
+                    add(sk, batch, type_tag=type_tag)
+                assert sk.item_type == enc.TYPE_UNSET  # a refused batch binds nothing
+            else:
+                add(sk, batch, type_tag=type_tag)
+                assert sk.item_type == want
+                if probe is not None:
+                    assert probe(sk, 2.0) == hit and probe(sk, 1.5) == hit
+            return
         narrow = make()
         add_one(narrow, 5)  # the first add binds the type
         assert narrow.item_type == enc.TYPE_INT32

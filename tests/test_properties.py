@@ -277,10 +277,9 @@ def test_conservative_segmented_scatter_equals_maximum_at(vals):
 
     uniq, counts = np.unique(np.asarray(vals, dtype=np.int64), return_counts=True)
 
-    from cms_topn_spark.core.encoding import encode_int64
     from cms_topn_spark.core.murmur import MURMUR_SEED, hash128
 
-    data, offs, lens = encode_int64(uniq)
+    data, offs, lens, _ = enc.pack_arrow_array(pa.array(uniq))
     h1, h2 = hash128(data, offs, lens, MURMUR_SEED)
     cols = ref._cols(h1, h2)
     newval = ref._estimate_cols(cols) + counts.astype("uint64")
@@ -439,7 +438,7 @@ def _reference_merge(a: CmsTopn, b: CmsTopn) -> CmsTopn:
                 cand[it] = seq
     if cand:
         items = list(cand.keys())
-        data, offsets, lengths = enc.encode_bytes_list(items)
+        data, offsets, lengths = enc.pack_bytes(items)
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
         est = out._estimate_cols(out._cols(h1, h2)).astype(np.int64)
         ranked = sorted(
