@@ -23,10 +23,14 @@ reference's "dynamic but sticky" typing (SURVEY.md §1.2): the first add binds
 the type; a batch or probe list of Python values is one Arrow array
 (:func:`encoding.python_items`) typed from every value, so a batch of two
 families raises ``TypeError``, ints and floats together are float64, and a
-batch holding an int outside int32 range encodes as int64 whole; an add, a
-point probe or a union of another bound type raises, except that an
-int32-looking probe reads an int64 sketch as int64 and an int too wide for
-an int32 sketch reads as never added. The error messages are built from the
+batch holding an int outside int32 range encodes as int64 whole; an add or a
+union of another bound type raises. Every point probe, Python value or Spark
+column, is one Arrow array under one rule (:meth:`ItemSketch._probe`):
+numbers (int32, int64, float64) are one family and strings and bytes one
+family each; a probe from another family raises; a NULL, or a number the
+bound type cannot hold exactly (2**40 in an int32 sketch, 7.5 in an int
+one), was never added; any other number probes as the bound type (7.0 as
+the int 7, an int32 as an int64). The error messages are built from the
 class attributes ``NAME`` and ``PLURAL``. KLL and t-digest take numeric
 values and have no item type.
 
@@ -43,6 +47,7 @@ part of the contract and is covered by property tests.
 
 from __future__ import annotations
 
+import functools
 import struct
 from abc import ABC, abstractmethod
 from typing import Iterable, Iterator, Sequence
@@ -79,23 +84,20 @@ def register(kind: int):
 
 
 def frame_guarded(fn):
-    """Wrap a ``from_bytes`` implementation so ANY malformed frame —
-    truncated payload, short header, impossible field values — surfaces as
-    SketchError, never a raw numpy/struct exception. ``sketch_from_bytes``
-    has always guaranteed this for the polymorphic path; the per-class
-    ``CmsTopn.from_bytes(...)`` entry points are equally part of the public
-    surface and get the same guarantee (round-6 verify probe)."""
+    """Wrap a deserializer (a ``from_bytes`` implementation, or
+    :func:`sketch_from_bytes`) so ANY malformed frame — truncated payload,
+    short header, impossible field values — surfaces as SketchError, never a
+    raw numpy/struct exception."""
 
-    def wrapped(cls, b: bytes):
+    @functools.wraps(fn)
+    def wrapped(*args):
         try:
-            return fn(cls, b)
+            return fn(*args)
         except SketchError:
             raise
         except (ValueError, struct.error, IndexError, OverflowError) as e:
             raise SketchError(f"corrupt serialized sketch: {e}") from e
 
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
     return wrapped
 
 
@@ -195,26 +197,24 @@ class ItemSketch(MergeableSketch):
         :func:`encoding.python_items`, the type inferred unless given."""
         return enc.pack_arrow_array(enc.python_items(values, type_tag, self.item_type))
 
-    def _probe_packed(self, values):
-        """Point-probe values → ``(data, offsets, lengths, live)``: the packed
-        bytes of the probes at indices ``live``, each encoded as the bound
-        type would have added it. A NULL, or an int too wide for a bound
-        int32, was never added and is not live; any other type mismatch
-        raises."""
-        live = [i for i, v in enumerate(values) if v is not None]
-        if not live:
-            return (*enc.pack_bytes([]), live)
-        bound = self.item_type
-        arr = enc.python_items([values[i] for i in live], bound=bound)
-        tag = enc.arrow_type_tag(arr.type)
-        if bound == enc.TYPE_INT32 and tag == enc.TYPE_INT64:
-            ints = arr.to_numpy()
-            fits = (ints >= -(2**31)) & (ints < 2**31)
-            live = [i for i, f in zip(live, fits.tolist()) if f]
-            arr = pa.array(ints[fits], pa.int32())
-        elif bound not in (enc.TYPE_UNSET, tag):
-            raise SketchError(f"not a proper {self.NAME} for the result type")
-        return (*enc.pack_arrow_array(arr)[:3], live)
+    def _probe(self, items: pa.Array, query, miss) -> np.ndarray:
+        """The one point-probe rule of the module docstring: one answer per
+        item, ``query(data, offsets, lengths)`` where the item is live,
+        encoded as the bound type would have added it, and ``miss`` (whose
+        dtype the answers take) where it is NULL or was never added. An
+        all-NULL array answers ``miss`` without a type check."""
+        out = np.full(len(items), miss)
+        if pa.types.is_null(items.type):
+            return out
+        bound, tag = self.item_type, enc.arrow_type_tag(items.type)
+        if bound not in (enc.TYPE_UNSET, tag):
+            if tag not in enc.NUMERIC_TAGS or bound not in enc.NUMERIC_TAGS:
+                raise SketchError(f"not a proper {self.NAME} for the result type")
+            items = enc.held_items(items, bound)
+        live = items.is_valid().to_numpy(zero_copy_only=False)
+        if live.any():
+            out[live] = query(*enc.pack_arrow_array(items)[:3])
+        return out
 
     def _merged_type(self, other: "ItemSketch") -> int:
         """The item type of ``self ∪ other``: the one either side bound; two
@@ -225,21 +225,14 @@ class ItemSketch(MergeableSketch):
         return a if a != enc.TYPE_UNSET else b
 
 
+@frame_guarded
 def sketch_from_bytes(b: bytes) -> MergeableSketch:
-    """Polymorphic deserializer: dispatch on the kind byte.
-
-    Any malformed frame — truncated payload, short header, impossible field
-    values — surfaces as SketchError, never a raw numpy/struct exception."""
-    try:
-        kind, _, _, _ = MergeableSketch.unpack_header(b)
-        cls = _REGISTRY.get(kind)
-        if cls is None:
-            raise SketchError(f"unknown sketch kind {kind}")
-        return cls.from_bytes(b)
-    except SketchError:
-        raise
-    except (ValueError, struct.error, IndexError, OverflowError) as e:
-        raise SketchError(f"corrupt serialized sketch: {e}") from e
+    """Polymorphic deserializer: dispatch on the kind byte."""
+    kind, _, _, _ = MergeableSketch.unpack_header(b)
+    cls = _REGISTRY.get(kind)
+    if cls is None:
+        raise SketchError(f"unknown sketch kind {kind}")
+    return cls.from_bytes(b)
 
 
 def sketch_to_hex(sk: MergeableSketch) -> str:

@@ -70,9 +70,9 @@ class BloomFilter(ItemSketch):
 
     def contains(self, value) -> bool:
         """Membership probe: NULL, or a value never added (see
-        :meth:`ItemSketch._probe_packed`) → False."""
-        data, offsets, lengths, live = self._probe_packed([value])
-        return bool(self.contains_packed(data, offsets, lengths)[0]) if live else False
+        :meth:`ItemSketch._probe`) → False."""
+        items = enc.python_items([value], bound=self.item_type)
+        return bool(self._probe(items, self.contains_packed, False)[0])
 
     def merge(self, other: "BloomFilter") -> "BloomFilter":
         if not isinstance(other, BloomFilter) or self.m_bits != other.m_bits or self.k != other.k:

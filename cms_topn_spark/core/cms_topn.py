@@ -297,17 +297,12 @@ class CmsTopn(ItemSketch):
         return self.estimate_many([value])[0]
 
     def estimate_many(self, values) -> list:
-        """Vectorized ``cms_topn_frequency`` over a probe list: coercion rules
-        identical to :meth:`estimate` per item, but ONE Murmur pass + one
-        counter gather for the whole list — the grouped-probe hot loop runs
-        this once per state instead of a per-item Python round-trip. A
-        cross-family probe is the reference's type error
-        (expected/results.out:17-19)."""
-        out: list = [None if v is None else 0 for v in values]
-        data, offsets, lengths, live = self._probe_packed(values)
-        for i, e in zip(live, self.estimate_packed(data, offsets, lengths).tolist()):
-            out[i] = e
-        return out
+        """Vectorized ``cms_topn_frequency`` over a probe list: the probe rule
+        of :meth:`ItemSketch._probe` (a cross-family probe is the
+        reference's type error, expected/results.out:17-19), ONE Murmur pass
+        + one counter gather for the whole list, and None for a NULL."""
+        est = self._probe(enc.python_items(values, bound=self.item_type), self.estimate_packed, 0)
+        return [None if v is None else e for v, e in zip(values, est.tolist())]
 
     def _ordered_entries(self) -> list[tuple[bytes, int, int]]:
         items = [(it, int(e[0]), int(e[1])) for it, e in self.topn.items()]

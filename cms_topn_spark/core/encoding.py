@@ -45,7 +45,7 @@ TAG_ARROW_TYPES = {
     TYPE_STRING: pa.string(),
     TYPE_BINARY: pa.binary(),
 }
-_NUMERIC_TAGS = (TYPE_INT32, TYPE_INT64, TYPE_FLOAT64)
+NUMERIC_TAGS = (TYPE_INT32, TYPE_INT64, TYPE_FLOAT64)  # one item family
 
 
 def pack_bytes(items: list[bytes]) -> tuple[bytes, np.ndarray, np.ndarray]:
@@ -117,7 +117,8 @@ def pack_arrow_array(arr) -> tuple[bytes | np.ndarray, np.ndarray, np.ndarray, i
 
 
 def python_items(values, type_tag: int | None = None, bound: int = TYPE_UNSET) -> pa.Array:
-    """Non-NULL Python item values → one Arrow array for :func:`pack_arrow_array`.
+    """Python item values → one Arrow array for :func:`pack_arrow_array`, a
+    ``None`` a NULL (all ``None``: Arrow's ``null`` type).
 
     Arrow infers the type from every value, so values of two families (int
     and str, int and bool) or an int outside int64 raise ``TypeError``; a
@@ -137,12 +138,34 @@ def python_items(values, type_tag: int | None = None, bound: int = TYPE_UNSET) -
                 except pa.ArrowInvalid:
                     pass  # a value outside int32: the whole batch is int64
             type_tag = TYPE_INT64
-        elif (arrow_type_tag(arr.type) in _NUMERIC_TAGS) != (type_tag in _NUMERIC_TAGS):
+        elif (arrow_type_tag(arr.type) in NUMERIC_TAGS) != (type_tag in NUMERIC_TAGS):
             raise TypeError(f"{arr.type} items cannot be {TYPE_NAMES[type_tag]} items")
         want = TAG_ARROW_TYPES[type_tag]
         return arr if arr.type == want else arr.cast(want)
     except (pa.ArrowInvalid, pa.ArrowTypeError, pa.ArrowNotImplementedError, OverflowError) as e:
         raise TypeError(f"cannot convert the items to one item type: {e}") from e
+
+
+def held_items(arr: pa.Array, tag: int) -> pa.Array:
+    """Numeric items as the numeric item type ``tag``: NULL where an item is
+    NULL or does not survive the round trip through ``tag`` (2**40 as an
+    int32, 7.5 or NaN as an int, 2**60 + 1 as a float64). A float outside an
+    int type's range takes the trip as 0, so the test never reads what an
+    out-of-range cast returns."""
+    want = TAG_ARROW_TYPES[tag]
+    if arr.type == want:
+        return arr
+    v = arr.fill_null(0).to_numpy()
+
+    def cast(x, dt):
+        if x.dtype.kind == "f" and dt.kind == "i":
+            lim = 2.0 ** (8 * dt.itemsize - 1)
+            x = np.where((x >= -lim) & (x < lim), x, 0)
+        return x.astype(dt)
+
+    t = cast(v, np.dtype(want.to_pandas_dtype()))
+    held = (cast(t, v.dtype) == v) & arr.is_valid().to_numpy(zero_copy_only=False)
+    return pa.array(t, want, mask=~held)
 
 
 def decode_one(item: bytes, type_tag: int):

@@ -23,6 +23,7 @@ import struct
 
 import numpy as np
 
+from . import encoding as enc
 from .base import KIND_MMS, ItemSketch, frame_guarded, SketchError, register
 from .cms_topn import sizing
 from .murmur import MURMUR_SEED, hash128, probe_index
@@ -109,11 +110,11 @@ class MinMaskSketch(ItemSketch):
 
     def get_mask(self, value) -> int | None:
         """mms_get_mask: NULL → None; a value never added (see
-        :meth:`ItemSketch._probe_packed`) → empty mask 0."""
+        :meth:`ItemSketch._probe`) → empty mask 0."""
         if value is None:
             return None
-        data, offsets, lengths, live = self._probe_packed([value])
-        return int(self.get_masks_packed(data, offsets, lengths)[0]) if live else 0
+        items = enc.python_items([value], bound=self.item_type)
+        return int(self._probe(items, self.get_masks_packed, np.uint64(0))[0])
 
     def get_masks_packed(self, data, offsets, lengths) -> np.ndarray:
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)

@@ -183,18 +183,9 @@ def topn_explode(
             if st is None:
                 out.append([])
                 continue
-            sk = sketch_from_bytes(st)
-            if native and sk.item_type not in (type_tag, enc.TYPE_UNSET):
-                raise TypeError(
-                    f"sketch bound to item type tag {sk.item_type} in a "
-                    f"column exploded as tag {type_tag}"
-                )
-            out.append(
-                [
-                    {"item": i if native else str(i), "frequency": int(f)}
-                    for i, f in sk.topn_list(type_tag if native else None)
-                ]
-            )
+            # topn_list raises for a sketch bound to another tag
+            top = sketch_from_bytes(st).topn_list(type_tag if native else None)
+            out.append([{"item": i if native else str(i), "frequency": int(f)} for i, f in top])
         return pa.array(out, type=out_arrow)
 
     return df.select(
@@ -218,56 +209,26 @@ def _cached_sketch(b: bytes):
     return sk
 
 
-def _pack_for_probe(items: pa.Array, sk) -> tuple:
-    """Encode the non-NULL items of a probe column with the sketch's BOUND
-    item type → (data, offsets, lengths).
-
-    A numeric column of another width or family (int32 against an int64
-    sketch, double against an int sketch) goes through a checked cast to the
-    bound type: 7.0 probes as 7, while 7.5 or an out-of-range value raises,
-    so a probe never hashes a different key than the build did. A
-    cross-family column (strings against an int sketch) raises instead of
-    returning silently-zero estimates."""
-    arr = items.drop_null() if items.null_count else items
-    want = getattr(sk, "item_type", enc.TYPE_UNSET)
-    have = enc.arrow_type_tag(arr.type)
-    if want != enc.TYPE_UNSET and have != want:
-        numeric = (enc.TYPE_INT32, enc.TYPE_INT64, enc.TYPE_FLOAT64)
-        if not (have in numeric and want in numeric):
-            # int vs string sketch etc. — cross-family probes are type errors,
-            # not silently-zero estimates ("not proper type for this cms_topn")
-            raise TypeError(
-                f"probe column type tag {have} is not compatible with the "
-                f"sketch's bound item type tag {want}"
-            )
-        try:
-            arr = arr.cast(enc.TAG_ARROW_TYPES[want])
-        except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as e:
-            raise TypeError(
-                f"probe column type {arr.type} has values not representable "
-                f"in the sketch's bound item type tag {want}"
-            ) from e
-    data, offsets, lengths, _tag = enc.pack_arrow_array(arr)
-    return data, offsets, lengths
-
-
 def _probe_udf(sketch_bytes: bytes, method: str, return_type):
     """Vectorized point probe of a column against a broadcast sketch: one
-    ``method`` call (``estimate_packed`` / ``get_masks_packed`` /
-    ``contains_packed``) per Arrow batch (§3.2 of SURVEY.md — one JVM→Python
-    crossing per batch, zero per-row Python). A NULL item gives NULL, except
-    in a BooleanType membership probe, where a NULL is never contained and
-    gives False (``bloom_anti_join`` keeps NULL-keyed rows)."""
+    :meth:`ItemSketch._probe` per Arrow batch, with ``method``
+    (``estimate_packed`` / ``get_masks_packed`` / ``contains_packed``) as
+    its query (§3.2 of SURVEY.md — one JVM→Python crossing per batch, zero
+    per-row Python). A column probes by the rule a Python value does: a
+    cross-family column raises, and a value the bound type cannot hold
+    exactly reads as never added. A NULL item gives NULL, except in a
+    BooleanType membership probe, where a NULL is never contained and gives
+    False (``bloom_anti_join`` keeps NULL-keyed rows); a mask keeps its 64
+    bits as a bigint."""
     membership = isinstance(return_type, BooleanType)
 
     @arrow_udf(return_type)
     def probe(items: pa.Array) -> pa.Array:
-        valid = items.is_valid().to_numpy(zero_copy_only=False)
-        out = np.zeros(len(items), dtype=np.bool_ if membership else np.int64)
-        if valid.any():
-            sk = _cached_sketch(sketch_bytes)
-            out[valid] = getattr(sk, method)(*_pack_for_probe(items, sk))
-        return pa.array(out, mask=None if membership else ~valid)
+        sk = _cached_sketch(sketch_bytes)
+        out = sk._probe(items, getattr(sk, method), False if membership else 0)
+        return pa.array(
+            out, mask=None if membership else items.is_null().to_numpy(zero_copy_only=False)
+        )
 
     return probe
 
@@ -317,14 +278,11 @@ def rare_token_probe_udf(sketch_bytes: bytes, threshold: int, delimiter: str = "
         # for NULL would silently diverge from both)
         toks = pc.split_pattern_regex(texts, delimiter)
         lens = pc.list_value_length(toks).fill_null(0).to_numpy().astype(np.int64)
-        rare_out = np.zeros_like(lens)
-        if lens.sum():
-            sk = _cached_sketch(sketch_bytes)
-            data, offsets, lengths, _tag = enc.pack_arrow_array(pc.list_flatten(toks))
-            est = sk.estimate_packed(data, offsets, lengths)
-            rare = np.concatenate(([0], np.cumsum(est < threshold, dtype=np.int64)))
-            ends = np.cumsum(lens)
-            rare_out = rare[ends] - rare[ends - lens]
+        sk = _cached_sketch(sketch_bytes)
+        est = sk._probe(pc.list_flatten(toks), sk.estimate_packed, 0)
+        rare = np.concatenate(([0], np.cumsum(est < threshold, dtype=np.int64)))
+        ends = np.cumsum(lens)
+        rare_out = rare[ends] - rare[ends - lens]
         nulls = texts.is_null().to_numpy(zero_copy_only=False)
         return pa.StructArray.from_arrays(
             [pa.array(lens, mask=nulls), pa.array(rare_out, mask=nulls)],

@@ -253,19 +253,19 @@ def grouped_probe(
     # as the schema says, so an int64 vector under an ``int`` column fails
     item_arr = pa.array(items, to_arrow_type(DataType.fromDDL(item_type)))
     n_items = len(items)
+    nulls = item_arr.is_null().to_numpy(zero_copy_only=False)
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             n = rb.num_rows
-            freqs: list = []
-            for st in rb.column("state").to_pylist():
-                # one packed Murmur pass per state, not a per-item loop
-                freqs.extend(sketch_from_bytes(st).estimate_many(items))
+            # one packed Murmur pass per state, not a per-item loop
+            sks = map(sketch_from_bytes, rb.column("state").to_pylist())
+            freqs = np.array([sk._probe(item_arr, sk.estimate_packed, 0) for sk in sks], np.int64)
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column(group_col).take(np.repeat(np.arange(n), n_items)),
                     item_arr.take(np.tile(np.arange(n_items), n)),
-                    pa.array(freqs, pa.int64()),
+                    pa.array(freqs.ravel(), mask=np.tile(nulls, n)),
                 ],
                 [group_col, item_col, freq_col],
             )

@@ -2,6 +2,7 @@
 determinism under mixed configs, and the murmur outlier-batch path."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from cms_topn_spark.core import (
@@ -20,28 +21,58 @@ def _add_masks(sk, values, **kw):
     sk.add_batch(values, [3] * len(values), **kw)
 
 
-# sketch → (empty sketch, batch add, one-item add, point probe, probe result
-# for an item added once, probe result for an item never added)
+# sketch → (empty sketch, batch add, one-item add, point probe, its packed
+# query, probe result for an item added once, probe result for an item never
+# added)
 _ITEM_SKETCHES = {
-    "cms_topn": (lambda: CmsTopn(5), CmsTopn.add_batch, CmsTopn.add, CmsTopn.estimate, 1, 0),
+    "cms_topn": (
+        lambda: CmsTopn(5),
+        CmsTopn.add_batch,
+        CmsTopn.add,
+        CmsTopn.estimate,
+        "estimate_packed",
+        1,
+        0,
+    ),
     "mms": (
         lambda: MinMaskSketch(0.001),
         _add_masks,
         lambda sk, v: sk.add(v, 3),
         MinMaskSketch.get_mask,
+        "get_masks_packed",
         3,
         0,
     ),
-    "hll": (HyperLogLog, HyperLogLog.add_batch, lambda sk, v: sk.add_batch([v]), None, None, None),
+    "hll": (
+        HyperLogLog,
+        HyperLogLog.add_batch,
+        lambda sk, v: sk.add_batch([v]),
+        None,
+        None,
+        None,
+        None,
+    ),
     "bloom": (
         lambda: BloomFilter(100),
         BloomFilter.add_batch,
         lambda sk, v: sk.add_batch([v]),
         BloomFilter.contains,
+        "contains_packed",
         True,
         False,
     ),
 }
+
+
+def _probe_entry(entry, probe, query, never):
+    """A probe of a value list through one entry point: the Python method,
+    one value at a time, or one Arrow array through ``ItemSketch._probe``
+    (the path of the Spark column probes)."""
+    if probe is None:
+        return None
+    if entry == "python":
+        return lambda sk, values: [probe(sk, v) for v in values]
+    return lambda sk, values: sk._probe(pa.array(values), getattr(sk, query), never).tolist()
 
 
 # mixed-family Python batch → (type_tag given to add_batch, the bound type
@@ -56,13 +87,20 @@ _MIXED_BATCHES = {
 
 class TestTypedQueryRules:
     @pytest.mark.parametrize(
-        "name, mixed",
-        [pytest.param(n, None, id=n) for n in _ITEM_SKETCHES]
-        + [pytest.param(n, m, id=f"{n}-{m}") for n in _ITEM_SKETCHES for m in _MIXED_BATCHES],
+        "name, mixed, entry",
+        [
+            # the Python entry point keeps the bare sketch[-batch] id
+            pytest.param(n, m, e, id="-".join(filter(None, (n, m, e if e == "arrow" else None))))
+            for e in ("python", "arrow")
+            for n in _ITEM_SKETCHES
+            for m in (None, *_MIXED_BATCHES)
+        ],
     )
-    def test_item_type_policy(self, name, mixed):
-        """The item-type policy every hashed sketch shares (ItemSketch)."""
-        make, add, add_one, probe, hit, never = _ITEM_SKETCHES[name]
+    def test_item_type_policy(self, name, mixed, entry):
+        """The item-type policy every hashed sketch shares (ItemSketch), with
+        the one probe rule held through both probe entry points."""
+        make, add, add_one, probe, query, hit, never = _ITEM_SKETCHES[name]
+        probe = _probe_entry(entry, probe, query, never)
         if mixed is not None:
             batch, type_tag, want = _MIXED_BATCHES[mixed]
             sk = make()
@@ -74,7 +112,10 @@ class TestTypedQueryRules:
                 add(sk, batch, type_tag=type_tag)
                 assert sk.item_type == want
                 if probe is not None:
-                    assert probe(sk, 2.0) == hit and probe(sk, 1.5) == hit
+                    # an int held exactly by float64 probes as that float
+                    assert probe(sk, [2.0, 1.5, 2]) == [hit, hit, hit]
+                    add(sk, [float(2**60)])
+                    assert probe(sk, [2**60, 2**60 + 1]) == [hit, never]  # 2**60 + 1 is not held
             return
         narrow = make()
         add_one(narrow, 5)  # the first add binds the type
@@ -87,12 +128,16 @@ class TestTypedQueryRules:
         add_one(one_by_one, 5)  # an int32-looking add to an int64 sketch is int64
         assert one_by_one.to_bytes() == wide.to_bytes()
         if probe is not None:
-            assert probe(narrow, 5) == hit
-            assert probe(narrow, 2**40) == never  # cannot fit int32 ⇒ never added
-            assert probe(wide, 5) == hit  # int32-looking probe reads as int64
-            assert probe(wide, 2**40) == hit
+            # a NULL answers None through a Python value probe (False for a
+            # Bloom membership), and the miss through an Arrow array
+            null = None if entry == "python" and name != "bloom" else never
+            # cannot fit int32 ⇒ never added
+            assert probe(narrow, [5, 2**40, None]) == [hit, never, null]
+            # a float that an int holds exactly probes as that int
+            assert probe(narrow, [5.0, 5.5, float("nan")]) == [hit, never, never]
+            assert probe(wide, [5, 2**40]) == [hit, hit]  # int32-looking probe reads as int64
             with pytest.raises(SketchError, match=f"not a proper {narrow.NAME} for the result type"):
-                probe(narrow, "5")
+                probe(narrow, ["5"])
         with pytest.raises(SketchError, match=f"not proper type for this {narrow.NAME}"):
             add(narrow, ["5"])
         strings = make()

@@ -169,10 +169,12 @@ class TestCompanionAggs:
 
 
 class TestProbeTyping:
-    """Probe UDFs must encode with the sketch's BOUND type: an int32 column
+    """A column probes by the rule a Python value does (``ItemSketch._probe``):
+    each item is encoded with the sketch's BOUND type, since an int32 column
     probing an int64 sketch (or a double column probing an int sketch) would
     otherwise hash a different key, silently returning 0 (and false
-    negatives from Bloom)."""
+    negatives from Bloom); a value the bound type cannot hold exactly reads
+    as never added, and a cross-family column fails the job."""
 
     def test_frequency_udf_nullable_int_column(self, spark):
         df = spark.createDataFrame([(7,)] * 100 + [(9,)] * 3, "v long")
@@ -207,17 +209,52 @@ class TestProbeTyping:
         from py4j.protocol import Py4JJavaError
         from pyspark.errors import PythonException
 
-        with pytest.raises((PythonException, Py4JJavaError)):
+        with pytest.raises(
+            (PythonException, Py4JJavaError), match="not a proper cms_topn for the result type"
+        ):
             ints.withColumn("f", probe(F.col("v"))).collect()
-        # a double column against an int-bound sketch goes through a checked
-        # cast: an integral value probes as its int, a fractional one raises
+        # a double column against an int-bound sketch: an integral value
+        # probes as its int, a fractional one was never added
         isk = cms_topn_add_agg(spark.createDataFrame([(7,)] * 3, "v long"), "v", n=5)
         iprobe = frequency_udf(isk.to_bytes())
         whole = spark.createDataFrame([(7.0,)], "v double")
         assert whole.withColumn("f", iprobe(F.col("v"))).collect()[0]["f"] == isk.estimate(7)
         frac = spark.createDataFrame([(7.5,)], "v double")
-        with pytest.raises((PythonException, Py4JJavaError)):
-            frac.withColumn("f", iprobe(F.col("v"))).collect()
+        assert frac.withColumn("f", iprobe(F.col("v"))).collect()[0]["f"] == 0
+
+    def test_wide_bigint_reads_zero_against_int32_sketch(self, spark):
+        sk = CmsTopn(5)
+        sk.add_batch([7, 7])  # binds int32
+        probe_df = spark.createDataFrame([(1, 7), (2, 2**40), (3, None)], "id int, v long")
+        probe = frequency_udf(sk.to_bytes())
+        got = {r["id"]: r["f"] for r in probe_df.select("id", probe("v").alias("f")).collect()}
+        assert got == {1: 2, 2: 0, 3: None}
+
+    def test_rare_token_probe_against_int_sketch_raises(self, spark):
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import PythonException
+
+        from cms_topn_spark.functions.sketch_api import rare_token_probe_udf
+
+        sk = CmsTopn(5)
+        sk.add_batch([1, 2])  # bound to ints: no token was ever added
+        docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+        probe = rare_token_probe_udf(sk.to_bytes(), threshold=10)
+        with pytest.raises(
+            (PythonException, Py4JJavaError), match="not a proper cms_topn for the result type"
+        ):
+            docs.select(probe("text")).collect()
+
+    def test_mask_udf_keeps_all_ones_bits(self, spark):
+        from cms_topn_spark.core import MinMaskSketch
+        from cms_topn_spark.functions.sketch_api import mask_udf
+
+        mms = MinMaskSketch(0.001)
+        mms.add_batch([5], [2**64 - 1])  # the all-ones mask
+        assert mms.get_mask(5) == 2**64 - 1  # unsigned on the driver
+        df = spark.createDataFrame([(5,), (None,)], "v long")
+        got = df.select(mask_udf(mms.to_bytes())("v").alias("m")).collect()
+        assert [r["m"] for r in got] == [-1, None]
 
     def test_probe_above_2_53_with_nulls_is_exact(self, spark):
         """A NULL-bearing bigint column reaches the probe as typed int64 with
@@ -371,6 +408,25 @@ class TestSketchColumnForms:
         got = [(r["item"], r["frequency"]) for r in exploded.collect()]
         assert got == driver_level
         assert all(isinstance(i, int) for i, _ in got)
+
+
+    def test_topn_explode_mixed_bound_tags_raise(self, spark):
+        """A state column holding an int32-bound and an int64-bound sketch
+        fails rather than exploding either under the other's type."""
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import PythonException
+
+        from cms_topn_spark.functions.sketch_api import topn_explode
+
+        narrow, wide = CmsTopn(2), CmsTopn(2)
+        narrow.add_batch([5])
+        wide.add_batch([2**40])
+        assert (narrow.item_type, wide.item_type) == (enc.TYPE_INT32, enc.TYPE_INT64)
+        df = spark.createDataFrame([(narrow.to_bytes(),), (wide.to_bytes(),)], "state binary")
+        with pytest.raises(
+            (PythonException, Py4JJavaError), match="not a proper cms_topn for the result type"
+        ):
+            topn_explode(df).collect()
 
 
 def test_rare_token_probe_udf_matches_explode_groupby(spark, sf001_dir):
