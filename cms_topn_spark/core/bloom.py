@@ -50,7 +50,7 @@ class BloomFilter(ItemSketch):
         self, data, offsets, lengths, counts=None, type_tag: int = enc.TYPE_BINARY
     ) -> None:
         # counts accepted and ignored: membership semantics make weights a
-        # no-op, and the shared weighted-ingest path passes them uniformly
+        # no-op, and add_arrow passes them uniformly
         if len(lengths) == 0:
             return
         self._bind_type(type_tag)

@@ -366,7 +366,7 @@ class CmsTopn(ItemSketch):
 
     # ---------------- grouped kernels ----------------
 
-    def fold_window(self, factory, carried: dict, keys: list, values, bounds, ingest) -> None:
+    def fold_window(self, factory, carried: dict, keys: list, values, bounds) -> None:
         """Stage-1 hook (see :meth:`MergeableSketch.fold_window`). Linear
         update builds every group's state for the window in one kernel,
         :meth:`_window_states`. A task that folds several windows keeps this
@@ -374,7 +374,7 @@ class CmsTopn(ItemSketch):
         carried state in window order. Conservative update keeps the
         per-group loop: its counters depend on how the rows are batched."""
         if self.update_mode != UPDATE_LINEAR:
-            return super().fold_window(factory, carried, keys, values, bounds, ingest)
+            return super().fold_window(factory, carried, keys, values, bounds)
         fresh = self._window_states(values, bounds)
         again = [i for i in fresh if keys[i] in carried]
         if again:

@@ -129,6 +129,8 @@ def python_items(values, type_tag: int | None = None, bound: int = TYPE_UNSET) -
     to a string."""
     try:
         arr = pa.array(values)
+        if pa.types.is_null(arr.type):
+            return arr
         if type_tag is None:
             if not pa.types.is_integer(arr.type):
                 return arr

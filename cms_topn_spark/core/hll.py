@@ -65,17 +65,24 @@ class HyperLogLog(ItemSketch):
     # ---------------- add ----------------
 
     def add_packed(
-        self, data, offsets, lengths, counts=None, type_tag: int = enc.TYPE_BINARY
+        self,
+        data,
+        offsets,
+        lengths,
+        counts=None,
+        type_tag: int = enc.TYPE_BINARY,
+        hashes: tuple[np.ndarray, np.ndarray] | None = None,
     ) -> None:
-        # counts accepted and ignored: distinct-count semantics make weights
-        # a no-op, and the shared weighted-ingest path passes them uniformly
+        """Bulk add over packed byte strings. ``counts`` is ignored (weights
+        are a no-op for a distinct count); ``hashes`` lets callers reuse one
+        Murmur pass across several sketches, as ``CmsTopn.add_packed``."""
         if len(lengths) == 0:
             return
         self._bind_type(type_tag)
-        h1, _ = hash128(data, offsets, lengths, MURMUR_SEED)
-        self.add_hashes(np.unique(h1))
+        h1 = hashes[0] if hashes is not None else hash128(data, offsets, lengths, MURMUR_SEED)[0]
+        self._add_hashes(np.unique(h1))
 
-    def add_hashes(self, hashes: np.ndarray) -> None:
+    def _add_hashes(self, hashes: np.ndarray) -> None:
         if self.mode == MODE_SPARSE:
             h = hashes.astype(U64)
             # skip the O(S log S) re-sort when the batch brings nothing new

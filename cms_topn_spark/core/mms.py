@@ -22,6 +22,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 from . import encoding as enc
 from .base import KIND_MMS, ItemSketch, frame_guarded, SketchError, register
@@ -30,6 +31,13 @@ from .murmur import MURMUR_SEED, hash128, probe_index
 
 U64 = np.uint64
 _FIXED = struct.Struct("<IIddQ")  # depth, width, eps, conf, total
+
+
+def _bits(mask) -> int:
+    """A mask's 64 bits as an unsigned int: -1 and 2**64 - 1 are both the
+    all-ones mask. One mask at a time, since numpy types a list holding 1 and
+    2**64 - 1 as float64."""
+    return int(np.array(mask).astype(U64))
 
 
 def popcount64(x: np.ndarray) -> np.ndarray:
@@ -77,19 +85,18 @@ class MinMaskSketch(ItemSketch):
         return self
 
     def add_batch(self, values, masks, type_tag: int | None = None) -> None:
-        pairs = [(v, m) for v, m in zip(values, masks) if v is not None and m is not None]
-        if not pairs:
-            return
-        data, offsets, lengths, type_tag = self._encode_batch([v for v, _ in pairs], type_tag)
-        self.add_packed(data, offsets, lengths, [m for _, m in pairs], type_tag)
+        """Add Python values, one mask each (see :meth:`ItemSketch.add_batch`
+        and :func:`_bits`)."""
+        items = enc.python_items(values, type_tag, self.item_type)
+        bits = [None if m is None else _bits(m) for m in masks]
+        self.add_arrow(items, pa.array(bits, pa.uint64()))
 
     def add_packed(self, data, offsets, lengths, masks, type_tag: int) -> None:
-        """Bulk add; ``masks`` is cast to uint64 keeping the bits (an int64
-        -1 is the all-ones mask)."""
+        """Bulk add; each mask is cast to uint64 keeping its bits (:func:`_bits`)."""
         n = len(lengths)
         if n == 0:
             return
-        masks = np.asarray(masks, dtype=U64)
+        masks = np.array([_bits(m) for m in masks], dtype=U64)
         self._bind_type(type_tag)
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)
         cols = probe_index(h1, h2, self.depth, self.width)

@@ -31,14 +31,13 @@ from __future__ import annotations
 import time
 from typing import Callable, Iterator
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..core import encoding as enc
-from ..core.base import ItemSketch, fold_states
+from ..core.base import fold_states
 
 STATE_SCHEMA = "partition_id int, state binary, input_rows long, build_wall_ms long"
 
@@ -93,38 +92,17 @@ def spark_item_tag(spark_type: str, caller: str) -> int:
     return tag
 
 
-def ingest_array(sketch, arr: pa.Array) -> None:
-    """Feed one Arrow array into a sketch, NULLs dropped, dispatching on the
-    sketch's protocol: packed item bytes for an ``ItemSketch``
-    (CMS/MMS/HLL/Bloom), float64 values for the numeric ones (KLL/t-digest,
-    which take any numeric column, decimals included)."""
-    if isinstance(sketch, ItemSketch):
-        data, offsets, lengths, tag = enc.pack_arrow_array(arr)
-        sketch.add_packed(data, offsets, lengths, type_tag=tag)
-    else:
-        if arr.null_count:
-            arr = arr.drop_null()
-        sketch.add_batch(arr.to_numpy(zero_copy_only=False).astype(np.float64))
-
-
 def default_ingest(sketch, batch: pa.RecordBatch) -> None:
-    """Feed column 0 of an Arrow batch into any sketch (see :func:`ingest_array`)."""
-    arr = batch.column(0)
-    if len(arr) == 0 or arr.null_count == len(arr):
-        return
-    ingest_array(sketch, arr)
+    """Feed column 0 of an Arrow batch into any sketch, NULLs dropped
+    (``add_arrow``)."""
+    sketch.add_arrow(batch.column(0))
 
 
 def weighted_ingest(sketch, batch: pa.RecordBatch) -> None:
-    """Feed (item, weight) pairs, rows with a NULL in either column dropped.
-    The weight goes to ``add_packed`` positionally: a count for CMS (e.g. the
-    partial counts of an upstream groupBy) and Bloom, a mask for MMS."""
-    tbl = pa.Table.from_batches([batch]).drop_null()
-    if tbl.num_rows == 0:
-        return
-    data, offsets, lengths, tag = enc.pack_arrow_array(tbl.column(0).combine_chunks())
-    weights = tbl.column(1).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-    sketch.add_packed(data, offsets, lengths, weights, type_tag=tag)
+    """Feed (item, weight) pairs, rows with a NULL in either column dropped
+    (``add_arrow``): a count for CMS (e.g. the partial counts of an upstream
+    groupBy) and t-digest, a mask for MMS."""
+    sketch.add_arrow(batch.column(0), batch.column(1))
 
 
 _NPARTS_CACHE: dict = {}

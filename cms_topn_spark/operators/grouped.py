@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.base import sketch_from_bytes
-from .build import TAG_TOPN_TYPES, ingest_array, spark_item_tag
+from .build import TAG_TOPN_TYPES, spark_item_tag
 
 
 # stage-1 dice window bounds: flush on whichever trips first. ~512k rows
@@ -67,8 +67,8 @@ def _state_fold(
     DataFrame path (``mapInArrow`` after a Spark scan) and the
     columnar-direct :func:`grouped_quantiles_parquet` (no JVM row pivot).
     Each window goes through the sketch's ``fold_window`` hook; the default
-    feeds every key-slice through ``build.ingest_array``, so the sketch's
-    own protocol picks packed items or float64 values. NULL keys sort last
+    feeds every key-slice to the sketch's ``add_arrow``, which picks packed
+    items or float64 values. NULL keys sort last
     and are dropped here, so the direct path, where no Catalyst filter ran
     upstream, needs no filter of its own."""
     # snapshot the caps into the closure (captured by value, so they ship to
@@ -87,8 +87,7 @@ def _state_fold(
                 return
             kn, bounds = _key_runs(tbl.column(0))
             proto.fold_window(
-                factory, carried, list(kn[bounds[:-1]]),
-                tbl.column(1).combine_chunks(), bounds, ingest_array,
+                factory, carried, list(kn[bounds[:-1]]), tbl.column(1).combine_chunks(), bounds
             )
 
         # buffer a bounded window before dicing: one sort and one fold per
@@ -399,8 +398,8 @@ def grouped_estimate(
     a parallelism cap equal to the group count with few groups; here stage 1
     folds shuffle-free at scan parallelism and only sketch states move.
 
-    Stage 1 feeds the sketch through its own protocol (packed items or
-    float64 values, ``build.ingest_array``). The estimate equals the
+    Stage 1 feeds the sketch through its own ``add_arrow`` (packed items
+    or float64 values). The estimate equals the
     single-sketch build wherever the sketch's merge is order-independent
     (HLL set/register union, KLL in the exact regime, t-digest with
     ``delta ≥ πN`` — singleton centroids survive any merge order), which is

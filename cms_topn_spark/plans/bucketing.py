@@ -131,12 +131,7 @@ def scan_count(df: DataFrame) -> int:
     corpus scan inside the one-time staging job, so their FINAL plan has 0
     FileScans — the declared expectation per operator is what the regression
     gate pins."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    cut = plan.find("== Initial Plan ==")
-    if cut != -1:
-        plan = plan[:cut]
-    return len(_FILESCAN_NODE.findall(plan))
+    return _final_plan_count(df, _FILESCAN_NODE)
 
 
 _RDD_SCAN_NODE = re.compile(r"(?m)^[\s:+\-*()\d]*Scan ExistingRDD\b")
@@ -152,9 +147,15 @@ def rdd_scan_count(df: DataFrame) -> int:
     recomputes per consumer, and THIS count jumps). Pinning both counts
     closes that blind spot. Same collect()-to-finalize/Initial-Plan-slice
     mechanics as scan_count."""
+    return _final_plan_count(df, _RDD_SCAN_NODE)
+
+
+def _final_plan_count(df: DataFrame, node: re.Pattern) -> int:
+    """Collect ``df``, then count the ``node`` leaves in its final executed
+    plan, cut at the ``== Initial Plan ==`` echo."""
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     cut = plan.find("== Initial Plan ==")
     if cut != -1:
         plan = plan[:cut]
-    return len(_RDD_SCAN_NODE.findall(plan))
+    return len(node.findall(plan))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from ..core import CmsTopn, HyperLogLog
 from ..core import encoding as enc
 from ..core.composite import CompositeSketch
+from ..core.murmur import MURMUR_SEED, hash128
 from ..operators.build import sketch_agg
 
 HOST_RE = r"^[a-z]+://(?P<host>[^/]+)/"
@@ -46,37 +47,21 @@ def flagship_factory(
 
 def flagship_ingest(sk: CompositeSketch, batch: pa.RecordBatch) -> None:
     """batch columns: (url string, text string)."""
-    import numpy as np
-
-    from ..core.murmur import MURMUR_SEED, hash128
-
     urls = batch.column(0)
     texts = batch.column(1)
     data, offs, lens = enc.encode_arrow_strings(urls)
-    h1, h2 = hash128(data, offs, lens, MURMUR_SEED)  # one hash pass, two sketches
-    sk["url_topn"].add_packed(data, offs, lens, type_tag=enc.TYPE_STRING, hashes=(h1, h2))
-    sk["url_hll"]._bind_type(enc.TYPE_STRING)
-    sk["url_hll"].add_hashes(np.unique(h1))
-    hosts = pc.struct_field(pc.extract_regex(urls, HOST_RE), "host")
-    if hosts.null_count:
-        hosts = hosts.drop_null()
-    # hosts repeat heavily (few distinct hostnames per batch): pre-aggregate
-    # in Arrow C++ like the token path, so the hash/CMS kernel sees each
-    # distinct host once with its count (linear update: c adds == one add
-    # weighted c) — measured ~7x on this stage
-    vc_h = pc.value_counts(hosts)
-    data, offs, lens = enc.encode_arrow_strings(vc_h.field("values"))
-    counts_h = vc_h.field("counts").to_numpy(zero_copy_only=False)
-    sk["host_topn"].add_packed(
-        data, offs, lens, counts=counts_h, type_tag=enc.TYPE_STRING
-    )
-    # tokens: ~50× more rows than docs but few distincts — pre-aggregate in
-    # Arrow C++ (value_counts) so the numpy kernel hashes each distinct once
-    toks = pc.list_flatten(pc.split_pattern(texts, " "))
-    vc = pc.value_counts(toks)
-    data, offs, lens = enc.encode_arrow_strings(vc.field("values"))
-    counts = vc.field("counts").to_numpy(zero_copy_only=False)
-    sk["token_topn"].add_packed(data, offs, lens, counts=counts, type_tag=enc.TYPE_STRING)
+    hashes = hash128(data, offs, lens, MURMUR_SEED)  # one hash pass, two sketches
+    sk["url_topn"].add_packed(data, offs, lens, type_tag=enc.TYPE_STRING, hashes=hashes)
+    sk["url_hll"].add_packed(data, offs, lens, type_tag=enc.TYPE_STRING, hashes=hashes)
+    # hosts and tokens repeat heavily (few distincts per batch): pre-aggregate
+    # in Arrow C++ so the hash/CMS kernel sees each distinct once with its
+    # count (linear update: c adds == one add weighted c) — measured ~7x on
+    # the host stage. A URL without a host is a NULL value, which add_arrow
+    # drops with its count.
+    vc = pc.value_counts(pc.struct_field(pc.extract_regex(urls, HOST_RE), "host"))
+    sk["host_topn"].add_arrow(vc.field("values"), vc.field("counts"))
+    vc = pc.value_counts(pc.list_flatten(pc.split_pattern(texts, " ")))
+    sk["token_topn"].add_arrow(vc.field("values"), vc.field("counts"))
 
 
 def run_flagship(pages: DataFrame, **params) -> CompositeSketch:

@@ -21,7 +21,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from ..core import CmsTopn, HyperLogLog
-from ..core import encoding as enc
 from ..core.composite import CompositeSketch
 from ..core.kll import KllSketch
 from ..operators.build import sketch_agg
@@ -41,39 +40,15 @@ def profile_factory(n_tokens: int = 5, eps: float = 0.00002, hll_p: int = 14, kl
 
 
 def profile_ingest(sk: CompositeSketch, batch: pa.RecordBatch) -> None:
-    """batch columns: (text string)."""
-    import numpy as np
-
-    from ..core.murmur import MURMUR_SEED, hash128
-
+    """batch columns: (text string); a NULL text adds to no sketch."""
     texts = batch.column(0)
-    if texts.null_count:
-        texts = texts.drop_null()
-    if len(texts) == 0:
-        return
-    data, offs, lens = enc.encode_arrow_strings(texts)
-    h1, _h2 = hash128(data, offs, lens, MURMUR_SEED)
-    sk["text_hll"]._bind_type(enc.TYPE_STRING)
-    sk["text_hll"].add_hashes(np.unique(h1))
+    sk["text_hll"].add_arrow(texts)
     split = pc.split_pattern(texts, " ")
-    sk["len_kll"].add_batch(
-        pc.list_value_length(split).to_numpy(zero_copy_only=False).astype(np.float64)
-    )
+    sk["len_kll"].add_arrow(pc.list_value_length(split))
     # tokens: pre-aggregate in Arrow C++ so the hash kernel sees each
     # distinct token once with its count (same trick as the flagship)
     vc = pc.value_counts(pc.list_flatten(split))
-    vals = vc.field("values")
-    counts_arr = vc.field("counts")
-    if vals.null_count:
-        # filter values and counts with ONE validity mask — dropping nulls
-        # from only the values side would misalign every later (token,
-        # count) pair and silently corrupt frequencies
-        keep = pc.is_valid(vals)
-        vals = vals.filter(keep)
-        counts_arr = counts_arr.filter(keep)
-    data, offs, lens = enc.encode_arrow_strings(vals)
-    counts = counts_arr.to_numpy(zero_copy_only=False)
-    sk["token_topn"].add_packed(data, offs, lens, counts=counts, type_tag=enc.TYPE_STRING)
+    sk["token_topn"].add_arrow(vc.field("values"), vc.field("counts"))
 
 
 def corpus_profile(docs, text_col: str = "text", n_tokens: int = 5) -> dict:

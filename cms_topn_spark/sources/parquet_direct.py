@@ -78,31 +78,15 @@ def parquet_files(path: str) -> list[str]:
 
 def spark_type_of(path: str, column: str) -> str:
     """Spark SQL type string of a parquet column (one listing + one footer
-    read)."""
+    read), as Spark's own parquet read types it: int8 → tinyint, int16 →
+    smallint, a timestamp → timestamp."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
     files = parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
-    return _spark_type(pq.read_schema(files[0]).field(column).type, column)
-
-
-def _spark_type(t: pa.DataType, column: str) -> str:
-    if pa.types.is_int8(t) or pa.types.is_int16(t) or pa.types.is_int32(t):
-        return "int"
-    if pa.types.is_int64(t):
-        return "bigint"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "string"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "binary"
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    raise TypeError(f"unmapped parquet type {t} for column {column!r}")
+    return from_arrow_type(pq.read_schema(files[0]).field(column).type).simpleString()
 
 
 # Filter conjuncts are (column, op, literal) triples, the same tri-op shape

@@ -38,7 +38,7 @@ import pyarrow as pa
 
 from ..core.base import ItemSketch, SketchError, fold_states, sketch_from_bytes
 from ..core.encoding import TAG_ARROW_TYPES
-from ..operators.build import SPARK_ITEM_TAGS, build_partials, ingest_array, spark_item_tag
+from ..operators.build import SPARK_ITEM_TAGS, build_partials, spark_item_tag
 from ..spark_session import local_frame
 
 STATE_FILE = "state.bin"
@@ -299,9 +299,7 @@ def keyed_sketch_stream(
     spark_item_tag(value_type, "keyed_sketch_stream")
 
     def ingest(sk, pdf: pd.DataFrame) -> None:
-        vals = pdf[value_col].dropna()
-        if len(vals):
-            ingest_array(sk, _typed_arrow(vals, value_type))
+        sk.add_arrow(_typed_arrow(pdf[value_col], value_type))
 
     def readout(sk) -> dict:
         top = sk.topn_list()
@@ -335,8 +333,8 @@ def keyed_quantile_stream(
     ``max_by(q, n)`` over the sink). In the exact regime (``k`` ≥ any
     per-key count) the final quantiles equal ``quantile_cont`` bitwise —
     same interpolation the batch grouped form gates on; beyond it the KLL
-    rank-error bound applies per key. NULL values arrive as NaN and are
-    dropped inside ``add_batch``, mirroring the aggregate's NULL skip."""
+    rank-error bound applies per key. NULL values (NaN in pandas) are
+    dropped by ``add_arrow``, mirroring the aggregate's NULL skip."""
     from ..core.kll import KllSketch
 
     if len(qs) != len(q_names):
@@ -344,9 +342,7 @@ def keyed_quantile_stream(
     qs = tuple(float(q) for q in qs)
 
     def ingest(sk, pdf: pd.DataFrame) -> None:
-        vals = pdf[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-        if len(vals):
-            sk.add_batch(vals)
+        sk.add_arrow(pa.Array.from_pandas(pdf[value_col]))
 
     def readout(sk) -> dict:
         return {"n": [sk.n], **{name: [v] for name, v in zip(q_names, sk.quantiles(qs))}}

@@ -317,7 +317,6 @@ def test_dice_byte_bound_flush_preserves_results(spark, sf001_dir, monkeypatch):
     import pyarrow.parquet as pq
 
     from cms_topn_spark.operators import grouped as grouped_mod
-    from cms_topn_spark.operators.build import ingest_array
 
     path = os.path.join(sf001_dir, "events.parquet")
     events = spark.read.parquet(path)
@@ -344,7 +343,7 @@ def test_dice_byte_bound_flush_preserves_results(spark, sf001_dir, monkeypatch):
             values = rb.filter(pc.equal(rb.column(0), et)).column(1)
             if values.null_count < len(values):
                 sk = factory()
-                ingest_array(sk, values)
+                sk.add_arrow(values)
                 fresh.setdefault(et, []).append(sk)
     folded = {
         rb.column(0)[i].as_py(): rb.column(1)[i].as_py()
@@ -443,6 +442,35 @@ def test_parquet_direct_column_order_independent(spark, tmp_path):
         ).collect()
     )
     assert got == [(7, 2.0), (8, 5.0)]
+
+
+def test_parquet_direct_small_int_group_column(spark, tmp_path):
+    """An int16 (smallint) group column: the direct source declares the
+    group column as Spark's own parquet read types it, so both forms answer
+    the same rows with the same column types."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cms_topn_spark.operators.grouped import grouped_quantiles, grouped_quantiles_parquet
+
+    p = str(tmp_path / "small.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "g": pa.array([1, 1, None, 2, 300], pa.int16()),
+                "v": pa.array([1.0, 3.0, 5.0, 7.0, None]),
+            }
+        ),
+        p,
+    )
+    kw = dict(qs=(0.5,), q_names=("q50",))
+    want = grouped_quantiles(spark.read.parquet(p), "g", "v", **kw)
+    got = grouped_quantiles_parquet(spark, p, "g", "v", **kw)
+    assert got.dtypes == want.dtypes == [("g", "smallint"), ("q50", "double")]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())) == [
+        (1, 2.0),
+        (2, 7.0),
+    ]
 
 
 def test_grouped_topn_partitioning_invariant_on_margined_items(spark, sf001_dir):

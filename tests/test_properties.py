@@ -640,5 +640,5 @@ def test_grouped_kernels_raise_merge_errors(other):
         with pytest.raises(SketchError) as want:
             b.merge(a)
         with pytest.raises(SketchError) as got:
-            a.fold_window(None, {7: b}, [7], pa.array([1, 2, 3], pa.int32()), [0, 3], None)
+            a.fold_window(None, {7: b}, [7], pa.array([1, 2, 3], pa.int32()), [0, 3])
         assert str(got.value) == str(want.value)
