@@ -1766,7 +1766,8 @@ def _ordered_sql(name: str, sql: str) -> str:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: heavy-hitter tokens over documents at sf0.001 — scan →
-    vectorized partial build → salted shuffle → tree merge → explode."""
+    spread to cluster parallelism → one vectorized fold per task → driver
+    fold → explode."""
     return q_cms_topn_doc_tokens(spark, "/root/testdata/sf0.001")
 
 

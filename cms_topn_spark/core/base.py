@@ -1,7 +1,7 @@
 """One mergeable-state protocol shared by every sketch in the library.
 
 Every sketch (CMS+top-n, HLL, Bloom, KLL, t-digest, min-mask) implements the
-same surface so the Spark layer (partition build → salted shuffle → merge →
+same surface so the Spark layer (one fold per task → driver fold →
 checkpoint) is written once and works for all of them:
 
     empty(**params)      -> sketch            (class constructor)
@@ -26,12 +26,14 @@ groups at once:
 The four hashed sketches (CMS+top-n, min-mask, HLL, Bloom) take items, not
 numbers, and share one item-type policy through :class:`ItemSketch`, the
 reference's "dynamic but sticky" typing (SURVEY.md §1.2): the first add binds
-the type; a batch or probe list of Python values is one Arrow array
+the type; a batch of Python values is one Arrow array
 (:func:`encoding.python_items`) typed from every value, so a batch of two
 families raises ``TypeError``, ints and floats together are float64, and a
 batch holding an int outside int32 range encodes as int64 whole; an add or a
-union of another bound type raises. Every point probe, Python value or Spark
-column, is one Arrow array under one rule (:meth:`ItemSketch._probe`):
+union of another bound type raises. A probe list needs no one item type: each
+value answers as it would alone (:meth:`ItemSketch._probe_values`). Every
+point probe, Python value or Spark column, is Arrow under one rule
+(:meth:`ItemSketch._probe`):
 numbers (int32, int64, float64) are one family and strings and bytes one
 family each; a probe from another family raises; a NULL, or a number the
 bound type cannot hold exactly (2**40 in an int32 sketch, 7.5 in an int
@@ -237,6 +239,24 @@ class ItemSketch(MergeableSketch):
         live = items.is_valid().to_numpy(zero_copy_only=False)
         if live.any():
             out[live] = query(*enc.pack_arrow_array(items)[:3])
+        return out
+
+    def _probe_values(self, values: list, query, miss) -> np.ndarray:
+        """:meth:`_probe` over a list of Python values. When Arrow can type no
+        one array for the list (a float beside an int above 2**53), its ints
+        and its other values are probed apart, so each value answers as it
+        would alone."""
+        try:
+            return self._probe(enc.python_items(values, bound=self.item_type), query, miss)
+        except TypeError:
+            is_int = [type(v) is int for v in values]
+            if all(is_int) or not any(is_int):
+                raise
+        out = np.full(len(values), miss)
+        for want in (True, False):
+            pos = [i for i, t in enumerate(is_int) if t == want]
+            items = enc.python_items([values[i] for i in pos], bound=self.item_type)
+            out[pos] = self._probe(items, query, miss)
         return out
 
     def _merged_type(self, other: "ItemSketch") -> int:

@@ -300,8 +300,11 @@ class CmsTopn(ItemSketch):
         """Vectorized ``cms_topn_frequency`` over a probe list: the probe rule
         of :meth:`ItemSketch._probe` (a cross-family probe is the
         reference's type error, expected/results.out:17-19), ONE Murmur pass
-        + one counter gather for the whole list, and None for a NULL."""
-        est = self._probe(enc.python_items(values, bound=self.item_type), self.estimate_packed, 0)
+        + one counter gather for the whole list (two for a list Arrow cannot
+        type as one, :meth:`ItemSketch._probe_values`), and None for a
+        NULL."""
+        values = list(values)
+        est = self._probe_values(values, self.estimate_packed, 0)
         return [None if v is None else e for v, e in zip(values, est.tolist())]
 
     def _ordered_entries(self) -> list[tuple[bytes, int, int]]:

@@ -155,7 +155,7 @@ class HyperLogLog(ItemSketch):
         # min() keeps merge commutative when the two sides were configured
         # with different sparse limits: mode transitions and serialized bytes
         # must not depend on argument order (base.py merge-determinism
-        # contract — the Spark tree merge feeds partials in arbitrary order)
+        # contract — the driver fold sees task states in arbitrary order)
         out = HyperLogLog(self.p, min(self.sparse_limit, other.sparse_limit))
         out.item_type = self._merged_type(other)
         if self.mode == MODE_SPARSE and other.mode == MODE_SPARSE:

@@ -120,8 +120,7 @@ class MinMaskSketch(ItemSketch):
         :meth:`ItemSketch._probe`) → empty mask 0."""
         if value is None:
             return None
-        items = enc.python_items([value], bound=self.item_type)
-        return int(self._probe(items, self.get_masks_packed, np.uint64(0))[0])
+        return int(self._probe_values([value], self.get_masks_packed, np.uint64(0))[0])
 
     def get_masks_packed(self, data, offsets, lengths) -> np.ndarray:
         h1, h2 = hash128(data, offsets, lengths, MURMUR_SEED)

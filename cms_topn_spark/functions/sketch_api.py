@@ -36,13 +36,10 @@ from ..core import (
 )
 from ..core import encoding as enc
 from ..operators.build import (
-    STATE_SCHEMA,
     TAG_TOPN_TYPES,
-    _collect_states,
+    _fold_collect,
     _fold_task,
-    build_partials,
     default_ingest,
-    plan_num_partitions,
     sketch_agg,
     weighted_ingest,
 )
@@ -73,7 +70,8 @@ def cms_topn_add_agg(
     count_col: str | None = None,
 ) -> CmsTopn | None:
     """Distributed cms_topn_add_agg: validates parameters eagerly (verbatim
-    errors), builds per-partition partials, merges them. With ``count_col``
+    errors), folds each task's rows into one state, merges those on the
+    driver (:func:`sketch_agg`). With ``count_col``
     the input is treated as pre-aggregated (item, count) pairs."""
     CmsTopn(n, e, p)  # eager parameter validation, same error order
     cols = [column] if count_col is None else [column, count_col]
@@ -97,12 +95,13 @@ def cms_topn_union_agg(df: DataFrame, state_col: str = "state") -> CmsTopn | Non
     """Merge a DataFrame column of serialized sketch states (NULLs skipped;
     all-NULL → None, expected/union_agg.out:8-18).
 
-    Each input partition folds its own states in place (no shuffle), and the
-    per-partition results merge like the partials of :func:`sketch_agg`."""
-    states = df.select(
-        F.col(state_col).alias("state"), F.lit(0).cast("long").alias("input_rows")
-    ).mapInArrow(_fold_task, STATE_SCHEMA)
-    return _collect_states(states, plan_num_partitions(df))
+    The same fold shape as :func:`sketch_agg` (``build._fold_collect``): at
+    most ``defaultParallelism`` tasks, no shuffle, one fold per task, and
+    the task states folded on the driver."""
+    return _fold_collect(
+        df.select(F.col(state_col).alias("state"), F.lit(0).cast("long").alias("input_rows")),
+        _fold_task,
+    )
 
 
 def topn(spark: SparkSession, sketch: CmsTopn | None, type_tag: int | None = None) -> DataFrame:
@@ -333,7 +332,7 @@ def bloom_semi_join(
 ) -> DataFrame:
     """Semi-join ``probe`` against a Bloom filter of ``build[build_key]``.
 
-    The filter is built as a single pass of per-partition partials OR-merged
+    The filter is built as a single pass of per-task filters OR-merged
     through sketch_agg (one scan of the build side, no driver-side count), then
     shipped once per executor inside the probe UDF. Returns the probe rows
     whose key is (probably) present — false positives at ``fpp``, never false

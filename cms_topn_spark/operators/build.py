@@ -1,27 +1,28 @@
-"""Distributed sketch build: per-partition partials → merge.
+"""Distributed sketch build: one fold per task → one fold on the driver.
 
 This is the rebuild of the reference's aggregate pair (`cms_topn_add_agg`,
 `cms_topn_union_agg`, §2.2 of SURVEY.md) in Spark's execution model, shaped
 exactly as the north star prescribes (BASELINE.json:6):
 
-- **partial build**: ``mapInArrow`` over the (optionally salted-repartitioned)
+- **task fold**: ``mapInArrow`` over the (optionally salted-repartitioned)
   input — each task streams its Arrow batches into ONE kernel state and emits
   a single row ``(partition_id, state BINARY, input_rows, build_wall_ms)``.
   No per-row Python anywhere: item bytes go zero-copy from Arrow buffers into
-  the numpy murmur kernel.
+  the numpy murmur kernel. :func:`build_partials` keeps one state per input
+  partition (the checkpointable stage); every global fold first cuts its
+  input to at most ``defaultParallelism`` (P) tasks with ``coalesce(P)`` —
+  no shuffle — so each task runs ONE Python fold over its share.
 - **salted repartition**: ``repartition(P)`` round-robins rows, so hot keys
   cannot skew task runtimes (building is key-shuffle-free; only partition
   *size* imbalance matters, and round-robin flattens it).
-- **merge**: up to ``DIRECT_COLLECT_LIMIT`` partials are collected and folded
-  on the driver with :func:`fold_states`. Above it, one shuffle of the
-  sketch-sized rows to ``defaultParallelism`` tasks and one ``mapInArrow``
-  fold per task cut the driver's fan-in to the core count. States are
-  ~106 kB at default CMS parameters (BASELINE.md row 3), so that shuffle
-  moves only P·106 kB.
+- **driver fold**: at most P state rows are collected and folded with
+  :func:`fold_states` — one job at any partition count, no partition count
+  read and no branch taken. States are ~106 kB at default CMS parameters
+  (BASELINE.md row 3), so the collect moves only P·106 kB.
 
 Scale notes (100 TB / 1000 executors): the input scan is the only big data
-motion; everything after the partial build moves `P` sketch-sized rows. The
-partial build preserves input partitioning (no shuffle) unless
+motion; everything after the task fold moves `P` sketch-sized rows. The
+task fold preserves input partitioning (no shuffle) unless
 ``salt_partitions`` forces one, which is worth it only when upstream
 partitions are pathologically uneven.
 """
@@ -40,10 +41,6 @@ from ..core import encoding as enc
 from ..core.base import fold_states
 
 STATE_SCHEMA = "partition_id int, state binary, input_rows long, build_wall_ms long"
-
-# above this many partials the driver collects one folded state per core
-# instead of one state per partial
-DIRECT_COLLECT_LIMIT = 64
 
 _PA_STATE_SCHEMA = pa.schema(
     [
@@ -105,33 +102,6 @@ def weighted_ingest(sketch, batch: pa.RecordBatch) -> None:
     sketch.add_arrow(batch.column(0), batch.column(1))
 
 
-_NPARTS_CACHE: dict = {}
-
-
-def plan_num_partitions(df: DataFrame) -> int:
-    """Partition count of a DataFrame, memoized by the plan's semantic hash.
-
-    ``df.rdd.getNumPartitions()`` is the only public API but forces a
-    plan→RDD conversion per call: 48.6 ms median on a 4-CPU box for the
-    perfbench webpages frame, against 5.6 ms through this memo. Memoizing
-    makes repeated operator calls over the same source (the bench-loop
-    shape) probe once. A hash collision can only mis-route a perf-only
-    heuristic (direct-collect vs tree-merge, spread-or-not), never correctness —
-    cheaper than materializing the states frame through the block cache,
-    which costs ~0.3 s per call for MB-sized sketch states."""
-    # keyed per Spark application: a new session (different parallelism /
-    # file layout) must not inherit counts. Within one session, rewriting
-    # the same path with a different file count can still serve a stale
-    # count — acceptable because every consumer is a perf-only heuristic.
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    n = _NPARTS_CACHE.get(key)
-    if n is None:
-        if len(_NPARTS_CACHE) > 256:
-            _NPARTS_CACHE.clear()
-        n = _NPARTS_CACHE[key] = df.rdd.getNumPartitions()
-    return n
-
-
 def spread_small_input(df: DataFrame) -> DataFrame:
     """Round-robin an under-partitioned input up to the cluster's default
     parallelism — the small-file remedy for compute-bound pipelines whose
@@ -141,7 +111,7 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     must be partition-layout-independent (aggregations, per-row maps —
     not bounded top-n retained sets with order-broken ties)."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if plan_num_partitions(df) < parallelism:
+    if df._jdf.queryExecution().toRdd().getNumPartitions() < parallelism:
         df = df.repartition(parallelism)
     return df
 
@@ -217,10 +187,15 @@ def _fold_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         )
 
 
-def tree_merge_df(states: DataFrame, fanin: int) -> DataFrame:
-    """Merge a states DataFrame down to ≤ ``fanin`` rows: one round-robin
-    shuffle of the sketch-sized rows, then one fold per task."""
-    return states.repartition(fanin).mapInArrow(_fold_task, STATE_SCHEMA)
+def _fold_collect(df: DataFrame, fold):
+    """The one sketch-fold shape: ``df`` cut to at most ``defaultParallelism``
+    tasks with no shuffle, ONE ``fold`` (a batches→state-row kernel) per
+    task, at most that many state rows collected and folded on the driver
+    (None when every state is NULL). The coalesce sits in front of the
+    Python fold, so each task starts one Python worker."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    states = df.coalesce(parallelism).mapInArrow(fold, STATE_SCHEMA)
+    return fold_states(r["state"] for r in states.collect())
 
 
 def sketch_agg(
@@ -229,21 +204,15 @@ def sketch_agg(
     ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
     salt_partitions: int | None = None,
 ):
-    """Full add_agg analogue: build partials, merge, return the sketch.
+    """Full add_agg analogue: one fold per task, merged on the driver
+    (:func:`_fold_collect`); ``salt_partitions`` round-robins the rows first
+    (the skew remedy).
 
     NULL-only / empty inputs → None, matching cms_topn_union_agg over all-NULL
-    rows (expected/union_agg.out:8-18).
-
-    For moderate partition counts the partials are collected in ONE action and
-    merged on the driver (P sketch-sized rows; merging is O(P·d·w) numpy adds,
-    microseconds per state). The shuffled per-task fold only pays off when P
-    is large — at 1000-executor scale — so it kicks in above
-    ``DIRECT_COLLECT_LIMIT``."""
-    states = build_partials(df, factory, ingest, salt_partitions)
-    n_parts = (
-        plan_num_partitions(df) if salt_partitions is None else salt_partitions
-    )
-    return _collect_states(states, n_parts)
+    rows (expected/union_agg.out:8-18)."""
+    if salt_partitions:
+        df = df.repartition(salt_partitions)  # round-robin = salt
+    return _fold_collect(df, _partials_fold(factory, ingest))
 
 
 def sketch_agg_parquet(
@@ -256,29 +225,20 @@ def sketch_agg_parquet(
     filters: list[tuple] | None = None,
 ):
     """:func:`sketch_agg` over a parquet path via the COLUMNAR-DIRECT ingest
-    (sources/parquet_direct.py): one partial per FILE, or per row-group with
-    ``split_row_groups`` (the giant-file remedy); pyarrow reads the pruned
-    columns in the worker, so the batches never cross Spark's
-    columnar→row→Arrow pivot — the transfer whose JVM CPU anti-scales with
-    task threads (measured in BENCH/BASELINE.md §2b). Same states frame,
-    same merge. The split list is computed ONCE (one listing, one footer
-    pass) and both sizes the merge strategy and feeds the task mapping;
+    (sources/parquet_direct.py): at most ``defaultParallelism`` tasks, each
+    folding a contiguous run of file splits (row-group splits with
+    ``split_row_groups``, the giant-file remedy) into ONE state; pyarrow
+    reads the pruned columns in the worker, so the batches never cross
+    Spark's columnar→row→Arrow pivot — the transfer whose JVM CPU
+    anti-scales with task threads (measured in BENCH/BASELINE.md §2b). The
+    driver collects and folds the task states as :func:`sketch_agg` does.
     ``filters`` push (column, op, literal) conjuncts into the scan —
     Arrow's row-group pruning plus its residual filter (see
     parquet_direct.map_parquet_batches)."""
-    from ..sources.parquet_direct import map_parquet_batches, parquet_splits
+    from ..sources.parquet_direct import map_parquet_batches
 
-    splits = parquet_splits(path, split_row_groups=split_row_groups, filters=filters)
     states = map_parquet_batches(
         spark, path, columns, _partials_fold(factory, ingest), STATE_SCHEMA,
-        splits=splits, filters=filters,
+        split_row_groups=split_row_groups, filters=filters,
     )
-    return _collect_states(states, len(splits))
-
-
-def _collect_states(states: DataFrame, n_parts: int):
-    """Fold a states frame of ``n_parts`` partitions into one live sketch
-    (None when every state is NULL)."""
-    if n_parts > DIRECT_COLLECT_LIMIT:
-        states = tree_merge_df(states, states.sparkSession.sparkContext.defaultParallelism)
     return fold_states(r["state"] for r in states.collect())

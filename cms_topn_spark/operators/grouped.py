@@ -350,13 +350,13 @@ def grouped_quantiles_parquet(
     """:func:`grouped_quantiles` over a parquet path via the COLUMNAR-DIRECT
     ingest (sources/parquet_direct.py) — identical semantics and oracle
     (same fold, same states-only exchange, same distributed readout). Each
-    task reads its own file split with pyarrow and folds it, skipping
+    task reads its own run of file splits with pyarrow and folds it, skipping
     Spark's columnar → row → Arrow double pivot: the pivot cost ~8× the
     scan itself in JVM CPU and its per-thread throughput dropped ~2.6× at
     8 task threads, which capped this operator's N→4N scaling at ~0.44
     while the fold itself scaled cleanly (BENCH/BASELINE.md §2b).
     The group type comes from the parquet footer. ``split_row_groups`` is
-    the giant-file remedy (one task per row group); ``filters`` push
+    the giant-file remedy (one split per row group); ``filters`` push
     (column, op, literal) conjuncts into the scan — Arrow's row-group
     pruning plus its residual filter, the direct source's answer to
     Catalyst pushdown. A small input (one single-row-group file — the gate

@@ -8,8 +8,9 @@ web-pages table, in a SINGLE pass:
   C++ kernels (``extract_regex``, ``split_pattern``) — measured 3× faster
   than JVM-side ``explode(split())`` because the exploded token stream never
   crosses the JVM→Python boundary (token rows outnumber docs ~50×),
-- all four kernels update per partition, one composite state row ships per
-  task, tree/driver merge as usual.
+- all four kernels update per task (at most ``defaultParallelism`` tasks,
+  one Python fold each), one composite state row ships per task, and the
+  driver folds those rows (``operators.build.sketch_agg``).
 
 This module is what the scaling benchmark times.
 """

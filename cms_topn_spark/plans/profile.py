@@ -80,8 +80,9 @@ def corpus_profile_parquet(
 ) -> dict:
     """:func:`corpus_profile` over a parquet path via the columnar-direct
     ingest (operators/build.py sketch_agg_parquet): one partial composite
-    state per file (or per row group — the giant-file remedy), pyarrow-pruned
-    to the text column, no JVM row pivot — the global-build analogue of
+    state per task over its run of files (or row groups — the giant-file
+    remedy), pyarrow-pruned to the text column, no JVM row pivot — the
+    global-build analogue of
     grouped_quantiles_parquet, with the same readout and the same oracle
     (gated as ``corpus_profile_direct``)."""
     from ..operators.build import sketch_agg_parquet

@@ -14,16 +14,18 @@ the kernel itself scales.
 For operators whose Python kernel consumes whole columns (the sketch folds:
 grouped quantiles, corpus profiles), the pivot is pure overhead — the data
 is columnar on disk and columnar in the kernel. This source hands out the
-parquet FILE SPLITS as task ids and lets every task read its own split
-columnar-to-columnar with pyarrow:
+parquet FILE SPLITS as ids and lets every task read its own run of
+splits columnar-to-columnar with pyarrow:
 
-    spark.range(one id per split) → mapInArrow(read split[id] + fold)
+    spark.range(split ids, ≤ P slices) → mapInArrow(read split[id] + fold)
 
 The split frame is a ``Range``, so the kernel runs on the same Python
 worker pool as every other ``mapInArrow`` operator (no RDD touch). Column
 pruning happens via ``columns`` (pyarrow reads only those column chunks);
-each file is one task, so the scan parallelism is the file count — the same
-unit a 100-TB Iceberg table's manifest hands out. Predicate pushdown
+a file is the split unit — the same unit a 100-TB Iceberg table's manifest
+hands out — and the splits are dealt to at most ``defaultParallelism`` (P)
+tasks, a contiguous run each, so one Python fold per task covers them.
+Predicate pushdown
 happens via ``filters`` — (column, op, literal) conjuncts that become one
 Arrow expression (``pq.filters_to_expression``), applied in two layers like
 a lakehouse scan: Arrow's row-group statistics pruning
@@ -33,9 +35,9 @@ tasks apply the residual filter columnar-side with the same expression.
 Trade-offs, stated plainly: this bypasses Catalyst's scan node, so only
 these explicit tri-op conjuncts push down — no derived expressions, no
 partition-directory pruning, no join-side dynamic pruning; use the JVM scan
-when a query needs those. A single giant file is one task unless
-``split_row_groups=True``, which hands out one task per (file, row-group) —
-the same split unit Spark's own scan uses.
+when a query needs those. A single giant file is one split unless
+``split_row_groups=True``, which hands out one split per (file, row-group)
+— the same split unit Spark's own scan uses.
 
 When NOT to use it (measured, BENCH/BASELINE.md §2b): jobs whose kernel
 dwarfs the transfer and whose columns are wide strings — Spark's vectorized
@@ -144,7 +146,7 @@ def shard_splits(
     """Fan a too-short split list out to ~``min_splits`` tasks by row RANGES:
     each (path, row_group) split becomes n ≥ 1 shards (path, row_group,
     shard, n_shards), shard i folding rows [i·rows/n, (i+1)·rows/n) of its
-    split. The small-input remedy for the one-task-per-file rule: a single
+    split. The small-input remedy for the one-split-per-file rule: a single
     12 MB one-row-group file otherwise serializes the whole fold on one
     core. Each shard re-decodes its split's column chunks (parquet offers
     no sub-row-group random access), so this trades bounded duplicate
@@ -179,18 +181,20 @@ def map_parquet_batches(
     fold: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
     out_schema: str,
     split_row_groups: bool = False,
-    splits: list[tuple[str, int]] | None = None,
     filters: list[tuple] | None = None,
     min_splits: int | None = None,
 ) -> DataFrame:
     """Run ``fold`` (a batches→batches kernel, same contract as a
     ``mapInArrow`` function) over ``columns`` of the parquet data at
-    ``path``, one task per split, reading columnar-direct in the worker.
+    ``path``, reading columnar-direct in the worker: at most
+    ``defaultParallelism`` (P) tasks, each running ONE ``fold`` over a
+    contiguous run of splits.
 
-    The split frame is ``spark.range(0, n, 1, n)``: one id per partition,
-    deterministically (Range slices its interval evenly, unlike a
-    round-robin ``repartition``, which can collide splits into one task),
-    and the kernel looks up ``sharded[id]`` from its closure. The closure
+    The split frame is ``spark.range(0, n, 1, min(n, P))``: Range slices
+    its interval evenly and deterministically (unlike a round-robin
+    ``repartition``, which can collide splits into one task), and the
+    kernel looks up ``sharded[id]`` for each id of its slice from its
+    closure. The closure
     therefore grows with the split count; PySpark broadcasts a pickled
     command above 1 MB, so a long split list ships once per executor, not
     per task.
@@ -199,7 +203,7 @@ def map_parquet_batches(
     core's worth of work — per-task thread pools would oversubscribe the
     executor and wreck the task-count = parallelism accounting.
 
-    ``split_row_groups``: one task per (file, row-group) instead of per
+    ``split_row_groups``: one split per (file, row-group) instead of per
     file — the remedy when a few giant files would otherwise serialize the
     scan (a parquet row group is the file's independently-readable unit,
     exactly what Spark's own scan splits on). Costs one footer read per
@@ -217,12 +221,12 @@ def map_parquet_batches(
     (exactly ``columns``) is unchanged. NULL semantics are SQL WHERE's:
     NULLs never pass."""
     expr = _filter_expression(filters)
-    if splits is None:
-        splits = parquet_splits(path, split_row_groups=split_row_groups, filters=filters)
+    splits = parquet_splits(path, split_row_groups=split_row_groups, filters=filters)
     # ``min_splits`` (see shard_splits): fan small split lists out by row
     # ranges so the fold's parallelism isn't capped by the file count
     sharded = shard_splits(splits, min_splits or 0)
-    ids = spark.range(0, len(sharded), 1, len(sharded))
+    n = len(sharded)
+    ids = spark.range(0, n, 1, min(n, spark.sparkContext.defaultParallelism))
 
     read_cols = columns
     if filters:
@@ -290,10 +294,7 @@ def parquet_splits(
     split_row_groups: bool = False,
     filters: list[tuple] | None = None,
 ) -> list[tuple[str, int]]:
-    """The (file, row_group) task list — row_group = -1 means whole file.
-    Computed ONCE per job: callers sizing a merge strategy pass the same
-    list to :func:`map_parquet_batches`, so the footers are read a single
-    time and the strategy can never disagree with the task count.
+    """The (file, row_group) split list — row_group = -1 means whole file.
 
     With ``filters``, Arrow's statistics pruning
     (``ParquetFileFragment.subset``) drops the splits that cannot match —
@@ -316,7 +317,7 @@ def parquet_splits(
             splits.extend((f, g.id) for g in groups)
         elif groups:
             splits.append((f, -1))
-    # two degenerate shapes fall back to one whole-file task so callers see
+    # two degenerate shapes fall back to one whole-file split so callers see
     # ordinary empty-RESULT semantics instead of an empty split frame:
     # footer-only files (0 row groups) and filters that prune every split
     # (the task's own pruning then reads no row of the one file)

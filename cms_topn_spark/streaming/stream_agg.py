@@ -5,9 +5,9 @@ under Spark's unordered micro-batch parallelism because sketch merges
 commute and associate (SURVEY.md §2.3 protocol contract). Two shapes:
 
 1. **Folds into persisted states** (`sketch_stream_agg`,
-   `windowed_sketch_stream`): every micro-batch builds per-task partials
-   exactly like the batch path (``build_partials``, or grouped stage 1 by
-   window), folds them on the driver with ``fold_states``, and folds that
+   `windowed_sketch_stream`): every micro-batch runs the batch fold
+   (``sketch_agg``, or grouped stage 1 by window with its per-(task,
+   window) states folded on the driver by ``fold_states``), and folds that
    delta into the persisted state under ``state_dir`` (one global state, or
    one state per event-time window). Batch-id high-water-marking makes the
    fold idempotent, so Spark's checkpoint/replay semantics (foreachBatch is
@@ -38,7 +38,7 @@ import pyarrow as pa
 
 from ..core.base import ItemSketch, SketchError, fold_states, sketch_from_bytes
 from ..core.encoding import TAG_ARROW_TYPES
-from ..operators.build import SPARK_ITEM_TAGS, build_partials, spark_item_tag
+from ..operators.build import SPARK_ITEM_TAGS, sketch_agg, spark_item_tag
 from ..spark_session import local_frame
 
 STATE_FILE = "state.bin"
@@ -118,10 +118,7 @@ def sketch_stream_agg(
         committed, prev = _read_frame(p)
         if batch_id <= committed:
             return  # replayed batch after restart — already folded
-        # a direct collect, not sketch_agg: every micro-batch is a new plan,
-        # so sketch_agg's partition count would cost a plan→RDD conversion
-        # per batch
-        delta = fold_states(r["state"] for r in build_partials(batch_df, factory).collect())
+        delta = sketch_agg(batch_df, factory)
         if delta is not None:  # an empty batch leaves the state as it is
             # committed ⊕ delta: the merge order every commit has used
             prev = (delta if prev is None else sketch_from_bytes(prev).merge(delta)).to_bytes()
@@ -151,8 +148,8 @@ def windowed_sketch_stream(
     Each micro-batch runs grouped stage 1 keyed by window start (one
     ``mapInArrow``, Arrow-typed columns, no row shuffle), so the driver
     collects one state per (task, window-in-task) and folds them per window
-    with ``fold_states`` — the same per-task shape ``sketch_stream_agg``
-    collects. NULL rules are the aggregate's: NULL values are skipped, a row
+    with ``fold_states`` — the driver fold ``sketch_stream_agg`` runs through
+    ``sketch_agg``. NULL rules are the aggregate's: NULL values are skipped, a row
     with a NULL event time has no window and is dropped, and a window whose
     values are all NULL gets no state. Value columns take the batch item
     types (native ints, exact above 2^53); for an ``ItemSketch`` any other

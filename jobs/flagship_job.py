@@ -36,7 +36,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("cms-topn-flagship").getOrCreate()
 
     from cms_topn_spark.core.composite import CompositeSketch
-    from cms_topn_spark.core.base import fold_states
+    from cms_topn_spark.functions.sketch_api import cms_topn_union_agg
     from cms_topn_spark.operators.build import build_partials
     from cms_topn_spark.plans.checkpoint import lineage_summary, run_stage
     from cms_topn_spark.plans.flagship import flagship_factory, flagship_ingest
@@ -64,7 +64,7 @@ def main() -> None:
     )
     lineage = lineage_summary(states)
 
-    sk: CompositeSketch = fold_states(r["state"] for r in states.collect())
+    sk: CompositeSketch = cms_topn_union_agg(states)
 
     out = os.path.join(args.workdir, "results")
     for name in ("url_topn", "host_topn", "token_topn"):

@@ -365,12 +365,18 @@ def test_dice_byte_bound_flush_preserves_results(spark, sf001_dir, monkeypatch):
                 assert sk.estimate(int(uid)) == c
 
 
-def test_plan_num_partitions_memo(spark):
-    from cms_topn_spark.operators.build import _NPARTS_CACHE, plan_num_partitions
+def test_spread_small_input(spark):
+    """An input with fewer partitions than the default parallelism is
+    round-robined up to it; one that has at least that many comes back as
+    the same frame."""
+    from cms_topn_spark.operators.build import spread_small_input
 
+    p = spark.sparkContext.defaultParallelism
+    spread = spread_small_input(spark.range(0, 100, 1, 1))
+    assert spread.rdd.getNumPartitions() == p
+    assert sorted(r["id"] for r in spread.collect()) == list(range(100))
     df = spark.range(0, 100, 1, 7)
-    assert plan_num_partitions(df) == 7
-    assert (spark.sparkContext.applicationId, df.semanticHash()) in _NPARTS_CACHE
+    assert p <= 7 and spread_small_input(df) is df
 
 
 def test_grouped_quantiles_parquet_direct_matches_dataframe_form(spark, sf001_dir):

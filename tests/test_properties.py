@@ -642,3 +642,44 @@ def test_grouped_kernels_raise_merge_errors(other):
         with pytest.raises(SketchError) as got:
             a.fold_window(None, {7: b}, [7], pa.array([1, 2, 3], pa.int32()), [0, 3])
         assert str(got.value) == str(want.value)
+
+
+# items each bound type holds; the probes mix them with ints (also above
+# 2**53), floats and None
+_ADDED = {
+    enc.TYPE_INT32: pa.array([0, 1, -5, 7], pa.int32()),
+    enc.TYPE_INT64: pa.array([0, 7, 2**53 + 1, 2**60], pa.int64()),
+    enc.TYPE_FLOAT64: pa.array([0.0, 1.5, 2.0**53, 2.0**60], pa.float64()),
+}
+_PROBES = st.lists(
+    st.one_of(
+        st.sampled_from([0, 1, -5, 7, 2**53 + 1, 2**60, 0.0, 1.5, 7.0, 2.0**53, 2.0**60]),
+        st.integers(-(2**63), 2**63 - 1),
+        st.floats(allow_nan=False, allow_infinity=False),
+        st.none(),
+    ),
+    max_size=12,
+)
+
+
+@pytest.mark.parametrize("tag", sorted(_ADDED))
+@given(probes=_PROBES)
+@settings(**SETTINGS)
+def test_estimate_many_is_estimate_per_value(tag, probes):
+    """A probe list needs no one item type: a list mixing ints (also above
+    2**53), floats and None answers as each value does alone."""
+    sk = CmsTopn(5, update="linear")
+    sk.add_arrow(_ADDED[tag])
+    assert sk.item_type == tag
+    assert sk.estimate_many(probes) == [sk.estimate(v) for v in probes]
+
+
+def test_add_batch_of_an_untypable_list_still_raises():
+    """Only probes split a list Arrow cannot type as one: an add still needs
+    one item type for the whole batch."""
+    sk = CmsTopn(5, update="linear")
+    sk.add_arrow(_ADDED[enc.TYPE_FLOAT64])
+    before = sk.to_bytes()
+    with pytest.raises(TypeError):
+        sk.add_batch([1.5, 2**60])
+    assert sk.to_bytes() == before

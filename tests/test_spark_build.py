@@ -7,6 +7,7 @@ sketch estimates equal exact counts)."""
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,9 +26,10 @@ from cms_topn_spark.functions.sketch_api import (
     topn,
 )
 from cms_topn_spark.operators.build import (
-    DIRECT_COLLECT_LIMIT,
+    _PA_STATE_SCHEMA,
+    _fold_collect,
+    _fold_task,
     build_partials,
-    tree_merge_df,
 )
 
 
@@ -320,29 +322,47 @@ class TestBloomSemiJoin:
 
 class TestTreeMerge:
     def test_tree_levels(self, spark, events):
+        """``_fold_collect`` folds 32 states in at most P tasks, one fold each,
+        with ``input_rows`` summed; an empty frame folds to None."""
         states = build_partials(
             events.select("event_type"), lambda: CmsTopn(5, update="linear"), salt_partitions=32
         )
+        p = spark.sparkContext.defaultParallelism
         persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-        merged = tree_merge_df(states, fanin=4)
-        rows = merged.collect()
-        assert len(rows) <= 4
-        total_rows = sum(r["input_rows"] for r in rows)
-        assert total_rows == events.count()
+
+        def count_tasks(batches):
+            # one state per task: item 0 counts the task, item 1 its input rows
+            rows = sum(sum(rb.column("input_rows").to_pylist()) for rb in batches)
+            sk = CmsTopn(2, update="linear")
+            sk.add_batch([0, 1], [1, rows], type_tag=enc.TYPE_INT64)
+            yield pa.RecordBatch.from_pydict(
+                {"partition_id": [0], "state": [sk.to_bytes()], "input_rows": [rows],
+                 "build_wall_ms": [0]},
+                schema=_PA_STATE_SCHEMA,
+            )
+
+        counted = _fold_collect(states, count_tasks)
+        assert 1 <= counted.estimate(0) <= p
+        assert counted.estimate(1) == events.count()
         # 5 event types under n=5: a stable candidate set, so any merge
         # order gives the same bytes
         raw = fold_states(r["state"] for r in states.collect())
-        assert fold_states(r["state"] for r in rows).to_bytes() == raw.to_bytes()
-        assert tree_merge_df(states.where(F.lit(False)), fanin=4).collect() == []
+        assert _fold_collect(states, _fold_task).to_bytes() == raw.to_bytes()
+        # the task fold itself emits one row, input_rows summed
+        (out,) = _fold_task(iter(states.toArrow().to_batches()))
+        assert out.num_rows == 1
+        assert out.column("input_rows").to_pylist() == [events.count()]
+        assert _fold_collect(states.where(F.lit(False)), _fold_task) is None
         assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted
 
     def test_above_direct_collect_limit(self, spark, events):
-        few = cms_topn_add_agg(events, "event_type", n=5, salt_partitions=8)
-        many = cms_topn_add_agg(
-            events, "event_type", n=5, salt_partitions=DIRECT_COLLECT_LIMIT + 36
-        )
-        assert np.array_equal(many.counters, few.counters)
-        assert many.topn_list() == few.topn_list()
+        """The one fold is layout-independent: any salt gives the unsalted
+        counters and top-n."""
+        whole = cms_topn_add_agg(events, "event_type", n=5)
+        for salt in (1, 3, 4, 8, 100):
+            salted = cms_topn_add_agg(events, "event_type", n=5, salt_partitions=salt)
+            assert np.array_equal(salted.counters, whole.counters), salt
+            assert salted.topn_list() == whole.topn_list(), salt
 
 
 class TestWeightedAdds:
@@ -569,6 +589,39 @@ def test_sketch_agg_parquet_matches_dataframe_form(spark, sf001_dir):
     pa_ = corpus_profile(spark.read.parquet(dpath))
     pb = corpus_profile_parquet(spark, dpath)
     assert pa_ == pb
+
+
+def test_parquet_direct_ten_files_match_dataframe_form(spark, sf01_dir, tmp_path):
+    """Over 10 files at 4 cores each direct-source task folds a run of
+    several files; the results still equal the DataFrame forms."""
+    import pyarrow.parquet as pq
+
+    from cms_topn_spark.operators.grouped import grouped_quantiles, grouped_quantiles_parquet
+    from cms_topn_spark.plans.profile import corpus_profile, corpus_profile_parquet
+
+    assert spark.sparkContext.defaultParallelism < 10
+    dirs = {}
+    for name in ("events", "documents"):
+        tbl = pq.read_table(os.path.join(sf01_dir, f"{name}.parquet"))
+        d = dirs[name] = str(tmp_path / name)
+        os.makedirs(d)
+        step = -(-tbl.num_rows // 10)
+        for i in range(10):
+            pq.write_table(tbl.slice(i * step, step), os.path.join(d, f"part-{i:02d}.parquet"))
+
+    events = spark.read.parquet(dirs["events"])
+    for group in ("user_id", "event_type"):
+        a = sorted(tuple(r) for r in grouped_quantiles(events, group, "value", k=4096).collect())
+        b = sorted(
+            tuple(r)
+            for r in grouped_quantiles_parquet(
+                spark, dirs["events"], group, "value", k=4096
+            ).collect()
+        )
+        assert a == b and len(a) > 0
+    assert corpus_profile(spark.read.parquet(dirs["documents"])) == corpus_profile_parquet(
+        spark, dirs["documents"]
+    )
 
 
 def test_parquet_direct_row_group_splits(spark, tmp_path):
